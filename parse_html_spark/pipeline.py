@@ -11,26 +11,28 @@ as kind='media' output spans.
 All pipelines are stateless mapInPandas stages (Arrow-vectorized, no
 per-row Python at the JVM boundary) followed by native DataFrame ops, so
 Catalyst handles pushdown/pruning and the same code runs under
-readStream ... foreachBatch unchanged.
+readStream ... foreachBatch unchanged. Every per-document pipeline is
+one ``_doc_map`` over a small per-doc function.
 """
 
 from __future__ import annotations
 
+import json
 import time
+from itertools import chain
 from operator import itemgetter
-from typing import Iterator
+
+import numpy as np
+from pyspark.sql import functions as F
 
 from .boilerplate import main_content_spans
 from .dom import PH
-from .extract import extract_form, extract_node, to_plain, value_only
+from .extract import extract_form, extract_table_list, prepare_post_form, to_plain
 from .matcher import find_nodes
 from .selector import compile_selector
 from .tokenizer import DocIndex
 
-SPAN_SCHEMA = (
-    "doc_id string, `order` int, kind string, text string, media_ref string"
-)
-MATCH_SCHEMA = "doc_id string, match_order int, value string"
+FORM_SCHEMA = "doc_id string, form_json string"
 
 
 def _map_in_pandas(df, run, schema, inputs=("doc_id", "spans")):
@@ -74,108 +76,83 @@ def _spans_of_row(row_spans) -> list[dict]:
     return [s if isinstance(s, dict) else s.asDict() for s in row_spans]
 
 
-def extract_spans(df, with_partition_id: bool = False):
+def _doc_map(df, per_doc, schema: str):
+    """The one per-document map stage: span docs -> ``schema`` rows.
+
+    ``per_doc(doc, media) -> {column: block}`` sees one DocIndex per
+    document; a block is a list (or range) or a 1-D ndarray with one
+    entry per output row of that document, and every block of one call
+    has the same length. The kernel owns the batch loop, assemble, the
+    index, the doc_id column and the output build: each column's blocks
+    are concatenated ONCE per batch, so outputs cross the Arrow bridge as
+    parallel primitive columns, never per-row records (row tuples
+    transposed per batch measured 1.1-1.6x slower). Columns are matched
+    to ``schema`` by name; a batch with no output rows yields nothing."""
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            counts: list[int] = []
+            blocks: dict[str, list] = {}
+            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
+                html, media = assemble(_spans_of_row(row_spans))
+                out = per_doc(DocIndex(html), media)
+                for name, block in out.items():
+                    blocks.setdefault(name, []).append(block)
+                counts.append(len(block))
+            if not sum(counts):
+                continue
+            cols = {
+                name: np.concatenate(bl)
+                if isinstance(bl[0], np.ndarray)
+                else list(chain.from_iterable(bl))
+                for name, bl in blocks.items()
+            }
+            cols["doc_id"] = np.repeat(pdf["doc_id"].to_numpy(), counts)
+            yield pd.DataFrame(cols)
+
+    return _map_in_pandas(df, run, schema)
+
+
+def _json(value) -> str:
+    return json.dumps(to_plain(value), ensure_ascii=False)
+
+
+def extract_spans(df):
     """Main-content extraction: span docs -> ordered output spans
     (doc_id, order, kind, text, media_ref). The flagship pipeline.
 
     The exploded row form is produced as compact parallel arrays in
     Python (the cheap Arrow shape) and exploded JVM-SIDE via posexplode:
     per-span Python rows never exist, so the row form costs the same
-    map stage as extract_spans_compact plus a codegen'd generate.
-
-    with_partition_id=True appends the physical partition id (via
-    TaskContext) so per-partition extraction metrics/lineage can be
-    aggregated relationally downstream (SURVEY.md 2.9); that path keeps
-    the direct row emitter so the id rides every span row."""
-    import pandas as pd
-
-    if not with_partition_id:
-        return explode_compact(extract_spans_compact(df))
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        pid = -1
-        if with_partition_id:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            out_doc, out_ord, out_kind, out_text, out_ref = [], [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                for i, (kind, text, ref) in enumerate(spans):
-                    out_doc.append(doc_id)
-                    out_ord.append(i)
-                    out_kind.append(kind)
-                    out_text.append(text)
-                    out_ref.append(ref)
-            cols = {
-                "doc_id": out_doc,
-                "order": pd.array(out_ord, dtype="int32"),
-                "kind": out_kind,
-                "text": out_text,
-                "media_ref": out_ref,
-            }
-            if with_partition_id:
-                cols["partition_id"] = pd.array(
-                    [pid] * len(out_doc), dtype="int32"
-                )
-            yield pd.DataFrame(cols)
-
-    schema = SPAN_SCHEMA + (", partition_id int" if with_partition_id else "")
-    return _map_in_pandas(df, run, schema)
+    map stage as extract_spans_compact plus a codegen'd generate."""
+    return explode_compact(extract_spans_compact(df))
 
 
-def partition_metrics(df_spans_with_pid):
-    """Per-partition extraction metrics from extract_spans(...,
-    with_partition_id=True) output: docs, spans, text chars."""
-    from pyspark.sql import functions as F
-
-    return df_spans_with_pid.groupBy("partition_id").agg(
+def partition_metrics(df_spans):
+    """Per-partition extraction metrics over extract_spans output: docs,
+    spans, text chars. No exchange sits between the map and the
+    posexplode, so spark_partition_id() is the map task's partition."""
+    return df_spans.groupBy(F.spark_partition_id().alias("partition_id")).agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count("*").alias("n_spans"),
         F.sum(F.length("text")).alias("n_text_chars"),
     )
 
 
-NESTED_SPAN_SCHEMA = (
-    "doc_id string, spans array<struct<`order`:int,kind:string,"
-    "text:string,media_ref:string>>"
-)
-
-
-def extract_spans_nested(df):
-    """Production sink shape: ONE row per document carrying the ordered
-    span sequence as array<struct>. Same semantics as extract_spans, but
-    ~50x fewer output rows -- Arrow/JVM serialization drops from the
-    dominant cost to noise, and downstream per-doc ops need no groupBy."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, span_lists = [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                ids.append(doc_id)
-                span_lists.append(
-                    [
-                        {"order": i, "kind": k, "text": t, "media_ref": r}
-                        for i, (k, t, r) in enumerate(spans)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": ids, "spans": span_lists})
-
-    return _map_in_pandas(df, run, NESTED_SPAN_SCHEMA)
-
-
 COMPACT_SPAN_SCHEMA = (
     "doc_id string, is_media array<boolean>, texts array<string>, "
     "media_refs array<string>"
 )
+
+
+def _compact_doc(doc, media):
+    spans = main_content_spans(doc, media)
+    return {
+        "is_media": [[k == "media" for k, _t, _r in spans]],
+        "texts": [[t for _k, t, _r in spans]],
+        "media_refs": [[r for _k, _t, r in spans]],
+    }
 
 
 def extract_spans_compact(df):
@@ -185,34 +162,11 @@ def extract_spans_compact(df):
     the north rule, but Arrow serializes plain string/bool lists instead
     of per-span structs: ~2.5-3x the throughput of the struct shapes.
     explode_compact() recovers the row form losslessly."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, kinds, texts, refs = [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                spans = main_content_spans(DocIndex(html), media)
-                ids.append(doc_id)
-                kinds.append([k == "media" for k, _t, _r in spans])
-                texts.append([t for _k, t, _r in spans])
-                refs.append([r for _k, _t, r in spans])
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_media": kinds,
-                    "texts": texts,
-                    "media_refs": refs,
-                }
-            )
-
-    return _map_in_pandas(df, run, COMPACT_SPAN_SCHEMA)
+    return _doc_map(df, _compact_doc, COMPACT_SPAN_SCHEMA)
 
 
 def explode_compact(df):
     """Compact columnar spans -> the exploded row form of extract_spans."""
-    from pyspark.sql import functions as F
-
     z = F.arrays_zip("is_media", "texts", "media_refs")
     ex = df.select("doc_id", F.posexplode(z).alias("order", "s"))
     return ex.select(
@@ -227,28 +181,56 @@ def explode_compact(df):
 
 
 def extract_docs(df):
-    """Fused extract + reassemble: (doc_id, text, media_refs) in ONE map
-    pass -- no span-row explosion, no groupBy shuffle. text = the span
-    texts joined with ' ' (media spans contribute their empty text),
+    """Extract + reassemble without a span-row explosion or a groupBy
+    shuffle: (doc_id, text, media_refs). text = the span texts joined
+    with ' ' (media spans contribute their empty text; main-content
+    texts are never null, so array_join's null skipping cannot differ),
     byte-identical to reassemble_docs(extract_spans(df))."""
-    import pandas as pd
+    return extract_spans_compact(df).select(
+        "doc_id",
+        F.array_join("texts", " ").alias("text"),
+        F.array_compact("media_refs").alias("media_refs"),
+    )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, texts, refs = [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                ids.append(doc_id)
-                texts.append(" ".join(t for _k, t, _r in spans))
-                refs.append([r for k, _t, r in spans if r is not None])
-            yield pd.DataFrame(
-                {"doc_id": ids, "text": texts, "media_refs": refs}
-            )
 
-    return _map_in_pandas(
-        df, run, "doc_id string, text string, media_refs array<string>"
+def _node_values(mode: str, attr_name: str | None):
+    """(doc, node ids) -> one value per node: the node's text, outer
+    html, or the value of attribute ``attr_name``."""
+    if mode == "text":
+        return lambda doc, ids: [
+            doc.text_between(doc.start_l[n], doc.end_l[n]) for n in ids
+        ]
+    if mode == "html":
+        return lambda doc, ids: [doc.outer(n) for n in ids]
+    if mode == "attr" and attr_name is not None:
+        return lambda doc, ids: [
+            doc.attrs(n, validate=True).get(attr_name) for n in ids
+        ]
+    raise ValueError(
+        f"mode={mode!r}: expected 'text', 'html', or 'attr' with attr_name"
+    )
+
+
+def _select(df, selectors: dict[str, str], mode, attr_name, ref_compat):
+    values = _node_values(mode, attr_name)
+    plans = [
+        (name, plan)
+        for name, sel in selectors.items()
+        if (plan := compile_selector(sel, ref_compat=ref_compat)) is not None
+    ]
+
+    def per_doc(doc, _media):
+        scopes = [(0, len(doc.html))]
+        names, orders, vals = [], [], []
+        for name, plan in plans:
+            ids = find_nodes(doc, plan, scopes)
+            names += [name] * len(ids)
+            orders += range(len(ids))
+            vals += values(doc, ids)
+        return {"query": names, "match_order": orders, "value": vals}
+
+    return _doc_map(
+        df, per_doc, "doc_id string, query string, match_order int, value string"
     )
 
 
@@ -264,39 +246,8 @@ def select_spans(
     mode: 'text' | 'html' | 'attr' (attr_name required for 'attr').
     The selector is compiled ONCE on the driver and closure-captured
     (ref_compat=True compiles in reference-bug-compatible mode,
-    SURVEY 2.11 A.8/A.12)."""
-    import pandas as pd
-
-    plan = compile_selector(selector, ref_compat=ref_compat)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out_doc, out_ord, out_val = [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                if plan is None:
-                    continue
-                html, _ = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                ids = find_nodes(doc, plan, [(0, len(html))])
-                for k, n in enumerate(ids):
-                    if mode == "text":
-                        val = doc.text_between(doc.start_l[n], doc.end_l[n])
-                    elif mode == "html":
-                        val = doc.outer(n)
-                    else:
-                        val = doc.attrs(n, validate=True).get(attr_name)
-                    out_doc.append(doc_id)
-                    out_ord.append(k)
-                    out_val.append(val)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "match_order": pd.array(out_ord, dtype="int32"),
-                    "value": pd.array(out_val, dtype=object),
-                }
-            )
-
-    return _map_in_pandas(df, run, MATCH_SCHEMA)
+    SURVEY 2.11 A.8/A.12). Output: (doc_id, match_order, value)."""
+    return _select(df, {"": selector}, mode, attr_name, ref_compat).drop("query")
 
 
 def select_spans_multi(
@@ -305,98 +256,49 @@ def select_spans_multi(
     """Run MANY selectors in one pass: the document is tokenized once
     and every compiled plan is evaluated against the same node index --
     amortizing the tokenizer across queries is the right shape when a
-    production job extracts dozens of fields per page.
+    production job extracts dozens of fields per page. mode is 'text'
+    or 'html' ('attr' needs select_spans' attr_name).
 
     Output: (doc_id, query, match_order, value)."""
-    import pandas as pd
-
-    plans = {
-        name: compile_selector(sel, ref_compat=ref_compat)
-        for name, sel in selectors.items()
-    }
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out_doc, out_q, out_ord, out_val = [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                scopes = [(0, len(html))]
-                for name, plan in plans.items():
-                    if plan is None:
-                        continue
-                    for k, n in enumerate(find_nodes(doc, plan, scopes)):
-                        if mode == "text":
-                            val = doc.text_between(
-                                doc.start_l[n], doc.end_l[n]
-                            )
-                        else:
-                            val = doc.outer(n)
-                        out_doc.append(doc_id)
-                        out_q.append(name)
-                        out_ord.append(k)
-                        out_val.append(val)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "query": out_q,
-                    "match_order": pd.array(out_ord, dtype="int32"),
-                    "value": pd.array(out_val, dtype=object),
-                }
-            )
-
-    return _map_in_pandas(
-        df, run, "doc_id string, query string, match_order int, value string"
-    )
+    return _select(df, selectors, mode, None, ref_compat)
 
 
 def extract_tables_df(df, selector: str = "table"):
     """extractTable over every doc -> (doc_id, table_order, cells_json)."""
-    import json
 
-    import pandas as pd
+    def per_doc(doc, _media):
+        sel = PH(doc.html, doc=doc).find(selector)
+        tables = extract_table_list(sel, val_only=True)
+        return {
+            "table_order": range(len(tables)),
+            "cells_json": [_json(t) for t in tables],
+        }
 
-    from .extract import extract_table_list
+    return _doc_map(df, per_doc, "doc_id string, table_order int, cells_json string")
 
-    def run(batches):
-        for pdf in batches:
-            out_doc, out_ord, out_json = [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                ph = PH(html).find(selector)
-                tables = extract_table_list(ph, val_only=True)
-                for k, t in enumerate(tables):
-                    out_doc.append(doc_id)
-                    out_ord.append(k)
-                    out_json.append(json.dumps(to_plain(t), ensure_ascii=False))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "table_order": pd.array(out_ord, dtype="int32"),
-                    "cells_json": out_json,
-                }
-            )
 
-    return _map_in_pandas(df, run, "doc_id string, table_order int, cells_json string")
+def _form_doc(trigger: str | None):
+    """extractForm (trigger None) or preparePostForm per doc."""
+
+    def per_doc(doc, _media):
+        ph = PH(doc.html, doc=doc)
+        if trigger is None:
+            return {"form_json": [_json(extract_form(ph))]}
+        return {"form_json": [_json(prepare_post_form(ph, trigger))]}
+
+    return per_doc
 
 
 def extract_forms_df(df):
     """extractForm over every doc -> (doc_id, form_json)."""
-    import json
+    return _doc_map(df, _form_doc(None), FORM_SCHEMA)
 
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            out_doc, out_json = [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                fields = to_plain(extract_form(PH(html)))
-                out_doc.append(doc_id)
-                out_json.append(json.dumps(fields, ensure_ascii=False))
-            yield pd.DataFrame({"doc_id": out_doc, "form_json": out_json})
-
-    return _map_in_pandas(df, run, "doc_id string, form_json string")
+def extract_post_forms_df(df, trigger: str):
+    """preparePostForm over every doc -> (doc_id, form_json): all
+    [type=submit] fields except the trigger are dropped (anti-join
+    semantics, SURVEY.md 2.7)."""
+    return _doc_map(df, _form_doc(trigger), FORM_SCHEMA)
 
 
 NODE_SCHEMA = (
@@ -418,74 +320,31 @@ def node_table(df, with_attrs: bool = False):
     crosses the Arrow bridge as parallel key/value arrays (primitive
     string columns, no per-node Python dicts) and becomes a MapType
     JVM-side via map_from_arrays."""
-    import pandas as pd
 
-    import numpy as np
-
-    def run(batches):
-        for pdf in batches:
-            # parallel column lists (NOT per-node dicts): the numeric node
-            # arrays are appended whole per doc and concatenated once per
-            # batch -- Arrow serializes primitive columns, never row objects
-            col_doc, col_nid, col_tag = [], [], []
-            col_ak, col_av = [], []
-            num_chunks = []  # per-doc (6, n) int64 blocks
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                n = doc.n
-                if n == 0:
-                    continue
-                col_doc.extend([doc_id] * n)
-                col_nid.append(np.arange(n, dtype=np.int32))
-                col_tag.extend(doc.tag)
-                num_chunks.append(
-                    np.stack(
-                        (doc.start, doc.end, doc.cstart, doc.cend,
-                         doc.parent, doc.depth)
-                    )
-                )
-                if with_attrs:
-                    for i in range(n):
-                        items = doc.attrs(i)
-                        col_ak.append(list(items.keys()))
-                        col_av.append(
-                            ["" if v is None else v for v in items.values()]
-                        )
-            if not col_doc:
-                cols = {
-                    "doc_id": [], "node_id": [], "tag": [], "start": [],
-                    "end": [], "cstart": [], "cend": [], "parent": [],
-                    "depth": [],
-                }
-                if with_attrs:
-                    cols["attrs_keys"] = []
-                    cols["attrs_vals"] = []
-                yield pd.DataFrame(cols)
-                continue
-            nums = np.concatenate(num_chunks, axis=1)
-            cols = {
-                "doc_id": col_doc,
-                "node_id": np.concatenate(col_nid),
-                "tag": col_tag,
-                "start": nums[0],
-                "end": nums[1],
-                "cstart": nums[2],
-                "cend": nums[3],
-                "parent": nums[4].astype(np.int32),
-                "depth": nums[5].astype(np.int32),
-            }
-            if with_attrs:
-                cols["attrs_keys"] = col_ak
-                cols["attrs_vals"] = col_av
-            yield pd.DataFrame(cols)
+    def per_doc(doc, _media):
+        # the numeric node arrays go out whole: one ndarray block each
+        out = {
+            "node_id": np.arange(doc.n, dtype=np.int32),
+            "tag": doc.tag,
+            "start": doc.start,
+            "end": doc.end,
+            "cstart": doc.cstart,
+            "cend": doc.cend,
+            "parent": doc.parent,
+            "depth": doc.depth,
+        }
+        if with_attrs:
+            attrs = [doc.attrs(i) for i in range(doc.n)]
+            out["attrs_keys"] = [list(a) for a in attrs]
+            out["attrs_vals"] = [
+                ["" if v is None else v for v in a.values()] for a in attrs
+            ]
+        return out
 
     if not with_attrs:
-        return _map_in_pandas(df, run, NODE_SCHEMA)
-    from pyspark.sql import functions as F
-
-    wide = _map_in_pandas(
-        df, run,
+        return _doc_map(df, per_doc, NODE_SCHEMA)
+    wide = _doc_map(
+        df, per_doc,
         NODE_SCHEMA + ", attrs_keys array<string>, attrs_vals array<string>",
     )
     return wide.select(
@@ -499,8 +358,6 @@ def descendants_join(nodes, ancestor_tag: str, desc_tag: str, broadcast_ancestor
     """Descendant matching in pure relational form: range containment
     join between the ancestor and descendant node sets (SURVEY.md 2.9).
     The filtered ancestor side is usually tiny -> broadcast it."""
-    from pyspark.sql import functions as F
-
     anc = nodes.filter(F.col("tag") == ancestor_tag).select(
         F.col("doc_id").alias("a_doc"),
         F.col("node_id").alias("anc_id"),
@@ -520,44 +377,42 @@ def descendants_join(nodes, ancestor_tag: str, desc_tag: str, broadcast_ancestor
 
 def apply_ph(df, fn, schema: str):
     """Generic per-document API hook: fn(PH) -> dict of column values
-    (one output row per doc, doc_id added automatically). This is the
-    distributed form of the reference's chainable per-document API."""
-    import pandas as pd
+    (one output row per doc, doc_id added automatically; fn returns the
+    same keys for every doc). This is the distributed form of the
+    reference's chainable per-document API."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                vals = fn(PH(html))
-                vals["doc_id"] = doc_id
-                rows.append(vals)
-            yield pd.DataFrame(rows)
+    def per_doc(doc, _media):
+        return {k: [v] for k, v in fn(PH(doc.html, doc=doc)).items()}
 
-    return _map_in_pandas(df, run, schema)
+    return _doc_map(df, per_doc, schema)
 
 
-def extract_post_forms_df(df, trigger: str):
-    """preparePostForm over every doc -> (doc_id, form_json): all
-    [type=submit] fields except the trigger are dropped (anti-join
-    semantics, SURVEY.md 2.7)."""
-    import json
+PAGE_SCHEMA = (
+    "doc_id string, is_media array<boolean>, texts array<string>, "
+    "media_refs array<string>, tables_json string, form_json string, "
+    "title string, n_nodes int"
+)
 
-    import pandas as pd
 
-    from .extract import prepare_post_form
+def _page_doc(doc, media):
+    out = _compact_doc(doc, media)
+    ph = PH(doc.html, doc=doc)
+    title = ph.find("title").text()
+    tables = extract_table_list(ph.find("table"), val_only=True)
+    out["tables_json"] = [_json([to_plain(t) for t in tables])]
+    out["form_json"] = [_json(extract_form(ph))]
+    out["title"] = [title]
+    out["n_nodes"] = [doc.n]
+    return out
 
-    def run(batches):
-        for pdf in batches:
-            out_doc, out_json = [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                fields = to_plain(prepare_post_form(PH(html), trigger))
-                out_doc.append(doc_id)
-                out_json.append(json.dumps(fields, ensure_ascii=False))
-            yield pd.DataFrame({"doc_id": out_doc, "form_json": out_json})
 
-    return _map_in_pandas(df, run, "doc_id string, form_json string")
+def extract_page(df):
+    """One-pass full-page extraction: the document is tokenized ONCE and
+    every extractor runs over the same node index -- main-content spans
+    (compact shape), all tables (valueOnly JSON), form fields, title,
+    node count. This is the production job shape: at 100 TB you never
+    pay the tokenizer twice for the same page."""
+    return _doc_map(df, _page_doc, PAGE_SCHEMA)
 
 
 # -- scale infrastructure --------------------------------------------------
@@ -588,68 +443,7 @@ def fan_out_small(df, factor: int = 1):
     return df.repartition(target)
 
 
-PAGE_SCHEMA = (
-    "doc_id string, is_media array<boolean>, texts array<string>, "
-    "media_refs array<string>, tables_json string, form_json string, "
-    "title string, n_nodes int"
-)
-
-
-def extract_page(df):
-    """One-pass full-page extraction: the document is tokenized ONCE and
-    every extractor runs over the same node index -- main-content spans
-    (compact shape), all tables (valueOnly JSON), form fields, title,
-    node count. This is the production job shape: at 100 TB you never
-    pay the tokenizer twice for the same page."""
-    import json
-
-    import pandas as pd
-
-    from .extract import extract_form, extract_table_list, to_plain
-
-    def run(batches):
-        for pdf in batches:
-            # parallel column lists, not per-doc dicts: pandas' records
-            # path re-dispatches per cell (round-8)
-            c_id, c_km, c_tx, c_rf = [], [], [], []
-            c_tab, c_frm, c_ti, c_nn = [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                ph = PH(html, doc=doc)
-                title_sel = ph.find("title")
-                tables = extract_table_list(ph.find("table"), val_only=True)
-                form = to_plain(extract_form(ph))
-                c_id.append(doc_id)
-                c_km.append([k == "media" for k, _t, _r in spans])
-                c_tx.append([t for _k, t, _r in spans])
-                c_rf.append([r for _k, _t, r in spans])
-                c_tab.append(
-                    json.dumps([to_plain(t) for t in tables], ensure_ascii=False)
-                )
-                c_frm.append(json.dumps(form, ensure_ascii=False))
-                c_ti.append(title_sel.text())
-                c_nn.append(doc.n)
-            yield pd.DataFrame(
-                {
-                    "doc_id": c_id,
-                    "is_media": c_km,
-                    "texts": c_tx,
-                    "media_refs": c_rf,
-                    "tables_json": c_tab,
-                    "form_json": c_frm,
-                    "title": c_ti,
-                    "n_nodes": pd.array(c_nn, dtype="int32"),
-                }
-            )
-
-    return _map_in_pandas(df, run, PAGE_SCHEMA)
-
-
 def doc_size_col():
-    from pyspark.sql import functions as F
-
     return F.aggregate(
         "spans", F.lit(0), lambda acc, s: acc + F.length(F.coalesce(s["text"], F.lit("")))
     )
@@ -682,8 +476,6 @@ def prepare_partitions(
     through the exchange costs more than it saves (measured). Pass
     shuffle_small=True to force hash placement (needed when the input
     layout is pathological, e.g. one giant unsplittable file)."""
-    from pyspark.sql import functions as F
-
     if size_col in df.columns:
         size = F.col(size_col)  # ingest column: predicate pushes to scan
         # NULL size (e.g. a source that did not populate the ingest
@@ -712,8 +504,6 @@ def write_bucketed(df, path: str, buckets: int = 8, size_col: str = "n_chars") -
     sort to the file tail, so row-group min/max stats isolate them and
     prepare_partitions' skew split prunes at read time -- the parquet
     stand-in for an Iceberg sort-order spec."""
-    from pyspark.sql import functions as F
-
     out = df.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(buckets))
     )
@@ -747,10 +537,7 @@ def run_resumable(
     input bytes are never scanned, which is what makes resume cheap at
     100 TB). Default reads a flat table and filters on the hash, which
     still recomputes nothing but must scan doc_ids."""
-    import json
     import os
-
-    from pyspark.sql import functions as F
 
     os.makedirs(output_dir, exist_ok=True)
     manifest_path = os.path.join(output_dir, "_manifest.json")

@@ -49,6 +49,39 @@ def get_spark(cpus: int | None = None, app: str = "parse_html_spark"):
 _SHIPPED: set[int] = set()
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """Zip of the package's .py files under the temp dir, named by a
+    hash of their relative paths and bytes: a checkout with different
+    code never reuses another's zip, even under a reused pid. Written
+    to a private name and renamed, so a concurrent reader never sees a
+    half-written zip."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    root = os.path.dirname(pkg_dir)
+    files = []
+    for d, _dirs, names in os.walk(pkg_dir):
+        files += [os.path.join(d, fn) for fn in names if fn.endswith(".py")]
+    files.sort()
+    h = hashlib.sha256()
+    for full in files:
+        h.update(os.path.relpath(full, root).encode() + b"\0")
+        with open(full, "rb") as fh:
+            h.update(fh.read() + b"\0")
+    name = os.path.basename(pkg_dir)
+    zip_path = os.path.join(
+        tempfile.gettempdir(), f"{name}_{h.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for full in files:
+                zf.write(full, os.path.relpath(full, root))
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def ensure_py_files(spark) -> None:
     """Ship the parse_html_spark package to executors (the --py-files
     story): zips the package once per session and addPyFile's it, so
@@ -57,21 +90,6 @@ def ensure_py_files(spark) -> None:
     key = id(spark.sparkContext)
     if key in _SHIPPED:
         return
-    import tempfile
-    import zipfile
-
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"parse_html_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip(pkg_dir))
     _SHIPPED.add(key)

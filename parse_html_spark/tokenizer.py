@@ -244,8 +244,8 @@ class DocIndex:
         boiler_l: list[bool] = []
         closures: list[tuple[int, int, int]] = []
 
-        # hot loop: local bindings + positional groups (group 1=close,
-        # 2=cname, 3=name, 4=attrs); ~200 tokens/doc on the bench mix
+        # hot loop: local bindings + positional groups (group 1=open-tag
+        # name, 2=close-tag name); ~200 tokens/doc on the bench mix
         tags_append = tags.append
         starts_append = starts.append
         st_ends_append = st_ends.append

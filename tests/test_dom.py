@@ -223,3 +223,35 @@ def test_ref_compat_mode_quoted_values():
     compat = compile_selector('[title="a b"]', ref_compat=True)
     assert compat[0][0].attributes[0].value == 'ab"'  # spaces dropped + quote
     assert len(PH(doc, ref_compat=True).find('[title="a b"]')) == 0
+
+
+def test_cached_plans_stay_unmutated():
+    """dom._cached_plan hands the SAME mutable Compound/list plan to every
+    caller: find_nodes, find, children and the traversal filters must
+    leave it exactly as compiled, in both selector modes."""
+    import copy
+
+    from parse_html_spark.dom import _cached_plan
+    from parse_html_spark.fixtures import gen_doc
+    from parse_html_spark.matcher import find_nodes
+    from parse_html_spark.pipeline import assemble
+
+    selectors = [
+        "p", "#content-1", ".intro", "a[href^='/ref']", "img[alt]",
+        "article p.detail", "ul > li", "h1, title", 'p[data-v="x"]',
+        "table td", "li",
+    ]
+    for ref_compat in (False, True):
+        plans = {s: _cached_plan(s, ref_compat) for s in selectors}
+        frozen = copy.deepcopy(plans)
+        for i in range(12):
+            html, _ = assemble(gen_doc(i)["spans"])
+            ph = PH(html, ref_compat=ref_compat)
+            for s, plan in plans.items():
+                find_nodes(ph.doc, plan, [(0, len(html))])
+                found = ph.find(s)
+                found.children(s)
+                found.parent(s)
+                found.next(s)
+        assert plans == frozen
+        assert all(_cached_plan(s, ref_compat) is plans[s] for s in selectors)

@@ -163,27 +163,6 @@ def test_media_interleave_golden(spark):
     ]
 
 
-def test_nested_equals_exploded(spark, corpus):
-    from parse_html_spark.pipeline import extract_spans_nested
-
-    import pyspark.sql.functions as F
-
-    nested = extract_spans_nested(corpus)
-    exploded_back = nested.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.order").alias("order"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
-    flat = extract_spans(corpus)
-    a = {tuple(r) for r in exploded_back.collect()}
-    b = {tuple(r) for r in flat.collect()}
-    assert a == b
-
-
 def test_compact_equals_exploded(spark, corpus):
     from parse_html_spark.pipeline import (
         explode_compact,
@@ -219,8 +198,7 @@ def test_extract_docs_equals_reassembled(spark, corpus):
 def test_partition_metrics(spark, corpus):
     from parse_html_spark.pipeline import partition_metrics
 
-    out = extract_spans(corpus, with_partition_id=True)
-    m = partition_metrics(out).toPandas()
+    m = partition_metrics(extract_spans(corpus)).toPandas()
     assert m["n_docs"].sum() == N_DOCS
     assert (m["n_spans"] > 0).all()
 
@@ -368,3 +346,142 @@ def test_resumable_metrics_match_written_rows(spark, tmp_path):
     total_metric = m.agg({"n_spans": "sum"}).first()[0]
     total_actual = spark.read.parquet(os.path.join(out, "bucket=*")).count()
     assert total_metric == total_actual
+
+
+def _engine_rows(pipeline, doc_id, html, media):
+    """A pipeline's output rows for one doc, straight from the per-doc
+    engine (no Spark, no map kernel), in the pipeline's column order."""
+    from parse_html_spark.boilerplate import main_content_spans
+    from parse_html_spark.extract import (
+        extract_form,
+        extract_table_list,
+        prepare_post_form,
+        to_plain,
+    )
+    from parse_html_spark.matcher import find_nodes
+    from parse_html_spark.selector import compile_selector
+    from parse_html_spark.tokenizer import DocIndex
+
+    doc = DocIndex(html)
+    ph = PH(html, doc=doc)
+
+    def dumps(v):
+        return json.dumps(to_plain(v), ensure_ascii=False)
+
+    def matches(sel):
+        plan = compile_selector(sel)
+        return [] if plan is None else find_nodes(doc, plan, [(0, len(html))])
+
+    spans = main_content_spans(doc, media)
+    compact = (
+        [k == "media" for k, _t, _r in spans],
+        [t for _k, t, _r in spans],
+        [r for _k, _t, r in spans],
+    )
+    tables = extract_table_list(ph.find("table"), val_only=True)
+    if pipeline == "extract_spans_compact":
+        return [(doc_id, *compact)]
+    if pipeline == "extract_spans":
+        return [(doc_id, i, *s) for i, s in enumerate(spans)]
+    if pipeline == "extract_docs":
+        text = " ".join(compact[1])
+        return [(doc_id, text, [r for r in compact[2] if r is not None])]
+    if pipeline == "select_text":
+        ids = matches("p")
+        vals = [doc.text_between(doc.start_l[n], doc.end_l[n]) for n in ids]
+        return [(doc_id, k, v) for k, v in enumerate(vals)]
+    if pipeline == "select_html":
+        return [(doc_id, k, doc.outer(n)) for k, n in enumerate(matches("a"))]
+    if pipeline == "select_attr":
+        vals = [doc.attrs(n, validate=True).get("href") for n in matches("a")]
+        return [(doc_id, k, v) for k, v in enumerate(vals)]
+    if pipeline == "select_none":
+        return []
+    if pipeline == "select_multi":
+        return [
+            (doc_id, q, k, doc.outer(n))
+            for q, sel in (("td", "td"), ("none", "blink"))
+            for k, n in enumerate(matches(sel))
+        ]
+    if pipeline == "tables":
+        return [(doc_id, k, dumps(t)) for k, t in enumerate(tables)]
+    if pipeline == "forms":
+        return [(doc_id, dumps(extract_form(ph)))]
+    if pipeline == "post_forms":
+        return [(doc_id, dumps(prepare_post_form(ph, "go")))]
+    if pipeline == "node_table":
+        return [
+            (doc_id, i, doc.tag[i], doc.start_l[i], doc.end_l[i],
+             doc.cstart_l[i], doc.cend_l[i], doc.parent_l[i], doc.depth_l[i],
+             {k: "" if v is None else v for k, v in doc.attrs(i).items()})
+            for i in range(doc.n)
+        ]
+    if pipeline == "apply_ph":
+        return [(len(ph.find("p")), ph.find("title").text(), doc_id)]
+    assert pipeline == "extract_page"
+    return [
+        (doc_id, *compact, dumps([to_plain(t) for t in tables]),
+         dumps(extract_form(ph)), ph.find("title").text(), doc.n)
+    ]
+
+
+EDGE_PIPELINES = {
+    "extract_spans_compact": lambda P, df: P.extract_spans_compact(df),
+    "extract_spans": lambda P, df: P.extract_spans(df),
+    "extract_docs": lambda P, df: P.extract_docs(df),
+    "select_text": lambda P, df: P.select_spans(df, "p"),
+    "select_html": lambda P, df: P.select_spans(df, "a", mode="html"),
+    "select_attr": lambda P, df: P.select_spans(
+        df, "a", mode="attr", attr_name="href"
+    ),
+    "select_none": lambda P, df: P.select_spans(df, "blink"),
+    "select_multi": lambda P, df: P.select_spans_multi(
+        df, {"td": "td", "none": "blink", "bad": "div,"}, mode="html"
+    ),
+    "tables": lambda P, df: P.extract_tables_df(df),
+    "forms": lambda P, df: P.extract_forms_df(df),
+    "post_forms": lambda P, df: P.extract_post_forms_df(df, "go"),
+    "node_table": lambda P, df: P.node_table(df, with_attrs=True),
+    "apply_ph": lambda P, df: P.apply_ph(
+        df,
+        lambda ph: {"n_p": len(ph.find("p")), "title": ph.find("title").text()},
+        "n_p int, title string, doc_id string",
+    ),
+    "extract_page": lambda P, df: P.extract_page(df),
+}
+
+
+@pytest.fixture(scope="module")
+def edge_docs():
+    """Fixture docs with forms, tables and media, plus a NULL-spans doc
+    and an empty-array doc."""
+    docs = [(d["doc_id"], d["spans"]) for d in map(gen_doc, (0, 5, 9, 11))]
+    return docs + [("null_spans", None), ("no_spans", [])]
+
+
+@pytest.mark.parametrize("pipeline", list(EDGE_PIPELINES))
+def test_doc_map_edge_docs_match_engine(spark, edge_docs, pipeline):
+    """Every map-kernel pipeline equals the per-doc engine on NULL and
+    empty span arrays and on a selector that matches no doc (every
+    batch empty)."""
+    from parse_html_spark import pipeline as P
+
+    df = spark.createDataFrame(
+        edge_docs,
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+
+    def norm(v):
+        if isinstance(v, dict):
+            return tuple(sorted(v.items()))
+        return tuple(v) if isinstance(v, list) else v
+
+    out = EDGE_PIPELINES[pipeline](P, df)
+    got = [tuple(map(norm, r)) for r in out.collect()]
+    want = [
+        tuple(map(norm, r))
+        for doc_id, spans in edge_docs
+        for r in _engine_rows(pipeline, doc_id, *assemble(spans or []))
+    ]
+    assert sorted(got, key=repr) == sorted(want, key=repr)

@@ -56,14 +56,32 @@ def test_lsh_joins_are_never_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_arrow_bridge_prunes_columns(spark, corpus):
+KERNEL_PIPELINES = {
+    "extract_spans": lambda P, df: P.extract_spans(df),
+    "extract_spans_compact": lambda P, df: P.extract_spans_compact(df),
+    "extract_docs": lambda P, df: P.extract_docs(df),
+    "select_spans": lambda P, df: P.select_spans(df, "p"),
+    "select_spans_multi": lambda P, df: P.select_spans_multi(df, {"p": "p"}),
+    "extract_tables_df": lambda P, df: P.extract_tables_df(df),
+    "extract_forms_df": lambda P, df: P.extract_forms_df(df),
+    "extract_post_forms_df": lambda P, df: P.extract_post_forms_df(df, "go"),
+    "node_table": lambda P, df: P.node_table(df, with_attrs=True),
+    "apply_ph": lambda P, df: P.apply_ph(
+        df, lambda ph: {"t": ph.text()}, "t string, doc_id string"
+    ),
+    "extract_page": lambda P, df: P.extract_page(df),
+}
+
+
+@pytest.mark.parametrize("pipeline", list(KERNEL_PIPELINES))
+def test_arrow_bridge_prunes_columns(spark, corpus, pipeline):
     """mapInPandas stages select only (doc_id, spans): the ingest
     n_chars column must not cross the Python boundary, and the pruning
     must reach the parquet scan's ReadSchema."""
-    from parse_html_spark.pipeline import extract_spans
+    from parse_html_spark import pipeline as P
 
     assert "n_chars" in corpus.columns
-    plan = _plan(extract_spans(corpus))
+    plan = _plan(KERNEL_PIPELINES[pipeline](P, corpus))
     scan_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan_lines and all("n_chars" not in ln for ln in scan_lines)
 

@@ -62,26 +62,6 @@ def main() -> None:
     ]
     pairs += extra
 
-    if mode == "time":
-        # time-only mode for interleaved A/B runs (see tools/ab_engine.py)
-        import json
-
-        for h, m in pairs:  # warm
-            main_content_spans(DocIndex(h), m)
-        best_tok = float("inf")
-        best_full = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            for h, _m in pairs:
-                DocIndex(h)
-            best_tok = min(best_tok, time.time() - t0)
-            t0 = time.time()
-            for h, m in pairs:
-                main_content_spans(DocIndex(h), m)
-            best_full = min(best_full, time.time() - t0)
-        print(json.dumps({"tok": round(best_tok, 4), "full": round(best_full, 4)}))
-        return
-
     if mode == "snapshot":
         snap = [capture(h, m) for h, m in pairs]
         with open(SNAP, "wb") as f:
