@@ -5,9 +5,14 @@ Public heuristic lineage: Kohlschuetter et al., "Boilerplate Detection
 using Shallow Text Features" (WSDM 2010) -- link density + text mass;
 re-expressed as vectorized interval arithmetic over the tokenizer's text
 regions (prefix sums + batched searchsorted, O(nodes log regions) per
-document with NO per-node Python in the scoring loop). The exact rules
-below are the PINNED SPEC: the pure-Python oracle in tests uses the same
-definitions, and the Spark pipeline must reproduce them byte-for-byte.
+document with NO per-node Python in the scoring loop). Container
+descent (rule 2) walks each container's children by sibling jumps --
+``bisect_left(start_l, end_l[child])`` to the first node past a child,
+then a forward step over nodes whose parent is not the container, which
+a crossing interval like ``<b><i></b>..</i>`` leaves there -- so it is
+linear in nesting depth, not quadratic. The exact rules below are the
+PINNED SPEC: the pure-Python oracle in tests uses the same definitions,
+and the Spark pipeline must reproduce them byte-for-byte.
 
 Pinned algorithm (deterministic):
 
@@ -202,15 +207,28 @@ def find_main_container(
     """Byte range of the main-content container (rule 2).
 
     ``m_all`` is the optional precomputed per-node non-anchor mass (from
-    node_masses); children of the current container are found by a scan
-    of the parent array over the container's contiguous subtree index
-    range (nodes are in start order, so a subtree is one slice) -- no
-    per-node children lists or roots() list are ever materialized."""
+    node_masses). Children of the current container are enumerated by a
+    sibling walk over the start-ordered node arrays, so the whole descent
+    visits each node at most once (linear in nesting depth, not
+    quadratic):
+
+    - first child: the first node after the container whose parent is
+      the container (node 0 for the document roots);
+    - next sibling: the first node starting at/after the child's end
+      (``bisect_left(start_l, end_l[child], child + 1)``), then a forward
+      step past nodes whose parent is not the container.
+
+    The forward step covers crossing intervals: closers match per tag
+    name, so in ``<b><i></b></i><p>`` the ``<i>`` outlives ``<b>`` and
+    the ``<p>`` after ``</b>`` is a child of ``<i>``, not a sibling of
+    ``<b>``. Such nodes sit in the gaps between the container's children,
+    outside the subtree descended into next, so each is stepped over at
+    most once. The walk stops at the container's subtree bound (``n`` for
+    the roots)."""
     lo, hi = 0, len(doc.html)
     n = doc.n
     if n == 0:
         return lo, hi
-    cur_node = -1
     m_cur = tm.nonanchor(lo, hi)  # computed once; children reuse m[j]
     if m_all is None:
         tl, al = node_masses(doc, tm)
@@ -218,35 +236,31 @@ def find_main_container(
     cstart, cend = doc.cstart_l, doc.cend_l
     parent_l = doc.parent_l
     start_l, end_l = doc.start_l, doc.end_l
-    while True:
-        if m_cur <= 0:
-            return lo, hi
-        if cur_node < 0:
-            kids = [i for i in range(n) if parent_l[i] < 0]
-        else:
-            # subtree of cur_node = contiguous node ids [cur+1, sub_hi)
-            sub_hi = bisect.bisect_left(
-                start_l, end_l[cur_node], cur_node + 1
-            )
-            kids = [
-                i
-                for i in range(cur_node + 1, sub_hi)
-                if parent_l[i] == cur_node
-            ]
-        if not kids:
-            return lo, hi
+    bisect_left = bisect.bisect_left
+    cur_node = -1
+    k, bound = 0, n
+    while m_cur > 0:
         best = -1
         best_m = -1
-        for k in kids:
+        while k < bound:
+            if parent_l[k] != cur_node:
+                k += 1  # inside a crossing interval: not a child
+                continue
             mk = m_all[k]
             if mk > best_m:  # ties: first (earliest start) wins
                 best_m = mk
                 best = k
+            k = bisect_left(start_l, end_l[k], k + 1, bound)
         if best < 0 or best_m < DESCEND_FRACTION * m_cur:
-            return lo, hi
+            break
         cur_node = best
         lo, hi = cstart[best], cend[best]
         m_cur = best_m
+        # subtree of best = contiguous node ids [best + 1, bound); not
+        # capped by the old bound: a crossing child can outlive its parent
+        k = best + 1
+        bound = bisect_left(start_l, end_l[best], k)
+    return lo, hi
 
 
 def pruned_ranges(

@@ -210,6 +210,25 @@ def _cap_hot_buckets(
     )
 
 
+def _checkpoint_batch(df: DataFrame, name: str) -> DataFrame:
+    """``df.localCheckpoint()`` for the self-join operators, which
+    materialize their key rows once so both join sides stop re-running
+    the subtree. A streaming frame cannot be checkpointed; Spark would
+    fail with an AnalysisException from deep inside the operator, so
+    name it (``name``) and point to the streaming operators instead."""
+    if df.isStreaming:
+        raise ValueError(
+            f"{name} needs a batch DataFrame: it materializes its rows "
+            "with localCheckpoint(), which a streaming DataFrame cannot "
+            "do. For streams use parse_html_spark.streaming "
+            "(streaming_near_dup_candidates for near-duplicates, "
+            "streaming_dedup_first_seen / streaming_url_dedup_first_seen "
+            f"for exact duplicates), or call {name} on each "
+            "micro-batch inside foreachBatch."
+        )
+    return df.localCheckpoint()
+
+
 def _minhash_banded(
     df, text_col, id_col, num_hashes, bands, shingle_words
 ) -> DataFrame:
@@ -289,7 +308,7 @@ def minhash_lsh_pairs(
     # nodes). The checkpoint holds only (id, band, band_hash) -- ~24
     # bytes/doc/band, executor-local, infinitely cheaper than hashing
     # every document's text twice at corpus scale.
-    banded = banded.localCheckpoint()
+    banded = _checkpoint_batch(banded, "minhash_lsh_pairs")
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -456,7 +475,7 @@ def simhash_near_pairs(
     # materialize once before the self-join (same reasoning as
     # minhash_lsh_pairs: broadcast planning otherwise re-runs the
     # simhash UDF subtree on both sides; the chunk rows are ~32 B each)
-    chunks = chunks.localCheckpoint()
+    chunks = _checkpoint_batch(chunks, "simhash_near_pairs")
     a, b = chunks.alias("a"), chunks.alias("b")
     joined = a.join(
         b,
@@ -542,7 +561,7 @@ def token_jaccard_pairs(
     # three consumers (both join sides + sizes) would each re-run the
     # scan + tokenize + explode + distinct subtree; materialize the
     # (tok, id) rows once (round-8)
-    toks = toks.localCheckpoint()
+    toks = _checkpoint_batch(toks, "token_jaccard_pairs")
     sizes = toks.groupBy("id").agg(F.count("*").alias("n_tok"))
     a, b = toks.alias("a"), toks.alias("b")
     common = (
@@ -651,7 +670,7 @@ def chunk_dup_stats(
     # JOIN shape itself is deliberate: a window count per chunk would be
     # one pass but puts a hot chunk (boilerplate in 30% of docs) into
     # ONE task -- AQE skew handling applies to joins only (guide 2.5).
-    occ = occ.localCheckpoint()
+    occ = _checkpoint_batch(occ, "chunk_dup_stats")
     counts = (
         occ.filter(F.col("chunk").isNotNull())
         .groupBy("chunk")
@@ -853,7 +872,7 @@ def dedup_lines_global(
     # each re-scan and re-split the corpus; materialize the line rows
     # once (round-8). Join/agg shapes unchanged -- the unique
     # (line, id, pos) join key skew argument is untouched.
-    lines = lines.localCheckpoint()
+    lines = _checkpoint_batch(lines, "dedup_lines_global")
     big = lines.filter(F.length("line") >= min_chars)
     winners = big.groupBy("line").agg(
         F.min(F.struct(F.col(id_col), F.col("pos"))).alias("w")

@@ -543,14 +543,14 @@ def lsh_candidate_pairs(
     fraction into one sign bucket). The principled fix for persistent
     hot buckets is more bits per table; the cap bounds the accidental
     quadratic meanwhile. Explicit max_bucket=None disables."""
-    from .dedup import _cap_hot_buckets
+    from .dedup import _cap_hot_buckets, _checkpoint_batch
 
     banded = _embedding_banded(df, dim, tables, bits, vec_col, id_col, seed)
     banded = _cap_hot_buckets(banded, ["tbl", "bucket"], max_bucket)
     # materialize the (tbl, bucket, id) rows once before the self-join
     # (round-8: broadcast planning otherwise evaluates the hyperplane
     # matmul UDF subtree on both sides)
-    banded = banded.localCheckpoint()
+    banded = _checkpoint_batch(banded, "lsh_candidate_pairs")
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(

@@ -1,6 +1,8 @@
 """Direct unit tests for the pinned boilerplate-strip spec
 (parse_html_spark/boilerplate.py docstring rules 1-5)."""
 
+import time
+
 from parse_html_spark.boilerplate import (
     TextMass,
     find_main_container,
@@ -79,3 +81,46 @@ def test_media_positions_outside_container_dropped():
     spans = main_content_spans(doc, [(10, "media://out"), (mid, "media://in")])
     refs = [r for k, _t, r in spans if k == "media"]
     assert refs == ["media://in"]
+
+
+ARTICLE = (
+    "<article><h1>A headline</h1>"
+    + "".join(
+        f"<p>Paragraph {i} of the article body, in plain words.</p>"
+        for i in range(8)
+    )
+    + '<img src="fig.png"></article>'
+)
+
+
+def _nested_page(depth: int) -> str:
+    return (
+        "<html><body>"
+        '<nav><a href="/1">one</a> <a href="/2">two</a></nav>'
+        + '<div class="nest">' * depth
+        + ARTICLE
+        + "</div>" * depth
+        + "<footer>foot</footer></body></html>"
+    )
+
+
+def test_100k_deep_article_matches_shallow_twin():
+    spans = main_content_spans(DocIndex(_nested_page(100_000)))
+    assert spans == main_content_spans(DocIndex(_nested_page(1)))
+    assert spans[-1] == ("media", "", "fig.png")
+
+
+def test_container_descent_cost_linear_in_depth():
+    """10x the nesting depth costs ~10x the time (quadratic would be
+    ~100x); best-of-3 walls so one host hiccup does not decide."""
+
+    def best_wall(depth: int) -> float:
+        doc = DocIndex(_nested_page(depth))
+        walls = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            main_content_spans(doc)
+            walls.append(time.perf_counter() - t0)
+        return min(walls)
+
+    assert best_wall(100_000) / best_wall(10_000) <= 30

@@ -449,3 +449,34 @@ def test_quality_layer_streams_byte_identical(spark, tmp_path):
     assert by_id[3]["reject_reason"] == "dup_lines"
     assert by_id[4]["keep"] is False
     assert {r["split"] for r in by_id.values()} <= {"train", "val", "test"}
+
+
+def test_self_join_operators_reject_streaming_input(spark):
+    """The six batch self-join operators checkpoint their key rows, which
+    a stream cannot do: each fails at construction with a ValueError
+    that names the operator and the streaming operators."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from parse_html_spark.functions import dedup
+    from parse_html_spark.functions.similarity import lsh_candidate_pairs
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    sdf = rate.select(
+        F.col("value").alias("doc_id"),
+        F.concat(F.lit("doc words "), F.col("value").cast("string")).alias("text"),
+        F.array(F.col("value").cast("float"), F.lit(1.0)).alias("embedding"),
+        F.col("value").alias("vec_id"),
+    )
+    operators = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(sdf),
+        "simhash_near_pairs": lambda: dedup.simhash_near_pairs(sdf),
+        "token_jaccard_pairs": lambda: dedup.token_jaccard_pairs(sdf),
+        "chunk_dup_stats": lambda: dedup.chunk_dup_stats(sdf),
+        "dedup_lines_global": lambda: dedup.dedup_lines_global(sdf),
+        "lsh_candidate_pairs": lambda: lsh_candidate_pairs(sdf, dim=2),
+    }
+    for name, build in operators.items():
+        with pytest.raises(ValueError, match=name) as err:
+            build()
+        assert "streaming_near_dup_candidates" in str(err.value)

@@ -6,7 +6,13 @@ ONE process so both sides sample the same host-throttle state at ~1 s
 granularity (subprocess-level interleaving was still dominated by the
 host's multi-minute clock windows).
 
-    python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs]
+    python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs] [--page] [--deep]
+
+``--deep`` times the benchmark's ``deep_nesting`` corpus (seed 1: normal
+pages with the article nested 64..4096 divs deep, built by
+``perfbench/corpus.deep_doc``; ndocs defaults to its 128 docs) instead
+of the fixture mix, so depth-bound layer deltas reproduce
+single-threaded.
 """
 
 from __future__ import annotations
@@ -22,6 +28,7 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from parse_html_spark.fixtures import gen_doc  # noqa: E402
 from parse_html_spark.pipeline import assemble  # noqa: E402
+from perfbench.corpus import DEEP_DOCS, deep_depths, deep_doc  # noqa: E402
 
 
 def load_engine(root: str, name: str, page: bool = False):
@@ -59,12 +66,17 @@ def load_engine(root: str, name: str, page: bool = False):
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     page = "--page" in sys.argv
+    deep = "--deep" in sys.argv
     a_dir, b_dir = args[0], args[1]
     rounds = int(args[2]) if len(args) > 2 else 8
-    n = int(args[3]) if len(args) > 3 else 2000
+    n = int(args[3]) if len(args) > 3 else (DEEP_DOCS if deep else 2000)
     di_a, mcs_a = load_engine(a_dir, "phs_a", page)
     di_b, mcs_b = load_engine(b_dir, "phs_b", page)
-    pairs = [assemble(gen_doc(i)["spans"]) for i in range(n)]
+    if deep:
+        depths = deep_depths(1, n)
+        pairs = [assemble(deep_doc(i, 1, depths[i])[1]) for i in range(n)]
+    else:
+        pairs = [assemble(gen_doc(i)["spans"]) for i in range(n)]
 
     if page:
 
