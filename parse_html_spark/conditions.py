@@ -23,24 +23,30 @@ Re-expresses the reference's SQL-ish condition language
 from __future__ import annotations
 
 import re
+from functools import lru_cache
+from typing import Callable, NamedTuple
 
-OPERATORS = [
-    "=", "equals", "is",
-    "!=", "is not",
-    "<", "is less than",
-    ">", "is greater than",
-    "<=", "is less than or equals",
-    ">=", "is greater than or equals",
-    "|=", "contains prefix",
-    "~=", "contains word", "contains any word",
-    "~~=", "contains all word",
-    "!*=", "does not contain",
-    "*=", "contains",
-    "!^=", "does not start with",
-    "^=", "starts with",
-    "!$=", "does not end with",
-    "$=", "ends with",
+# spellings of each operator, canonical spelling first; flattened in this
+# order they are the regex alternation, whose order decides ties [:2085-2091]
+_OP_SPELLINGS = [
+    ("=", "equals", "is"),
+    ("!=", "is not"),
+    ("<", "is less than"),
+    (">", "is greater than"),
+    ("<=", "is less than or equals"),
+    (">=", "is greater than or equals"),
+    ("|=", "contains prefix"),
+    ("~=", "contains word", "contains any word"),
+    ("~~=", "contains all word"),
+    ("!*=", "does not contain"),
+    ("*=", "contains"),
+    ("!^=", "does not start with"),
+    ("^=", "starts with"),
+    ("!$=", "does not end with"),
+    ("$=", "ends with"),
 ]
+OPERATORS = [op for spellings in _OP_SPELLINGS for op in spellings]
+_CANONICAL = {op: spellings[0] for spellings in _OP_SPELLINGS for op in spellings}
 
 _OP_ALT = "|".join(re.escape(op) for op in OPERATORS)
 ATOM_RE = re.compile(r"^(.+)\s+(" + _OP_ALT + r")\s+(.+)$", re.IGNORECASE | re.DOTALL)
@@ -53,17 +59,6 @@ def split_or_and(conditions: str) -> list[list[str]]:
     """Split a condition string into OR groups of AND atoms (literal splits)."""
     ors = conditions.split(" OR ") if " OR " in conditions else [conditions]
     return [grp.split(" AND ") if " AND " in grp else [grp] for grp in ors]
-
-
-def parse_fields(conditions: str) -> list[str]:
-    """Field names of every parsable atom (candidate-scan driver)."""
-    fields = []
-    for group in split_or_and(conditions):
-        for atom in group:
-            m = ATOM_RE.match(atom.strip())
-            if m:
-                fields.append(m.group(1))
-    return fields
 
 
 def _strip_quotes(value: str) -> str:
@@ -87,55 +82,122 @@ def loose_cmp(a: str, b: str) -> int:
     return -1 if a < b else (1 if a > b else 0)
 
 
-def eval_atom(attrs: dict[str, str | None], atom: str) -> bool:
-    """Evaluate one DSL atom against an attribute map."""
-    m = ATOM_RE.match(atom.strip())
-    if not m:
-        return True  # unparsable atom evaluates TRUE
-    field, op, value = m.group(1), m.group(2).lower(), m.group(3)
-    value = _strip_quotes(value)
-    if field not in attrs:
-        return False  # missing attribute -> FALSE, for every operator
-    actual = attrs[field]
-    actual = "" if actual is None else actual
+class CompiledAtom(NamedTuple):
+    """One parsed atom: ``test(actual)`` runs on the attribute value
+    (None already mapped to ''). ``needle`` is a tuple of
+    ``(literal, ignore_case)`` alternatives, one of which occurs inside
+    every value the test accepts, or None when no such literal exists."""
 
-    if op in ("=", "equals", "is"):
-        return loose_cmp(actual, value) == 0
-    if op in ("!=", "is not"):
-        return loose_cmp(actual, value) != 0
-    if op in ("<", "is less than"):
-        return loose_cmp(actual, value) < 0
-    if op in (">", "is greater than"):
-        return loose_cmp(actual, value) > 0
-    if op in ("<=", "is less than or equals"):
-        return loose_cmp(actual, value) <= 0
-    if op in (">=", "is greater than or equals"):
-        return loose_cmp(actual, value) >= 0
-    if op in ("|=", "contains prefix"):
-        pat = "(?:^" + re.escape(value) + "$|^" + re.escape(value) + r"\-\w+)"
-        return re.search(pat, actual) is not None
-    if op in ("~=", "contains word", "contains any word"):
-        words, values = _WS_SPLIT.split(actual), _WS_SPLIT.split(value)
-        return len(set(words) & set(values)) != 0
-    if op in ("~~=", "contains all word"):
-        words, values = _WS_SPLIT.split(actual), _WS_SPLIT.split(value)
+    field: str
+    test: Callable[[str], bool]
+    needle: tuple[tuple[str, bool], ...] | None
+
+
+_LOOSE = {
+    "=": lambda c: c == 0,
+    "!=": lambda c: c != 0,
+    "<": lambda c: c < 0,
+    ">": lambda c: c > 0,
+    "<=": lambda c: c <= 0,
+    ">=": lambda c: c >= 0,
+}
+
+
+def _compile_test(op: str | None, value: str):
+    """(test, needle) of one canonical operator and unquoted value.
+
+    Needles: *=, ^=, $= need ``value`` case-insensitively (the very
+    pattern the test uses), |= needs it case-sensitively, and ~= / ~~=
+    need at least one value word. An empty literal is no needle. The
+    loose comparisons and the negations get none: loose compare is
+    numeric ('1.0' equals '1'), and a negation accepts values that lack
+    the literal."""
+    if op is None:
+        # ATOM_RE is case-insensitive over Unicode, so 'iſ' (long s)
+        # matches the 'is' spelling but lowercases to no operator: the
+        # atom parses and evaluates FALSE
+        return (lambda a: False), None
+    if op in _LOOSE:
+        ok = _LOOSE[op]
+        return (lambda a: ok(loose_cmp(a, value))), None
+    lit = ((value, op != "|="),) if value else None
+    esc = re.escape(value)
+    if op == "|=":
+        search = re.compile("(?:^" + esc + "$|^" + esc + r"\-\w+)").search
+        return (lambda a: search(a) is not None), lit
+    if op in ("~=", "~~="):
+        values = _WS_SPLIT.split(value)
+        vset = set(values)
+        words = None if "" in vset else tuple((w, False) for w in sorted(vset))
+        if op == "~=":
+            return (lambda a: not vset.isdisjoint(_WS_SPLIT.split(a))), words
         # PHP count(array_intersect($words,$values)) == count($values):
         # word-tokens are counted with duplicates, so "a b a" fails "a b".
-        vset = set(values)
-        return sum(1 for w in words if w in vset) == len(values)
-    if op in ("!*=", "does not contain"):
-        return re.search(re.escape(value), actual, re.IGNORECASE) is None
-    if op in ("*=", "contains"):
-        return re.search(re.escape(value), actual, re.IGNORECASE) is not None
-    if op in ("!^=", "does not start with"):
-        return re.match(re.escape(value), actual, re.IGNORECASE) is None
-    if op in ("^=", "starts with"):
-        return re.match(re.escape(value), actual, re.IGNORECASE) is not None
-    if op in ("!$=", "does not end with"):
-        return re.search(re.escape(value) + "$", actual, re.IGNORECASE) is None
-    if op in ("$=", "ends with"):
-        return re.search(re.escape(value) + "$", actual, re.IGNORECASE) is not None
+        n = len(values)
+        return (
+            lambda a: sum(1 for w in _WS_SPLIT.split(a) if w in vset) == n
+        ), words
+    if op in ("^=", "!^="):
+        find = re.compile(esc, re.IGNORECASE).match
+    elif op in ("$=", "!$="):
+        find = re.compile(esc + "$", re.IGNORECASE).search
+    else:  # *= / !*=
+        find = re.compile(esc, re.IGNORECASE).search
+    if op[0] == "!":
+        return (lambda a: find(a) is None), None
+    return (lambda a: find(a) is not None), lit
+
+
+@lru_cache(maxsize=2048)
+def compile_atom(atom: str) -> CompiledAtom | None:
+    """Parse one DSL atom; None when it does not parse (evaluates TRUE)."""
+    m = ATOM_RE.match(atom.strip())
+    if not m:
+        return None
+    op = _CANONICAL.get(m.group(2).lower())
+    test, needle = _compile_test(op, _strip_quotes(m.group(3)))
+    return CompiledAtom(m.group(1), test, needle)
+
+
+@lru_cache(maxsize=1024)
+def compile_conditions(conditions: str) -> tuple[tuple[CompiledAtom, ...], ...]:
+    """OR groups of parsed AND atoms. Unparsable atoms evaluate TRUE, so
+    they are dropped from their group (a group left empty is TRUE)."""
+    return tuple(
+        tuple(c for c in map(compile_atom, group) if c is not None)
+        for group in split_or_and(conditions)
+    )
+
+
+def parse_fields(conditions: str) -> list[str]:
+    """Field names of every parsable atom (they select the scan candidates)."""
+    return [c.field for group in compile_conditions(conditions) for c in group]
+
+
+def _atom_true(attrs: dict[str, str | None], c: CompiledAtom) -> bool:
+    if c.field not in attrs:
+        return False  # missing attribute -> FALSE, for every operator
+    actual = attrs[c.field]
+    return c.test("" if actual is None else actual)
+
+
+def eval_groups(attrs: dict[str, str | None], groups) -> bool:
+    """OR-of-ANDs over compiled groups; empty attrs -> False."""
+    if not attrs:
+        return False
+    for group in groups:
+        for c in group:
+            if not _atom_true(attrs, c):
+                break
+        else:
+            return True
     return False
+
+
+def eval_atom(attrs: dict[str, str | None], atom: str) -> bool:
+    """Evaluate one DSL atom against an attribute map."""
+    c = compile_atom(atom)
+    return True if c is None else _atom_true(attrs, c)  # unparsable -> TRUE
 
 
 def eval_conditions(attrs: dict[str, str | None], conditions: str | None) -> bool:
@@ -144,10 +206,7 @@ def eval_conditions(attrs: dict[str, str | None], conditions: str | None) -> boo
         return False
     if not conditions:
         return True
-    for group in split_or_and(conditions):
-        if all(eval_atom(attrs, atom) for atom in group):
-            return True
-    return False
+    return eval_groups(attrs, compile_conditions(conditions))
 
 
 def build_conditions(attributes) -> str:

@@ -17,6 +17,37 @@ node index. Dispatch rules preserved exactly:
 - everything else -> the condition DSL of conditions.py
 - an empty compound (from ``'a , b'``) matches nothing [:1692 falsy shift]
 
+Scan first, like the reference (stripos over the raw string, then
+validateInsideStartTag [:1551-1607]). Each compound is compiled once per
+process into its dispatch, its predicate and a *needle*: a regex that
+occurs inside the start tag of every node the compound can match. One
+C-level ``needle.search`` pass over the raw HTML then yields the
+candidates; a hit at offset s belongs to the last node starting at or
+before s, and only if it ends inside that node's start tag. The full
+per-node predicate still runs on every surviving candidate, so the scan
+only drops nodes that cannot match and every pinned quirk stays.
+
+Soundness: ``parse_attrs`` builds each attribute value from one
+contiguous run of its start tag [:1317-1408], so any literal that a
+value must contain occurs inside the start tag too. Needles:
+
+- lone ``#id``: the value itself (strict equality), if non-empty;
+- lone ``.class``: per OR group, its longest word; none if any word is
+  empty (the empty word matches a missing class attribute);
+- lone ``[attr]``: the presence pattern itself;
+- ``*=``, ``^=``, ``$=``: the evaluator's own ``re.escape(value)`` with
+  IGNORECASE -- never a ``.lower()`` substring test, because ``re.I``
+  matches ``s`` against ``ſ`` while ``'s' in 'ſ'.lower()`` is False;
+- ``|=``: the value, case-sensitive; ``~=`` / ``~~=``: any value word,
+  none if a value word is empty;
+- ``=``, ``<``, ``>`` (and their ``!=``/``<=``/``>=`` kin) get none,
+  because loose compare is numeric (``[n=1.0]`` matches ``n="1"``); the
+  negations get none, because they accept values lacking the literal.
+
+An AND group takes its most selective atom needle; several OR groups
+join theirs in one alternation, and a group without one leaves the whole
+compound without one (tag index or full candidate pass, as before).
+
 Divergence (SURVEY.md 2.11 A.8, documented): direct-child ``>`` is
 CSS-correct here -- the reference also matches the selector deeper inside
 the direct child because it re-searches a padded pseudo-element
@@ -26,23 +57,15 @@ the direct child because it re-searches a padded pseudo-element
 from __future__ import annotations
 
 import re
-from bisect import bisect_left
+from bisect import bisect_left, bisect_right
 from functools import lru_cache
+from typing import Callable, NamedTuple
 
-from .conditions import build_conditions, eval_conditions, parse_fields
-from .selector import Compound
+from .conditions import build_conditions, compile_conditions, eval_groups
+from .selector import Atom, Compound
 from .tokenizer import KNOWN_TAGS, DocIndex
 
 _WS_SPLIT = re.compile(r"\s")
-_PRESENCE_CACHE: dict[str, "re.Pattern"] = {}
-
-
-def _presence_pat(name: str) -> "re.Pattern":
-    pat = _PRESENCE_CACHE.get(name)
-    if pat is None:
-        pat = re.compile(r"\s" + re.escape(name), re.IGNORECASE)
-        _PRESENCE_CACHE[name] = pat
-    return pat
 
 # R-quirk (reference getElementByAttribute -> validateStartTag
 # [:504, :1481-1488]): attribute-dispatched scans only accept elements
@@ -51,89 +74,166 @@ def _presence_pat(name: str) -> "re.Pattern":
 # '[title]' never matches <custom-tag title=x>, but 'custom-tag' does.
 
 
-def class_word_match(attrs: dict, conditions: str) -> bool:
-    """getElementByClass word logic: AND/OR of class-word membership,
-    case-sensitive [:2212-2233]. Missing class attribute -> no match."""
+@lru_cache(maxsize=256)
+def _class_groups(conditions: str) -> tuple[tuple[str, ...], ...]:
+    groups = conditions.split(" OR ") if " OR " in conditions else [conditions]
+    return tuple(
+        tuple(grp.split(" AND ") if " AND " in grp else [grp]) for grp in groups
+    )
+
+
+def _class_match(attrs: dict, groups: tuple[tuple[str, ...], ...]) -> bool:
     # missing or bare class attribute behaves as the word list [''] (PHP
     # preg_split(null) -> ['']), so only the empty word matches it
     cls = attrs.get("class")
     words = _WS_SPLIT.split(cls) if cls is not None else [""]
-    groups = conditions.split(" OR ") if " OR " in conditions else [conditions]
-    for grp in groups:
-        ands = grp.split(" AND ") if " AND " in grp else [grp]
+    for ands in groups:
         if all(a in words for a in ands):
             return True
     return False
 
 
-def _atoms_match(doc: DocIndex, comp: Compound, i: int) -> bool:
-    """Attribute-atom part of a compound against node i (tag pre-filtered)."""
-    atoms = comp.attributes
+def class_word_match(attrs: dict, conditions: str) -> bool:
+    """getElementByClass word logic: AND/OR of class-word membership,
+    case-sensitive [:2212-2233]. Missing class attribute -> no match."""
+    return _class_match(attrs, _class_groups(conditions))
+
+
+class _Compiled(NamedTuple):
+    """One compound, compiled once per process (see ``_compile``)."""
+
+    nothing: bool  # matches no node at all
+    tag: str | None  # lowercased tag every match carries
+    whitelist: bool  # attribute dispatch: only KNOWN_TAGS nodes qualify
+    test: Callable[[DocIndex, int], bool] | None  # per-node predicate
+    first: bool  # lone #id: first match per scope only
+    needle: re.Pattern | None  # occurs in every match's start tag
+
+
+_NOTHING = _Compiled(True, None, False, None, False, None)
+
+
+def _needle_re(alternatives) -> re.Pattern | None:
+    """One regex over ``(literal, ignore_case)`` alternatives, one tuple
+    per OR group; None when some group has no needle. Shortest first: at
+    a given position the alternation then stops at the earliest end, so
+    a hit rejected for running past its start tag rejects them all."""
+    if not alternatives or any(alt is None for alt in alternatives):
+        return None
+    alts = sorted({lit for alt in alternatives for lit in alt},
+                  key=lambda li: (len(li[0]), li))
+    return re.compile("|".join(
+        ("(?i:%s)" if icase else "%s") % re.escape(lit) for lit, icase in alts
+    ))
+
+
+def _group_needle(group):
+    """Most selective atom needle of an AND group (every atom must hold)."""
+    needles = [c.needle for c in group if c.needle is not None]
+    return max(needles, key=lambda n: min(len(lit) for lit, _ in n), default=None)
+
+
+@lru_cache(maxsize=1024)
+def _compile(tag: str | None, atoms: tuple[Atom, ...]) -> _Compiled:
+    """Dispatch kind, predicate and needle of one compound. Keyed on the
+    hashable (tag, atoms) pair, never on the mutable Compound."""
+    want = tag.lower() if tag is not None else None
     if not atoms:
-        return True
-    if comp.tag is None and len(atoms) == 1:
+        return _Compiled(False, want, False, None, False, None)
+    if want is None and len(atoms) == 1:
         atom = atoms[0]
+        if atom.name == "id":
+            # strict ===, first match, break [:2242-2244]
+            value = atom.value
+            needle = _needle_re([((value, False),)]) if value else None
+            return _Compiled(
+                False, None, True,
+                lambda doc, j: doc.attrs(j).get("id") == value, True, needle,
+            )
         if atom.name == "class":
-            value = atom.value.replace(" ", " AND ")
-            return class_word_match(doc.attrs(i), value)
+            groups = _class_groups(atom.value.replace(" ", " AND "))
+            words = [w for ands in groups for w in ands]
+            needle = None if "" in words else _needle_re(
+                [((max(ands, key=len), False),) for ands in groups]
+            )
+            return _Compiled(
+                False, None, True,
+                lambda doc, j: _class_match(doc.attrs(j), groups), False, needle,
+            )
         if atom.is_presence:
             # R-quirk 11: bare presence is the reference's TEXTUAL scan --
             # whitespace + name substring anywhere inside the start tag
             # (case-insensitive), so ' title' inside an attribute VALUE
             # also matches [:488-493]. Well-formed attributes always
             # satisfy this; the quirk only widens pathological cases.
-            pat = _presence_pat(atom.name)
-            return pat.search(doc.starttag(i)) is not None
-        # note: lone id handled by the caller (first-match semantics)
-    conditions = build_conditions(atoms)
-    if not parse_fields(conditions):
-        return False  # no parsable atom -> no candidates in the reference
-    return eval_conditions(doc.attrs(i), conditions)
-
-
-def _is_lone_id(comp: Compound) -> bool:
-    return (
-        comp.tag is None
-        and len(comp.attributes) == 1
-        and comp.attributes[0].name == "id"
+            pat = re.compile(r"\s" + re.escape(atom.name), re.IGNORECASE)
+            return _Compiled(
+                False, None, True,
+                lambda doc, j: pat.search(doc.starttag(j)) is not None,
+                False, pat,
+            )
+    groups = compile_conditions(build_conditions(atoms))
+    # no parsable atom -> no candidates in the reference [:2092-2098];
+    # a parsable atom routes a tagged compound through validateStartTag,
+    # so 'blink[data-n>1]' matches nothing (blink is not whitelisted)
+    # while bare 'blink' matches [:756 callback, :504, :1481-1488]
+    if not any(groups) or (want is not None and want not in KNOWN_TAGS):
+        return _NOTHING
+    return _Compiled(
+        False, want, want is None,
+        lambda doc, j: eval_groups(doc.attrs(j), groups), False,
+        _needle_re([_group_needle(g) for g in groups]),
     )
 
 
-@lru_cache(maxsize=1024)
-def _atoms_parsable(atoms: tuple) -> bool:
-    return bool(parse_fields(build_conditions(list(atoms))))
+def _compiled(comp: Compound) -> _Compiled:
+    return _compile(comp.tag, tuple(comp.attributes))
 
 
-def _has_parsable_atom(comp: Compound) -> bool:
-    """True when the compound's atoms yield >=1 parsable condition field.
-    In the reference, such compounds route through getElementByAttribute
-    -> validateStartTag [:756 callback, :504, :1481-1488], which enforces
-    the 107-tag whitelist even on the tag-dispatched path -- so
-    'blink[data-n>1]' matches nothing upstream (blink not whitelisted)
-    while bare 'blink' matches (tag scan skips validation, [:756-758]).
-    Memoized on the (hashable) atom tuple: plans are compiled once per
-    query, so this never recompiles conditions in the per-doc hot path."""
-    return _atoms_parsable(tuple(comp.attributes))
+def _matches(doc: DocIndex, cp: _Compiled, i: int) -> bool:
+    if cp.nothing:
+        return False
+    t = doc.tag[i]
+    if cp.tag is not None and t != cp.tag:
+        return False
+    if cp.whitelist and t not in KNOWN_TAGS:
+        return False
+    return cp.test is None or cp.test(doc, i)
 
 
 def node_matches(doc: DocIndex, comp: Compound, i: int) -> bool:
-    if comp.tag is not None:
-        if doc.tag[i] != comp.tag.lower():
-            return False
-        if (
-            comp.attributes
-            and doc.tag[i] not in KNOWN_TAGS
-            and _has_parsable_atom(comp)
-        ):
-            return False  # attribute path validates even with a tag
-    elif comp.attributes and doc.tag[i] not in KNOWN_TAGS:
-        return False  # attribute dispatch validates the tag whitelist
-    if _is_lone_id(comp):
-        return doc.attrs(i).get("id") == comp.attributes[0].value
-    return _atoms_match(doc, comp, i)
+    return _matches(doc, _compiled(comp), i)
+
+
+def _scan(doc: DocIndex, needle: re.Pattern, a: int, b: int) -> list[int]:
+    """Ids in [a, b) whose start tag holds a needle hit, ascending. A hit
+    at s belongs to the last node starting at or before s, and only if
+    it ends inside that node's start tag. After a kept node the scan
+    resumes past its start tag; after a rejected hit at s + 1, so
+    overlapping occurrences (and needles holding '<') are not skipped."""
+    start_l = doc.start_l
+    cstart_l = doc.cstart_l
+    search = needle.search
+    html = doc.html
+    pos, stop = start_l[a], cstart_l[b - 1]
+    out: list[int] = []
+    while True:
+        m = search(html, pos, stop)
+        if m is None:
+            return out
+        s = m.start()
+        j = bisect_right(start_l, s) - 1
+        if a <= j < b and m.end() <= cstart_l[j]:
+            out.append(j)
+            pos = cstart_l[j]
+        else:
+            pos = s + 1
 
 
 def _match_in_range(doc: DocIndex, comp: Compound, lo: int, hi: int) -> list[int]:
+    cp = _compiled(comp)
+    if cp.nothing:
+        return []
     # candidate ids via C bisect on the list twin (node starts are
     # sorted); plain-int ranges, no numpy boxing in the per-doc hot path
     start_l = doc.start_l
@@ -142,36 +242,47 @@ def _match_in_range(doc: DocIndex, comp: Compound, lo: int, hi: int) -> list[int
     if a >= b:
         return []
     tag = doc.tag
-    if comp.tag is not None:
-        want = comp.tag.lower()
-        if (
-            comp.attributes
-            and want not in KNOWN_TAGS
-            and _has_parsable_atom(comp)
-        ):
-            return []  # attribute path validates even with a tag
+    want = cp.tag
+    if cp.needle is not None:
+        cand = _scan(doc, cp.needle, a, b)
+        if want is not None:
+            cand = [j for j in cand if tag[j] == want]
+        elif cp.whitelist:
+            cand = [j for j in cand if tag[j] in KNOWN_TAGS]
+    elif want is not None:
         # tag-dispatched scan via the per-doc tag->ids index: O(matches)
-        # instead of a full-node pass per compound (the page job runs
-        # ~7 tag scans per doc; round-8). Ids are sorted, so the scope
-        # restriction is a bisect on the tag's own id list.
+        # instead of a full-node pass per compound. Ids are sorted, so
+        # the scope restriction is a bisect on the tag's own id list.
         ids = doc.tag_ids().get(want)
         if not ids:
             return []
-        ia = bisect_left(ids, a)
-        ib = bisect_left(ids, b)
-        cand = ids[ia:ib]
-    elif comp.attributes:
-        # attribute dispatch: only whitelisted HTML tags are candidates
+        cand = ids[bisect_left(ids, a):bisect_left(ids, b)]
+    elif cp.whitelist:
         cand = [j for j in range(a, b) if tag[j] in KNOWN_TAGS]
     else:
-        cand = list(range(a, b))
-    if _is_lone_id(comp):
-        value = comp.attributes[0].value
+        cand = range(a, b)
+    test = cp.test
+    if test is None:
+        return list(cand)
+    if cp.first:
         for j in cand:
-            if doc.attrs(j).get("id") == value:
-                return [j]  # strict ===, first match, break [:2242-2244]
+            if test(doc, j):
+                return [j]
         return []
-    return [j for j in cand if _atoms_match(doc, comp, j)]
+    return [j for j in cand if test(doc, j)]
+
+
+def _tagged_children(doc: DocIndex, cp: _Compiled, nodes: list[int]) -> list[int]:
+    """Direct children of ``nodes`` that match a tagged compound: the
+    tag's ids grouped by parent, in ``nodes`` order, then by id."""
+    slot = {nd: k for k, nd in enumerate(nodes)}
+    buckets: list[list[int]] = [[] for _ in nodes]
+    parent_l = doc.parent_l
+    for ch in doc.tag_ids().get(cp.tag, ()):
+        k = slot.get(parent_l[ch])
+        if k is not None and _matches(doc, cp, ch):
+            buckets[k].append(ch)
+    return [ch for bucket in buckets for ch in bucket]
 
 
 def eval_chain(
@@ -200,11 +311,12 @@ def eval_chain(
                             if j not in seen:
                                 seen.add(j)
                                 out.append(j)
+            elif (cp := _compiled(comp)).tag is not None:
+                out = _tagged_children(doc, cp, nodes)
             else:
                 for nd in nodes:
                     for ch in doc.children_of(nd):
-                        if ch not in seen and node_matches(doc, comp, ch):
-                            seen.add(ch)
+                        if _matches(doc, cp, ch):
                             out.append(ch)
         else:
             ranges = (

@@ -255,3 +255,31 @@ def test_cached_plans_stay_unmutated():
                 found.next(s)
         assert plans == frozen
         assert all(_cached_plan(s, ref_compat) is plans[s] for s in selectors)
+
+
+def test_selector_caches_stay_bounded():
+    """Dynamic selectors must not grow worker memory: after 10k distinct
+    ``[attrN]`` finds (lone presence and DSL atoms, plus the public DSL
+    entry points) every matcher / conditions cache is an lru_cache at or
+    below its maxsize, and no module-level container has grown."""
+    from parse_html_spark import conditions, matcher
+
+    ph = PH('<p attr1="v1">x</p>')
+    for k in range(10_000):
+        ph.find(f"[attr{k}]")
+        ph.find(f"p[attr{k}^=v]")
+        conditions.eval_conditions({"a": "1"}, f"attr{k} = 1 OR a = {k}")
+        matcher.class_word_match({"class": "x"}, f"c{k} OR x")
+    assert len(ph.find("[attr1]")) == len(ph.find("p[attr1^=v]")) == 1
+    modules = (matcher, conditions)
+    grown = [
+        name for m in modules for name, v in vars(m).items()
+        if not name.startswith("__")
+        and isinstance(v, (dict, list, set)) and len(v) > 100
+    ]
+    assert grown == []
+    caches = [f for m in modules for f in vars(m).values() if hasattr(f, "cache_info")]
+    assert len(caches) >= 4
+    for f in caches:
+        info = f.cache_info()
+        assert info.maxsize is not None and info.currsize <= info.maxsize, f

@@ -2,10 +2,11 @@
 selectors compile to None (chainable empty), arbitrary byte soup
 tokenizes to a consistent index, attrs parse to a dict. Tag soup also
 pins the container descent's sibling walk to its linear-scan
-definition, and adversarial nesting depth never makes the boilerplate
-strip raise."""
+definition, the scan-first selector matcher to a full node scan, and
+adversarial nesting depth never makes the boilerplate strip raise."""
 
 import bisect
+import re
 
 import hypothesis.strategies as st
 from hypothesis import example, given, settings
@@ -17,10 +18,21 @@ from parse_html_spark.boilerplate import (
     main_content_spans,
     node_masses,
 )
-from parse_html_spark.conditions import eval_conditions
+from parse_html_spark.conditions import (
+    OPERATORS,
+    build_conditions,
+    eval_conditions,
+    parse_fields,
+)
 from parse_html_spark.dom import PH
-from parse_html_spark.selector import compile_selector
-from parse_html_spark.tokenizer import DocIndex, parse_attrs
+from parse_html_spark.matcher import (
+    _match_in_range,
+    class_word_match,
+    eval_chain,
+    find_nodes,
+)
+from parse_html_spark.selector import Atom, Compound, compile_selector
+from parse_html_spark.tokenizer import KNOWN_TAGS, DocIndex, parse_attrs
 
 
 @settings(max_examples=300, deadline=None)
@@ -70,6 +82,9 @@ def test_find_never_raises(selector, html):
     ),
     st.text(max_size=50),
 )
+# 'iſ' matches the 'is' spelling only through Unicode case folding
+@example({"t": "x"}, "t i\u017f x")
+@example({"t": "x"}, "t \u0130s x")
 def test_eval_conditions_never_raises(attrs, conditions):
     assert eval_conditions(attrs, conditions) in (True, False)
 
@@ -142,6 +157,164 @@ def test_container_sibling_walk_matches_scan(html):
     assert find_main_container(doc, tm, m_all) == _container_by_scan(
         doc, tm, m_all
     )
+
+
+# -- scan-first selector matching vs a full node scan -----------------------
+
+MATCH_TAGS = ["div", "p", "ul", "li", "a", "span", "blink", "x1"]
+MATCH_NAMES = ["id", "class", "n", "title", "data-x"]
+MATCH_VALUES = [
+    "", "s", "S", "\u017f", "aa", "aaa", "a b", "a  b", "1", "1.0", "x<y",
+    "a-b", "<p", "b", "sa", "'s'",
+]
+# values that split the condition string into several OR / AND groups
+DSL_VALUES = MATCH_VALUES + ["b OR title *= s", "1 OR n ~= aa", "s AND n > 0"]
+
+
+@st.composite
+def attr_soup(draw):
+    """Start tags with quoted, unquoted and bare attributes (names in
+    any case), closers, and text that repeats attribute values."""
+    value = st.sampled_from(MATCH_VALUES)
+    attr = st.tuples(
+        st.sampled_from(MATCH_NAMES + ["TITLE", "Class"]),
+        st.sampled_from(['"', "'", "", None]),
+        value,
+    ).map(
+        lambda a: a[0] if a[1] is None
+        else f"{a[0]}={a[1]}{a[2] if a[1] or a[2] else 'v'}{a[1]}"
+    )
+    tag = st.sampled_from(MATCH_TAGS)
+    piece = st.one_of(
+        st.tuples(tag, st.lists(attr, max_size=3)).map(
+            lambda t: "<" + t[0] + "".join(" " + a for a in t[1]) + ">"
+        ),
+        tag.map(lambda n: f"</{n}>"),
+        value,
+        st.sampled_from([" title=s ", "a<p", "<", " "]),
+    )
+    return "".join(draw(st.lists(piece, max_size=30)))
+
+
+@st.composite
+def compounds(draw):
+    """Bare tag, lone #id, lone .class, lone [attr], or DSL atoms (every
+    operator spelling) with or without a tag."""
+    kind = draw(st.sampled_from(["tag", "id", "class", "presence", "dsl", "tag_dsl"]))
+    value = st.sampled_from(MATCH_VALUES)
+    if kind == "tag":
+        return Compound(tag=draw(st.sampled_from(MATCH_TAGS + ["LI"])))
+    if kind == "id":
+        return Compound(attributes=[Atom("id", "=", draw(value))])
+    if kind == "class":
+        return Compound(attributes=[Atom("class", "~=", draw(value))])
+    if kind == "presence":
+        return Compound(attributes=[Atom(draw(st.sampled_from(MATCH_NAMES)), "", "")])
+    atom = st.builds(
+        Atom,
+        st.sampled_from(MATCH_NAMES),
+        st.sampled_from(OPERATORS + [""]),
+        st.sampled_from(DSL_VALUES),
+    )
+    tag = draw(st.sampled_from(MATCH_TAGS)) if kind == "tag_dsl" else None
+    return Compound(tag=tag, attributes=draw(st.lists(atom, min_size=1, max_size=3)))
+
+
+def _node_by_scan(doc, comp, j):
+    """The per-node dispatch as first written, with no compiled state."""
+    t, atoms = doc.tag[j], comp.attributes
+    if comp.tag is not None and t != comp.tag.lower():
+        return False
+    if not atoms:
+        return True
+    if t not in KNOWN_TAGS:
+        return False
+    if comp.tag is None and len(atoms) == 1:
+        atom = atoms[0]
+        if atom.name == "id":
+            return doc.attrs(j).get("id") == atom.value
+        if atom.name == "class":
+            return class_word_match(doc.attrs(j), atom.value.replace(" ", " AND "))
+        if atom.is_presence:
+            pat = re.compile(r"\s" + re.escape(atom.name), re.IGNORECASE)
+            return pat.search(doc.starttag(j)) is not None
+    conditions = build_conditions(atoms)
+    return bool(parse_fields(conditions)) and eval_conditions(doc.attrs(j), conditions)
+
+
+def _range_by_scan(doc, comp, lo, hi):
+    ids = [
+        j for j in range(doc.n)
+        if lo <= doc.start_l[j] < hi and _node_by_scan(doc, comp, j)
+    ]
+    lone_id = comp.tag is None and [a.name for a in comp.attributes] == ["id"]
+    return ids[:1] if lone_id else ids
+
+
+def _chain_by_scan(doc, chain, scopes):
+    nodes = None
+    for comp in chain:
+        if comp.is_empty:
+            return []
+        if comp.direct and nodes is not None:
+            nodes = [
+                ch for nd in nodes for ch in range(doc.n)
+                if doc.parent_l[ch] == nd and _node_by_scan(doc, comp, ch)
+            ]
+        else:
+            ranges = scopes if nodes is None else [
+                (doc.cstart_l[k], doc.cend_l[k]) for k in nodes
+            ]
+            nodes = list(dict.fromkeys(
+                j for lo, hi in ranges for j in _range_by_scan(doc, comp, lo, hi)
+            ))
+        if not nodes:
+            return []
+    return nodes or []
+
+
+@settings(max_examples=600, deadline=None)
+@given(attr_soup(), compounds(), st.integers(0, 150), st.integers(0, 150))
+# re.I folds the long s into 's'; a .lower() needle would miss it
+@example('<p title="\u017f">x</p>', Compound(attributes=[Atom("title", "*=", "s")]), 0, 0)
+@example('<p title="\u017fa">', Compound(tag="p", attributes=[Atom("title", "^=", "S")]), 0, 0)
+# overlapping occurrences of the needle
+@example('<b>a</b><p title="aaa">', Compound(attributes=[Atom("title", "*=", "aa")]), 0, 0)
+# the longer OR needle holds '<' and is rejected at 'a<p', where it
+# overlaps the only kept hit: the scan must resume at s + 1
+@example(
+    '<i>a<p title="b">',
+    Compound(attributes=[Atom("title", "*=", 'b OR title *= a<p title="b')]),
+    0, 0,
+)
+# an empty class word matches a missing class attribute: no needle
+@example("<p>x</p><div class='a  b'>", Compound(attributes=[Atom("class", "~=", "a  b")]), 0, 0)
+@example("<p>x</p><div class='a  b'>", Compound(attributes=[Atom("class", "", "")]), 0, 0)
+# loose compare is numeric: '1.0' equals '1', so '=' has no needle
+@example('<p n="1">', Compound(attributes=[Atom("n", "=", "1.0")]), 0, 0)
+def test_scan_first_matching_equals_full_scan(html, comp, lo, span):
+    doc = DocIndex(html)
+    for a, b in ((0, len(html)), (lo, lo + span)):
+        assert _match_in_range(doc, comp, a, b) == _range_by_scan(doc, comp, a, b)
+    assert find_nodes(doc, [[comp]], [(0, len(html))]) == _range_by_scan(
+        doc, comp, 0, len(html)
+    )
+
+
+@settings(max_examples=400, deadline=None)
+@given(attr_soup(), st.lists(st.tuples(compounds(), st.booleans()), min_size=1, max_size=3))
+# nested lists: children come by parent in step order, then by id
+@example(
+    "<ul><li>a<ul><li>b</li></ul></li><li>c</li></ul>",
+    [(Compound(tag="ul"), False), (Compound(tag="li"), True)],
+)
+def test_eval_chain_equals_full_scan(html, steps):
+    doc = DocIndex(html)
+    chain = [Compound(direct=d, tag=c.tag, attributes=c.attributes) for c, d in steps]
+    scopes = [(0, len(html))]
+    want = _chain_by_scan(doc, chain, scopes)
+    assert eval_chain(doc, chain, scopes) == want
+    assert find_nodes(doc, [chain], scopes) == sorted(want, key=doc.start_l.__getitem__)
 
 
 # -- adversarial nesting depth ----------------------------------------------

@@ -6,13 +6,18 @@ ONE process so both sides sample the same host-throttle state at ~1 s
 granularity (subprocess-level interleaving was still dominated by the
 host's multi-minute clock windows).
 
-    python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs] [--page] [--deep]
+    python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs] [--page|--select] [--deep]
 
 ``--deep`` times the benchmark's ``deep_nesting`` corpus (seed 1: normal
 pages with the article nested 64..4096 divs deep, built by
 ``perfbench/corpus.deep_doc``; ndocs defaults to its 128 docs) instead
 of the fixture mix, so depth-bound layer deltas reproduce
 single-threaded.
+
+``--select`` times the ``selector_fields`` per-doc work instead: a fresh
+``DocIndex`` plus ``find_nodes`` and the text values for each of
+``perfbench/replay.SELECTORS``, as ``select_spans_multi(mode='text')``
+does. It first checks that both engines give the same rows.
 """
 
 from __future__ import annotations
@@ -29,9 +34,10 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 from parse_html_spark.fixtures import gen_doc  # noqa: E402
 from parse_html_spark.pipeline import assemble  # noqa: E402
 from perfbench.corpus import DEEP_DOCS, deep_depths, deep_doc  # noqa: E402
+from perfbench.replay import SELECTORS  # noqa: E402
 
 
-def load_engine(root: str, name: str, page: bool = False):
+def load_engine(root: str, name: str, page: bool = False, select: bool = False):
     pkg_dir = os.path.join(root, "parse_html_spark")
     spec = importlib.util.spec_from_file_location(
         name,
@@ -43,6 +49,19 @@ def load_engine(root: str, name: str, page: bool = False):
     spec.loader.exec_module(pkg)
     tok = importlib.import_module(name + ".tokenizer")
     boil = importlib.import_module(name + ".boilerplate")
+    if select:
+        sel = importlib.import_module(name + ".selector")
+        mat = importlib.import_module(name + ".matcher")
+        plans = [sel.compile_selector(s) for s in SELECTORS.values()]
+
+        def select_fn(doc, _m):
+            scopes = [(0, len(doc.html))]
+            return [
+                [doc.text_between(doc.start_l[k], doc.end_l[k]) for k in ids]
+                for ids in (mat.find_nodes(doc, p, scopes) for p in plans)
+            ]
+
+        return tok.DocIndex, select_fn
     if not page:
         return tok.DocIndex, boil.main_content_spans
     import json
@@ -66,12 +85,13 @@ def load_engine(root: str, name: str, page: bool = False):
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     page = "--page" in sys.argv
+    select = "--select" in sys.argv
     deep = "--deep" in sys.argv
     a_dir, b_dir = args[0], args[1]
     rounds = int(args[2]) if len(args) > 2 else 8
     n = int(args[3]) if len(args) > 3 else (DEEP_DOCS if deep else 2000)
-    di_a, mcs_a = load_engine(a_dir, "phs_a", page)
-    di_b, mcs_b = load_engine(b_dir, "phs_b", page)
+    di_a, mcs_a = load_engine(a_dir, "phs_a", page, select)
+    di_b, mcs_b = load_engine(b_dir, "phs_b", page, select)
     if deep:
         depths = deep_depths(1, n)
         pairs = [assemble(deep_doc(i, 1, depths[i])[1]) for i in range(n)]
