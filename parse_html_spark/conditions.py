@@ -106,12 +106,24 @@ _LOOSE = {
 def _compile_test(op: str | None, value: str):
     """(test, needle) of one canonical operator and unquoted value.
 
-    Needles: *=, ^=, $= need ``value`` case-insensitively (the very
-    pattern the test uses), |= needs it case-sensitively, and ~= / ~~=
-    need at least one value word. An empty literal is no needle. The
-    loose comparisons and the negations get none: loose compare is
-    numeric ('1.0' equals '1'), and a negation accepts values that lack
-    the literal."""
+    The needle is a literal that every value the test accepts contains,
+    so the matcher may drop any node whose start tag lacks it (values
+    are contiguous runs of their start tag). Per operator:
+
+    - ``*=``, ``^=``, ``$=``: ``value``, case-insensitive -- the very
+      ``re.escape(value)`` + IGNORECASE pattern the test uses. Never a
+      ``.lower()`` substring test: ``re.I`` matches ``s`` against the
+      long s ``ſ``, but ``'s' in 'ſ'.lower()`` is False.
+    - ``|=``: ``value``, case-sensitive, as the test is.
+    - ``~=`` / ``~~=``: any value word, since an accepted value shares
+      at least one; none if a value word is empty (an empty word is
+      met by an empty value or by two adjacent whitespace chars).
+    - ``=``, ``!=``, ``<``, ``>``, ``<=``, ``>=``: none, because loose
+      compare is numeric when both sides are (``'1.0'`` equals ``'1'``).
+    - ``!*=``, ``!^=``, ``!$=``: none, because a negation accepts values
+      that lack the literal.
+
+    An empty literal is no needle."""
     if op is None:
         # ATOM_RE is case-insensitive over Unicode, so 'iſ' (long s)
         # matches the 'is' spelling but lowercases to no operator: the

@@ -35,14 +35,11 @@ value must contain occurs inside the start tag too. Needles:
 - lone ``.class``: per OR group, its longest word; none if any word is
   empty (the empty word matches a missing class attribute);
 - lone ``[attr]``: the presence pattern itself;
-- ``*=``, ``^=``, ``$=``: the evaluator's own ``re.escape(value)`` with
-  IGNORECASE -- never a ``.lower()`` substring test, because ``re.I``
-  matches ``s`` against ``ſ`` while ``'s' in 'ſ'.lower()`` is False;
-- ``|=``: the value, case-sensitive; ``~=`` / ``~~=``: any value word,
-  none if a value word is empty;
-- ``=``, ``<``, ``>`` (and their ``!=``/``<=``/``>=`` kin) get none,
-  because loose compare is numeric (``[n=1.0]`` matches ``n="1"``); the
-  negations get none, because they accept values lacking the literal.
+- DSL atoms: ``CompiledAtom.needle``, given only where every value the
+  operator accepts holds one fixed literal -- so the loose comparisons
+  (numeric for numbers) and the negations get none. The rule for each
+  operator and its argument sit with the operator tests, in
+  ``conditions._compile_test``.
 
 An AND group takes its most selective atom needle; several OR groups
 join theirs in one alternation, and a group without one leaves the whole
@@ -61,7 +58,12 @@ from bisect import bisect_left, bisect_right
 from functools import lru_cache
 from typing import Callable, NamedTuple
 
-from .conditions import build_conditions, compile_conditions, eval_groups
+from .conditions import (
+    build_conditions,
+    compile_conditions,
+    eval_groups,
+    split_or_and,
+)
 from .selector import Atom, Compound
 from .tokenizer import KNOWN_TAGS, DocIndex
 
@@ -74,15 +76,7 @@ _WS_SPLIT = re.compile(r"\s")
 # '[title]' never matches <custom-tag title=x>, but 'custom-tag' does.
 
 
-@lru_cache(maxsize=256)
-def _class_groups(conditions: str) -> tuple[tuple[str, ...], ...]:
-    groups = conditions.split(" OR ") if " OR " in conditions else [conditions]
-    return tuple(
-        tuple(grp.split(" AND ") if " AND " in grp else [grp]) for grp in groups
-    )
-
-
-def _class_match(attrs: dict, groups: tuple[tuple[str, ...], ...]) -> bool:
+def _class_match(attrs: dict, groups) -> bool:
     # missing or bare class attribute behaves as the word list [''] (PHP
     # preg_split(null) -> ['']), so only the empty word matches it
     cls = attrs.get("class")
@@ -96,7 +90,7 @@ def _class_match(attrs: dict, groups: tuple[tuple[str, ...], ...]) -> bool:
 def class_word_match(attrs: dict, conditions: str) -> bool:
     """getElementByClass word logic: AND/OR of class-word membership,
     case-sensitive [:2212-2233]. Missing class attribute -> no match."""
-    return _class_match(attrs, _class_groups(conditions))
+    return _class_match(attrs, split_or_and(conditions))
 
 
 class _Compiled(NamedTuple):
@@ -151,7 +145,9 @@ def _compile(tag: str | None, atoms: tuple[Atom, ...]) -> _Compiled:
                 lambda doc, j: doc.attrs(j).get("id") == value, True, needle,
             )
         if atom.name == "class":
-            groups = _class_groups(atom.value.replace(" ", " AND "))
+            groups = tuple(
+                map(tuple, split_or_and(atom.value.replace(" ", " AND ")))
+            )
             words = [w for ands in groups for w in ands]
             needle = None if "" in words else _needle_re(
                 [((max(ands, key=len), False),) for ands in groups]
@@ -207,10 +203,14 @@ def node_matches(doc: DocIndex, comp: Compound, i: int) -> bool:
 
 def _scan(doc: DocIndex, needle: re.Pattern, a: int, b: int) -> list[int]:
     """Ids in [a, b) whose start tag holds a needle hit, ascending. A hit
-    at s belongs to the last node starting at or before s, and only if
-    it ends inside that node's start tag. After a kept node the scan
-    resumes past its start tag; after a rejected hit at s + 1, so
-    overlapping occurrences (and needles holding '<') are not skipped."""
+    at s belongs to node j, the last node starting at or before s, and
+    counts only if it ends inside j's start tag. A hit that starts in
+    that tag but runs past its end resumes the scan at s + 1, so
+    overlapping occurrences (and needles holding '<') are not skipped.
+    Any other hit -- kept, or in j's text -- resumes at the next node's
+    start: no hit before it can belong to another node. So each node
+    costs at most one hit past its start tag, however often the needle
+    occurs in its text."""
     start_l = doc.start_l
     cstart_l = doc.cstart_l
     search = needle.search
@@ -223,11 +223,16 @@ def _scan(doc: DocIndex, needle: re.Pattern, a: int, b: int) -> list[int]:
             return out
         s = m.start()
         j = bisect_right(start_l, s) - 1
-        if a <= j < b and m.end() <= cstart_l[j]:
-            out.append(j)
-            pos = cstart_l[j]
-        else:
-            pos = s + 1
+        if s < cstart_l[j]:
+            if m.end() > cstart_l[j]:
+                pos = s + 1
+                continue
+            if a <= j < b:
+                out.append(j)
+        j += 1
+        if j >= b:
+            return out
+        pos = start_l[j]
 
 
 def _match_in_range(doc: DocIndex, comp: Compound, lo: int, hi: int) -> list[int]:
@@ -272,13 +277,15 @@ def _match_in_range(doc: DocIndex, comp: Compound, lo: int, hi: int) -> list[int
     return [j for j in cand if test(doc, j)]
 
 
-def _tagged_children(doc: DocIndex, cp: _Compiled, nodes: list[int]) -> list[int]:
-    """Direct children of ``nodes`` that match a tagged compound: the
-    tag's ids grouped by parent, in ``nodes`` order, then by id."""
+def _direct_children(doc: DocIndex, cp: _Compiled, nodes: list[int]) -> list[int]:
+    """Direct children of ``nodes`` that match ``cp``, grouped by parent
+    in ``nodes`` order, then by id. A tagged compound draws its
+    candidates from the tag index, an untagged one from every node."""
     slot = {nd: k for k, nd in enumerate(nodes)}
     buckets: list[list[int]] = [[] for _ in nodes]
     parent_l = doc.parent_l
-    for ch in doc.tag_ids().get(cp.tag, ()):
+    ids = doc.tag_ids().get(cp.tag, ()) if cp.tag is not None else range(doc.n)
+    for ch in ids:
         k = slot.get(parent_l[ch])
         if k is not None and _matches(doc, cp, ch):
             buckets[k].append(ch)
@@ -311,13 +318,8 @@ def eval_chain(
                             if j not in seen:
                                 seen.add(j)
                                 out.append(j)
-            elif (cp := _compiled(comp)).tag is not None:
-                out = _tagged_children(doc, cp, nodes)
             else:
-                for nd in nodes:
-                    for ch in doc.children_of(nd):
-                        if _matches(doc, cp, ch):
-                            out.append(ch)
+                out = _direct_children(doc, _compiled(comp), nodes)
         else:
             ranges = (
                 scopes

@@ -280,11 +280,25 @@ def _chain_by_scan(doc, chain, scopes):
 @example('<p title="\u017fa">', Compound(tag="p", attributes=[Atom("title", "^=", "S")]), 0, 0)
 # overlapping occurrences of the needle
 @example('<b>a</b><p title="aaa">', Compound(attributes=[Atom("title", "*=", "aa")]), 0, 0)
-# the longer OR needle holds '<' and is rejected at 'a<p', where it
-# overlaps the only kept hit: the scan must resume at s + 1
+# the longer OR needle holds '<' and is rejected at 'a<p', in the text
+# of <i>: the scan must resume at the next node's start, no later
 @example(
     '<i>a<p title="b">',
     Compound(attributes=[Atom("title", "*=", 'b OR title *= a<p title="b')]),
+    0, 0,
+)
+# the leftmost hit starts in the start tag but runs past its end: the
+# scan must resume at s + 1 to find the shorter hit inside the tag
+@example(
+    '<p title="ab">c<b>',
+    Compound(attributes=[Atom("title", "*=", 'ab">c OR title *= b')]),
+    0, 0,
+)
+# a one-character needle fills the text: one hit per node's text, kept
+# only where it sits in a start tag
+@example(
+    "<p class=a>aaaa<b class='b a'>a a a</b>aa<i class=ab>aaa<u class=a>",
+    Compound(attributes=[Atom("class", "~=", "a")]),
     0, 0,
 )
 # an empty class word matches a missing class attribute: no needle

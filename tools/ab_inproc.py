@@ -6,7 +6,7 @@ ONE process so both sides sample the same host-throttle state at ~1 s
 granularity (subprocess-level interleaving was still dominated by the
 host's multi-minute clock windows).
 
-    python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs] [--page|--select] [--deep]
+    python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs] [--page|--select[=SEL]...] [--deep]
 
 ``--deep`` times the benchmark's ``deep_nesting`` corpus (seed 1: normal
 pages with the article nested 64..4096 divs deep, built by
@@ -17,7 +17,9 @@ single-threaded.
 ``--select`` times the ``selector_fields`` per-doc work instead: a fresh
 ``DocIndex`` plus ``find_nodes`` and the text values for each of
 ``perfbench/replay.SELECTORS``, as ``select_spans_multi(mode='text')``
-does. It first checks that both engines give the same rows.
+does. It first checks that both engines give the same rows. Each
+``--select=SEL`` times the selector SEL instead (repeatable), e.g.
+``--select=.a`` for a one-character needle that fills the text.
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ from perfbench.corpus import DEEP_DOCS, deep_depths, deep_doc  # noqa: E402
 from perfbench.replay import SELECTORS  # noqa: E402
 
 
-def load_engine(root: str, name: str, page: bool = False, select: bool = False):
+def load_engine(root: str, name: str, page: bool = False, select=()):
     pkg_dir = os.path.join(root, "parse_html_spark")
     spec = importlib.util.spec_from_file_location(
         name,
@@ -52,7 +54,7 @@ def load_engine(root: str, name: str, page: bool = False, select: bool = False):
     if select:
         sel = importlib.import_module(name + ".selector")
         mat = importlib.import_module(name + ".matcher")
-        plans = [sel.compile_selector(s) for s in SELECTORS.values()]
+        plans = [sel.compile_selector(s) for s in select]
 
         def select_fn(doc, _m):
             scopes = [(0, len(doc.html))]
@@ -85,7 +87,9 @@ def load_engine(root: str, name: str, page: bool = False, select: bool = False):
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     page = "--page" in sys.argv
-    select = "--select" in sys.argv
+    select = [a.split("=", 1)[1] for a in sys.argv if a.startswith("--select=")]
+    if not select and "--select" in sys.argv:
+        select = list(SELECTORS.values())
     deep = "--deep" in sys.argv
     a_dir, b_dir = args[0], args[1]
     rounds = int(args[2]) if len(args) > 2 else 8
