@@ -85,29 +85,41 @@ def _mh_coeffs(num_hashes: int):
     return a, b
 
 
-def _minhash_sig(text: str, num_hashes: int, shingle_words: int, coeffs=None) -> list[int]:
-    """MinHash signature: crc32 per shingle ONCE, then the num_hashes
-    universal-hash permutations ((a*h+b) mod p) as one numpy outer
-    product -- no per-seed Python loop."""
+def _minhash_sigs(texts, coeffs, shingle_words: int) -> list[list[int]]:
+    """MinHash signatures of a batch of texts (None signs as ""): crc32
+    per distinct word-shingle, then ALL docs' shingle hashes concatenate
+    into ONE (num_hashes x total) universal-hash product ((a*h+b) mod p)
+    with a segmented min -- no per-doc numpy dispatch (round 8 measured
+    ~15us/doc for a per-doc outer product). Docs shorter than
+    ``shingle_words`` tokens collapse to one joined-token shingle, an
+    empty doc to the single shingle ""."""
     import numpy as np
 
-    toks = _ascii_tokens(text.lower())
-    if len(toks) < shingle_words:
-        shingles = {" ".join(toks)} if toks else {""}
-    else:
-        shingles = {
-            " ".join(toks[i : i + shingle_words])
-            for i in range(len(toks) - shingle_words + 1)
-        }
-    h = np.fromiter(
-        (zlib.crc32(s.encode("utf-8")) for s in shingles),
-        dtype=np.int64,
-        count=len(shingles),
-    )
-    a, b = coeffs if coeffs is not None else _mh_coeffs(num_hashes)
-    hm = h % _MH_PRIME
+    a, b = coeffs
+    hs: list[np.ndarray] = []
+    offsets = [0]
+    for t in texts:
+        toks = _ascii_tokens((t or "").lower())
+        if len(toks) < shingle_words:
+            shingles = {" ".join(toks)} if toks else {""}
+        else:
+            shingles = {
+                " ".join(toks[i : i + shingle_words])
+                for i in range(len(toks) - shingle_words + 1)
+            }
+        hs.append(
+            np.fromiter(
+                (zlib.crc32(s.encode("utf-8")) for s in shingles),
+                dtype=np.int64,
+                count=len(shingles),
+            )
+        )
+        offsets.append(offsets[-1] + len(shingles))
+    if not hs:
+        return []
+    hm = np.concatenate(hs) % _MH_PRIME
     perm = (a[:, None] * hm[None, :] + b[:, None]) % _MH_PRIME
-    return perm.min(axis=1).tolist()
+    return np.minimum.reduceat(perm, offsets[:-1], axis=1).T.tolist()
 
 
 def minhash_signatures(
@@ -128,85 +140,13 @@ def minhash_signatures(
     coeffs = _mh_coeffs(num_hashes)
 
     def _sig(texts: pd.Series) -> pd.Series:
-        # batch form: crc32 per shingle as before, but ALL docs' shingle
-        # hashes concatenate into ONE (num_hashes x total) permutation
-        # product with a segmented min (round-8: the per-doc outer
-        # product paid numpy dispatch ~15us/doc; same integer math,
-        # identical signatures)
-        import numpy as np
-
-        a, b = coeffs
-        hs: list[np.ndarray] = []
-        offsets = [0]
-        for t in texts:
-            toks = _ascii_tokens((t or "").lower())
-            if len(toks) < shingle_words:
-                shingles = {" ".join(toks)} if toks else {""}
-            else:
-                shingles = {
-                    " ".join(toks[i : i + shingle_words])
-                    for i in range(len(toks) - shingle_words + 1)
-                }
-            hs.append(
-                np.fromiter(
-                    (zlib.crc32(s.encode("utf-8")) for s in shingles),
-                    dtype=np.int64,
-                    count=len(shingles),
-                )
-            )
-            offsets.append(offsets[-1] + len(shingles))
-        if not hs:
-            return pd.Series([], dtype=object)
-        hm = np.concatenate(hs) % _MH_PRIME
-        perm = (a[:, None] * hm[None, :] + b[:, None]) % _MH_PRIME
-        mins = np.minimum.reduceat(perm, offsets[:-1], axis=1)
-        return pd.Series(list(mins.T.tolist()))
+        return pd.Series(_minhash_sigs(texts, coeffs, shingle_words), dtype=object)
 
     sig_udf = pandas_udf(_sig, "array<long>")
 
     # the sig stage is compute-bound: spread a small input (guide 2.5)
     return fan_out_small(df).select(
         F.col(id_col), sig_udf(F.col(text_col)).alias("sig")
-    )
-
-
-def _cap_hot_buckets(
-    banded: DataFrame,
-    keys: list[str],
-    max_bucket: int | None,
-) -> DataFrame:
-    """Drop LSH buckets holding more than ``max_bucket`` members BEFORE
-    the self-join: a bucket of k rows contributes k^2/2 join rows, so
-    one mega-bucket (billions of near-empty or same-template docs all
-    hashing together) is a de-facto cross join. Oversized buckets are
-    overwhelmingly exact-duplicate clusters, which belong to
-    dedup_exact, not the near-dup path. Mirrors token_jaccard_pairs'
-    max_df guard and the streaming operator's max_bucket_sigs bound.
-
-    Implemented as a WINDOW count over the bucket keys rather than an
-    aggregate + anti-join: the anti-join form would evaluate the
-    ``banded`` subtree -- whose signature computation (pandas-UDF
-    minhash / hyperplane dot products) is the dominant cost -- a third
-    time for the count; the window rides the one exchange its own
-    partitioning needs and adds no extra pass.
-
-    The pruning is lossy and would otherwise be SILENT: use the
-    operators' `*_hot_buckets` audit twins (minhash_hot_buckets /
-    simhash_hot_buckets / similarity.embedding_hot_buckets) to see
-    exactly which buckets a given corpus would lose. An inline
-    Observation metric was tried and rejected: a CollectMetrics node on
-    the subtree both sides of the candidate self-join reference is
-    plan-dependent in Spark (works on some shapes, toPyRow assertion on
-    others)."""
-    if max_bucket is None:
-        return banded
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys)
-    return (
-        banded.withColumn("_bucket_n", F.count("*").over(w))
-        .filter(F.col("_bucket_n") <= max_bucket)
-        .drop("_bucket_n")
     )
 
 
@@ -229,30 +169,103 @@ def _checkpoint_batch(df: DataFrame, name: str) -> DataFrame:
     return df.localCheckpoint()
 
 
+def _bucket_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    id_col: str,
+    max_bucket: int | None,
+    name: str,
+    where=None,
+    extra=(),
+) -> DataFrame:
+    """The blocking kernel every near-duplicate candidate operator runs
+    (SparkER-style: blocking keys -> block purging -> self-join within
+    blocks): distinct (id_a, id_b, *extra) pairs, id_a < id_b, of the
+    ``banded`` rows that share all of ``keys``. An operator supplies
+    only its banded rows; the cap, checkpoint and join policy live here.
+
+    1. Block purging (``max_bucket``, None disables): buckets holding
+       more than ``max_bucket`` rows are dropped BEFORE the self-join.
+       A bucket of k rows contributes k^2/2 join rows, so one mega-bucket
+       (billions of near-empty or same-template docs all hashing
+       together) is a de-facto cross join. Oversized buckets are
+       overwhelmingly exact-duplicate clusters, which belong to
+       dedup_exact, not the near-dup path. Mirrors token_jaccard_pairs'
+       max_df guard and the streaming operator's max_bucket_sigs bound.
+       The cap is a WINDOW count over the bucket keys rather than an
+       aggregate + anti-join: the anti-join form would evaluate the
+       ``banded`` subtree -- whose signature computation (pandas-UDF
+       minhash / simhash / hyperplane dot products) is the dominant cost
+       -- a third time for the count; the window rides the one exchange
+       its own partitioning needs and adds no extra pass.
+       The pruning is lossy and would otherwise be SILENT: use the
+       operators' `*_hot_buckets` audit twins (hot_bucket_report) to see
+       exactly which buckets a given corpus would lose. An inline
+       Observation metric was tried and rejected: a CollectMetrics node
+       on the subtree both sides of the self-join reference is
+       plan-dependent in Spark (works on some shapes, toPyRow assertion
+       on others).
+    2. Materialize once (_checkpoint_batch): the planner broadcasts one
+       join side, so without it both sides re-run the signature UDF
+       subtree (round-8 plan audit: two ArrowEvalPython nodes). The
+       checkpoint holds only the short key rows (~24-32 bytes per doc
+       per band), executor-local -- far cheaper than signing every
+       document twice at corpus scale.
+    3. Self-join on ``keys`` with ``a.id < b.id``: an equi-join on short
+       keys, never a cross join.
+    4. ``where`` (a Column over the ``a.``/``b.`` sides) filters BEFORE
+       the distinct, so only surviving pairs pay the dedup exchange;
+       ``extra`` columns are selected after id_a, id_b."""
+    if max_bucket is not None:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(*keys)
+        banded = (
+            banded.withColumn("_bucket_n", F.count("*").over(w))
+            .filter(F.col("_bucket_n") <= max_bucket)
+            .drop("_bucket_n")
+        )
+    banded = _checkpoint_batch(banded, name)
+    a, b = banded.alias("a"), banded.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    joined = a.join(b, on + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
+    if where is not None:
+        joined = joined.filter(where)
+    return joined.select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"), *extra
+    ).distinct()
+
+
+def _band_hashes(num_hashes: int, bands: int):
+    """posexplode of the ``sig`` column into (band, band_hash) rows: one
+    hash per band of num_hashes // bands consecutive minhash components.
+    ``bands`` must lie in 1..num_hashes: more bands than hashes would
+    hash empty slices, so every document would collide with every other
+    in every band (and a max_bucket cap would then drop them all)."""
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(
+            f"bands={bands} must be between 1 and num_hashes={num_hashes}"
+        )
+    r = num_hashes // bands
+    return F.posexplode(
+        F.array(*[F.hash(F.slice("sig", b * r + 1, r)) for b in range(bands)])
+    ).alias("band", "band_hash")
+
+
 def _minhash_banded(
     df, text_col, id_col, num_hashes, bands, shingle_words
 ) -> DataFrame:
     """(id, band, band_hash) rows: one per document per LSH band."""
-    rows_per_band = num_hashes // bands
+    band = _band_hashes(num_hashes, bands)
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_words)
-    return sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
+    return sigs.select(F.col(id_col), band)
 
 
 def hot_bucket_report(banded: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
-    """AUDIT twin of _cap_hot_buckets: the buckets a given ``max_bucket``
+    """AUDIT twin of _bucket_pairs' cap: the buckets a given ``max_bucket``
     would silently drop, with their sizes. Lossy pruning should be
     OBSERVABLE: run this (one extra pass, opt-in -- an inline metric on
-    the self-joined subtree is not plan-stable, see _cap_hot_buckets)
+    the self-joined subtree is not plan-stable, see _bucket_pairs)
     on a corpus sample whenever a capped operator's recall matters."""
     return (
         banded.groupBy(*keys)
@@ -293,35 +306,17 @@ def minhash_lsh_pairs(
     minhash_hot_buckets() reports what a given max_bucket would drop.
 
     SCALE GUARD (ON BY DEFAULT): band buckets larger than ``max_bucket``
-    are dropped before the self-join (see _cap_hot_buckets) -- bounding
+    are dropped before the self-join (see _bucket_pairs) -- bounding
     any single bucket's join contribution to max_bucket^2/2 rows. Run
     dedup_exact first so identical-text clusters (the usual mega-bucket
     cause) never reach this operator; pass an explicit max_bucket=None
     for the uncapped exact candidate set on small corpora."""
-    banded = _minhash_banded(
-        df, text_col, id_col, num_hashes, bands, shingle_words
-    )
-    banded = _cap_hot_buckets(banded, ["band", "band_hash"], max_bucket)
-    # materialize the capped band rows ONCE before the self-join: the
-    # planner broadcasts one side, so without this both sides re-run the
-    # signature UDF subtree (round-8 plan audit: two ArrowEvalPython
-    # nodes). The checkpoint holds only (id, band, band_hash) -- ~24
-    # bytes/doc/band, executor-local, infinitely cheaper than hashing
-    # every document's text twice at corpus scale.
-    banded = _checkpoint_batch(banded, "minhash_lsh_pairs")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return _bucket_pairs(
+        _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_words),
+        ["band", "band_hash"],
+        id_col,
+        max_bucket,
+        "minhash_lsh_pairs",
     )
 
 
@@ -465,37 +460,20 @@ def simhash_near_pairs(
 
     SCALE GUARD (ON BY DEFAULT): chunk buckets above ``max_bucket``
     rows are dropped before the self-join (a mega-bucket of k
-    same-signature docs is k^2/2 join rows -- see _cap_hot_buckets).
+    same-signature docs is k^2/2 join rows -- see _bucket_pairs).
     Under the cap the pigeonhole exactness holds only for pairs whose
     shared chunks all fit the cap; identical-text clusters belong to
     dedup_exact upstream. Explicit max_bucket=None restores the
     unconditionally lossless (unbounded) form."""
-    chunks = _simhash_chunked(df, text_col, id_col, max_hamming)
-    chunks = _cap_hot_buckets(chunks, ["chunk", "chunk_val"], max_bucket)
-    # materialize once before the self-join (same reasoning as
-    # minhash_lsh_pairs: broadcast planning otherwise re-runs the
-    # simhash UDF subtree on both sides; the chunk rows are ~32 B each)
-    chunks = _checkpoint_batch(chunks, "simhash_near_pairs")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.chunk") == F.col("b.chunk"))
-        & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    )
-    hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    # filter BEFORE the dedup shuffle: the Hamming test is free at the
-    # join output, and only surviving pairs pay the distinct exchange
-    return (
-        joined.filter(hamming <= max_hamming)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .distinct()
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return _bucket_pairs(
+        _simhash_chunked(df, text_col, id_col, max_hamming),
+        ["chunk", "chunk_val"],
+        id_col,
+        max_bucket,
+        "simhash_near_pairs",
+        where=hamming <= max_hamming,
+        extra=(hamming.cast("int").alias("hamming"),),
     )
 
 
@@ -593,7 +571,7 @@ def tokens_col(text_col):
 
 
 def shingles_col(text_col, shingle_words: int = 3):
-    """Distinct word-shingles as array<string>, matching _minhash_sig's
+    """Distinct word-shingles as array<string>, matching _minhash_sigs'
     shingling exactly (docs shorter than shingle_words collapse to the
     single joined-token shingle). Pure Column exprs, no Python.
 

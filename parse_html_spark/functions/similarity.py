@@ -543,27 +543,14 @@ def lsh_candidate_pairs(
     fraction into one sign bucket). The principled fix for persistent
     hot buckets is more bits per table; the cap bounds the accidental
     quadratic meanwhile. Explicit max_bucket=None disables."""
-    from .dedup import _cap_hot_buckets, _checkpoint_batch
+    from .dedup import _bucket_pairs
 
-    banded = _embedding_banded(df, dim, tables, bits, vec_col, id_col, seed)
-    banded = _cap_hot_buckets(banded, ["tbl", "bucket"], max_bucket)
-    # materialize the (tbl, bucket, id) rows once before the self-join
-    # (round-8: broadcast planning otherwise evaluates the hyperplane
-    # matmul UDF subtree on both sides)
-    banded = _checkpoint_batch(banded, "lsh_candidate_pairs")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
+    return _bucket_pairs(
+        _embedding_banded(df, dim, tables, bits, vec_col, id_col, seed),
+        ["tbl", "bucket"],
+        id_col,
+        max_bucket,
+        "lsh_candidate_pairs",
     )
 
 

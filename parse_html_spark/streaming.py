@@ -75,6 +75,26 @@ def _make_first_seen(state_ttl_ms):
     return first_seen
 
 
+def _span_text(sep: str):
+    """A span doc's texts joined by ``sep`` in offset order (NULL text
+    counts as ""): the document text both stream dedup operators key
+    on."""
+    from pyspark.sql import functions as F
+
+    return F.concat_ws(
+        sep,
+        F.transform(
+            F.array_sort(
+                F.col("spans"),
+                lambda a, b: F.when(a["offset"] < b["offset"], -1)
+                .when(a["offset"] > b["offset"], 1)
+                .otherwise(0),
+            ),
+            lambda s: F.coalesce(s["text"], F.lit("")),
+        ),
+    )
+
+
 def streaming_dedup_first_seen(
     spark,
     input_dir: str,
@@ -97,29 +117,12 @@ def streaming_dedup_first_seen(
 
     Output rows: (fp, doc_id) of first-seen documents."""
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from .session import ensure_py_files
 
     ensure_py_files(spark)
     sdf = spark.readStream.schema(SPAN_INPUT_SCHEMA).parquet(input_dir)
-    docs = sdf.select(
-        "doc_id",
-        F.md5(
-            F.concat_ws(
-                "\x00",
-                F.transform(
-                    F.array_sort(
-                        F.col("spans"),
-                        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-                        .when(a["offset"] > b["offset"], 1)
-                        .otherwise(0),
-                    ),
-                    lambda s: F.coalesce(s["text"], F.lit("")),
-                ),
-            )
-        ).alias("fp"),
-    )
+    docs = sdf.select("doc_id", F.md5(_span_text("\x00")).alias("fp"))
 
     return _start_first_seen_stream(
         docs, "fp", output_dir, checkpoint_dir, state_ttl_ms
@@ -288,50 +291,17 @@ def streaming_near_dup_candidates(
     so evicting the oldest costs little recall) and optional TTL
     eviction like streaming_dedup_first_seen."""
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .functions.dedup import _mh_coeffs, _minhash_sig
+    from .functions.dedup import _band_hashes, minhash_signatures
     from .session import ensure_py_files
 
+    band = _band_hashes(num_hashes, bands)
     ensure_py_files(spark)
-    rows_per_band = num_hashes // bands
-    coeffs = _mh_coeffs(num_hashes)
-
     sdf = spark.readStream.schema(SPAN_INPUT_SCHEMA).parquet(input_dir)
-    text = F.concat_ws(
-        "",
-        F.transform(
-            F.array_sort(
-                F.col("spans"),
-                lambda a, b: F.when(a["offset"] < b["offset"], -1)
-                .when(a["offset"] > b["offset"], 1)
-                .otherwise(0),
-            ),
-            lambda s: F.coalesce(s["text"], F.lit("")),
-        ),
-    )
-
-    # NOTE: no type annotations on the UDF -- this module uses
-    # `from __future__ import annotations`, which stringifies hints and
-    # breaks pandas_udf signature inference (build-notes gotcha)
-    def _sig(texts):
-        return texts.map(lambda t: _minhash_sig(t or "", num_hashes, 3, coeffs))
-
-    sig_udf = F.pandas_udf(_sig, "array<long>")
-    signed = sdf.select("doc_id", sig_udf(text).alias("sig"))
-    banded = signed.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
+    docs = sdf.select("doc_id", _span_text("").alias("text"))
+    signed = minhash_signatures(docs, "text", "doc_id", num_hashes, 3)
+    banded = signed.select("doc_id", "sig", band)
 
     def bucket_fn(key, pdf_iter, state):
         import numpy as np

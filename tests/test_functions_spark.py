@@ -951,6 +951,45 @@ def test_lsh_hot_bucket_cap_bounds_join(spark):
     assert not any(a < 1000 and b < 1000 for a, b in got)
 
 
+@pytest.mark.parametrize("bands", [-1, 0, 8])
+def test_minhash_bands_outside_hash_count_raise(spark, tmp_path, bands):
+    """bands must lie in 1..num_hashes. With 8 bands over 4 hashes every
+    band hashed an empty slice, so all pairs collided (and a max_bucket
+    cap then dropped them all); with bands <= 0 there were no band rows
+    (or a bare ZeroDivisionError). Every MinHash-LSH entry point now
+    raises a ValueError naming both values -- the streaming one before
+    its query starts."""
+    from parse_html_spark.functions.dedup import (
+        minhash_hot_buckets,
+        minhash_lsh_pairs,
+        minhash_near_duplicates,
+    )
+    from parse_html_spark.streaming import streaming_near_dup_candidates
+
+    df = spark.createDataFrame(
+        [(i, f"distinct document number {i}") for i in range(4)],
+        "doc_id long, text string",
+    )
+    calls = [
+        lambda: minhash_lsh_pairs(df, num_hashes=4, bands=bands),
+        lambda: minhash_hot_buckets(df, num_hashes=4, bands=bands),
+        lambda: minhash_near_duplicates(df, num_hashes=4, bands=bands),
+        lambda: streaming_near_dup_candidates(
+            spark,
+            str(tmp_path / "in"),
+            str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+            num_hashes=4,
+            bands=bands,
+        ),
+    ]
+    active = len(spark.streams.active)
+    for call in calls:
+        with pytest.raises(ValueError, match=rf"bands={bands}\b.*num_hashes=4"):
+            call()
+    assert len(spark.streams.active) == active
+
+
 def test_mixed_dimension_embeddings_fail_with_named_length():
     """ADVICE r4: an embedding of the wrong length must raise a
     ValueError naming the offending length, not an opaque np.stack

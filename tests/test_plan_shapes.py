@@ -41,19 +41,34 @@ def test_exact_dedup_partial_aggregation(spark, corpus):
 
 
 def test_lsh_joins_are_never_cartesian(spark):
+    """All three candidate operators self-join on short bucket keys (no
+    cartesian product), and the executed pair plan holds no
+    ArrowEvalPython: the signature UDF ran once, inside the checkpoint
+    both join sides read."""
     from parse_html_spark.functions.dedup import (
         minhash_lsh_pairs,
         simhash_near_pairs,
     )
+    from parse_html_spark.functions.similarity import lsh_candidate_pairs
 
     docs = spark.createDataFrame(
         [(i, f"some text number {i}") for i in range(20)],
         "doc_id long, text string",
     )
-    for df in (minhash_lsh_pairs(docs), simhash_near_pairs(docs)):
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    for df in (
+        minhash_lsh_pairs(docs),
+        simhash_near_pairs(docs),
+        lsh_candidate_pairs(vecs, dim=2),
+    ):
+        df.collect()
         plan = _plan(df)
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+        assert "ArrowEvalPython" not in plan
 
 
 KERNEL_PIPELINES = {

@@ -382,7 +382,7 @@ def test_stream_lsh_oracle_margin_holds():
     import duckdb
     import numpy as np
 
-    from parse_html_spark.functions.dedup import _mh_coeffs, _minhash_sig
+    from parse_html_spark.functions.dedup import _mh_coeffs, _minhash_sigs
 
     rows = duckdb.sql(
         "WITH d AS (SELECT doc_id, text FROM "
@@ -396,7 +396,7 @@ def test_stream_lsh_oracle_margin_holds():
     assert len(rows) >= 450  # the exclusion removes only the ~5% built-ins
     coeffs = _mh_coeffs(32)
     sigs = np.array(
-        [_minhash_sig(t, 32, 3, coeffs) for (t,) in rows], dtype=np.int64
+        _minhash_sigs([t for (t,) in rows], coeffs, 3), dtype=np.int64
     )
     agree = (sigs[:, None, :] == sigs[None, :, :]).mean(axis=2)
     np.fill_diagonal(agree, 0.0)
