@@ -15,7 +15,17 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-from .matcher import eval_chain, find_nodes, node_matches
+from .matcher import (
+    _class_scan,
+    _compile,
+    _compiled,
+    _conditions_scan,
+    _id_scan,
+    _match_in_range,
+    _presence_scan,
+    eval_chain,
+    find_nodes,
+)
 from .selector import compile_selector
 from .tokenizer import DocIndex, parse_attrs
 
@@ -109,68 +119,43 @@ class PH:
         if self._html is None:
             return PH.empty()
         d = self._doc
-        kids: list[int] = []
-        seen: set[int] = set()
-        for n in self._element_nodes():
-            for ch in d.children_of(n):
-                if ch not in seen:
-                    seen.add(ch)
-                    kids.append(ch)
+        kids = [ch for n in self._element_nodes() for ch in d.children_of(n)]
+        return self._filtered(kids, selector, inside=self._compat)
+
+    def _filtered(
+        self, ids: list[int], selector: str | None, inside: bool = False
+    ) -> "PH":
+        """``ids`` deduped in document order, kept where some one-compound
+        chain of ``selector`` matches the node (descendant chains are
+        rejected for the filter [:366-370]). ``inside``: the A.8 compat
+        child filter, which re-searches each child's padded pseudo-element,
+        so the node itself OR any of its descendants may match [:357-392 +
+        :1683-1686]."""
+        d = self._doc
         if selector is not None:
             plan = _cached_plan(selector, self._compat)
             if plan is None:
                 return PH.empty()
-            # descendant chains are rejected for the child filter [:366-370]
-            compounds = [c[0] for c in plan if len(c) == 1]
-            if not compounds:
-                return PH.empty()
-            if self._compat:
-                # A.8 compat: the reference filter re-searches each
-                # child's padded pseudo-element, so the selector may
-                # match the child itself OR any of its descendants
-                # [:357-392 + :1683-1686]
-                from .matcher import _match_in_range
+            cps = [_compiled(c[0]) for c in plan if len(c) == 1]
 
-                kids = [
-                    k for k in kids
-                    if any(
-                        _match_in_range(
-                            d, comp, d.start_l[k], d.end_l[k]
-                        )
-                        for comp in compounds
-                    )
-                ]
-            else:
-                kids = [
-                    k for k in kids
-                    if any(node_matches(d, comp, k) for comp in compounds)
-                ]
-        if not kids:
+            def hit(k: int) -> bool:
+                # node starts are strictly increasing, so [lo, lo + 1)
+                # holds the node alone
+                lo = d.start_l[k]
+                hi = d.end_l[k] if inside else lo + 1
+                return any(_match_in_range(d, cp, lo, hi) for cp in cps)
+
+            ids = [k for k in ids if hit(k)]
+        if not ids:
             return PH.empty()
-        kids.sort(key=d.start_l.__getitem__)
-        return self._sel(kids)
+        ids = sorted(set(ids), key=d.start_l.__getitem__)
+        return self._sel(ids)
 
     # -- traversal extensions ----------------------------------------------
     # The reference stubs prev/next/parent/parents/contents ("// Todo.",
     # ParseHTML.php:274-328). Parent/sibling pointers are free in the node
     # table, so we implement them (flagged EXTENSION: excluded from the
     # reference-fidelity suite, jQuery semantics).
-
-    def _filtered(self, ids: list[int], selector: str | None) -> "PH":
-        d = self._doc
-        if selector is not None:
-            plan = _cached_plan(selector, self._compat)
-            if plan is None:
-                return PH.empty()
-            compounds = [c[0] for c in plan if len(c) == 1]
-            ids = [
-                k for k in ids
-                if any(node_matches(d, comp, k) for comp in compounds)
-            ]
-        if not ids:
-            return PH.empty()
-        ids = sorted(set(ids), key=d.start_l.__getitem__)
-        return self._sel(ids)
 
     def _siblings(self, offset: int, selector: str | None) -> "PH":
         d = self._doc
@@ -308,83 +293,45 @@ class PH:
 # -- static scan API (reference parity layer) ------------------------------
 # The reference exposes its physical scans publicly:
 # getElementByTag/ById/ByClass/ByAttribute/ByAttributes, each returning a
-# position -> start-tag map (ParseHTML.php:473-812). Same contract here,
-# backed by the node index instead of substring scans.
+# position -> start-tag map (ParseHTML.php:473-812). Same contract here:
+# each is the matcher scan that find() dispatches to for the same kind.
 
-from .conditions import eval_conditions  # noqa: E402
-from .matcher import class_word_match  # noqa: E402
-from .tokenizer import KNOWN_TAGS  # noqa: E402
-
-
-def _starttag_map(doc: DocIndex, ids) -> dict[int, str]:
-    return {doc.start_l[i]: doc.starttag(i) for i in ids}
+def _starttag_map(html: str, cp) -> dict[int, str]:
+    if not html:
+        return {}
+    doc = DocIndex(html)
+    return {
+        doc.start_l[i]: doc.starttag(i)
+        for i in _match_in_range(doc, cp, 0, len(html))
+    }
 
 
 def get_elements_by_tag(tag: str, html: str) -> dict[int, str]:
     """Position -> start tag for every <tag> (case-insensitive); no tag
     whitelist, like the reference's commented-out check [:756-758]."""
-    doc = DocIndex(html)
-    want = tag.strip().lower()
-    return _starttag_map(doc, (i for i in range(doc.n) if doc.tag[i] == want))
+    return _starttag_map(html, _compile(tag.strip(), ()))
 
 
 def get_element_by_id(value: str, html: str) -> dict[int, str]:
     """First element whose id === value (strict, break) [:657-662]."""
-    doc = DocIndex(html)
-    for i in range(doc.n):
-        if doc.tag[i] in KNOWN_TAGS and doc.attrs(i).get("id") == value:
-            return _starttag_map(doc, [i])
-    return {}
+    return _starttag_map(html, _id_scan(value))
 
 
 def get_elements_by_class(value: str, html: str) -> dict[int, str]:
     """Class-word AND/OR conditions ('a AND b', 'a OR b') [:711-716]."""
-    doc = DocIndex(html)
-    return _starttag_map(
-        doc,
-        (
-            i
-            for i in range(doc.n)
-            if doc.tag[i] in KNOWN_TAGS
-            and class_word_match(doc.attrs(i), value)
-        ),
-    )
+    return _starttag_map(html, _class_scan(value))
 
 
 def get_elements_by_attribute(attribute: str, html: str) -> dict[int, str]:
-    """Presence scan, case-insensitive name, tag whitelist [:473-536]."""
-    doc = DocIndex(html)
-    want = attribute.lower()
-    return _starttag_map(
-        doc,
-        (
-            i
-            for i in range(doc.n)
-            if doc.tag[i] in KNOWN_TAGS and want in doc.attrs(i)
-        ),
-    )
+    """Presence scan, case-insensitive name, tag whitelist [:473-536]:
+    R-quirk 11's textual whitespace + name match in the start tag."""
+    return _starttag_map(html, _presence_scan(attribute))
 
 
 def get_elements_by_attributes(conditions: str, html: str) -> dict[int, str]:
     """Condition-DSL scan [:594-614]: candidates from parsable fields,
     filtered by the full OR-of-ANDs evaluation."""
-    from .conditions import parse_fields
-
-    conditions = conditions.strip()
-    if not html or not conditions:
-        return {}
-    doc = DocIndex(html)
-    if not parse_fields(conditions):
-        return {}
-    return _starttag_map(
-        doc,
-        (
-            i
-            for i in range(doc.n)
-            if doc.tag[i] in KNOWN_TAGS
-            and eval_conditions(doc.attrs(i), conditions)
-        ),
-    )
+    return _starttag_map(html, _conditions_scan(None, conditions))
 
 
 __all__ = [

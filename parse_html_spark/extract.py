@@ -28,9 +28,8 @@ index. Pinned semantics:
 
 from __future__ import annotations
 
-from bisect import bisect_left
-
 from .dom import PH
+from .matcher import _compile, _match_in_range
 from .tokenizer import DocIndex, trim_html
 
 
@@ -112,12 +111,7 @@ def _selection_elements(sel: PH) -> list[tuple[DocIndex, int | None]]:
 
 
 def _extract_one(doc: DocIndex, node: int | None, val_only: bool):
-    if node is None:
-        tree = extract_html(doc.html)
-    elif doc.is_bare(node):
-        tree = doc.outer(node)
-    else:
-        tree = extract_node(doc, node)
+    tree = extract_html(doc.html) if node is None else extract_node(doc, node)
     return value_only(tree) if val_only else tree
 
 
@@ -145,33 +139,16 @@ def extract_table(sel: PH, val_only: bool = False):
 
 def extract_table_list(sel: PH, val_only: bool = False) -> list:
     """extract_table without the single-result unwrap (pipeline use)."""
-    doc = sel.doc
-    if doc is None:
-        return []
-    tables: list[int] = []
-    seen: set[int] = set()
+    table = _compile("table", ())
+    tables: dict[int, None] = {}  # ordered set: nested tables come once
     for d, node in _selection_elements(sel):
         if node is None:
             lo, hi = 0, len(d.html)
         else:
             lo, hi = d.start_l[node], d.end_l[node]
-        a = bisect_left(d.start_l, lo)
-        b = bisect_left(d.start_l, hi)
-        ids = d.tag_ids().get("table", [])
-        for j in ids[bisect_left(ids, a):bisect_left(ids, b)]:
-            if j not in seen:
-                seen.add(j)
-                tables.append(j)
-    if not tables:
-        return []
-    storage = []
-    for t in tables:
-        if doc.is_bare(t):
-            tree: object = doc.outer(t)
-        else:
-            tree = extract_node(doc, t, prune_tag="table")
-        storage.append(value_only(tree) if val_only else tree)
-    return storage
+        tables.update(dict.fromkeys(_match_in_range(d, table, lo, hi)))
+    trees = [extract_node(sel.doc, t, prune_tag="table") for t in tables]
+    return [value_only(t) for t in trees] if val_only else trees
 
 
 # -- forms ---------------------------------------------------------------
@@ -261,16 +238,10 @@ def extract_form(sel: PH, selector: str | None = None) -> dict:
         name = attrs["name"]
         tag = doc.tag[n]
         if tag == "select":
-            values = []
-            # node starts are strictly increasing, so the id range of
-            # [start_l[n], end_l[n]) begins at n itself
-            a = n
-            b = bisect_left(doc.start_l, doc.end_l[n])
-            ids = doc.tag_ids().get("option", [])
-            for j in ids[bisect_left(ids, a):bisect_left(ids, b)]:
-                oattrs = doc.attrs(j)
-                if "value" in oattrs:
-                    values.append(oattrs["value"])
+            options = map(doc.attrs, _match_in_range(
+                doc, _compile("option", ()), doc.start_l[n], doc.end_l[n]
+            ))
+            values = [o["value"] for o in options if "value" in o]
             value: object = (
                 {i: v for i, v in enumerate(values)} if values else None
             )

@@ -2,7 +2,12 @@
 
 Re-expresses the reference's ``finder`` dispatch
 (/root/reference/src/ParseHTML.php:1660-1785) as array operations over the
-node index. Dispatch rules preserved exactly:
+node index. As in the reference, each dispatch kind is one of the public
+physical scans, built here once by its own constructor: ``_compile(tag,
+())`` (getElementByTag), ``_id_scan``, ``_class_scan``, ``_presence_scan``
+and ``_conditions_scan``. ``dom``'s static getElementBy* API calls these
+directly, and ``_match_in_range`` is the one element lookup that ``dom``
+and ``extract`` run. Dispatch rules preserved exactly:
 
 - tag + attribute atoms -> candidates must satisfy the full condition DSL
   AND the compound must contain at least one *parsable* atom (an
@@ -94,7 +99,7 @@ def class_word_match(attrs: dict, conditions: str) -> bool:
 
 
 class _Compiled(NamedTuple):
-    """One compound, compiled once per process (see ``_compile``)."""
+    """One element scan, compiled once per process (see ``_compile``)."""
 
     nothing: bool  # matches no node at all
     tag: str | None  # lowercased tag every match carries
@@ -128,58 +133,79 @@ def _group_needle(group):
 
 
 @lru_cache(maxsize=1024)
+def _id_scan(value: str) -> _Compiled:
+    """getElementById: strict ===, first match, break [:2242-2244]."""
+    needle = _needle_re([((value, False),)]) if value else None
+    return _Compiled(
+        False, None, True,
+        lambda doc, j: doc.attrs(j).get("id") == value, True, needle,
+    )
+
+
+@lru_cache(maxsize=1024)
+def _class_scan(conditions: str) -> _Compiled:
+    """getElementByClass: 'a AND b OR c' class words, split by
+    ``split_or_and``."""
+    groups = tuple(map(tuple, split_or_and(conditions)))
+    words = [w for ands in groups for w in ands]
+    needle = None if "" in words else _needle_re(
+        [((max(ands, key=len), False),) for ands in groups]
+    )
+    return _Compiled(
+        False, None, True,
+        lambda doc, j: _class_match(doc.attrs(j), groups), False, needle,
+    )
+
+
+@lru_cache(maxsize=1024)
+def _presence_scan(name: str) -> _Compiled:
+    """getElementByAttribute. R-quirk 11: the reference's TEXTUAL scan --
+    whitespace + name substring anywhere inside the start tag
+    (case-insensitive), so ' title' inside an attribute VALUE also
+    matches [:488-493]. Well-formed attributes always satisfy this; the
+    quirk only widens pathological cases."""
+    pat = re.compile(r"\s" + re.escape(name), re.IGNORECASE)
+    return _Compiled(
+        False, None, True,
+        lambda doc, j: pat.search(doc.starttag(j)) is not None, False, pat,
+    )
+
+
+@lru_cache(maxsize=1024)
+def _conditions_scan(tag: str | None, conditions: str) -> _Compiled:
+    """getElementByAttributes: the condition DSL, on ``tag`` nodes only
+    when given (lowercase)."""
+    groups = compile_conditions(conditions)
+    # no parsable atom -> no candidates in the reference [:2092-2098];
+    # a parsable atom routes a tagged compound through validateStartTag,
+    # so 'blink[data-n>1]' matches nothing (blink is not whitelisted)
+    # while bare 'blink' matches [:756 callback, :504, :1481-1488]
+    if not any(groups) or (tag is not None and tag not in KNOWN_TAGS):
+        return _NOTHING
+    return _Compiled(
+        False, tag, tag is None,
+        lambda doc, j: eval_groups(doc.attrs(j), groups), False,
+        _needle_re([_group_needle(g) for g in groups]),
+    )
+
+
+@lru_cache(maxsize=1024)
 def _compile(tag: str | None, atoms: tuple[Atom, ...]) -> _Compiled:
-    """Dispatch kind, predicate and needle of one compound. Keyed on the
-    hashable (tag, atoms) pair, never on the mutable Compound."""
+    """The finder dispatch of one compound onto its reference scan
+    [:1714-1742]. Keyed on the hashable (tag, atoms) pair, never on the
+    mutable Compound."""
     want = tag.lower() if tag is not None else None
     if not atoms:
         return _Compiled(False, want, False, None, False, None)
     if want is None and len(atoms) == 1:
         atom = atoms[0]
         if atom.name == "id":
-            # strict ===, first match, break [:2242-2244]
-            value = atom.value
-            needle = _needle_re([((value, False),)]) if value else None
-            return _Compiled(
-                False, None, True,
-                lambda doc, j: doc.attrs(j).get("id") == value, True, needle,
-            )
+            return _id_scan(atom.value)
         if atom.name == "class":
-            groups = tuple(
-                map(tuple, split_or_and(atom.value.replace(" ", " AND ")))
-            )
-            words = [w for ands in groups for w in ands]
-            needle = None if "" in words else _needle_re(
-                [((max(ands, key=len), False),) for ands in groups]
-            )
-            return _Compiled(
-                False, None, True,
-                lambda doc, j: _class_match(doc.attrs(j), groups), False, needle,
-            )
+            return _class_scan(atom.value.replace(" ", " AND "))
         if atom.is_presence:
-            # R-quirk 11: bare presence is the reference's TEXTUAL scan --
-            # whitespace + name substring anywhere inside the start tag
-            # (case-insensitive), so ' title' inside an attribute VALUE
-            # also matches [:488-493]. Well-formed attributes always
-            # satisfy this; the quirk only widens pathological cases.
-            pat = re.compile(r"\s" + re.escape(atom.name), re.IGNORECASE)
-            return _Compiled(
-                False, None, True,
-                lambda doc, j: pat.search(doc.starttag(j)) is not None,
-                False, pat,
-            )
-    groups = compile_conditions(build_conditions(atoms))
-    # no parsable atom -> no candidates in the reference [:2092-2098];
-    # a parsable atom routes a tagged compound through validateStartTag,
-    # so 'blink[data-n>1]' matches nothing (blink is not whitelisted)
-    # while bare 'blink' matches [:756 callback, :504, :1481-1488]
-    if not any(groups) or (want is not None and want not in KNOWN_TAGS):
-        return _NOTHING
-    return _Compiled(
-        False, want, want is None,
-        lambda doc, j: eval_groups(doc.attrs(j), groups), False,
-        _needle_re([_group_needle(g) for g in groups]),
-    )
+            return _presence_scan(atom.name)
+    return _conditions_scan(want, build_conditions(atoms))
 
 
 def _compiled(comp: Compound) -> _Compiled:
@@ -195,10 +221,6 @@ def _matches(doc: DocIndex, cp: _Compiled, i: int) -> bool:
     if cp.whitelist and t not in KNOWN_TAGS:
         return False
     return cp.test is None or cp.test(doc, i)
-
-
-def node_matches(doc: DocIndex, comp: Compound, i: int) -> bool:
-    return _matches(doc, _compiled(comp), i)
 
 
 def _scan(doc: DocIndex, needle: re.Pattern, a: int, b: int) -> list[int]:
@@ -235,8 +257,9 @@ def _scan(doc: DocIndex, needle: re.Pattern, a: int, b: int) -> list[int]:
         pos = start_l[j]
 
 
-def _match_in_range(doc: DocIndex, comp: Compound, lo: int, hi: int) -> list[int]:
-    cp = _compiled(comp)
+def _match_in_range(doc: DocIndex, cp: _Compiled, lo: int, hi: int) -> list[int]:
+    """Ids of the nodes starting in [lo, hi) that ``cp`` matches,
+    ascending: the one element lookup every module runs."""
     if cp.nothing:
         return []
     # candidate ids via C bisect on the list twin (node starts are
@@ -302,36 +325,31 @@ def eval_chain(
     for comp in chain:
         if comp.is_empty:
             return []
-        out: list[int] = []
-        seen: set[int] = set()
-        if comp.direct and nodes is not None:
-            if comp.ref_requery:
+        cp = _compiled(comp)
+        if comp.direct and nodes is not None and not comp.ref_requery:
+            nodes = _direct_children(doc, cp, nodes)
+        else:
+            if nodes is None:
+                ranges = scopes
+            elif comp.direct:
                 # A.8 ref-compat: the reference re-searches each direct
                 # child's padded pseudo-element as DESCENDANTS, so the
                 # step matches the child itself or anything inside it
                 # [ParseHTML.php:1796-1823]
-                for nd in nodes:
-                    for ch in doc.children_of(nd):
-                        for j in _match_in_range(
-                            doc, comp, doc.start_l[ch], doc.end_l[ch]
-                        ):
-                            if j not in seen:
-                                seen.add(j)
-                                out.append(j)
+                ranges = [
+                    (doc.start_l[ch], doc.end_l[ch])
+                    for nd in nodes for ch in doc.children_of(nd)
+                ]
             else:
-                out = _direct_children(doc, _compiled(comp), nodes)
-        else:
-            ranges = (
-                scopes
-                if nodes is None
-                else [(doc.cstart_l[n], doc.cend_l[n]) for n in nodes]
-            )
+                ranges = [(doc.cstart_l[n], doc.cend_l[n]) for n in nodes]
+            out: list[int] = []
+            seen: set[int] = set()
             for lo, hi in ranges:
-                for j in _match_in_range(doc, comp, lo, hi):
+                for j in _match_in_range(doc, cp, lo, hi):
                     if j not in seen:
                         seen.add(j)
                         out.append(j)
-        nodes = out
+            nodes = out
         if not nodes:
             return []
     return nodes if nodes is not None else []

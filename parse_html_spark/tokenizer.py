@@ -154,18 +154,11 @@ class DocIndex:
     __slots__ = (
         "html", "n", "tag",
         "tstart", "tend", "_attrs", "_children", "_tag_ids",
-        "_tag_arr", "start_l", "end_l", "cstart_l", "cend_l", "parent_l",
+        "start_l", "end_l", "cstart_l", "cend_l", "parent_l",
         "_depth_l", "tstart_l", "tend_l", "a_ids", "media_ids", "boiler_l",
         "_start_a", "_end_a", "_cstart_a", "_cend_a", "_parent_a",
         "_depth_a",
     )
-
-    @property
-    def tag_arr(self) -> "np.ndarray":
-        """Tags as a numpy object array (vectorized compares), cached."""
-        if self._tag_arr is None:
-            self._tag_arr = np.asarray(self.tag, dtype=object)
-        return self._tag_arr
 
     # numpy twins the extraction hot path never touches are built lazily
     # (round-7 profiling): selector/DOM/node-table paths pay the one-time
@@ -349,7 +342,6 @@ class DocIndex:
         self._depth_a = None
         self._children: list | None = None
         self._tag_ids: dict | None = None
-        self._tag_arr = None
 
         self.tstart_l = tstart
         self.tend_l = tend

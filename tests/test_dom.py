@@ -260,16 +260,28 @@ def test_cached_plans_stay_unmutated():
 def test_selector_caches_stay_bounded():
     """Dynamic selectors must not grow worker memory: after 10k distinct
     ``[attrN]`` finds (lone presence and DSL atoms, plus the public DSL
-    entry points) every matcher / conditions cache is an lru_cache at or
-    below its maxsize, and no module-level container has grown."""
+    entry points and the static scans) every matcher / conditions cache is
+    an lru_cache at or below its maxsize, and no module-level container
+    has grown."""
     from parse_html_spark import conditions, matcher
+    from parse_html_spark.dom import (
+        get_element_by_id,
+        get_elements_by_attribute,
+        get_elements_by_attributes,
+        get_elements_by_class,
+    )
 
-    ph = PH('<p attr1="v1">x</p>')
+    html = '<p attr1="v1">x</p>'
+    ph = PH(html)
     for k in range(10_000):
         ph.find(f"[attr{k}]")
         ph.find(f"p[attr{k}^=v]")
         conditions.eval_conditions({"a": "1"}, f"attr{k} = 1 OR a = {k}")
         matcher.class_word_match({"class": "x"}, f"c{k} OR x")
+        get_elements_by_class(f"c{k} OR x", html)
+        get_elements_by_attributes(f"attr{k} = 1", html)
+        get_element_by_id(f"id{k}", html)
+        get_elements_by_attribute(f"attr{k}", html)
     assert len(ph.find("[attr1]")) == len(ph.find("p[attr1^=v]")) == 1
     modules = (matcher, conditions)
     grown = [

@@ -2,8 +2,9 @@
 selectors compile to None (chainable empty), arbitrary byte soup
 tokenizes to a consistent index, attrs parse to a dict. Tag soup also
 pins the container descent's sibling walk to its linear-scan
-definition, the scan-first selector matcher to a full node scan, and
-adversarial nesting depth never makes the boilerplate strip raise."""
+definition, the scan-first selector matcher and the static scan API to
+full node scans, and adversarial nesting depth never makes the
+boilerplate strip raise."""
 
 import bisect
 import re
@@ -24,8 +25,16 @@ from parse_html_spark.conditions import (
     eval_conditions,
     parse_fields,
 )
-from parse_html_spark.dom import PH
+from parse_html_spark.dom import (
+    PH,
+    get_element_by_id,
+    get_elements_by_attribute,
+    get_elements_by_attributes,
+    get_elements_by_class,
+    get_elements_by_tag,
+)
 from parse_html_spark.matcher import (
+    _compiled,
     _match_in_range,
     class_word_match,
     eval_chain,
@@ -309,7 +318,7 @@ def _chain_by_scan(doc, chain, scopes):
 def test_scan_first_matching_equals_full_scan(html, comp, lo, span):
     doc = DocIndex(html)
     for a, b in ((0, len(html)), (lo, lo + span)):
-        assert _match_in_range(doc, comp, a, b) == _range_by_scan(doc, comp, a, b)
+        assert _match_in_range(doc, _compiled(comp), a, b) == _range_by_scan(doc, comp, a, b)
     assert find_nodes(doc, [[comp]], [(0, len(html))]) == _range_by_scan(
         doc, comp, 0, len(html)
     )
@@ -329,6 +338,87 @@ def test_eval_chain_equals_full_scan(html, steps):
     want = _chain_by_scan(doc, chain, scopes)
     assert eval_chain(doc, chain, scopes) == want
     assert find_nodes(doc, [chain], scopes) == sorted(want, key=doc.start_l.__getitem__)
+
+
+# -- static scan API vs a full node scan -----------------------------------
+
+def _static_by_scan(html, kind, arg):
+    """The five reference scans as full node passes: tag compare (no
+    whitelist), then on KNOWN_TAGS nodes strict id equality (first only),
+    class words, the textual presence regex, and the condition DSL."""
+    doc = DocIndex(html)
+    presence = re.compile(r"\s" + re.escape(arg), re.IGNORECASE)
+    test = {
+        "tag": lambda j: doc.tag[j] == arg.strip().lower(),
+        "id": lambda j: doc.attrs(j).get("id") == arg,
+        "class": lambda j: class_word_match(doc.attrs(j), arg),
+        "attribute": lambda j: presence.search(doc.starttag(j)) is not None,
+        "attributes": lambda j: bool(parse_fields(arg))
+        and eval_conditions(doc.attrs(j), arg),
+    }[kind]
+    ids = [
+        j for j in range(doc.n)
+        if (kind == "tag" or doc.tag[j] in KNOWN_TAGS) and test(j)
+    ]
+    if kind == "id":
+        ids = ids[:1]
+    return {doc.start_l[j]: doc.starttag(j) for j in ids}
+
+
+STATIC_SCANS = {
+    "tag": get_elements_by_tag,
+    "id": get_element_by_id,
+    "class": get_elements_by_class,
+    "attribute": get_elements_by_attribute,
+    "attributes": get_elements_by_attributes,
+}
+
+
+@st.composite
+def static_calls(draw):
+    """One static scan and its argument, drawn from the matcher pools;
+    class values include empty words and OR groups."""
+    kind = draw(st.sampled_from(sorted(STATIC_SCANS)))
+    if kind == "tag":
+        arg = draw(st.sampled_from(MATCH_TAGS + ["LI", " p "]))
+    elif kind == "attribute":
+        arg = draw(st.sampled_from(MATCH_NAMES + ["TITLE", "tit", "x"]))
+    elif kind == "attributes":
+        arg = " AND ".join(
+            " ".join(a) for a in draw(st.lists(st.tuples(
+                st.sampled_from(MATCH_NAMES),
+                st.sampled_from(OPERATORS),
+                st.sampled_from(DSL_VALUES),
+            ), min_size=1, max_size=2))
+        )
+        arg = draw(st.sampled_from([arg, "justaname", "", f"  {arg} "]))
+    else:
+        arg = draw(st.sampled_from(
+            MATCH_VALUES + ["a  AND b", "a OR b", "aa OR a AND b", "a AND  AND b"]
+        ))
+    return kind, arg
+
+
+@settings(max_examples=500, deadline=None)
+@given(attr_soup(), static_calls())
+# R-quirk 11: presence is textual, so a name inside a value, or a prefix
+# of a longer name, matches
+@example('<div data-x="a title">x</div>', ("attribute", "title"))
+@example('<div title="x">x</div>', ("attribute", "tit"))
+# the empty class word matches a missing class attribute
+@example("<p>x</p><div class='a  b'>", ("class", ""))
+@example("<p>x</p><div class='a b'>", ("class", "a  AND b"))
+# getElementById breaks at its first match
+@example('<p id="s">a</p><p id="s">', ("id", "s"))
+# the attribute-dispatched scans keep the tag whitelist; the tag scan not
+@example('<blink id="s" class="s" title="s">', ("tag", "blink"))
+@example('<blink id="s" class="s" title="s">', ("id", "s"))
+@example('<blink id="s" class="s" title="s">', ("class", "s"))
+@example('<blink id="s" class="s" title="s">', ("attribute", "title"))
+@example('<blink id="s" class="s" title="s">', ("attributes", "title = s"))
+def test_static_scans_equal_full_scan(html, call):
+    kind, arg = call
+    assert STATIC_SCANS[kind](arg, html) == _static_by_scan(html, kind, arg)
 
 
 # -- adversarial nesting depth ----------------------------------------------

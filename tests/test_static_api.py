@@ -54,6 +54,12 @@ def test_by_attribute_presence():
     got = get_elements_by_attribute("title", HTML)
     assert list(got.values()) == ['<a class="a" title="Mari Kemari">']
     assert get_elements_by_attribute("TITLE", HTML) == got
+    # R-quirk 11: a textual whitespace + name scan of the start tag, as
+    # find('[attr]') does -- a name inside a value, or a name prefix, hits
+    html = '<div data-x="a title">x</div>'
+    assert get_elements_by_attribute("title", html) == {0: '<div data-x="a title">'}
+    html = '<div title="x">x</div>'
+    assert get_elements_by_attribute("tit", html) == {0: '<div title="x">'}
 
 
 def test_by_attributes_dsl_docblock():
