@@ -1,21 +1,24 @@
-"""JPEG codec (ITU-T T.81, 8-bit baseline sequential AND progressive
-DCT) in pure stdlib + numpy -- closing the "JPEG needs an external
-library" gap for the two modes that cover ~99.9% of web JPEGs.
+"""JPEG codec (ITU-T T.81, 8-bit sequential AND progressive DCT) in
+pure stdlib + numpy -- closing the "JPEG needs an external library" gap
+for the two modes that cover ~99.9% of web JPEGs.
 
 Implemented from the public spec (ITU-T T.81 / JFIF 1.02):
-- decoder: SOI/APPn/COM/DQT/DHT/SOF0/SOF2/DRI/SOS parsing, canonical
-  Huffman decode (Annex C code construction, F.2 EXTEND), dequantize +
-  zigzag, exact float IDCT (orthonormal DCT-III as two 8x8 matmuls),
-  restart markers, grayscale + YCbCr with 4:4:4 / 4:2:2 / 4:2:0
-  sampling (nearest/replicate chroma upsampling), JFIF YCbCr->RGB;
-  progressive spectral-selection + successive-approximation scans
-  (Annex G.1.2) including DC/AC refinement passes and EOBn runs; the
-  legal non-interleaved multi-scan SEQUENTIAL layout (one SOS per
-  component, A.2.2) through the same multi-scan machinery.
+- decoder: ONE frame decoder for SOF0/SOF1/SOF2. SOI/APPn/COM/DQT/DHT/
+  SOF/DRI/SOS parsing, canonical Huffman decode (Annex C code
+  construction, F.2 EXTEND), dequantize + zigzag, exact float IDCT
+  (orthonormal DCT-III as two 8x8 matmuls), restart markers, grayscale
+  + YCbCr with 4:4:4 / 4:2:2 / 4:2:0 sampling (nearest/replicate chroma
+  upsampling), JFIF YCbCr->RGB. Sequential frames decode every scan
+  (one interleaved scan, or the legal non-interleaved layout of one SOS
+  per component or component subset, A.2.2) full band through one
+  entropy decoder; progressive frames add spectral-selection +
+  successive-approximation scans (Annex G.1.2) including DC/AC
+  refinement passes and EOBn runs.
 - encoder: the inverse pipeline with the Annex K example quantization
   and Huffman tables, libjpeg-style quality scaling, optional 4:2:0
-  chroma subsampling (box mean); a progressive (SOF2) writer with
-  arbitrary scan scripts for round-trip testing and fixture corpora.
+  chroma subsampling (box mean); one sequential writer for any scan
+  layout, and a progressive (SOF2) writer with arbitrary scan scripts
+  for round-trip testing and fixture corpora.
 
 Arithmetic coding, 12-bit precision and hierarchical modes raise
 ValueError -- vanishingly rare on the web, and they genuinely need an
@@ -29,18 +32,20 @@ corpora -- plug an external decoder at functions/media.py for that.
 from __future__ import annotations
 
 import struct
+from itertools import chain, repeat
 
 import numpy as np
 
 from .codecs import MAX_IMAGE_PIXELS
 
-# multi-scan (progressive / non-interleaved) coefficient storage is
-# plain-int block lists (fast for the per-scan refinement passes, but
-# ~600 bytes per 64-coef block): cap total blocks to a ~600 MB
-# envelope. 2^20 blocks covers 4:4:4 progressive up to ~22 MPx (well
-# past 12 MP phone-camera uploads -- review r6 pass 4 lowered cap
-# rejected those) and 4:2:0 to the shared pixel cap; bigger frames
-# census as undecodable rather than exhausting executor memory.
+# progressive coefficient storage is plain-int block lists (fast for
+# the per-scan refinement passes, but ~600 bytes per 64-coef block):
+# cap total blocks to a ~600 MB envelope. 2^20 blocks covers 4:4:4
+# progressive up to ~22 MPx (well past 12 MP phone-camera uploads --
+# review r6 pass 4 lowered cap rejected those) and 4:2:0 to the shared
+# pixel cap; bigger frames census as undecodable rather than exhausting
+# executor memory. Sequential frames store int32 rows (256 B per block)
+# and need only the pixel cap.
 _MAX_MULTISCAN_BLOCKS = 1 << 20
 
 # zigzag scan order: index k of the scan -> (row, col) flat index
@@ -259,307 +264,28 @@ def _seg_overrun(final: bool, truncated: bool) -> None:
         raise ValueError("truncated entropy data")
 
 
-def _extend(v: int, t: int) -> int:
-    """T.81 F.2.1.3.1 EXTEND: map t received bits to a signed value."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline JPEG -> (H, W) uint8 (grayscale) or (H, W, 3) uint8 RGB.
+    """Sequential (SOF0/SOF1) or progressive (SOF2) JPEG -> (H, W) uint8
+    (grayscale) or (H, W, 3) uint8 RGB.
 
     Malformed input (truncated entropy data, missing tables, bad
     segment structure) raises ValueError -- never a bare IndexError /
     KeyError from the bit reader, so callers can match one exception
     type for undecodable web-crawled payloads."""
     try:
-        return _decode_jpeg_impl(data)
+        return _decode_frame(data)
     except (IndexError, KeyError, struct.error, OverflowError) as exc:
         # OverflowError: corrupt DC categories can accumulate a pred
-        # outside int32 before any other validation trips
+        # too large for numpy conversion before any other validation
+        # trips (an int32 store past its range raises ValueError)
         raise ValueError(f"truncated or malformed JPEG: {exc!r}") from exc
-
-
-def _decode_jpeg_impl(data: bytes) -> np.ndarray:
-    if data[:3] != b"\xff\xd8\xff":
-        raise ValueError("not a JPEG")
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}  # (class 0=DC/1=AC, id) -> table
-    comps = []  # [id, h, v, tq]
-    width = height = None
-    dri = 0
-    pos = 2
-    scan_comps = None
-    adobe_transform = None  # APP14 'Adobe' color-transform byte
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
-        # marker -- consume the run so the real marker byte is read
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        body = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT
-            o = 0
-            while o < len(body):
-                pq, tq = body[o] >> 4, body[o] & 0xF
-                o += 1
-                if pq:
-                    tbl = np.frombuffer(
-                        body[o : o + 128], dtype=">u2"
-                    ).astype(np.int64)
-                    o += 128
-                else:
-                    tbl = np.frombuffer(
-                        body[o : o + 64], dtype=np.uint8
-                    ).astype(np.int64)
-                    o += 64
-                dq = np.zeros(64, dtype=np.int64)
-                dq[_ZZ] = tbl  # stored in zigzag order
-                qt[tq] = dq
-        elif marker == 0xC4:  # DHT
-            o = 0
-            while o < len(body):
-                tc, th = body[o] >> 4, body[o] & 0xF
-                bits = list(body[o + 1 : o + 17])
-                n = sum(bits)
-                vals = list(body[o + 17 : o + 17 + n])
-                huff[(tc, th)] = _build_decode_table(bits, vals)
-                o += 17 + n
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 (baseline DCT)
-            if comps:
-                raise ValueError("duplicate SOF marker")
-            prec = body[0]
-            if prec != 8:
-                raise ValueError(f"unsupported precision {prec}")
-            height, width = struct.unpack(">HH", body[1:5])
-            if height * width > MAX_IMAGE_PIXELS:
-                raise ValueError(
-                    f"JPEG {width}x{height} exceeds MAX_IMAGE_PIXELS"
-                )
-            nf = body[5]
-            comps = []
-            for c in range(nf):
-                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append([cid, hv >> 4, hv & 0xF, tq])
-        elif marker == 0xC2:  # SOF2: progressive DCT
-            return _decode_progressive(data)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                "only baseline and progressive DCT are supported "
-                f"(SOF marker 0x{marker:02X})"
-            )
-        elif marker == 0xDD:  # DRI
-            (dri,) = struct.unpack(">H", body[:2])
-        elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
-            # APP14: transform 0 = components are already RGB (no YCbCr
-            # transform on decode), 1 = YCbCr, 2 = YCCK
-            adobe_transform = body[11]
-        elif marker == 0xDA:  # SOS
-            ns = body[0]
-            if comps and ns != len(comps):
-                # legal per T.81: one scan per component (or subsets).
-                # This fast inlined path only implements the interleaved
-                # single-scan layout -- the multi-scan/non-interleaved
-                # decoder shares the progressive machinery instead
-                return _decode_multiscan(data)
-            scan_comps = []
-            for c in range(ns):
-                cid, tda = body[1 + 2 * c : 3 + 2 * c]
-                comp = next((x for x in comps if x[0] == cid), None)
-                if comp is None:
-                    raise ValueError(f"scan references unknown component {cid}")
-                scan_comps.append((comp, tda >> 4, tda & 0xF))
-            pos = pos + 2 + seglen
-            break
-        pos = pos + 2 + seglen
-    if width is None or scan_comps is None:
-        raise ValueError("JPEG missing SOF/SOS")
-
-    hmax = max(c[0][1] for c in scan_comps)
-    vmax = max(c[0][2] for c in scan_comps)
-    for (cid, h, v, _tq), _td, _ta in scan_comps:
-        # upsampling below uses integer np.repeat factors; legal
-        # non-divisible ratios (e.g. 3x1 luma with 2x1 chroma) would
-        # otherwise die in np.stack with an uninformative shape error
-        if h < 1 or v < 1 or hmax % h or vmax % v:
-            raise ValueError(
-                f"unsupported sampling factors {h}x{v} for component "
-                f"{cid} (max {hmax}x{vmax}: non-integer upsampling ratio)"
-            )
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    segs, scan_truncated, _end = _entropy_segments(data, pos)
-    seg_idx = 0
-    preds = [0] * len(scan_comps)
-    mcu_count = 0
-    # Entropy decode fills PREALLOCATED (n_blocks, 64) int32 coefficient
-    # arrays per component (sparse element writes -- a noisy block has
-    # ~10 nonzero coefficients; int32 bounds peak memory at 4 B/coeff
-    # where per-block Python int lists cost ~36 B/coeff and would
-    # multiply peak memory several-fold on large images); dequant + IDCT
-    # + plane assembly then run as ONE batched numpy pass per component
-    # below. The bit reader is fully INLINED as local ints
-    # (sbuf/snbits/spos/scons): at ~4 symbols decoded per microsecond
-    # the per-symbol function-call overhead of a reader object is the
-    # single largest cost. Bits past a segment's real end read as zeros
-    # (T.81 scan padding); CONSUMING past the end raises via
-    # _seg_overrun.
-    coeff_arrs = [
-        np.zeros((mcuy * mcux * v * h, 64), dtype=np.int32)
-        for (_cid, h, v, _tq), _td, _ta in scan_comps
-    ]
-    blk_idx = [0] * len(scan_comps)
-    luts = [(huff[(0, td)], huff[(1, ta)]) for _c, td, ta in scan_comps]
-    sdata, sn, snreal, sfinal = _seg_state(segs, 0)
-    sbuf = snbits = spos = scons = 0
-    for _my in range(mcuy):
-        for _mx in range(mcux):
-            if dri and mcu_count and mcu_count % dri == 0:
-                seg_idx += 1
-                sdata, sn, snreal, sfinal = _seg_state(segs, seg_idx)
-                sbuf = snbits = spos = scons = 0
-                preds = [0] * len(scan_comps)
-            mcu_count += 1
-            for ci, ((_cid, h, v, _tq), _td, _ta) in enumerate(scan_comps):
-                (dc_sym, dc_len), (ac_sym, ac_len) = luts[ci]
-                carr = coeff_arrs[ci]
-                bi = blk_idx[ci]
-                pred = preds[ci]
-                for _b in range(v * h):
-                    zz = carr[bi]
-                    bi += 1
-                    if snbits < 16:
-                        while snbits < 16:
-                            if spos < sn:
-                                sbuf = (sbuf << 8) | sdata[spos]
-                                spos += 1
-                            else:
-                                sbuf <<= 8
-                            snbits += 8
-                        sbuf &= 0xFFFFFFFFFF
-                    idx = (sbuf >> (snbits - 16)) & 0xFFFF
-                    length = dc_len[idx]
-                    if length == 0:
-                        raise ValueError("invalid Huffman code")
-                    t = dc_sym[idx]
-                    snbits -= length
-                    scons += length + t
-                    if t:
-                        if snbits < t:
-                            while snbits < t:
-                                if spos < sn:
-                                    sbuf = (sbuf << 8) | sdata[spos]
-                                    spos += 1
-                                else:
-                                    sbuf <<= 8
-                                snbits += 8
-                            sbuf &= 0xFFFFFFFFFF
-                        snbits -= t
-                        diff = (sbuf >> snbits) & ((1 << t) - 1)
-                        pred += (
-                            diff
-                            if diff >= (1 << (t - 1))
-                            else diff - (1 << t) + 1
-                        )
-                    if scons > snreal:
-                        _seg_overrun(sfinal, scan_truncated)
-                    zz[0] = pred
-                    k = 1
-                    while k < 64:
-                        if snbits < 16:
-                            while snbits < 16:
-                                if spos < sn:
-                                    sbuf = (sbuf << 8) | sdata[spos]
-                                    spos += 1
-                                else:
-                                    sbuf <<= 8
-                                snbits += 8
-                            sbuf &= 0xFFFFFFFFFF
-                        idx = (sbuf >> (snbits - 16)) & 0xFFFF
-                        length = ac_len[idx]
-                        if length == 0:
-                            raise ValueError("invalid Huffman code")
-                        rs = ac_sym[idx]
-                        s = rs & 0xF
-                        if s == 0:
-                            snbits -= length
-                            scons += length
-                            if scons > snreal:
-                                _seg_overrun(sfinal, scan_truncated)
-                            if rs == 0xF0:  # ZRL: 16 zeros
-                                k += 16
-                                continue
-                            break  # EOB
-                        # combined drop(length) + receive(s): length+s
-                        # <= 16+10, one refill covers both
-                        need = length + s
-                        if snbits < need:
-                            while snbits < need:
-                                if spos < sn:
-                                    sbuf = (sbuf << 8) | sdata[spos]
-                                    spos += 1
-                                else:
-                                    sbuf <<= 8
-                                snbits += 8
-                            sbuf &= 0xFFFFFFFFFF
-                        snbits -= need
-                        scons += need
-                        if scons > snreal:
-                            _seg_overrun(sfinal, scan_truncated)
-                        k += rs >> 4
-                        if k > 63:
-                            raise ValueError("AC run overflows block")
-                        diff = (sbuf >> snbits) & ((1 << s) - 1)
-                        zz[k] = (
-                            diff
-                            if diff >= (1 << (s - 1))
-                            else diff - (1 << s) + 1
-                        )
-                        k += 1
-                preds[ci] = pred
-                blk_idx[ci] = bi
-    # batched dequant + IDCT + plane assembly + level shift + upsample
-    out_planes = []
-    for ci, ((_cid, h, v, tq), _td, _ta) in enumerate(scan_comps):
-        q = qt[tq]
-        zz_arr = coeff_arrs[ci]
-        coef = np.zeros(zz_arr.shape, dtype=np.float64)
-        # zz is scan-order; q is natural-order -> q[_ZZ] realigns the
-        # quantizer to scan positions
-        coef[:, _ZZ] = zz_arr * q[_ZZ]
-        blocks = _C.T @ coef.reshape(-1, 8, 8) @ _C
-        # blocks arrive in (my, mx, by, bx) order -> reassemble the grid
-        plane = (
-            blocks.reshape(mcuy, mcux, v, h, 8, 8)
-            .transpose(0, 2, 4, 1, 3, 5)
-            .reshape(mcuy * v * 8, mcux * h * 8)
-        )
-        p = plane + 128.0
-        if h < hmax or v < vmax:
-            p = np.repeat(np.repeat(p, vmax // v, axis=0), hmax // h, axis=1)
-        out_planes.append(p[:height, :width])
-    return _colorize(out_planes, adobe_transform)
 
 
 def _colorize(out_planes: list, adobe_transform) -> np.ndarray:
     """Float planes -> uint8 image: grayscale passthrough, Adobe
-    transform=0 RGB passthrough, or JFIF YCbCr->RGB (shared by the
-    baseline and progressive decode paths)."""
+    transform=0 RGB passthrough, or JFIF YCbCr->RGB."""
     if len(out_planes) == 1:
         return np.clip(out_planes[0], 0, 255).astype(np.uint8)
-    if len(out_planes) != 3:
-        raise ValueError(f"unsupported component count {len(out_planes)}")
     if adobe_transform == 0:
         # Adobe APP14 transform=0: components are stored RGB -- applying
         # the JFIF YCbCr->RGB matrix would silently decode wrong colors
@@ -571,56 +297,76 @@ def _colorize(out_planes: list, adobe_transform) -> np.ndarray:
     return np.clip(np.stack([r, g, b], axis=2), 0, 255).astype(np.uint8)
 
 
-# -- progressive decoder (SOF2) ----------------------------------------------
-#
-# T.81 Annex G.1.2 (public spec): DCT coefficients arrive over multiple
-# scans -- spectral selection (Ss..Se bands) and successive approximation
-# (Ah/Al bit-plane splits). DC scans may interleave components (MCU
-# order); AC scans are single-component in block-raster order over the
-# component's own grid. First scans (Ah=0) Huffman-code shifted
-# values; refinement scans (Ah>0) append one bit per coefficient:
-# a raw bit-plane bit for the DC, and for AC a correction bit per
-# already-nonzero coefficient plus (r<<4)|1 run codes for newly
-# significant +-1<<Al coefficients, with EOBn run codes spanning blocks.
-# Per T.81 convention (and every interoperable implementation) the DC
-# shift is arithmetic, the AC shift sign-magnitude.
-#
-# Coefficients accumulate scan over scan in per-component plain-int
-# block lists (refinement re-reads every nonzero coefficient, where
-# numpy scalar access would dominate); dequant + IDCT + assembly then
-# run as the same batched numpy pass as baseline. Memory is ~28 B per
-# coefficient -- fine for features-at-ingest, documented against bulk
-# imaging like the rest of this codec.
-
-
 def _seg_state(segs, seg_idx):
-    """Restart-segment bookkeeping shared by the baseline and
-    progressive scan decoders: (data, byte length, real bit length,
-    is-final) for
-    segment ``seg_idx``, raising when a restart interval expects a
-    segment the stream does not have."""
+    """Restart-segment bookkeeping shared by the scan decoders: (data,
+    byte length, real bit length, is-final) for segment ``seg_idx``,
+    raising when a restart interval expects a segment the stream does
+    not have."""
     if seg_idx >= len(segs):
         raise ValueError("missing restart marker")
     sdata = segs[seg_idx]
     return sdata, len(sdata), 8 * len(sdata), seg_idx == len(segs) - 1
 
 
-def _decode_multiscan(data: bytes) -> np.ndarray:
-    """Non-interleaved / multi-scan SEQUENTIAL baseline files share
-    this decoder: same marker loop and coefficient accumulation, with
-    full-band block scans instead of spectral/approximation passes."""
-    return _decode_progressive(data)
+def _frame_geom(width: int, height: int, samp) -> tuple:
+    """Block geometry of a frame whose components have sampling factors
+    ``samp`` = [(h, v), ...]: (mcux, mcuy, geom) with geom[ci] =
+    (bw_pad, bh_pad, bw_a, bh_a, h, v). The padded grid (bw_pad x
+    bh_pad) is the MCU-aligned block raster every component is stored
+    in; the actual grid (bw_a x bh_a, ceil of the component's own
+    dimensions) is what a single-component scan covers, which can be
+    narrower [T.81 A.2.2]. Shared by the decoder and both encoders."""
+    hmax = max(h for h, _v in samp)
+    vmax = max(v for _h, v in samp)
+    mcux = -(-width // (8 * hmax))
+    mcuy = -(-height // (8 * vmax))
+    geom = []
+    for h, v in samp:
+        cw = -(-width * h // hmax)
+        ch = -(-height * v // vmax)
+        geom.append((mcux * h, mcuy * v, -(-cw // 8), -(-ch // 8), h, v))
+    return mcux, mcuy, geom
 
 
-def _decode_progressive(data: bytes) -> np.ndarray:
+# -- frame decoder -----------------------------------------------------------
+#
+# One marker loop for every supported frame type. Coefficients
+# accumulate scan over scan in per-component block storage laid out in
+# the padded block RASTER (by, bx); dequant + IDCT + plane assembly then
+# run as one batched numpy pass per component. The storage follows the
+# frame type:
+# - sequential frames: one preallocated (blocks, 64) int32 array per
+#   component. Each block is written once, sparsely (~10 nonzero
+#   coefficients), and int32 bounds peak memory at 4 B/coeff;
+# - progressive frames: plain-int block lists. Refinement scans re-read
+#   every nonzero coefficient, where numpy scalar access would dominate,
+#   but a list block costs ~600 B, so these frames are bounded by the
+#   _MAX_MULTISCAN_BLOCKS envelope.
+#
+# Progressive scans [T.81 Annex G.1.2]: DCT coefficients arrive over
+# multiple scans -- spectral selection (Ss..Se bands) and successive
+# approximation (Ah/Al bit-plane splits). DC scans may interleave
+# components (MCU order); AC scans are single-component in block-raster
+# order over the component's own grid. First scans (Ah=0) Huffman-code
+# shifted values; refinement scans (Ah>0) append one bit per
+# coefficient: a raw bit-plane bit for the DC, and for AC a correction
+# bit per already-nonzero coefficient plus (r<<4)|1 run codes for newly
+# significant +-1<<Al coefficients, with EOBn run codes spanning blocks.
+# Per T.81 convention (and every interoperable implementation) the DC
+# shift is arithmetic, the AC shift sign-magnitude.
+
+
+def _decode_frame(data: bytes) -> np.ndarray:
+    if data[:3] != b"\xff\xd8\xff":
+        raise ValueError("not a JPEG")
     qt: dict[int, np.ndarray] = {}
-    progressive = True
-    huff: dict[tuple[int, int], tuple] = {}
+    progressive = False
+    huff: dict[tuple[int, int], tuple] = {}  # (class 0=DC/1=AC, id) -> LUT
     comps: list[list[int]] = []  # [cid, h, v, tq]
     width = height = None
     dri = 0
-    adobe_transform = None
-    coefs: list[list[list[int]]] = []  # per comp: block lists of 64 ints
+    adobe_transform = None  # APP14 'Adobe' color-transform byte
+    coefs: list = []  # per comp: (blocks, 64) int32 array or block lists
     geom: list[tuple[int, int, int, int, int, int]] = []
     mcux = mcuy = 0
     got_scan = False
@@ -636,6 +382,8 @@ def _decode_progressive(data: bytes) -> np.ndarray:
         if data[pos] != 0xFF:
             pos += 1
             continue
+        # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
+        # marker -- consume the run so the real marker byte is read
         while pos + 1 < n and data[pos + 1] == 0xFF:
             pos += 1
         marker = data[pos + 1]
@@ -646,7 +394,7 @@ def _decode_progressive(data: bytes) -> np.ndarray:
             break
         (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
         body = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
+        if marker == 0xDB:  # DQT
             o = 0
             while o < len(body):
                 pq, tq = body[o] >> 4, body[o] & 0xF
@@ -662,9 +410,9 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                     )
                     o += 64
                 dq = np.zeros(64, dtype=np.int64)
-                dq[_ZZ] = tbl
+                dq[_ZZ] = tbl  # stored in zigzag order
                 qt[tq] = dq
-        elif marker == 0xC4:
+        elif marker == 0xC4:  # DHT
             o = 0
             while o < len(body):
                 tc, th = body[o] >> 4, body[o] & 0xF
@@ -673,7 +421,7 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                 vals = list(body[o + 17 : o + 17 + cnt])
                 huff[(tc, th)] = _build_decode_table(bits, vals)
                 o += 17 + cnt
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 (multi-scan) / SOF2
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2
             if comps:
                 # T.81 allows ONE frame header; re-parsing a second SOF
                 # would silently wipe the accumulated coefficients and
@@ -688,6 +436,8 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                     f"JPEG {width}x{height} exceeds MAX_IMAGE_PIXELS"
                 )
             nf = body[5]
+            if nf not in (1, 3):
+                raise ValueError(f"unsupported component count {nf}")
             comps = []
             for c in range(nf):
                 cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
@@ -695,46 +445,44 @@ def _decode_progressive(data: bytes) -> np.ndarray:
             hmax = max(c[1] for c in comps)
             vmax = max(c[2] for c in comps)
             for cid, h, v, _tq in comps:
+                # upsampling uses integer np.repeat factors; legal
+                # non-divisible ratios (e.g. 3x1 luma with 2x1 chroma)
+                # would otherwise die in np.stack with a shape error
                 if h < 1 or v < 1 or hmax % h or vmax % v:
                     raise ValueError(
                         f"unsupported sampling factors {h}x{v} for "
                         f"component {cid} (max {hmax}x{vmax})"
                     )
-            mcux = -(-width // (8 * hmax))
-            mcuy = -(-height // (8 * vmax))
-            total_blocks = sum(
-                (mcux * h) * (mcuy * v) for _cid, h, v, _tq in comps
+            mcux, mcuy, geom = _frame_geom(
+                width, height, [(h, v) for _cid, h, v, _tq in comps]
             )
-            if total_blocks > _MAX_MULTISCAN_BLOCKS:
-                # the multi-scan decoders accumulate coefficients in
-                # plain-int block LISTS (~600 B/block) -- the pixel cap
-                # alone leaves an in-cap progressive frame able to
-                # allocate GBs of list storage (review r6 pass 3)
-                raise ValueError(
-                    f"multi-scan JPEG needs {total_blocks} coefficient "
-                    f"blocks (> {_MAX_MULTISCAN_BLOCKS} memory envelope)"
-                )
-            coefs = []
-            geom = []
-            for _cid, h, v, _tq in comps:
-                bw_pad, bh_pad = mcux * h, mcuy * v
-                # non-interleaved scans cover the component's OWN block
-                # grid (ceil dims), which can be narrower than the
-                # MCU-padded storage grid [T.81 A.2.2]
-                cw = -(-width * h // hmax)
-                ch = -(-height * v // vmax)
-                bw_a, bh_a = -(-cw // 8), -(-ch // 8)
-                coefs.append([[0] * 64 for _ in range(bh_pad * bw_pad)])
-                geom.append((bw_pad, bh_pad, bw_a, bh_a, h, v))
-                comp_q.append(None)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("unsupported frame type in multi-scan JPEG")
-        elif marker == 0xDD:
+            if progressive:
+                total_blocks = sum(g[0] * g[1] for g in geom)
+                if total_blocks > _MAX_MULTISCAN_BLOCKS:
+                    # the pixel cap alone leaves an in-cap progressive
+                    # frame able to allocate GBs of list storage
+                    # (review r6 pass 3)
+                    raise ValueError(
+                        f"progressive JPEG needs {total_blocks} coefficient "
+                        f"blocks (> {_MAX_MULTISCAN_BLOCKS} memory envelope)"
+                    )
+                coefs = [[[0] * 64 for _ in range(g[0] * g[1])] for g in geom]
+            else:
+                coefs = [np.zeros((g[0] * g[1], 64), np.int32) for g in geom]
+            comp_q = [None] * nf
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
+                        0xCD, 0xCE, 0xCF):
+            raise ValueError(
+                "only baseline and progressive DCT are supported "
+                f"(SOF marker 0x{marker:02X})"
+            )
+        elif marker == 0xDD:  # DRI
             (dri,) = struct.unpack(">H", body[:2])
         elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
+            # APP14: transform 0 = components are already RGB (no YCbCr
+            # transform on decode), 1 = YCbCr, 2 = YCCK
             adobe_transform = body[11]
-        elif marker == 0xDA:
+        elif marker == 0xDA:  # SOS
             if not comps:
                 raise ValueError("SOS before SOF")
             ns = body[0]
@@ -755,32 +503,36 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                             f"missing quantization table {tq_c}"
                         )
                     comp_q[idx] = qt[tq_c]  # DQT stores fresh arrays
-            ss = body[1 + 2 * ns]
-            se = body[2 + 2 * ns]
-            ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0xF
             segs, truncated, endpos = _entropy_segments(data, pos + 2 + seglen)
-            _decode_prog_scan(
-                segs, truncated, scan, coefs, geom, huff, dri, mcux, mcuy,
-                ss, se, ah, al, progressive,
-            )
-            if not progressive:
+            units = _scan_units([i for i, _td, _ta in scan], geom, mcux, mcuy)
+            if progressive:
+                ss = body[1 + 2 * ns]
+                se = body[2 + 2 * ns]
+                ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0xF
+                _decode_prog_scan(
+                    segs, truncated, scan, coefs, units, huff, dri,
+                    ss, se, ah, al,
+                )
+            else:
+                # a sequential scan is full band whatever its Ss/Se/Ah/Al
+                # bytes say: like libjpeg (JWRN_NOT_SEQUENTIAL), accept
+                # the baseline files that zero them
+                _scan_full(segs, truncated, scan, coefs, units, huff, dri)
                 seq_scanned.update(i for i, _td, _ta in scan)
             got_scan = True
             pos = endpos
             continue
         pos = pos + 2 + seglen
     if width is None or not got_scan:
-        raise ValueError("multi-scan JPEG missing SOF/SOS")
+        raise ValueError("JPEG missing SOF/SOS")
     if not progressive and len(seq_scanned) < len(comps):
         # a sequential frame must scan every component once -- without
         # this, a mis-labeled interleaved stream would silently decode
         # one component's worth of garbage and leave the rest zero
         raise ValueError(
-            "sequential multi-scan JPEG missing scans for "
+            "sequential JPEG missing scans for "
             f"{len(comps) - len(seq_scanned)} component(s)"
         )
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
     out_planes = []
     for ci, (_cid, h, v, tq) in enumerate(comps):
         q = comp_q[ci]
@@ -792,11 +544,12 @@ def _decode_progressive(data: bytes) -> np.ndarray:
                 raise ValueError(f"missing quantization table {tq}")
             q = qt[tq]
         bw_pad, bh_pad, _bw_a, _bh_a, _h, _v = geom[ci]
-        zz_arr = np.asarray(coefs[ci], dtype=np.int64)
+        zz_arr = np.asarray(coefs[ci])
         coef = np.zeros(zz_arr.shape, dtype=np.float64)
+        # zz is scan-order; q is natural-order -> q[_ZZ] realigns the
+        # quantizer to scan positions
         coef[:, _ZZ] = zz_arr * q[_ZZ]
         blocks = _C.T @ coef.reshape(-1, 8, 8) @ _C
-        # block lists are in RASTER order (by, bx), not MCU order
         plane = (
             blocks.reshape(bh_pad, bw_pad, 8, 8)
             .transpose(0, 2, 1, 3)
@@ -809,52 +562,47 @@ def _decode_progressive(data: bytes) -> np.ndarray:
     return _colorize(out_planes, adobe_transform)
 
 
-def _scan_units(scan, geom, mcux, mcuy):
-    """Iteration units for a DC or sequential scan: one MCU = the scan
-    components' blocks in (comp, v-row, h-col) order; ns==1 walks the
-    component's own block raster instead (T.81 non-interleaved
-    geometry)."""
-    units = []
-    if len(scan) > 1:
-        for my in range(mcuy):
-            for mx in range(mcux):
-                unit = []
-                for ci, _td, _ta in scan:
-                    bw_pad, _bh_pad, _bwa, _bha, h, v = geom[ci]
-                    for iv in range(v):
-                        for ih in range(h):
-                            unit.append(
-                                (ci, (my * v + iv) * bw_pad + (mx * h + ih))
-                            )
-                units.append(unit)
-    else:
-        ci = scan[0][0]
+def _scan_units(comp_ids, geom, mcux, mcuy):
+    """Iterate the units of one scan over components ``comp_ids``, each
+    a sequence of (component, block index) pairs: one MCU per unit --
+    the components' blocks in (comp, v-row, h-col) order -- when the
+    scan interleaves several components, else one block per unit
+    walking the component's own block raster (T.81 non-interleaved
+    geometry). Restart intervals count these units. Block indices
+    address the padded raster of ``_frame_geom``. The only enumeration
+    of scan order: the decoder and both encoders walk their blocks
+    through it. Lazy: nothing is held per block."""
+    if len(comp_ids) == 1:
+        ci = comp_ids[0]
         bw_pad, _bh_pad, bw_a, bh_a, _h, _v = geom[ci]
-        for by in range(bh_a):
-            for bx in range(bw_a):
-                units.append([(ci, by * bw_pad + bx)])
-    return units
+        raster = chain.from_iterable(
+            range(row, row + bw_a) for row in range(0, bh_a * bw_pad, bw_pad)
+        )
+        return zip(zip(repeat(ci), raster))  # ((ci, bi),) units, built in C
+    # one MCU's blocks as offsets from the MCU's top-left block, plus
+    # each component's per-MCU steps in x and y
+    pattern = []
+    for ci in comp_ids:
+        bw_pad, _bh_pad, _bw_a, _bh_a, h, v = geom[ci]
+        for iv in range(v):
+            for ih in range(h):
+                pattern.append((ci, iv * bw_pad + ih, h, v * bw_pad))
+    return (
+        [(ci, my * sy + mx * sx + off) for ci, off, sx, sy in pattern]
+        for my in range(mcuy)
+        for mx in range(mcux)
+    )
 
 
 def _decode_prog_scan(
-    segs, truncated, scan, coefs, geom, huff, dri, mcux, mcuy, ss, se, ah, al,
-    progressive=True,
+    segs, truncated, scan, coefs, units, huff, dri, ss, se, ah, al
 ):
-    """Decode one scan's entropy data into ``coefs`` (progressive
-    spectral/approximation scans, or full-band scans of a multi-scan
-    SEQUENTIAL frame)."""
-    if not progressive:
-        if (ss, se, ah, al) != (0, 63, 0, 0):
-            raise ValueError(
-                "sequential scan must cover the full 0..63 band"
-            )
-        units = _scan_units(scan, geom, mcux, mcuy)
-        _scan_full(segs, truncated, scan, coefs, units, huff, dri)
-        return
+    """Decode one progressive scan's entropy data into ``coefs``: a DC
+    first/refinement scan over ``units``, or a spectral band of one
+    component's AC coefficients."""
     if ss == 0:
         if se != 0:
             raise ValueError("DC scan must have Se=0")
-        units = _scan_units(scan, geom, mcux, mcuy)
         if ah == 0:
             _scan_dc_first(segs, truncated, scan, coefs, units, huff, dri, al)
         else:
@@ -867,12 +615,8 @@ def _decode_prog_scan(
     ci, _td, ta = scan[0]
     if (1, ta) not in huff:
         raise ValueError(f"missing AC Huffman table {ta}")
-    bw_pad, _bh_pad, bw_a, bh_a, _h, _v = geom[ci]
-    blocks = [
-        coefs[ci][by * bw_pad + bx]
-        for by in range(bh_a)
-        for bx in range(bw_a)
-    ]
+    store = coefs[ci]
+    blocks = [store[bi] for ((_ci, bi),) in units]
     if ah == 0:
         _scan_ac_first(segs, truncated, blocks, huff[(1, ta)], dri, ss, se, al)
     else:
@@ -880,15 +624,23 @@ def _decode_prog_scan(
 
 
 def _scan_full(segs, truncated, scan, coefs, units, huff, dri):
-    """One full-band scan of a multi-scan SEQUENTIAL frame: per block,
-    baseline DC diff + AC run-length coding (EOB/ZRL, no EOBn) -- the
-    classic T.81 F.2 block decode over progressive-style unit geometry
-    (interleaved component subsets or single-component rasters)."""
+    """One sequential scan [T.81 F.2]: per block, a DC diff plus AC
+    run-length coding (EOB/ZRL, no EOBn), over interleaved MCUs or a
+    single component's raster. The bit reader is fully INLINED as local
+    ints (sbuf/snbits/spos/scons): at ~4 symbols decoded per
+    microsecond the per-symbol function-call overhead of a reader
+    object would be the single largest cost. Bits past a segment's real
+    end read as zeros (T.81 scan padding); CONSUMING past the end
+    raises via _seg_overrun."""
+    tabs = [None] * len(coefs)
     for ci, td, ta in scan:
         if (0, td) not in huff or (1, ta) not in huff:
             raise ValueError("missing Huffman table for sequential scan")
-    luts = {ci: (huff[(0, td)], huff[(1, ta)]) for ci, td, ta in scan}
-    preds = {ci: 0 for ci, _td, _ta in scan}
+        # flat int32 view of the component's (blocks, 64) array: a
+        # memoryview store costs about half a numpy scalar store
+        flat = memoryview(coefs[ci].reshape(-1))
+        tabs[ci] = (*huff[(0, td)], *huff[(1, ta)], flat)
+    preds = [0] * len(coefs)
     seg_idx = 0
     sdata, sn, snreal, sfinal = _seg_state(segs, 0)
     sbuf = snbits = spos = scons = 0
@@ -897,10 +649,10 @@ def _scan_full(segs, truncated, scan, coefs, units, huff, dri):
             seg_idx += 1
             sdata, sn, snreal, sfinal = _seg_state(segs, seg_idx)
             sbuf = snbits = spos = scons = 0
-            preds = {ci: 0 for ci in preds}
+            preds = [0] * len(coefs)
         for ci, bi in unit:
-            (dc_sym, dc_len), (ac_sym, ac_len) = luts[ci]
-            zz = coefs[ci][bi]
+            dc_sym, dc_len, ac_sym, ac_len, store = tabs[ci]
+            o = bi << 6
             if snbits < 16:
                 while snbits < 16:
                     if spos < sn:
@@ -934,7 +686,7 @@ def _scan_full(segs, truncated, scan, coefs, units, huff, dri):
                 )
             if scons > snreal:
                 _seg_overrun(sfinal, truncated)
-            zz[0] = preds[ci]
+            store[o] = preds[ci]
             k = 1
             while k < 64:
                 if snbits < 16:
@@ -979,7 +731,7 @@ def _scan_full(segs, truncated, scan, coefs, units, huff, dri):
                 if k > 63:
                     raise ValueError("AC run overflows block")
                 v = (sbuf >> snbits) & ((1 << s) - 1)
-                zz[k] = (
+                store[o + k] = (
                     v if v >= (1 << (s - 1)) else v - (1 << s) + 1
                 )
                 k += 1
@@ -1398,11 +1150,13 @@ def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
 
 
 def _prepare_coefs(arr: np.ndarray, quality: int, subsample: bool):
-    """Shared front half of the baseline and progressive encoders:
+    """Shared front half of the sequential and progressive encoders:
     color transform, optional 4:2:0 downsample, MCU padding, FDCT and
-    quantization. Returns (gray, h, w, samp, qlum, qchr, mcux, mcuy,
-    coefs) with coefs[ci] a (bh, bw, 64) int64 zigzag-coefficient
-    grid."""
+    quantization. Returns (h, w, samp, qtabs, mcux, mcuy, geom, coefs)
+    with qtabs the quantization tables in table-id order, geom the
+    decoder's _frame_geom block geometry, and coefs[ci] the plain-int
+    zigzag blocks of component ci in padded raster order (plain ints
+    for the per-block entropy coders)."""
     arr = np.asarray(arr)
     gray = arr.ndim == 2
     h, w = arr.shape[:2]
@@ -1411,7 +1165,7 @@ def _prepare_coefs(arr: np.ndarray, quality: int, subsample: bool):
     if gray:
         planes = [arr.astype(np.float64)]
         samp = [(1, 1)]
-        qmap = [qlum]
+        qtabs = [qlum]
     else:
         px = arr.astype(np.float64)
         r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
@@ -1432,18 +1186,87 @@ def _prepare_coefs(arr: np.ndarray, quality: int, subsample: bool):
         else:
             samp = [(1, 1), (1, 1), (1, 1)]
         planes = [y, cb, cr]
-        qmap = [qlum, qchr, qchr]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
+        qtabs = [qlum, qchr]
+    mcux, mcuy, geom = _frame_geom(w, h, samp)
     # pad each plane to its own MCU-aligned size and FDCT+quantize
     coefs = []
-    for p, (sh, sv), q in zip(planes, samp, qmap):
-        coefs.append(
-            _plane_blocks_fdct(_pad_to(p, mcuy * sv * 8, mcux * sh * 8), q)
-        )
-    return gray, h, w, samp, qlum, qchr, mcux, mcuy, coefs
+    for ci, (p, (bw_pad, bh_pad, _bwa, _bha, _h, _v)) in enumerate(
+        zip(planes, geom)
+    ):
+        padded = _pad_to(p, bh_pad * 8, bw_pad * 8)
+        zz = _plane_blocks_fdct(padded, qtabs[min(ci, 1)])
+        coefs.append(zz.reshape(-1, 64).tolist())
+    return h, w, samp, qtabs, mcux, mcuy, geom, coefs
+
+
+def _segment(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _frame_header(sof, h, w, samp, qtabs, dhts, restart_interval) -> bytearray:
+    """SOI through the last table segment of a JFIF frame: APP0, one
+    DQT per table in ``qtabs``, the ``sof`` frame header (component
+    ci + 1 uses table min(ci, 1)), one DHT per (class, id, table) in
+    ``dhts``, and a DRI segment when restart_interval > 0."""
+    out = bytearray(b"\xff\xd8")
+    out += _segment(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
+    for tq, q in enumerate(qtabs):
+        zq = q.reshape(64)[_ZZ].astype(np.uint8)
+        out += _segment(0xDB, bytes([tq]) + bytes(zq))
+    sof_body = bytes([8]) + struct.pack(">HH", h, w) + bytes([len(samp)])
+    for ci, (sh, sv) in enumerate(samp):
+        sof_body += bytes([ci + 1, (sh << 4) | sv, min(ci, 1)])
+    out += _segment(sof, sof_body)
+    for tc, th, (bits, vals) in dhts:
+        dht = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
+        out += _segment(0xC4, dht)
+    if restart_interval:
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    return out
+
+
+def _scan_header(comp_ids, tables: int, ss: int, se: int, ahal: int) -> bytes:
+    """SOS segment: component ci + 1 codes with table byte ``tables``
+    (Td << 4 | Ta) for chroma and 0x00 for luma."""
+    body = bytes([len(comp_ids)])
+    for ci in comp_ids:
+        body += bytes([ci + 1, tables if ci else 0])
+    return _segment(0xDA, body + bytes([ss, se, ahal]))
+
+
+def _encode_sequential(arr, quality, subsample, restart_interval, scans):
+    """The one sequential (SOF0) writer: Annex K tables, one scan per
+    entry of ``scans`` (lists of component indices) in the decoder's
+    _scan_units order, RSTn markers every restart_interval units with
+    numbering restarting at 0 in each scan."""
+    h, w, samp, qtabs, mcux, mcuy, geom, coefs = _prepare_coefs(
+        arr, quality, subsample
+    )
+    dhts = [(0, 0, _H_DC_LUM), (1, 0, _H_AC_LUM)]
+    if len(samp) > 1:
+        dhts += [(0, 1, _H_DC_CHR), (1, 1, _H_AC_CHR)]
+    out = _frame_header(0xC0, h, w, samp, qtabs, dhts, restart_interval)
+    lum = (_build_encode_table(*_H_DC_LUM), _build_encode_table(*_H_AC_LUM))
+    chroma = (_build_encode_table(*_H_DC_CHR), _build_encode_table(*_H_AC_CHR))
+    tabs = [lum, chroma, chroma]
+    for comp_ids in scans:
+        ec = bytearray()
+        buf = nbits = 0
+        preds = [0] * len(samp)
+        for u, unit in enumerate(_scan_units(comp_ids, geom, mcux, mcuy)):
+            if restart_interval and u and u % restart_interval == 0:
+                buf, nbits = _bw_flush(ec, buf, nbits)
+                ec += bytes([0xFF, 0xD0 + (u // restart_interval - 1) % 8])
+                preds = [0] * len(samp)
+            for ci, bi in unit:
+                dc_t, ac_t = tabs[ci]
+                buf, nbits, preds[ci] = _encode_block(
+                    ec, buf, nbits, coefs[ci][bi], preds[ci], dc_t, ac_t
+                )
+        _bw_flush(ec, buf, nbits)
+        out += _scan_header(comp_ids, 0x11, 0, 63, 0) + ec
+    out += b"\xff\xd9"
+    return bytes(out)
 
 
 def encode_jpeg(
@@ -1458,72 +1281,8 @@ def encode_jpeg(
     4:4:4. restart_interval > 0 emits a DRI segment and RSTn markers
     every that many MCUs. Uses the T.81 Annex K example Huffman
     tables."""
-    gray, h, w, samp, qlum, qchr, mcux, mcuy, coefs = _prepare_coefs(
-        arr, quality, subsample
-    )
-
-    dc_lum_e = _build_encode_table(*_H_DC_LUM)
-    ac_lum_e = _build_encode_table(*_H_AC_LUM)
-    dc_chr_e = _build_encode_table(*_H_DC_CHR)
-    ac_chr_e = _build_encode_table(*_H_AC_CHR)
-    ec = bytearray()
-    buf = nbits = 0
-    coefs_l = [c.tolist() for c in coefs]  # plain ints for the hot loop
-    preds = [0] * len(samp)
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                buf, nbits = _bw_flush(ec, buf, nbits)
-                n_rst = mcu_count // restart_interval - 1
-                ec += bytes([0xFF, 0xD0 + (n_rst % 8)])
-                preds = [0] * len(samp)
-            mcu_count += 1
-            for ci, (sh, sv) in enumerate(samp):
-                dc_t = dc_lum_e if ci == 0 else dc_chr_e
-                ac_t = ac_lum_e if ci == 0 else ac_chr_e
-                rows = coefs_l[ci]
-                for by in range(sv):
-                    for bx in range(sh):
-                        buf, nbits, preds[ci] = _encode_block(
-                            ec, buf, nbits,
-                            rows[my * sv + by][mx * sh + bx],
-                            preds[ci], dc_t, ac_t,
-                        )
-    buf, nbits = _bw_flush(ec, buf, nbits)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(qlum.reshape(64)[_ZZ].astype(np.uint8)))
-    if not gray:
-        out += seg(0xDB, bytes([0x01]) + bytes(qchr.reshape(64)[_ZZ].astype(np.uint8)))
-    nf = 1 if gray else 3
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([nf])
-    for ci in range(nf):
-        sh, sv = samp[ci]
-        sof += bytes([ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1])
-    out += seg(0xC0, sof)
-
-    def dht(tc: int, th: int, tab) -> bytes:
-        bits, vals = tab
-        return seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
-    out += dht(0, 0, _H_DC_LUM) + dht(1, 0, _H_AC_LUM)
-    if not gray:
-        out += dht(0, 1, _H_DC_CHR) + dht(1, 1, _H_AC_CHR)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([nf])
-    for ci in range(nf):
-        sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += ec
-    out += b"\xff\xd9"
-    return bytes(out)
+    scan = [0] if np.ndim(arr) == 2 else [0, 1, 2]
+    return _encode_sequential(arr, quality, subsample, restart_interval, [scan])
 
 
 # -- progressive encoder -----------------------------------------------------
@@ -1626,8 +1385,8 @@ def _enc_dc_scan(bw, units, coefs_l, dc_tabs, ah, al, dri):
             bw.restart(n_rst)
             n_rst += 1
             preds = {}
-        for ci, by, bx in unit:
-            dc = coefs_l[ci][by][bx][0]
+        for ci, bi in unit:
+            dc = coefs_l[ci][bi][0]
             if ah == 0:
                 v = dc >> al  # arithmetic shift (T.81 DC convention)
                 diff = v - preds.get(ci, 0)
@@ -1759,97 +1518,39 @@ def encode_jpeg_progressive(
     (the round-trip parity pin in tests/test_jpeg.py). ``scans``
     overrides the default script with (component_indices, Ss, Se, Ah,
     Al) tuples."""
-    gray, h, w, samp, qlum, qchr, mcux, mcuy, coefs = _prepare_coefs(
+    h, w, samp, qtabs, mcux, mcuy, geom, coefs = _prepare_coefs(
         arr, quality, subsample
     )
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    coefs_l = [c.tolist() for c in coefs]
     if scans is None:
-        scans = default_progressive_scans(gray)
-    nf = 1 if gray else 3
-    dc_tabs = {
-        ci: _build_encode_table(*(_H_DC_LUM if ci == 0 else _H_DC_CHR))
-        for ci in range(nf)
-    }
+        scans = default_progressive_scans(len(samp) == 1)
+    dc_tabs = [
+        _build_encode_table(*(_H_DC_LUM if ci == 0 else _H_DC_CHR))
+        for ci in range(len(samp))
+    ]
     ac_prog = _build_encode_table(*_H_AC_PROG)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(qlum.reshape(64)[_ZZ].astype(np.uint8)))
-    if not gray:
-        out += seg(0xDB, bytes([0x01]) + bytes(qchr.reshape(64)[_ZZ].astype(np.uint8)))
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([nf])
-    for ci in range(nf):
-        sh, sv = samp[ci]
-        sof += bytes([ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1])
-    out += seg(0xC2, sof)
-
-    def dht(tc: int, th: int, tab) -> bytes:
-        bits, vals = tab
-        return seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
-    out += dht(0, 0, _H_DC_LUM)
-    if not gray:
-        out += dht(0, 1, _H_DC_CHR)
-    out += dht(1, 0, _H_AC_PROG)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-
+    dhts = [(0, 0, _H_DC_LUM)]
+    if len(samp) > 1:
+        dhts.append((0, 1, _H_DC_CHR))
+    dhts.append((1, 0, _H_AC_PROG))
+    out = _frame_header(0xC2, h, w, samp, qtabs, dhts, restart_interval)
     for comp_ids, ss, se, ah, al in scans:
         bw = _BitWriter()
+        units = _scan_units(comp_ids, geom, mcux, mcuy)
         if ss == 0:
             if se != 0:
                 raise ValueError("DC scan must have Se=0")
-            units = []
-            if len(comp_ids) > 1:
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        unit = []
-                        for ci in comp_ids:
-                            sh, sv = samp[ci]
-                            for iv in range(sv):
-                                for ih in range(sh):
-                                    unit.append(
-                                        (ci, my * sv + iv, mx * sh + ih)
-                                    )
-                        units.append(unit)
-            else:
-                ci = comp_ids[0]
-                sh, sv = samp[ci]
-                bw_a = -(- (-(-w * sh // hmax)) // 8)
-                bh_a = -(- (-(-h * sv // vmax)) // 8)
-                units = [
-                    [(ci, by, bx)]
-                    for by in range(bh_a)
-                    for bx in range(bw_a)
-                ]
-            _enc_dc_scan(bw, units, coefs_l, dc_tabs, ah, al, restart_interval)
+            _enc_dc_scan(bw, units, coefs, dc_tabs, ah, al, restart_interval)
         else:
             if len(comp_ids) != 1:
                 raise ValueError("AC progressive scan must be single-component")
-            ci = comp_ids[0]
-            sh, sv = samp[ci]
-            cw = -(-w * sh // hmax)
-            ch = -(-h * sv // vmax)
-            bw_a, bh_a = -(-cw // 8), -(-ch // 8)
-            rows = coefs_l[ci]
-            blocks = [rows[by][bx] for by in range(bh_a) for bx in range(bw_a)]
+            store = coefs[comp_ids[0]]
+            blocks = [store[bi] for ((_ci, bi),) in units]
             if ah == 0:
                 _enc_ac_first(bw, blocks, ac_prog, ss, se, al, restart_interval)
             else:
                 _enc_ac_refine(bw, blocks, ac_prog, ss, se, al, restart_interval)
         bw.flush()
-        sos = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            td = 0 if ci == 0 else 1
-            sos += bytes([ci + 1, (td << 4) | 0])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, sos)
-        out += bw.out
+        out += _scan_header(comp_ids, 0x10, ss, se, (ah << 4) | al) + bw.out
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -1863,100 +1564,18 @@ def encode_jpeg_noninterleaved(
 ) -> bytes:
     """(H, W, 3) uint8 -> SEQUENTIAL baseline JPEG with one SOS per
     component (the legal non-interleaved multi-scan layout, T.81
-    A.2.2/B.2.3). Shares the baseline encoder's coefficients, so
-    decode parity with encode_jpeg is exact -- fixture writer for the
-    multi-scan decode path. restart_interval emits a DRI segment and
-    per-scan RSTn markers (numbering restarts at 0 each scan);
-    chroma_interleaved=True writes scans [Y], [Cb,Cr] -- a Y scan in
-    component raster order plus an interleaved two-component subset
-    scan in MCU order."""
-    gray, h, w, samp, qlum, qchr, mcux, mcuy, coefs = _prepare_coefs(
-        arr, quality, subsample
-    )
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    nf = 1 if gray else 3
-    enc_tabs = {
-        ci: (
-            _build_encode_table(*(_H_DC_LUM if ci == 0 else _H_DC_CHR)),
-            _build_encode_table(*(_H_AC_LUM if ci == 0 else _H_AC_CHR)),
-        )
-        for ci in range(nf)
-    }
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(qlum.reshape(64)[_ZZ].astype(np.uint8)))
-    if not gray:
-        out += seg(0xDB, bytes([0x01]) + bytes(qchr.reshape(64)[_ZZ].astype(np.uint8)))
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([nf])
-    for ci in range(nf):
-        sh, sv = samp[ci]
-        sof += bytes([ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1])
-    out += seg(0xC0, sof)
-
-    def dht(tc: int, th: int, tab) -> bytes:
-        bits, vals = tab
-        return seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
-    out += dht(0, 0, _H_DC_LUM) + dht(1, 0, _H_AC_LUM)
-    if not gray:
-        out += dht(0, 1, _H_DC_CHR) + dht(1, 1, _H_AC_CHR)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-
-    rows_l = [c.tolist() for c in coefs]
-    scans = [[ci] for ci in range(nf)]
-    if chroma_interleaved and nf == 3:
+    A.2.2/B.2.3). Same sequential writer and coefficients as
+    encode_jpeg, so decode parity with it is exact -- fixture writer
+    for the decoder's multi-scan sequential layout. Grayscale input
+    gets the one scan encode_jpeg writes. restart_interval emits a DRI
+    segment and per-scan RSTn markers (numbering restarts at 0 each
+    scan); chroma_interleaved=True writes scans [Y], [Cb,Cr] -- a Y
+    scan in component raster order plus an interleaved two-component
+    subset scan in MCU order."""
+    if np.ndim(arr) == 2:
+        scans = [[0]]
+    elif chroma_interleaved:
         scans = [[0], [1, 2]]
-    for comp_ids in scans:
-        # iteration units mirror the decoder's _scan_units: per-comp
-        # actual-grid raster when ns==1, frame MCU order for subsets
-        units = []
-        if len(comp_ids) > 1:
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    unit = []
-                    for ci in comp_ids:
-                        sh, sv = samp[ci]
-                        for iv in range(sv):
-                            for ih in range(sh):
-                                unit.append((ci, my * sv + iv, mx * sh + ih))
-                    units.append(unit)
-        else:
-            ci = comp_ids[0]
-            sh, sv = samp[ci]
-            cw = -(-w * sh // hmax)
-            ch = -(-h * sv // vmax)
-            bw_a, bh_a = -(-cw // 8), -(-ch // 8)
-            units = [
-                [(ci, by, bx)] for by in range(bh_a) for bx in range(bw_a)
-            ]
-        ec = bytearray()
-        buf = nbits = 0
-        preds = {ci: 0 for ci in comp_ids}
-        n_rst = 0
-        for u, unit in enumerate(units):
-            if restart_interval and u and u % restart_interval == 0:
-                buf, nbits = _bw_flush(ec, buf, nbits)
-                ec += bytes([0xFF, 0xD0 + (n_rst % 8)])
-                n_rst += 1
-                preds = {ci: 0 for ci in comp_ids}
-            for ci, by, bx in unit:
-                dc_t, ac_t = enc_tabs[ci]
-                buf, nbits, preds[ci] = _encode_block(
-                    ec, buf, nbits, rows_l[ci][by][bx], preds[ci], dc_t, ac_t
-                )
-        buf, nbits = _bw_flush(ec, buf, nbits)
-        sos = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            td = 0 if ci == 0 else 1
-            sos += bytes([ci + 1, (td << 4) | td])
-        sos += bytes([0, 63, 0])
-        out += seg(0xDA, sos)
-        out += ec
-    out += b"\xff\xd9"
-    return bytes(out)
+    else:
+        scans = [[0], [1], [2]]
+    return _encode_sequential(arr, quality, subsample, restart_interval, scans)

@@ -4,8 +4,8 @@ with typed metadata.
 The Spark-side plumbing (schemas, Arrow batch shapes, partitioning,
 fan-out) is real and tested. The codec layer is REAL for every format
 decodable with stdlib + numpy -- PNG (zlib + unfiltering), PPM, 16-bit
-PCM WAV (functions/codecs.py), JPEG in baseline sequential AND
-progressive DCT modes (functions/jpeg.py), and GIF87a/89a incl. LZW,
+PCM WAV (functions/codecs.py), JPEG in sequential AND progressive
+DCT modes (functions/jpeg.py), and GIF87a/89a incl. LZW,
 interlace and transparency (functions/gif.py) -- including real
 nearest-neighbor resizing and real pixel/sample statistics features.
 WebP/AVIF (sniffed distinctly) and MP4/video raise NotImplementedError
@@ -66,7 +66,7 @@ def _decode_image(data: bytes):
     if kind == "jpeg":
         from .jpeg import decode_jpeg
 
-        return decode_jpeg(data)  # baseline sequential DCT (pure numpy)
+        return decode_jpeg(data)  # sequential or progressive DCT (pure numpy)
     if kind == "gif":
         from .gif import decode_gif
 
@@ -81,7 +81,7 @@ def _decode_image(data: bytes):
 def resize_images(df, width: int, height: int, fake: bool = True):
     """mapInPandas resize over (media_ref, payload).
 
-    fake=False does REAL work for PNG/PPM/baseline-JPEG payloads:
+    fake=False does REAL work for PNG/PPM/JPEG/GIF payloads:
     decode, exact nearest-neighbor resample, re-encode as PNG.
     fake=True emits a deterministic payload derived from the input bytes
     + target size (any format). Batch shape and schema are identical in

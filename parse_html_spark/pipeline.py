@@ -354,18 +354,18 @@ def node_table(df, with_attrs: bool = False):
     )
 
 
-def descendants_join(nodes, ancestor_tag: str, desc_tag: str, broadcast_ancestors: bool = True):
+def descendants_join(nodes, ancestor_tag: str, desc_tag: str):
     """Descendant matching in pure relational form: range containment
     join between the ancestor and descendant node sets (SURVEY.md 2.9).
     The filtered ancestor side is usually tiny -> broadcast it."""
-    anc = nodes.filter(F.col("tag") == ancestor_tag).select(
-        F.col("doc_id").alias("a_doc"),
-        F.col("node_id").alias("anc_id"),
-        F.col("cstart").alias("a_lo"),
-        F.col("cend").alias("a_hi"),
+    anc = F.broadcast(
+        nodes.filter(F.col("tag") == ancestor_tag).select(
+            F.col("doc_id").alias("a_doc"),
+            F.col("node_id").alias("anc_id"),
+            F.col("cstart").alias("a_lo"),
+            F.col("cend").alias("a_hi"),
+        )
     )
-    if broadcast_ancestors:
-        anc = F.broadcast(anc)
     desc = nodes.filter(F.col("tag") == desc_tag)
     return desc.join(
         anc,
@@ -399,7 +399,7 @@ def _page_doc(doc, media):
     ph = PH(doc.html, doc=doc)
     title = ph.find("title").text()
     tables = extract_table_list(ph.find("table"), val_only=True)
-    out["tables_json"] = [_json([to_plain(t) for t in tables])]
+    out["tables_json"] = [_json(tables)]
     out["form_json"] = [_json(extract_form(ph))]
     out["title"] = [title]
     out["n_nodes"] = [doc.n]
@@ -420,7 +420,7 @@ def extract_page(df):
 MEGA_DOC_CHARS = 500_000
 
 
-def fan_out_small(df, factor: int = 1):
+def fan_out_small(df):
     """Round-robin fan-out for a SMALL input feeding an expensive
     per-row stage (engine mapInPandas, signature UDFs, interpreted
     array exprs).
@@ -430,14 +430,14 @@ def fan_out_small(df, factor: int = 1):
     1-2 splits and the compute-bound stage serializes on one core while
     the rest of the cluster idles (guide 2.5: input parallelism fixed
     right after the read). A no-op whenever the input already has >=
-    defaultParallelism * factor partitions -- a production-scale table
-    never repartitions; only the pathological small-file case pays the
-    (tiny) shuffle."""
+    defaultParallelism partitions -- a production-scale table never
+    repartitions; only the pathological small-file case pays the (tiny)
+    shuffle."""
     if df.isStreaming:
         return df  # micro-batch sizing is the trigger's job, and
         # .rdd is undefined on a streaming DataFrame
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -453,7 +453,6 @@ def prepare_partitions(
     df,
     partitions: int,
     mega_chars: int = MEGA_DOC_CHARS,
-    shuffle_small: bool = False,
     size_col: str = "n_chars",
 ):
     """Skew defusal: spread mega-docs round-robin so the longest task is
@@ -471,11 +470,9 @@ def prepare_partitions(
     no count() action is needed; with the mega fraction ~0.2% and
     partitions sized at ~4x cores, each mega lands alone in its slot.
 
-    Normal docs are NOT shuffled by default: byte-sized parquet scan
-    splits already spread them evenly, and shuffling the full corpus
-    through the exchange costs more than it saves (measured). Pass
-    shuffle_small=True to force hash placement (needed when the input
-    layout is pathological, e.g. one giant unsplittable file)."""
+    Normal docs are NOT shuffled: byte-sized parquet scan splits
+    already spread them evenly, and shuffling the full corpus through
+    the exchange costs more than it saves (measured)."""
     if size_col in df.columns:
         size = F.col(size_col)  # ingest column: predicate pushes to scan
         # NULL size (e.g. a source that did not populate the ingest
@@ -487,8 +484,6 @@ def prepare_partitions(
         sized = df.withColumn("_n_chars", doc_size_col())
         small = sized.filter(F.col("_n_chars") <= mega_chars).drop("_n_chars")
         big_rows = sized.filter(F.col("_n_chars") > mega_chars).drop("_n_chars")
-    if shuffle_small:
-        small = small.repartition(partitions, F.col("doc_id"))
     big = big_rows.repartition(partitions)  # round-robin mega placement
     return small.unionByName(big)
 

@@ -608,3 +608,222 @@ def test_multiscan_block_memory_cap():
     )
     with pytest.raises(ValueError, match="memory envelope"):
         decode_jpeg(sof + b"\xff\xd9")
+
+
+# -- byte and pixel pins -----------------------------------------------------
+#
+# crc32 digests recorded from the codec before the sequential encoder and
+# decoder paths were merged. The oracle fixtures embed these exact bytes
+# (pdf_media checks a payload md5), so any drift must be deliberate.
+
+_PIN_SIZES = ((1, 1), (7, 9), (24, 17), (33, 29), (40, 56))
+
+
+def _pin_grid():
+    """(label, image, kwargs) over gray/RGB x 4:4:4/4:2:0 x quality
+    30/85 x DRI 0/3 x _PIN_SIZES, in a fixed order."""
+    for h, w in _PIN_SIZES:
+        rng = np.random.RandomState(h * 1000 + w)
+        noisy = rng.randint(0, 256, (h, w, 3))
+        yy, xx = np.mgrid[0:h, 0:w]
+        smooth = np.stack([yy * 5, xx * 4, (yy + xx) * 3], axis=2) % 256
+        rgb = ((noisy + smooth) // 2).astype(np.uint8)
+        for gray in (True, False):
+            img = rgb[:, :, 1] if gray else rgb
+            for sub in (False, True):
+                for q in (30, 85):
+                    for dri in (0, 3):
+                        label = f"{h}x{w} gray={gray} sub={sub} q={q} dri={dri}"
+                        kw = {"quality": q, "subsample": sub,
+                              "restart_interval": dri}
+                        yield label, img, kw
+
+
+def _pin_encoders():
+    from parse_html_spark.functions.jpeg import (
+        encode_jpeg_noninterleaved,
+        encode_jpeg_progressive,
+    )
+
+    return {
+        "encode_jpeg": encode_jpeg,
+        "noninterleaved": encode_jpeg_noninterleaved,
+        "noninterleaved_chroma": lambda img, **kw: encode_jpeg_noninterleaved(
+            img, chroma_interleaved=True, **kw
+        ),
+        "progressive": encode_jpeg_progressive,
+    }
+
+
+def _crc(b: bytes) -> int:
+    import zlib
+
+    return zlib.crc32(b) & 0xFFFFFFFF
+
+
+def _app14_transform0_stream() -> bytes:
+    import struct
+
+    img = _smooth_rgb(19, 23)
+    data = encode_jpeg(img, quality=90, subsample=True)
+    seg = b"\xff\xee" + struct.pack(">H", 14) + b"Adobe\x00\x64\x00\x00\x00\x00\x00"
+    return data[:2] + seg + data[2:]
+
+
+ENCODER_PINS = {
+    "encode_jpeg": (
+        0x6BD0355A, 0x27B0CE7A, 0x8FD36712, 0xA0B6C08F, 0x6BD0355A, 0x27B0CE7A,
+        0x8FD36712, 0xA0B6C08F, 0x89EFD22B, 0x3C6C39E1, 0xD79C0BD8, 0xD42ABF50,
+        0x4190BAEC, 0x32D597CD, 0xBC28BCC5, 0x9A676448, 0x4A0B8749, 0x12C5F4D4,
+        0xA61ACE09, 0xF95022F9, 0x4A0B8749, 0x12C5F4D4, 0xA61ACE09, 0xF95022F9,
+        0x9C876DAD, 0xCF3158A1, 0xDBE3E54C, 0xAE5AB3E0, 0xE076F3E9, 0x6A010835,
+        0xE62F7E38, 0xD1720717, 0xAE1045F8, 0xF670C27E, 0x420AC88C, 0xBB008EBA,
+        0xAE1045F8, 0xF670C27E, 0x420AC88C, 0xBB008EBA, 0x94465743, 0xF5C9E63A,
+        0xA8BCABE4, 0x328C537D, 0x5237221C, 0xF8BF7556, 0x20BF7B16, 0x7C42AA08,
+        0x545A3FEE, 0xE21CD657, 0x4FFF62AC, 0x08B4F236, 0x545A3FEE, 0xE21CD657,
+        0x4FFF62AC, 0x08B4F236, 0x8C842513, 0xA3A7D2E7, 0xE6B67BFB, 0x02FDE65C,
+        0xA6AF4F93, 0x745EC491, 0xA1112816, 0x16FC8B48, 0x79FB3B45, 0x8FF5F6BD,
+        0xFA6173BF, 0xCD168BCD, 0x79FB3B45, 0x8FF5F6BD, 0xFA6173BF, 0xCD168BCD,
+        0xB2F16519, 0xB2A85E45, 0xB25A8696, 0xFD202030, 0xE621A637, 0x03EEDB60,
+        0x87C8CBA6, 0x4675BCA9,
+    ),
+    "noninterleaved": (
+        0x6BD0355A, 0x27B0CE7A, 0x8FD36712, 0xA0B6C08F, 0x6BD0355A, 0x27B0CE7A,
+        0x8FD36712, 0xA0B6C08F, 0xF97F01D1, 0xE82C0247, 0xA33F6439, 0x5ACCA49C,
+        0x895FDEEE, 0xE26698D9, 0xED8DF160, 0xA5D47318, 0x4A0B8749, 0x12C5F4D4,
+        0xA61ACE09, 0xF95022F9, 0x4A0B8749, 0x12C5F4D4, 0xA61ACE09, 0xF95022F9,
+        0x5C8C69C0, 0xB965F2BA, 0xC6584DAA, 0x6DE73ED5, 0x6B2D14C2, 0x2B7FAFA9,
+        0xE93CCDAD, 0xDE61B482, 0xAE1045F8, 0xF670C27E, 0x420AC88C, 0xBB008EBA,
+        0xAE1045F8, 0xF670C27E, 0x420AC88C, 0xBB008EBA, 0xFE48B9D3, 0x2C399610,
+        0x99BC8F80, 0x381C4E68, 0x65BF6936, 0x9ED4DB6D, 0xED61F6A2, 0x49A45252,
+        0x545A3FEE, 0xE21CD657, 0x4FFF62AC, 0x08B4F236, 0x545A3FEE, 0xE21CD657,
+        0x4FFF62AC, 0x08B4F236, 0x6CB0C52E, 0xD7AB370F, 0x2C6E6688, 0xF66BBF35,
+        0xC1984DB2, 0x74E26C88, 0xAFDE290B, 0x7F576458, 0x79FB3B45, 0x8FF5F6BD,
+        0xFA6173BF, 0xCD168BCD, 0x79FB3B45, 0x8FF5F6BD, 0xFA6173BF, 0xCD168BCD,
+        0xC825F2F0, 0xA5575658, 0x9EF2FCA8, 0x173583E2, 0x4E0E4EF9, 0xBC8328B6,
+        0x9284AABE, 0x72F32B9A,
+    ),
+    "noninterleaved_chroma": (
+        0x6BD0355A, 0x27B0CE7A, 0x8FD36712, 0xA0B6C08F, 0x6BD0355A, 0x27B0CE7A,
+        0x8FD36712, 0xA0B6C08F, 0x37B8CE3A, 0x9D7A863A, 0x0B3A28FA, 0xD4ED579E,
+        0x66B3817E, 0x696FC25E, 0x7ADAA63C, 0x9EC6E79B, 0x4A0B8749, 0x12C5F4D4,
+        0xA61ACE09, 0xF95022F9, 0x4A0B8749, 0x12C5F4D4, 0xA61ACE09, 0xF95022F9,
+        0x38D0B18C, 0x26046B45, 0x5F97BB61, 0x447DD35A, 0xBE7E3E0C, 0x0205BF5E,
+        0xF6B7F138, 0x9087DAD7, 0xAE1045F8, 0xF670C27E, 0x420AC88C, 0xBB008EBA,
+        0xAE1045F8, 0xF670C27E, 0x420AC88C, 0xBB008EBA, 0x9C090B23, 0x938B2F3D,
+        0xA0A6BE1F, 0x26F931C4, 0xA140558A, 0xDAA50938, 0x99B89404, 0x9928808D,
+        0x545A3FEE, 0xE21CD657, 0x4FFF62AC, 0x08B4F236, 0x545A3FEE, 0xE21CD657,
+        0x4FFF62AC, 0x08B4F236, 0x8A77A337, 0x419D0C22, 0xD6836418, 0x9C0D30DA,
+        0x260FC71D, 0xE6F6E90F, 0x4846979F, 0x09F2D657, 0x79FB3B45, 0x8FF5F6BD,
+        0xFA6173BF, 0xCD168BCD, 0x79FB3B45, 0x8FF5F6BD, 0xFA6173BF, 0xCD168BCD,
+        0xE252D1B9, 0xC28909F5, 0x422D4AFC, 0x2936BC58, 0x6F92EE64, 0xBDB3D1F4,
+        0x383DE5D6, 0x8DECD144,
+    ),
+    "progressive": (
+        0xC2BD7400, 0x4E667920, 0x5FF27969, 0x8DC70B8D, 0xC2BD7400, 0x4E667920,
+        0x5FF27969, 0x8DC70B8D, 0xDBC1ACD8, 0xE929FBE6, 0x8D7D378F, 0x99F1F820,
+        0x57CC6ACD, 0x9207A16B, 0x8CAEE03D, 0x8A8720F5, 0xD9610DB8, 0x5FBA8DC7,
+        0xAA933D73, 0x36DB4EA9, 0xD9610DB8, 0x5FBA8DC7, 0xAA933D73, 0x36DB4EA9,
+        0x58C5E33E, 0xFCF64373, 0x44B7074B, 0x878E1446, 0x58EDD30D, 0x75FEB327,
+        0x376479EE, 0x6DFC1DFC, 0x8EA0A54B, 0xDF0D3F28, 0x0F890155, 0x233715B8,
+        0x8EA0A54B, 0xDF0D3F28, 0x0F890155, 0x233715B8, 0x9EE01624, 0xFA9557A9,
+        0x0AF5DE9F, 0x07494714, 0x4DCE0394, 0xF67CB60F, 0x36703906, 0xC9369322,
+        0x14910983, 0xCEEB547F, 0x2B8DDA50, 0xBC4D0430, 0x14910983, 0xCEEB547F,
+        0x2B8DDA50, 0xBC4D0430, 0x8631FDF0, 0xB9CAA827, 0x99ECA6DD, 0x3F898CE0,
+        0xA1906914, 0xDB03D38D, 0x6675FABD, 0x1716F8E3, 0x3AFCF79C, 0x6FA56148,
+        0xB66CD1D1, 0x6FD8DFC7, 0x3AFCF79C, 0x6FA56148, 0xB66CD1D1, 0x6FD8DFC7,
+        0x18F1FE5E, 0xB3BD5637, 0x74C5F543, 0x85F11BF8, 0x28C28FE1, 0xE0FAB849,
+        0x223F85B6, 0x9733BBA0,
+    ),
+}
+DECODER_PINS = (
+    0x3DD7FFA7, 0x3DD7FFA7, 0xA3B36A04, 0xA3B36A04, 0x3DD7FFA7, 0x3DD7FFA7,
+    0xA3B36A04, 0xA3B36A04, 0x33F032C1, 0x33F032C1, 0xC527089B, 0xC527089B,
+    0x33F032C1, 0x33F032C1, 0xC527089B, 0xC527089B, 0x14E64016, 0x14E64016,
+    0x1E83834A, 0x1E83834A, 0x14E64016, 0x14E64016, 0x1E83834A, 0x1E83834A,
+    0x1AE9E7F7, 0x1AE9E7F7, 0x8D311CA5, 0x8D311CA5, 0x0F81232A, 0x0F81232A,
+    0xE5BBC76B, 0xE5BBC76B, 0x178866D3, 0x178866D3, 0x852EEC42, 0x852EEC42,
+    0x178866D3, 0x178866D3, 0x852EEC42, 0x852EEC42, 0x2CC0AD12, 0x2CC0AD12,
+    0xDC933B97, 0xDC933B97, 0x95D10467, 0x95D10467, 0xEE57F8D1, 0xEE57F8D1,
+    0xB2A2A645, 0xB2A2A645, 0x47878641, 0x47878641, 0xB2A2A645, 0xB2A2A645,
+    0x47878641, 0x47878641, 0x0071912A, 0x0071912A, 0xC3D772DC, 0xC3D772DC,
+    0x9F60E4EF, 0x9F60E4EF, 0xFBEAC3F4, 0xFBEAC3F4, 0xA8F56987, 0xA8F56987,
+    0x2C2836D4, 0x2C2836D4, 0xA8F56987, 0xA8F56987, 0x2C2836D4, 0x2C2836D4,
+    0xDEAB66C5, 0xDEAB66C5, 0x0D957D26, 0x0D957D26, 0x418BBC9A, 0x418BBC9A,
+    0x7E213D04, 0x7E213D04,
+)
+DECODER_APP14_PIN = 0xEE9403A0
+
+
+@pytest.mark.parametrize(
+    "name", ["encode_jpeg", "noninterleaved", "noninterleaved_chroma", "progressive"]
+)
+def test_encoder_byte_pin(name):
+    """Every encoder's output bytes over the fixed grid equal the
+    recorded digests."""
+    enc = _pin_encoders()[name]
+    got = [_crc(enc(img, **kw)) for _label, img, kw in _pin_grid()]
+    labels = [label for label, _img, _kw in _pin_grid()]
+    bad = [lab for lab, g, e in zip(labels, got, ENCODER_PINS[name]) if g != e]
+    assert len(got) == len(ENCODER_PINS[name]) and not bad, bad
+
+
+def test_decoder_pixel_pin():
+    """decode_jpeg pixels for every interleaved stream of the grid, and
+    for an APP14 transform-0 stream, equal the recorded digests."""
+    bad = []
+    for (label, img, kw), want in zip(_pin_grid(), DECODER_PINS, strict=True):
+        px = decode_jpeg(encode_jpeg(img, **kw))
+        assert px.shape == img.shape, label
+        if _crc(px.tobytes()) != want:
+            bad.append(label)
+    assert not bad, bad
+    px = decode_jpeg(_app14_transform0_stream())
+    assert px.shape == (19, 23, 3)
+    assert _crc(px.tobytes()) == DECODER_APP14_PIN
+
+
+def _zero_scan_bands(data: bytes) -> bytes:
+    """Rewrite Ss, Se, Ah and Al to zero in every SOS header, walking
+    the marker segments and skipping each scan's entropy data."""
+    import struct
+
+    out = bytearray(data)
+    pos = 2
+    while pos < len(out):
+        marker = out[pos + 1]
+        if marker == 0xD9:
+            break
+        (seglen,) = struct.unpack(">H", out[pos + 2 : pos + 4])
+        end = pos + 2 + seglen
+        if marker != 0xDA:
+            pos = end
+            continue
+        out[end - 3 : end] = b"\x00\x00\x00"
+        pos = end
+        while not (out[pos] == 0xFF and out[pos + 1] not in range(0xD0, 0xD8)
+                   and out[pos + 1] != 0x00):
+            pos += 1
+    return bytes(out)
+
+
+def test_sequential_scan_band_bytes_ignored():
+    """A sequential scan always codes the full 0..63 band. Like libjpeg
+    (JWRN_NOT_SEQUENTIAL: "some baseline files out there with all
+    zeroes in these bytes"), the decoder reads a sequential SOS whose
+    Ss/Se/Ah/Al are zeroed as full band, in both the interleaved and the
+    one-scan-per-component layouts."""
+    from parse_html_spark.functions.jpeg import encode_jpeg_noninterleaved
+
+    img = _smooth_rgb(33, 29)
+    for data in (
+        encode_jpeg(img, quality=80, subsample=True, restart_interval=3),
+        encode_jpeg(img[:, :, 0], quality=80),
+        encode_jpeg_noninterleaved(img, quality=80, subsample=True),
+        encode_jpeg_noninterleaved(
+            img, quality=80, restart_interval=2, chroma_interleaved=True
+        ),
+    ):
+        patched = _zero_scan_bands(data)
+        assert patched != data
+        assert np.array_equal(decode_jpeg(patched), decode_jpeg(data))

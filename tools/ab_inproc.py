@@ -78,7 +78,7 @@ def load_engine(root: str, name: str, page: bool = False, select=()):
         ph.find("title").text()
         tables = ext.extract_table_list(ph.find("table"), val_only=True)
         form = ext.to_plain(ext.extract_form(ph))
-        json.dumps([ext.to_plain(t) for t in tables], ensure_ascii=False)
+        json.dumps(tables, ensure_ascii=False)
         json.dumps(form, ensure_ascii=False)
 
     return tok.DocIndex, page_fn
