@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import zlib
 
+from ..session import _batch_map, _on_error_columns
+
 # the codecs guarantee a single-type error contract (decode_jpeg /
 # decode_png / decode_ppm / decode_wav wrap their raw error surfaces
 # into ValueError -- fuzz-pinned in test_codecs/test_jpeg), so flag
@@ -78,6 +80,14 @@ def _decode_image(data: bytes):
     )
 
 
+def _payload_size(part) -> int:
+    return sum(len(p) for p in part["payload"])
+
+
+def _payload_bytes(payload) -> bytes:
+    return bytes(payload) if payload is not None else b""
+
+
 def resize_images(df, width: int, height: int, fake: bool = True):
     """mapInPandas resize over (media_ref, payload).
 
@@ -86,72 +96,58 @@ def resize_images(df, width: int, height: int, fake: bool = True):
     fake=True emits a deterministic payload derived from the input bytes
     + target size (any format). Batch shape and schema are identical in
     both modes."""
-    import pandas as pd
 
-    def run(batches):
+    def row(_ref, payload):
         from . import codecs
 
-        for pdf in batches:
-            refs, ws, hs, outs = [], [], [], []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                if fake:
-                    crc = zlib.crc32(data) & 0xFFFFFFFF
-                    out = f"resized:{width}x{height}:{crc:08x}".encode("ascii")
-                else:
-                    arr = _decode_image(data)
-                    out = codecs.encode_png(
-                        codecs.resize_nearest(arr, width, height)
-                    )
-                refs.append(ref)
-                ws.append(width)
-                hs.append(height)
-                outs.append(out)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": pd.array(ws, dtype="int32"),
-                    "height": pd.array(hs, dtype="int32"),
-                    "payload": outs,
-                }
-            )
+        data = _payload_bytes(payload)
+        if fake:
+            crc = zlib.crc32(data) & 0xFFFFFFFF
+            out = f"resized:{width}x{height}:{crc:08x}".encode("ascii")
+        else:
+            arr = _decode_image(data)
+            out = codecs.encode_png(codecs.resize_nearest(arr, width, height))
+        return {"width": [width], "height": [height], "payload": [out]}
 
-    return df.mapInPandas(run, schema=RESIZE_SCHEMA)
+    return _batch_map(
+        df, row, RESIZE_SCHEMA, ("media_ref", "payload"),
+        key="media_ref", size=_payload_size,
+    )
 
 
 def sample_frames(df, every_ms: int = 1000, duration_ms: int = 5000, fake: bool = True):
     """Frame sampling for video payloads: one output row per sampled
-    frame (fan-out inside mapInPandas). The frame schedule and row
-    explosion are real; video container decode genuinely requires
-    ffmpeg, so fake=False raises at the plug point (no stdlib-decodable
-    video format exists to make this path real in-sandbox)."""
-    import pandas as pd
+    frame (fan-out inside mapInPandas), at 0, every_ms, ... below
+    duration_ms. every_ms must be > 0 and duration_ms >= 0 (ValueError
+    on the driver otherwise). The frame schedule and row explosion are
+    real; video container decode genuinely requires ffmpeg, so
+    fake=False raises at the plug point (no stdlib-decodable video
+    format exists to make this path real in-sandbox)."""
+    if every_ms <= 0:
+        raise ValueError(f"every_ms must be > 0: {every_ms!r}")
+    if duration_ms < 0:
+        raise ValueError(f"duration_ms must be >= 0: {duration_ms!r}")
+    stamps = range(0, duration_ms, every_ms)
 
-    def run(batches):
-        for pdf in batches:
-            refs, idxs, tss, outs = [], [], [], []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                if not fake:
-                    raise NotImplementedError(
-                        "video decode requires ffmpeg; not available here"
-                    )
-                data = bytes(payload) if payload is not None else b""
-                crc = zlib.crc32(data) & 0xFFFFFFFF
-                for k, ts in enumerate(range(0, duration_ms, every_ms)):
-                    refs.append(ref)
-                    idxs.append(k)
-                    tss.append(ts)
-                    outs.append(f"frame:{k}:{crc:08x}".encode("ascii"))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "ts_ms": pd.array(tss, dtype="int32"),
-                    "payload": outs,
-                }
+    def row(_ref, payload):
+        if not fake:
+            raise NotImplementedError(
+                "video decode requires ffmpeg; not available here"
             )
+        crc = zlib.crc32(_payload_bytes(payload)) & 0xFFFFFFFF
+        return {
+            "frame_idx": range(len(stamps)),
+            "ts_ms": stamps,
+            "payload": [
+                f"frame:{k}:{crc:08x}".encode("ascii")
+                for k in range(len(stamps))
+            ],
+        }
 
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
+    return _batch_map(
+        df, row, FRAME_SCHEMA, ("media_ref", "payload"),
+        key="media_ref", size=_payload_size,
+    )
 
 
 def extract_media_features(
@@ -161,9 +157,9 @@ def extract_media_features(
 
     fake=False computes REAL features for stdlib-decodable payloads:
     per-channel mean/std + luminance histogram for PNG/PPM/JPEG
-    (baseline AND progressive) images, RMS/zero-crossing/duration/
-    band-energy for 16-bit PCM WAV audio (functions/codecs.py,
-    functions/jpeg.py).
+    (sequential and progressive DCT)/GIF images, RMS/zero-crossing/
+    duration/band-energy for 16-bit PCM WAV audio (functions/codecs.py,
+    functions/jpeg.py, functions/gif.py).
     fake=True emits deterministic crc32-seeded features for any bytes.
 
     on_error='raise' (default) propagates undecodable payloads
@@ -174,73 +170,62 @@ def extract_media_features(
     groupBy(status) gives the corpus decode-failure census without
     losing the partition."""
     import numpy as np
-    import pandas as pd
 
-    if on_error not in ("raise", "flag"):
-        raise ValueError(f"on_error must be 'raise' or 'flag': {on_error!r}")
-    flag = on_error == "flag"
+    suffix = _on_error_columns(on_error, "status string")
+    flag = bool(suffix)
 
-    def run(batches):
+    def row(ref, payload):
         from . import codecs
 
-        for pdf in batches:
-            refs, types, nbytes, sums, feats = [], [], [], [], []
-            statuses = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                crc = zlib.crc32(data) & 0xFFFFFFFF
-                status = "ok"
-                if fake:
-                    rng = np.random.RandomState(crc % (2**31))
-                    mtype = "image" if "img" in (ref or "") else "embed"
-                    feat = rng.rand(dim).astype("float32").tolist()
+        data = _payload_bytes(payload)
+        crc = zlib.crc32(data) & 0xFFFFFFFF
+        status = "ok"
+        if fake:
+            rng = np.random.RandomState(crc % (2**31))
+            mtype = "image" if "img" in (ref or "") else "embed"
+            feat = rng.rand(dim).astype("float32").tolist()
+        else:
+            kind = codecs.sniff(data)
+            try:
+                if kind in ("png", "ppm", "jpeg", "gif"):
+                    mtype = "image"
+                    feat = codecs.image_features(_decode_image(data), dim)
+                elif kind == "wav":
+                    mtype = "audio"
+                    feat = codecs.audio_features(
+                        *codecs.decode_wav(data), dim=dim
+                    )
                 else:
-                    kind = codecs.sniff(data)
-                    try:
-                        if kind in ("png", "ppm", "jpeg", "gif"):
-                            mtype = "image"
-                            feat = codecs.image_features(_decode_image(data), dim)
-                        elif kind == "wav":
-                            mtype = "audio"
-                            feat = codecs.audio_features(
-                                *codecs.decode_wav(data), dim=dim
-                            )
-                        else:
-                            # webp/avif sniff distinctly, so their
-                            # census bucket names the format needing
-                            # the external decoder, not 'unknown'
-                            raise NotImplementedError(
-                                f"decoding {kind!r} requires PIL/ffmpeg; "
-                                "PNG/PPM/JPEG/GIF/WAV features here are real"
-                            )
-                    except _DECODE_ERRORS as exc:
-                        if not flag:
-                            raise
-                        mtype = "unknown"
-                        feat = None
-                        status = (
-                            f"undecodable:{kind}:"
-                            f"{type(exc).__name__}:{str(exc)[:120]}"
-                        )
-                refs.append(ref)
-                types.append(mtype)
-                nbytes.append(len(data))
-                sums.append(crc)
-                feats.append(feat)
-                statuses.append(status)
-            cols = {
-                "media_ref": refs,
-                "media_type": types,
-                "n_bytes": pd.array(nbytes, dtype="int64"),
-                "checksum": pd.array(sums, dtype="int64"),
-                "feature": feats,
-            }
-            if flag:
-                cols["status"] = statuses
-            yield pd.DataFrame(cols)
+                    # webp/avif sniff distinctly, so their census
+                    # bucket names the format needing the external
+                    # decoder, not 'unknown'
+                    raise NotImplementedError(
+                        f"decoding {kind!r} requires PIL/ffmpeg; "
+                        "PNG/PPM/JPEG/GIF/WAV features here are real"
+                    )
+            except _DECODE_ERRORS as exc:
+                if not flag:
+                    raise
+                mtype = "unknown"
+                feat = None
+                status = (
+                    f"undecodable:{kind}:"
+                    f"{type(exc).__name__}:{str(exc)[:120]}"
+                )
+        out = {
+            "media_type": [mtype],
+            "n_bytes": [len(data)],
+            "checksum": [crc],
+            "feature": [feat],
+        }
+        if flag:
+            out["status"] = [status]
+        return out
 
-    schema = FEATURE_SCHEMA + (", status string" if flag else "")
-    return df.mapInPandas(run, schema=schema)
+    return _batch_map(
+        df, row, FEATURE_SCHEMA + suffix, ("media_ref", "payload"),
+        key="media_ref",
+    )
 
 
 def media_decode_census(df):

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import json
 import time
-from itertools import chain
 from operator import itemgetter
 
 import numpy as np
@@ -30,24 +29,10 @@ from .dom import PH
 from .extract import extract_form, extract_table_list, prepare_post_form, to_plain
 from .matcher import find_nodes
 from .selector import compile_selector
+from .session import _batch_map
 from .tokenizer import DocIndex
 
 FORM_SCHEMA = "doc_id string, form_json string"
-
-
-def _map_in_pandas(df, run, schema, inputs=("doc_id", "spans")):
-    """mapInPandas with COLUMN PRUNING at the Python boundary: only the
-    columns the stage reads cross the Arrow bridge. mapInPandas itself
-    cannot tell Catalyst which columns it uses, so without this a wide
-    input table (ingest metadata, lineage columns, ...) would be
-    serialized into every Python worker for nothing."""
-    from .session import ensure_py_files
-
-    ensure_py_files(df.sparkSession)
-    need = [c for c in inputs if c in df.columns]
-    if len(need) == len(inputs) and len(df.columns) > len(need):
-        df = df.select(*need)
-    return df.mapInPandas(run, schema=schema)
 
 
 _OFFSET_KEY = itemgetter("offset")
@@ -80,38 +65,16 @@ def _doc_map(df, per_doc, schema: str):
     """The one per-document map stage: span docs -> ``schema`` rows.
 
     ``per_doc(doc, media) -> {column: block}`` sees one DocIndex per
-    document; a block is a list (or range) or a 1-D ndarray with one
-    entry per output row of that document, and every block of one call
-    has the same length. The kernel owns the batch loop, assemble, the
-    index, the doc_id column and the output build: each column's blocks
-    are concatenated ONCE per batch, so outputs cross the Arrow bridge as
-    parallel primitive columns, never per-row records (row tuples
-    transposed per batch measured 1.1-1.6x slower). Columns are matched
-    to ``schema`` by name; a batch with no output rows yields nothing."""
-    import pandas as pd
+    document and returns ``_batch_map``'s column blocks (a list, range
+    or 1-D ndarray per column, one entry per output row of that
+    document). This adapter runs assemble -> DocIndex -> per_doc; the
+    kernel adds doc_id and owns the batch loop and the output build."""
 
-    def run(batches):
-        for pdf in batches:
-            counts: list[int] = []
-            blocks: dict[str, list] = {}
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                out = per_doc(DocIndex(html), media)
-                for name, block in out.items():
-                    blocks.setdefault(name, []).append(block)
-                counts.append(len(block))
-            if not sum(counts):
-                continue
-            cols = {
-                name: np.concatenate(bl)
-                if isinstance(bl[0], np.ndarray)
-                else list(chain.from_iterable(bl))
-                for name, bl in blocks.items()
-            }
-            cols["doc_id"] = np.repeat(pdf["doc_id"].to_numpy(), counts)
-            yield pd.DataFrame(cols)
+    def row(_doc_id, row_spans):
+        html, media = assemble(_spans_of_row(row_spans))
+        return per_doc(DocIndex(html), media)
 
-    return _map_in_pandas(df, run, schema)
+    return _batch_map(df, row, schema, ("doc_id", "spans"), key="doc_id")
 
 
 def _json(value) -> str:

@@ -64,7 +64,8 @@ import re
 import struct
 import zlib
 
-from .readers import _bounded_inflate
+from ..session import _batch_map, _on_error_columns
+from .readers import SPAN_DOC_SCHEMA, _bounded_inflate
 
 # ---------------------------------------------------------------------------
 # limits (bomb ceilings -- census, never MemoryError/hang an executor)
@@ -1324,8 +1325,7 @@ def _run_census(data, on_error: str, body):
     warnings/errors to the ok / ok_with_warnings:* / pdf_error:*
     status classes. flag mode returns ([], 'pdf_error:<reason>', 0) on
     any structural failure; raise mode raises PdfError."""
-    if on_error not in ("flag", "raise"):
-        raise ValueError(f"on_error must be flag|raise, got {on_error!r}")
+    _on_error_columns(on_error, "")
     try:
         if not isinstance(data, (bytes, bytearray)):
             raise PdfError("input is not bytes")
@@ -1490,6 +1490,25 @@ def extract_pdf_media(data: bytes, on_error: str = "flag"):
     return _run_census(data, on_error, body)
 
 
+# the placeholder row of a document with no payload rows to report
+_NO_MEDIA = {
+    "media_ref": None, "name": None, "width": 0, "height": 0,
+    "codec": None, "payload": None,
+}
+
+
+def _pdf_files(spark, path: str):
+    """(doc_id = file path, content) over the PDFs under ``path``."""
+    from pyspark.sql import functions as F
+
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.pdf")
+        .load(path)
+    )
+    return files.select(F.col("path").alias("doc_id"), "content")
+
+
 def read_pdf_media(spark, path: str, on_error: str = "flag"):
     """DataFrame of embedded PDF image payloads over a directory of
     PDFs: (doc_id, media_ref, name, width, height, codec,
@@ -1505,58 +1524,22 @@ def read_pdf_media(spark, path: str, on_error: str = "flag"):
     Filter `codec = 'dct'` (as the tests do) before feeding the
     feature extractor -- that excludes every placeholder and every
     non-JPEG payload class in one predicate."""
-    from ..session import ensure_py_files
+    _on_error_columns(on_error, "")
 
-    ensure_py_files(spark)
-    if on_error not in ("flag", "raise"):
-        raise ValueError(f"on_error must be flag|raise, got {on_error!r}")
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
-    )
+    def row(_doc_id, content):
+        media, status, _n = extract_pdf_media(bytes(content), on_error=on_error)
+        if not media and status != "ok":
+            media = [_NO_MEDIA]
+        out = {c: [it[c] for it in media] for c in _NO_MEDIA}
+        out["status"] = [status] * len(media)
+        return out
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf_batch in batches:
-            rows = {
-                "doc_id": [], "media_ref": [], "name": [], "width": [],
-                "height": [], "codec": [], "payload": [], "status": [],
-            }
-            for fpath, content in zip(
-                pdf_batch["path"], pdf_batch["content"]
-            ):
-                media, status, _n = extract_pdf_media(
-                    bytes(content), on_error=on_error
-                )
-                for it in media:
-                    rows["doc_id"].append(fpath)
-                    rows["media_ref"].append(it["media_ref"])
-                    rows["name"].append(it["name"])
-                    rows["width"].append(it["width"])
-                    rows["height"].append(it["height"])
-                    rows["codec"].append(it["codec"])
-                    rows["payload"].append(it["payload"])
-                    rows["status"].append(status)
-                if not media and status != "ok":
-                    rows["doc_id"].append(fpath)
-                    rows["media_ref"].append(None)
-                    rows["name"].append(None)
-                    rows["width"].append(0)
-                    rows["height"].append(0)
-                    rows["codec"].append(None)
-                    rows["payload"].append(None)
-                    rows["status"].append(status)
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)
-
-    return files.select("path", "content").mapInPandas(
-        run,
-        schema=(
-            "doc_id string, media_ref string, name string, width int, "
-            "height int, codec string, payload binary, status string"
-        ),
+    return _batch_map(
+        _pdf_files(spark, path), row,
+        "doc_id string, media_ref string, name string, width int, "
+        "height int, codec string, payload binary, status string",
+        ("doc_id", "content"), key="doc_id",
+        size=lambda part: sum(len(p) for p in part["payload"] if p),
     )
 
 
@@ -1939,54 +1922,26 @@ def read_span_docs_pdf(spark, path: str, on_error: str = "flag"):
     parallelism comes from file count). flag mode adds status +
     n_pages columns; raise mode fails the task on the first corrupt
     file."""
-    from ..session import ensure_py_files
+    suffix = _on_error_columns(on_error, "status string, n_pages int")
 
-    ensure_py_files(spark)
-    if on_error not in ("flag", "raise"):
-        raise ValueError(f"on_error must be flag|raise, got {on_error!r}")
-    flag = on_error == "flag"
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
+    def row(_doc_id, content):
+        spans, status, n_pages = parse_pdf_spans(
+            bytes(content), on_error=on_error
+        )
+        out = {
+            "spans": [[
+                {"kind": k, "text": t, "media_ref": r, "offset": off}
+                for k, t, r, off in spans
+            ]],
+            "n_chars": [sum(len(t) for k, t, _r, _o in spans if k == "text")],
+        }
+        if suffix:
+            out["status"] = [status]
+            out["n_pages"] = [n_pages]
+        return out
+
+    return _batch_map(
+        _pdf_files(spark, path), row, SPAN_DOC_SCHEMA + suffix,
+        ("doc_id", "content"), key="doc_id",
+        size=lambda part: sum(part["n_chars"]),
     )
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf_batch in batches:
-            rows = {
-                "doc_id": [], "spans": [], "n_chars": [],
-                "status": [], "n_pages": [],
-            }
-            for fpath, content in zip(
-                pdf_batch["path"], pdf_batch["content"]
-            ):
-                spans, status, n_pages = parse_pdf_spans(
-                    bytes(content), on_error=on_error
-                )
-                rows["doc_id"].append(fpath)
-                rows["spans"].append([
-                    {
-                        "kind": k, "text": t, "media_ref": r,
-                        "offset": off,
-                    }
-                    for k, t, r, off in spans
-                ])
-                rows["n_chars"].append(
-                    sum(len(t) for k, t, _r, _o in spans if k == "text")
-                )
-                rows["status"].append(status)
-                rows["n_pages"].append(n_pages)
-            if not rows["doc_id"]:
-                continue
-            if not flag:
-                del rows["status"], rows["n_pages"]
-            yield pd.DataFrame(rows)
-
-    from .readers import SPAN_DOC_SCHEMA
-
-    schema = SPAN_DOC_SCHEMA + (
-        ", status string, n_pages int" if flag else ""
-    )
-    return files.select("path", "content").mapInPandas(run, schema=schema)

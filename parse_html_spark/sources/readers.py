@@ -1073,244 +1073,184 @@ def read_span_docs_warc(
     record_types=("conversion",) reads Common Crawl WET archives (the
     pre-extracted plain-text sibling of the crawl) -- see
     read_span_docs_wet."""
-    import pandas as pd
+    from ..session import _batch_map, _on_error_columns
 
-    from ..session import ensure_py_files
-
-    if on_error not in ("raise", "flag"):
-        raise ValueError(f"on_error must be 'raise' or 'flag': {on_error!r}")
-    flag = on_error == "flag"
-    ensure_py_files(spark)
-    files = spark.read.format("binaryFile").load(path)
+    suffix = _on_error_columns(
+        on_error,
+        "status string, charset string, content_encoding string"
+        ", http_status int",
+    )
+    flag = bool(suffix)
     if isinstance(record_types, str):
         # tuple("conversion") would explode into single characters and
         # silently match nothing
         record_types = (record_types,)
     wanted = tuple(record_types)
 
-    # Output-side memory bound, the twin of the streaming splitter: a
-    # fat archive's decoded text must not accumulate into one giant
-    # pandas frame either -- flush a batch downstream every ~32 MiB of
-    # text (or 4096 rows), keeping the task's resident set O(flush
-    # window), not O(archive). mapInPandas may yield any number of
-    # frames per input batch.
-    FLUSH_CHARS = 1 << 25
-    FLUSH_ROWS = 4096
+    def doc_row(
+        doc_id, text, status, charset="utf-8", encoding="identity",
+        http_status=None,
+    ):
+        out = {
+            "doc_id": [doc_id],
+            "spans": [
+                [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
+                if text is not None
+                else []
+            ],
+            "n_chars": [len(text) if text is not None else 0],
+        }
+        if flag:
+            out["status"] = [status]
+            out["charset"] = [charset]
+            out["content_encoding"] = [encoding]
+            out["http_status"] = [http_status]
+        return out
 
-    def run(batches):
-        for pdf in batches:
-            ids, spans, nchars, statuses = [], [], [], []
-            charsets, encodings, http_statuses = [], [], []
-            pending_chars = [0]
-
-            def emit(
-                doc_id,
-                text,
-                status,
-                charset="utf-8",
-                encoding="identity",
-                http_status=None,
-            ):
-                ids.append(doc_id)
-                spans.append(
-                    [
-                        {
-                            "kind": "text",
-                            "text": text,
-                            "media_ref": None,
-                            "offset": 0,
-                        }
-                    ]
-                    if text is not None
-                    else []
-                )
-                nchars.append(len(text) if text is not None else 0)
-                statuses.append(status)
-                charsets.append(charset)
-                encodings.append(encoding)
-                http_statuses.append(http_status)
-                pending_chars[0] += nchars[-1]
-
-            def make_frame():
-                out = {
-                    "doc_id": list(ids),
-                    "spans": list(spans),
-                    "n_chars": list(nchars),
-                }
-                if flag:
-                    out["status"] = list(statuses)
-                    out["charset"] = list(charsets)
-                    out["content_encoding"] = list(encodings)
-                    out["http_status"] = pd.array(
-                        http_statuses, dtype="Int32"
-                    )
-                for lst in (
-                    ids, spans, nchars, statuses,
-                    charsets, encodings, http_statuses,
-                ):
-                    lst.clear()
-                pending_chars[0] = 0
-                return pd.DataFrame(out)
-
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                split_status: dict = {}
-                if fpath.endswith(".gz") or data[:2] == b"\x1f\x8b":
-                    # stream gzip members through the incremental
-                    # splitter: peak memory O(largest record + inflate
-                    # chunk), never the whole ~4-5 GB decompressed
-                    # archive (VERDICT r6 #1). The compressed bytes are
-                    # already resident (binaryFile's unit -- standard
-                    # for WARC sharding); only the decompression
-                    # amplification is bounded here.
-                    records = _iter_warc_stream(
-                        _iter_gz_chunks(data), split_status
-                    )
-                else:
-                    records = parse_warc_records(data, split_status)
-                for headers, body, off in records:
-                    rtype = headers.get("warc-type", "")
-                    if rtype not in wanted:
-                        continue
-                    uri = headers.get("warc-target-uri", fpath)
-                    raw_len = headers.get("content-length", "0")
-                    status = "ok"
-                    try:
-                        declared = int(raw_len)
-                    except ValueError:
-                        declared = -1
-                    if declared < 0:
-                        # non-numeric OR negative: both are corrupt
-                        declared = 0
-                        status = f"bad_content_length:{raw_len}"
-                    if len(body) < declared:
-                        # archive ended mid-record: the slice came up
-                        # short of the declared Content-Length
-                        status = f"truncated_record:{declared}/{len(body)}"
-                    if status != "ok" and not flag:
-                        raise ValueError(f"{fpath}#{off}: {status}")
-                    # only 'response' records carry an HTTP message
-                    # (envelope + transfer/content encodings + charset);
-                    # decoding others that way would corrupt e.g. WET
-                    # text that happens to begin with 'HTTP/'
-                    hstat = None
-                    if rtype == "response":
-                        hstat = _http_status(body)
-                        text, charset, cenc, herr = _decode_http_response(
-                            body, decoders
-                        )
-                        if herr is not None and status == "ok":
-                            # record-level truncation (above) outranks:
-                            # a cut record usually also breaks its HTTP
-                            # decode, and the cut is the root cause
-                            if herr.startswith("unknown charset"):
-                                # decode SUCCEEDED via the utf-8
-                                # fallback; annotate, don't fail --
-                                # raise mode stays tolerant here too
-                                status = f"unknown_charset:{herr}"
-                            elif herr.startswith(
-                                ("undeclared_nonutf8", "sniffed_charset")
-                            ):
-                                # also a successful decode (replace
-                                # fallback / statistical detection) --
-                                # annotation in both modes (VERDICT
-                                # r6 #2: make the mojibake-risk tail
-                                # census-visible, don't fail it)
-                                status = herr
-                            elif not flag:
-                                raise ValueError(f"{fpath}#{off}: {herr}")
-                            else:
-                                status = f"http_decode_error:{herr}"
-                    else:
-                        # 'resource' records carry raw documents (often
-                        # HTML) -> meta prescan applies; every other
-                        # type ('conversion' = WET EXTRACTED PLAIN
-                        # TEXT, 'metadata', 'request', ...) must not be
-                        # re-decoded because its text merely mentions
-                        # '<meta charset=..' (review r6 pass 4)
-                        label = (
-                            _sniff_html_charset(body)
-                            if rtype == "resource"
-                            else None
-                        )
-                        text, charset, cerr = _decode_charset(body, label)
-                        cenc = "identity"
-                        if cerr is not None and status == "ok":
-                            status = (
-                                cerr
-                                if cerr.startswith(
-                                    ("undeclared_nonutf8",
-                                     "sniffed_charset")
-                                )
-                                else f"unknown_charset:{cerr}"
-                            )
-                    emit(f"{uri}#{off}", text, status, charset, cenc, hstat)
-                    if (
-                        pending_chars[0] >= FLUSH_CHARS
-                        or len(ids) >= FLUSH_ROWS
-                    ):
-                        yield make_frame()
-                arch_err = split_status.get("archive_error")
-                if arch_err is not None and not flag:
-                    # records before the corruption point were already
-                    # iterated, but raise mode kills the task wholesale
-                    # -- same observable outcome as the old parse-after-
-                    # full-decompress flow, discovered incrementally
-                    raise ValueError(f"{fpath}: {arch_err}")
-                if flag and arch_err is None and "truncated_header" in split_status:
-                    # archive cut mid-WARC-header: the partial record
-                    # vanishes from the record stream, so without this
-                    # the census would read 'clean corpus'. FLAG MODE
-                    # ONLY: the same byte pattern can be trailing junk
-                    # that happens to contain the magic (which this
-                    # reader has always tolerated), so raise mode must
-                    # not start killing archives it used to parse --
-                    # the census names the suspicion, the operator
-                    # decides
-                    arch_err = (
-                        "truncated WARC header at byte "
-                        f"{split_status['truncated_header']}"
-                    )
-                if arch_err is not None:
-                    # flag mode (raise already fired): one census row
-                    # per damaged archive, zero spans so it never leaks
-                    # text into extraction
-                    emit(
-                        f"{fpath}#ARCHIVE_ERROR",
-                        None,
-                        f"archive_error:{arch_err}",
-                        charset=None,
-                        encoding=None,
-                    )
-                elif flag and "suspected_truncation" in split_status:
-                    # trailing bytes that merely END with a 1-6 byte
-                    # proper prefix of 'WARC/1.' -- could be an archive
-                    # cut inside the magic OR legitimate trailing junk
-                    # (ADVICE r5: a confirmed-corruption label here was
-                    # a census false positive). Own status class so the
-                    # operator can separate suspicion from confirmation
-                    emit(
-                        f"{fpath}#SUSPECT",
-                        None,
-                        "suspected_truncation:trailing WARC-magic prefix "
-                        f"at byte {split_status['suspected_truncation']}",
-                        charset=None,
-                        encoding=None,
-                    )
-            if not ids:
-                # an archive with no matching records must yield NO
-                # batch: Arrow cannot type an empty object column as
-                # array<struct> and would fail the task
+    def archive(fpath, content):
+        data = bytes(content)
+        split_status: dict = {}
+        if fpath.endswith(".gz") or data[:2] == b"\x1f\x8b":
+            # stream gzip members through the incremental splitter:
+            # peak memory O(largest record + inflate chunk), never the
+            # whole ~4-5 GB decompressed archive (VERDICT r6 #1). The
+            # compressed bytes are already resident (binaryFile's unit
+            # -- standard for WARC sharding); only the decompression
+            # amplification is bounded here, and the kernel's output
+            # bound keeps the decoded text O(flush window).
+            records = _iter_warc_stream(_iter_gz_chunks(data), split_status)
+        else:
+            records = parse_warc_records(data, split_status)
+        for headers, body, off in records:
+            rtype = headers.get("warc-type", "")
+            if rtype not in wanted:
                 continue
-            yield make_frame()
+            uri = headers.get("warc-target-uri", fpath)
+            raw_len = headers.get("content-length", "0")
+            status = "ok"
+            try:
+                declared = int(raw_len)
+            except ValueError:
+                declared = -1
+            if declared < 0:
+                # non-numeric OR negative: both are corrupt
+                declared = 0
+                status = f"bad_content_length:{raw_len}"
+            if len(body) < declared:
+                # archive ended mid-record: the slice came up
+                # short of the declared Content-Length
+                status = f"truncated_record:{declared}/{len(body)}"
+            if status != "ok" and not flag:
+                raise ValueError(f"{fpath}#{off}: {status}")
+            # only 'response' records carry an HTTP message
+            # (envelope + transfer/content encodings + charset);
+            # decoding others that way would corrupt e.g. WET
+            # text that happens to begin with 'HTTP/'
+            hstat = None
+            if rtype == "response":
+                hstat = _http_status(body)
+                text, charset, cenc, herr = _decode_http_response(
+                    body, decoders
+                )
+                if herr is not None and status == "ok":
+                    # record-level truncation (above) outranks:
+                    # a cut record usually also breaks its HTTP
+                    # decode, and the cut is the root cause
+                    if herr.startswith("unknown charset"):
+                        # decode SUCCEEDED via the utf-8
+                        # fallback; annotate, don't fail --
+                        # raise mode stays tolerant here too
+                        status = f"unknown_charset:{herr}"
+                    elif herr.startswith(
+                        ("undeclared_nonutf8", "sniffed_charset")
+                    ):
+                        # also a successful decode (replace
+                        # fallback / statistical detection) --
+                        # annotation in both modes (VERDICT
+                        # r6 #2: make the mojibake-risk tail
+                        # census-visible, don't fail it)
+                        status = herr
+                    elif not flag:
+                        raise ValueError(f"{fpath}#{off}: {herr}")
+                    else:
+                        status = f"http_decode_error:{herr}"
+            else:
+                # 'resource' records carry raw documents (often
+                # HTML) -> meta prescan applies; every other
+                # type ('conversion' = WET EXTRACTED PLAIN
+                # TEXT, 'metadata', 'request', ...) must not be
+                # re-decoded because its text merely mentions
+                # '<meta charset=..' (review r6 pass 4)
+                label = (
+                    _sniff_html_charset(body)
+                    if rtype == "resource"
+                    else None
+                )
+                text, charset, cerr = _decode_charset(body, label)
+                cenc = "identity"
+                if cerr is not None and status == "ok":
+                    status = (
+                        cerr
+                        if cerr.startswith(
+                            ("undeclared_nonutf8",
+                             "sniffed_charset")
+                        )
+                        else f"unknown_charset:{cerr}"
+                    )
+            yield doc_row(f"{uri}#{off}", text, status, charset, cenc, hstat)
+        arch_err = split_status.get("archive_error")
+        if arch_err is not None and not flag:
+            # records before the corruption point were already
+            # iterated, but raise mode kills the task wholesale
+            # -- same observable outcome as the old parse-after-
+            # full-decompress flow, discovered incrementally
+            raise ValueError(f"{fpath}: {arch_err}")
+        if flag and arch_err is None and "truncated_header" in split_status:
+            # archive cut mid-WARC-header: the partial record
+            # vanishes from the record stream, so without this
+            # the census would read 'clean corpus'. FLAG MODE
+            # ONLY: the same byte pattern can be trailing junk
+            # that happens to contain the magic (which this
+            # reader has always tolerated), so raise mode must
+            # not start killing archives it used to parse --
+            # the census names the suspicion, the operator
+            # decides
+            arch_err = (
+                "truncated WARC header at byte "
+                f"{split_status['truncated_header']}"
+            )
+        if arch_err is not None:
+            # flag mode (raise already fired): one census row
+            # per damaged archive, zero spans so it never leaks
+            # text into extraction
+            yield doc_row(
+                f"{fpath}#ARCHIVE_ERROR",
+                None,
+                f"archive_error:{arch_err}",
+                charset=None,
+                encoding=None,
+            )
+        elif flag and "suspected_truncation" in split_status:
+            # trailing bytes that merely END with a 1-6 byte
+            # proper prefix of 'WARC/1.' -- could be an archive
+            # cut inside the magic OR legitimate trailing junk
+            # (ADVICE r5: a confirmed-corruption label here was
+            # a census false positive). Own status class so the
+            # operator can separate suspicion from confirmation
+            yield doc_row(
+                f"{fpath}#SUSPECT",
+                None,
+                "suspected_truncation:trailing WARC-magic prefix "
+                f"at byte {split_status['suspected_truncation']}",
+                charset=None,
+                encoding=None,
+            )
 
-    schema = SPAN_DOC_SCHEMA + (
-        ", status string, charset string, content_encoding string"
-        ", http_status int"
-        if flag
-        else ""
+    files = spark.read.format("binaryFile").load(path)
+    return _batch_map(
+        files, archive, SPAN_DOC_SCHEMA + suffix, ("path", "content"),
+        size=lambda part: sum(part["n_chars"]),
     )
-    return files.select("path", "content").mapInPandas(run, schema=schema)
 
 
 def read_span_docs_wet(spark, path: str, on_error: str = "raise"):

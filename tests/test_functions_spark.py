@@ -597,6 +597,26 @@ def test_media_resize_and_frames(spark):
     assert sorted(fr["ts_ms"].unique()) == [0, 500, 1000, 1500]
 
 
+def test_sample_frames_rejects_bad_schedule(spark):
+    """A zero step would fail every executor task (range() step 0) and
+    a negative one would silently sample nothing: both are rejected on
+    the driver, naming the parameter, as is a negative duration."""
+    from parse_html_spark.functions.media import attach_payload, sample_frames
+
+    df = attach_payload(
+        spark.createDataFrame([("media://v-1",)], "media_ref string")
+    )
+    for kwargs, name in (
+        ({"every_ms": 0}, "every_ms"),
+        ({"every_ms": -5}, "every_ms"),
+        ({"duration_ms": -1}, "duration_ms"),
+    ):
+        with pytest.raises(ValueError, match=name):
+            sample_frames(df, **kwargs)
+    # an empty schedule is valid: no frames
+    assert sample_frames(df, duration_ms=0).count() == 0
+
+
 def test_media_stub_raises_without_fake(spark):
     from parse_html_spark.functions.media import (
         attach_payload,

@@ -412,11 +412,29 @@ def test_encrypted_censused_not_garbled():
     assert status == "pdf_error:encrypted document"
 
 
-def test_raise_mode():
+def test_raise_mode(spark, tmp_path):
     with pytest.raises(PdfError):
         parse_pdf_spans(b"%PDF-1.4\nbroken", on_error="raise")
     with pytest.raises(ValueError):
         parse_pdf_spans(b"", on_error="bogus")
+    # every on_error entry point rejects a bad value on the driver, with
+    # one message, before any Spark job runs
+    from parse_html_spark.functions.media import extract_media_features
+    from parse_html_spark.sources.pdf import read_pdf_media, read_span_docs_pdf
+    from parse_html_spark.sources.readers import read_span_docs_warc
+
+    media = spark.createDataFrame([], "media_ref string, payload binary")
+    for call in (
+        lambda: extract_media_features(media, on_error="bogus"),
+        lambda: read_span_docs_warc(spark, str(tmp_path), on_error="bogus"),
+        lambda: read_pdf_media(spark, str(tmp_path), on_error="bogus"),
+        lambda: read_span_docs_pdf(spark, str(tmp_path), on_error="bogus"),
+        lambda: parse_pdf_spans(b"", on_error="bogus"),
+    ):
+        with pytest.raises(
+            ValueError, match=r"^on_error must be 'raise' or 'flag': 'bogus'$"
+        ):
+            call()
 
 
 def test_flate_bomb_page_content_degrades():

@@ -101,6 +101,30 @@ def test_arrow_bridge_prunes_columns(spark, corpus, pipeline):
     assert scan_lines and all("n_chars" not in ln for ln in scan_lines)
 
 
+MEDIA_OPERATORS = {
+    "resize_images": lambda M, df: M.resize_images(df, 8, 8),
+    "sample_frames": lambda M, df: M.sample_frames(df),
+    "extract_media_features": lambda M, df: M.extract_media_features(df),
+}
+
+
+@pytest.mark.parametrize("operator", list(MEDIA_OPERATORS))
+def test_media_bridge_prunes_columns(spark, operator):
+    """The media operators hand only (media_ref, payload) to Python: a
+    wide input's other columns never cross the Arrow bridge."""
+    import re
+
+    from parse_html_spark.functions import media as M
+
+    wide = M.attach_payload(
+        spark.createDataFrame([("media://img-1",)], "media_ref string")
+    ).withColumn("big", F.repeat(F.lit("x"), 1000))
+    plan = _plan(MEDIA_OPERATORS[operator](M, wide))
+    (line,) = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
+    inputs = re.search(r"MapInPandas \w+\(([^)]*)\)", line).group(1)
+    assert re.sub(r"#\d+", "", inputs).split(", ") == ["media_ref", "payload"]
+
+
 def test_bucketed_writes_are_size_clustered(spark, tmp_path, corpus):
     """write_bucketed sorts by n_chars within buckets so mega rows sit
     at each file's tail (row-group stat isolation at scale)."""

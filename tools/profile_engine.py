@@ -3,10 +3,11 @@
 extract_main / extract_page_full / extract_skew_routed / extract_exploded.
 
 Usage:
-    python tools/profile_engine.py [ndocs] [--cprofile|--components]
+    python tools/profile_engine.py [ndocs] [--cprofile]
 
---cprofile   dump cumulative cProfile over the full extraction loop
---components per-stage walls (tokenize / textmass / container / prune / emit)
+--cprofile   dump cumulative cProfile over the full extraction loop (the
+             default). Per-stage walls come from the traced replay of
+             ``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -19,12 +20,7 @@ import time
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
-from parse_html_spark.boilerplate import (  # noqa: E402
-    TextMass,
-    find_main_container,
-    main_content_spans,
-    pruned_ranges,
-)
+from parse_html_spark.boilerplate import main_content_spans  # noqa: E402
 from parse_html_spark.fixtures import gen_doc  # noqa: E402
 from parse_html_spark.pipeline import assemble  # noqa: E402
 from parse_html_spark.tokenizer import DocIndex  # noqa: E402
@@ -39,57 +35,14 @@ def run_all(pairs):
         main_content_spans(DocIndex(h), m)
 
 
-def components(pairs, reps: int = 3):
-    stages = {
-        "tokenize(DocIndex)": 0.0,
-        "TextMass": 0.0,
-        "find_main_container": 0.0,
-        "pruned_ranges": 0.0,
-        "emit(main_content_spans full)": 0.0,
-    }
-    best = {k: float("inf") for k in stages}
-    for _ in range(reps):
-        t0 = time.time()
-        docs = [DocIndex(h) for h, _ in pairs]
-        best["tokenize(DocIndex)"] = min(
-            best["tokenize(DocIndex)"], time.time() - t0
-        )
-        t0 = time.time()
-        tms = [TextMass(d) for d in docs]
-        best["TextMass"] = min(best["TextMass"], time.time() - t0)
-        t0 = time.time()
-        boxes = [find_main_container(d, t) for d, t in zip(docs, tms)]
-        best["find_main_container"] = min(
-            best["find_main_container"], time.time() - t0
-        )
-        t0 = time.time()
-        for d, t, (lo, hi) in zip(docs, tms, boxes):
-            pruned_ranges(d, t, lo, hi)
-        best["pruned_ranges"] = min(best["pruned_ranges"], time.time() - t0)
-        t0 = time.time()
-        run_all(pairs)
-        best["emit(main_content_spans full)"] = min(
-            best["emit(main_content_spans full)"], time.time() - t0
-        )
-    for k, v in best.items():
-        print(f"{k:35s} {v * 1000:8.1f} ms")
-
-
 def main() -> None:
     n = 2000
-    mode = "--cprofile"
     for a in sys.argv[1:]:
-        if a.startswith("--"):
-            mode = a
-        else:
+        if a != "--cprofile":
             n = int(a)
     t0 = time.time()
     pairs = build_pairs(n)
     print(f"built {n} docs in {time.time() - t0:.1f}s", file=sys.stderr)
-
-    if mode == "--components":
-        components(pairs)
-        return
 
     run_all(pairs)  # warm
     pr = cProfile.Profile()
