@@ -16,6 +16,7 @@ import zlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _worker_setup
 from .textfn import fingerprint
 
 # ASCII-whitespace tokenizer shared by every PYTHON-side text split in
@@ -140,6 +141,7 @@ def minhash_signatures(
     coeffs = _mh_coeffs(num_hashes)
 
     def _sig(texts: pd.Series) -> pd.Series:
+        _worker_setup()
         return pd.Series(_minhash_sigs(texts, coeffs, shingle_words), dtype=object)
 
     sig_udf = pandas_udf(_sig, "array<long>")
@@ -344,6 +346,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     hash_cache: dict[str, int] = {}
 
     def _batch(texts: pd.Series) -> pd.Series:
+        _worker_setup()
         # ASCII split: must match the DuckDB oracle's RE2 \s+ tokenizer
         tok_lists = [_ascii_tokens((t or "").lower()) for t in texts]
         lens = np.fromiter((len(tl) for tl in tok_lists), dtype=np.int64, count=len(tok_lists))

@@ -95,7 +95,11 @@ def resize_images(df, width: int, height: int, fake: bool = True):
     decode, exact nearest-neighbor resample, re-encode as PNG.
     fake=True emits a deterministic payload derived from the input bytes
     + target size (any format). Batch shape and schema are identical in
-    both modes."""
+    both modes. width and height must be > 0 (ValueError on the driver
+    otherwise)."""
+    for name, value in (("width", width), ("height", height)):
+        if value <= 0:
+            raise ValueError(f"{name} must be > 0: {value!r}")
 
     def row(_ref, payload):
         from . import codecs
@@ -168,9 +172,12 @@ def extract_media_features(
     corpora: undecodable rows get feature=NULL and the output gains a
     ``status`` column ('ok' or 'undecodable:<kind>:<reason>') -- a
     groupBy(status) gives the corpus decode-failure census without
-    losing the partition."""
+    losing the partition. dim must be >= 1 (ValueError on the driver
+    otherwise)."""
     import numpy as np
 
+    if dim < 1:
+        raise ValueError(f"dim must be >= 1: {dim!r}")
     suffix = _on_error_columns(on_error, "status string")
     flag = bool(suffix)
 

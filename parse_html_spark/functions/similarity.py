@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _worker_setup
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -139,6 +141,7 @@ def lsh_buckets_col(vec_col, planes_stack, bits: int) -> "F.Column":
     weights = 1 << np.arange(bits, dtype=np.int64)
 
     def f(s):
+        _worker_setup()
         if len(s) == 0:
             return pd.Series([], dtype=object)
         # NULL embedding -> zero vector -> all signs false -> bucket 0,
@@ -333,6 +336,7 @@ def ivf_train_centroids_distributed(
             Cb = C.copy()
 
             def partials(batches):
+                _worker_setup()
                 for pdf in batches:
                     if not len(pdf):
                         continue
@@ -399,6 +403,7 @@ def ivf_assignments(
     C = np.ascontiguousarray(centroids, dtype=np.float64)
 
     def f(s):
+        _worker_setup()
         if len(s) == 0:
             return pd.Series([], dtype="int32")
         # NULL embedding -> zero vector -> argmax of zeros -> cell 0,

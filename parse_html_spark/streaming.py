@@ -9,6 +9,8 @@ file-sink semantics; late data needs no watermark (no event-time aggs).
 
 from __future__ import annotations
 
+from .session import _worker_setup
+
 SPAN_INPUT_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,"
     "media_ref:string,offset:int>>"
@@ -49,6 +51,7 @@ def _make_first_seen(state_ttl_ms):
     import pandas as pd
 
     def first_seen(key, pdf_iter, state):
+        _worker_setup()
         if state_ttl_ms is not None and state.hasTimedOut:
             state.remove()  # evict: the fp may be emitted again later
             return iter(())
@@ -304,6 +307,7 @@ def streaming_near_dup_candidates(
     banded = signed.select("doc_id", "sig", band)
 
     def bucket_fn(key, pdf_iter, state):
+        _worker_setup()
         import numpy as np
 
         if state_ttl_ms is not None and state.hasTimedOut:

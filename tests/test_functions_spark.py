@@ -617,6 +617,49 @@ def test_sample_frames_rejects_bad_schedule(spark):
     assert sample_frames(df, duration_ms=0).count() == 0
 
 
+def test_resize_images_rejects_bad_size(spark):
+    """A zero target size would fail every executor task (a division by
+    zero in the resampler) and a negative one would write a PNG the
+    package's own decoder rejects, or a ``resized:-2x3`` payload with
+    fake=True: both are rejected on the driver, naming the parameter."""
+    from parse_html_spark.functions.media import attach_payload, resize_images
+
+    df = attach_payload(
+        spark.createDataFrame([("media://img-1",)], "media_ref string")
+    )
+    for fake in (True, False):
+        for width, height, name in (
+            (0, 4, "width"),
+            (-2, 3, "width"),
+            (4, 0, "height"),
+            (3, -2, "height"),
+        ):
+            with pytest.raises(ValueError, match=name):
+                resize_images(df, width, height, fake=fake)
+    # the smallest valid size still runs
+    assert resize_images(df, 1, 1).count() == 1
+
+
+def test_extract_media_features_rejects_bad_dim(spark):
+    """``dim`` < 1 would fail every task with fake=True (a negative
+    random draw) and silently return a 6-float feature with fake=False:
+    both modes reject it on the driver, naming the parameter."""
+    from parse_html_spark.functions.media import (
+        attach_payload,
+        extract_media_features,
+    )
+
+    df = attach_payload(
+        spark.createDataFrame([("media://img-1",)], "media_ref string")
+    )
+    for fake in (True, False):
+        for dim in (0, -1):
+            with pytest.raises(ValueError, match="dim"):
+                extract_media_features(df, fake=fake, dim=dim)
+    (row,) = extract_media_features(df, dim=1).collect()
+    assert len(row["feature"]) == 1
+
+
 def test_media_stub_raises_without_fake(spark):
     from parse_html_spark.functions.media import (
         attach_payload,
