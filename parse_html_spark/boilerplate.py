@@ -36,8 +36,7 @@ Pinned algorithm (deterministic):
 from __future__ import annotations
 
 import bisect
-from itertools import accumulate
-from operator import itemgetter, sub
+from operator import itemgetter
 
 import numpy as np
 
@@ -48,6 +47,13 @@ LINK_DENSITY_MAX = 0.65
 MIN_ANCHORS = 2
 
 _EMPTY = np.zeros(0, dtype=np.int64)
+
+
+def _prefix_sum(lengths):
+    """[0, l0, l0+l1, ...]: the prefix sums _mass_many indexes."""
+    cum = np.zeros(len(lengths) + 1, dtype=np.int64)
+    lengths.cumsum(out=cum[1:])  # method form: no dispatch wrapper
+    return cum
 
 
 def _mass_many(starts, ends, cum, lo, hi):
@@ -70,41 +76,17 @@ def _mass_many(starts, ends, cum, lo, hi):
     return np.maximum(out, 0)
 
 
-def _mass_one(ts_l, te_l, cum_l, lo: int, hi: int) -> int:
-    """Scalar interval mass via C bisect over Python lists -- numpy call
-    overhead dwarfs the work for the tiny queries in container descent."""
-    if hi <= lo or not ts_l:
-        return 0
-    a = bisect.bisect_right(te_l, lo)
-    b = bisect.bisect_left(ts_l, hi)
-    if a >= b:
-        return 0
-    total = cum_l[b] - cum_l[a]
-    if lo > ts_l[a]:
-        total -= lo - ts_l[a]
-    if te_l[b - 1] > hi:
-        total -= te_l[b - 1] - hi
-    return total if total > 0 else 0
-
-
 class TextMass:
     """Batched prefix-sum index over text regions + top-level anchors."""
 
     def __init__(self, doc: DocIndex):
         self.doc = doc
-        # the tokenizer keeps list + numpy twins from birth (round 6
-        # profiling: the tolist()/cumsum/concatenate round-trips here
-        # were ~1/3 of per-doc extraction wall on the bench mix)
-        self.ts = doc.tstart
-        self.te = doc.tend
-        ts_l = self.ts_l = doc.tstart_l
-        te_l = self.te_l = doc.tend_l
-        # map(sub, te, ts) keeps the length pipeline fully in C (the
-        # genexpr form was a measured per-doc cost at 60k-doc scale)
-        cum_l = self.cum_l = list(
-            accumulate(map(sub, te_l, ts_l), initial=0)
-        )
-        self.cum = np.asarray(cum_l, dtype=np.int64)
+        # the only place text regions become numpy: DocIndex keeps them
+        # as lists, and the selector paths never pay for these vectors
+        ts_l, te_l = doc.tstart_l, doc.tend_l
+        self.ts = ts = np.asarray(ts_l, dtype=np.int64)
+        self.te = te = np.asarray(te_l, dtype=np.int64)
+        self.cum = _prefix_sum(te - ts)
 
         # top-level <a> nodes: in doc order, an <a> is top-level iff it
         # starts at/after the end of the previous top-level <a> (nested
@@ -119,15 +101,15 @@ class TextMass:
                 top.append(i)
                 cur_end = end_l[i]
         self.top_anchors = top
-        ats_l: list[int] = []
-        ate_l: list[int] = []
         if top:
             self.anchor_starts = np.asarray(
                 [start_l[i] for i in top], dtype=np.int64
             )
             # anchor text regions = text regions clipped to anchor
-            # contents (anchors per doc are few: scalar bisect beats
-            # numpy dispatch here, same reasoning as _mass_one)
+            # contents (anchors per doc are few: scalar bisect over the
+            # lists beats numpy dispatch here)
+            ats_l: list[int] = []
+            ate_l: list[int] = []
             cstart_l = doc.cstart_l
             cend_l = doc.cend_l
             for i in top:
@@ -151,14 +133,7 @@ class TextMass:
             self.anchor_starts = _EMPTY
             self.ats = _EMPTY
             self.ate = _EMPTY
-        acum_l = self.acum_l = list(
-            accumulate(map(sub, ate_l, ats_l), initial=0)
-        )
-        self.acum = np.asarray(acum_l, dtype=np.int64)
-        self.ats_l = ats_l
-        self.ate_l = ate_l
-
-    # vectorized forms ------------------------------------------------------
+        self.acum = _prefix_sum(self.ate - self.ats)
 
     def text_len_many(self, lo, hi):
         return _mass_many(self.ts, self.te, self.cum, lo, hi)
@@ -171,22 +146,6 @@ class TextMass:
         return a_s.searchsorted(hi, side="left") - a_s.searchsorted(
             lo, side="left"
         )
-
-    # scalar conveniences ---------------------------------------------------
-
-    def text_len(self, lo: int, hi: int) -> int:
-        return _mass_one(self.ts_l, self.te_l, self.cum_l, lo, hi)
-
-    def anchor_len(self, lo: int, hi: int) -> int:
-        return _mass_one(self.ats_l, self.ate_l, self.acum_l, lo, hi)
-
-    def anchors_in(self, lo: int, hi: int) -> int:
-        a = int(np.searchsorted(self.anchor_starts, lo, side="left"))
-        b = int(np.searchsorted(self.anchor_starts, hi, side="left"))
-        return b - a
-
-    def nonanchor(self, lo: int, hi: int) -> int:
-        return self.text_len(lo, hi) - self.anchor_len(lo, hi)
 
 
 def node_masses(doc: DocIndex, tm: TextMass):
@@ -229,7 +188,8 @@ def find_main_container(
     n = doc.n
     if n == 0:
         return lo, hi
-    m_cur = tm.nonanchor(lo, hi)  # computed once; children reuse m[j]
+    # whole-document non-anchor mass: every text region lies in [lo, hi)
+    m_cur = int(tm.cum[-1] - tm.acum[-1])  # children reuse m[j]
     if m_all is None:
         tl, al = node_masses(doc, tm)
         m_all = (tl - al).tolist()
@@ -273,27 +233,21 @@ def pruned_ranges(
 ) -> list[tuple[int, int]]:
     """Outer byte ranges of boilerplate subtrees inside [lo, hi) (rule 3),
     computed with one vectorized scoring pass over candidate nodes.
-    ``tl``/``al`` accept the precomputed full-document per-node masses
-    from node_masses() (sliced here); omitted, they are computed for the
-    candidate range only."""
+    ``tl``/``al`` are the full-document per-node masses from
+    node_masses(), computed here when omitted; either way they are
+    sliced to the candidate nodes."""
     a0 = bisect.bisect_left(doc.start_l, lo)
     b0 = bisect.bisect_left(doc.start_l, hi)
     if a0 >= b0:
         return []
-    # boilerplate-tag mask comes pre-classified from the tokenizer pass;
-    # only the candidate subrange is lifted to numpy (the full-array
-    # twins stay lazy -- round-7 profiling)
-    boiler = np.asarray(doc.boiler_l[a0:b0], dtype=bool)
     if tl is None:
-        cs = np.asarray(doc.cstart_l[a0:b0], dtype=np.int64)
-        ce = np.asarray(doc.cend_l[a0:b0], dtype=np.int64)
-        tl = tm.text_len_many(cs, ce)
-        al = tm.anchor_len_many(cs, ce)
-        na = tm.anchors_in_many(cs, ce)
-    else:
-        tl = tl[a0:b0]
-        al = al[a0:b0]
-        na = tm.anchors_in_many(doc.cstart[a0:b0], doc.cend[a0:b0])
+        tl, al = node_masses(doc, tm)
+    # boilerplate-tag mask comes pre-classified from the tokenizer pass;
+    # only the candidate subrange is lifted to numpy
+    boiler = np.asarray(doc.boiler_l[a0:b0], dtype=bool)
+    tl = tl[a0:b0]
+    al = al[a0:b0]
+    na = tm.anchors_in_many(doc.cstart[a0:b0], doc.cend[a0:b0])
     dense = (na >= MIN_ANCHORS) & (tl > 0) & (al > LINK_DENSITY_MAX * tl)
     cand = np.flatnonzero(boiler | dense)
     start_l, end_l = doc.start_l, doc.end_l

@@ -151,39 +151,56 @@ def _decode_png_impl(data: bytes) -> np.ndarray:
         # covers the bomb case too: a stream expanding past expected
         # yields exactly expected+1 bytes from the bounded call
         raise ValueError("PNG data length mismatch")
-    out = np.empty((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(height):
-        off = y * (stride + 1)
-        ftype = raw[off]
-        line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=off + 1)
+    return _png_defilter(raw, height, stride, ch).reshape(height, width, ch)
+
+
+def _png_defilter(raw, rows: int, rowlen: int, bpp: int) -> np.ndarray:
+    """Undo PNG scanline filtering (types 0-4): ``raw`` holds ``rows``
+    lines of one filter-type byte + ``rowlen`` filtered bytes, and
+    ``bpp`` (>= 1) is the byte distance to the left neighbour. The PNG
+    decoder and the PDF flate predictor share it; for PDF's sub-byte
+    samples ``rowlen`` need not be a multiple of ``bpp``. Returns the
+    (rows, rowlen) uint8 rows; an unknown filter type raises
+    ValueError."""
+    stride = rowlen + 1
+    lines = np.frombuffer(raw, dtype=np.uint8, count=rows * stride)
+    lines = lines.reshape(rows, stride)[:, 1:]
+    out = np.empty((rows, rowlen), dtype=np.uint8)
+    prev = np.zeros(rowlen, dtype=np.uint8)
+    pad = -rowlen % bpp  # Sub's per-lane view needs whole pixels
+    for y, ftype in enumerate(raw[: rows * stride : stride]):
+        line = lines[y]
         # Cost envelope (measured, BENCH/CODECS.md): filters 0/1/2 are
         # fully vectorized (copy / per-lane uint8 cumsum / whole-row
         # add) at ~100-600 MB/s. Filters 3/4 are SEQUENTIAL ACROSS
         # PIXELS by spec (each decoded pixel feeds the next prediction):
         # a plain-int Python recurrence at ~4-7 MB/s -- a real image
         # corpus should plug an external decoder (media.py) for those.
+        cur = out[y]
         if ftype == 0:
-            cur = line.copy()
+            cur[:] = line
         elif ftype == 1:  # Sub: left-neighbor prefix sum per channel lane
-            cur = np.cumsum(
-                line.reshape(-1, ch), axis=0, dtype=np.uint8
-            ).reshape(-1)  # uint8 accumulate wraps mod 256 (PNG spec)
+            if pad:
+                line = np.concatenate((line, np.zeros(pad, dtype=np.uint8)))
+            # uint8 accumulate wraps mod 256 (PNG spec)
+            cur[:] = np.cumsum(
+                line.reshape(-1, bpp), axis=0, dtype=np.uint8
+            ).reshape(-1)[:rowlen]
         elif ftype == 2:  # Up
-            cur = line + prev  # uint8 wraps mod 256 (PNG spec arithmetic)
+            np.add(line, prev, out=cur)  # uint8 wraps mod 256 (PNG spec)
         elif ftype in (3, 4):  # Average / Paeth recur on the left pixel
             # plain-int lists, not numpy scalars: per-element ndarray
             # indexing boxes a numpy scalar per access (~10x slower than
             # list ints for this recurrence). The recurrence is
             # independent PER CHANNEL LANE, so each lane runs with the
             # left neighbor as a RUNNING LOCAL (a / c) over a zip --
-            # no per-pixel list indexing or x>=ch branching.
+            # no per-pixel list indexing or x>=bpp branching.
             row = line.tolist()
             up = prev.tolist()
-            out_row = [0] * stride
-            for lane in range(ch):
-                rl = row[lane::ch]
-                ul = up[lane::ch]
+            out_row = [0] * rowlen
+            for lane in range(bpp):
+                rl = row[lane::bpp]
+                ul = up[lane::bpp]
                 ol = []
                 append = ol.append
                 a = 0
@@ -206,13 +223,12 @@ def _decode_png_impl(data: bytes) -> np.ndarray:
                         a = (rx + pred) & 0xFF
                         append(a)
                         c = ux
-                out_row[lane::ch] = ol
-            cur = np.asarray(out_row, dtype=np.uint8)
+                out_row[lane::bpp] = ol
+            cur[:] = out_row
         else:
             raise ValueError(f"bad PNG filter {ftype}")
-        out[y] = cur
         prev = cur
-    return out.reshape(height, width, ch)
+    return out
 
 
 def encode_png(arr: np.ndarray) -> bytes:

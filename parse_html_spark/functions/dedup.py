@@ -171,6 +171,14 @@ def _checkpoint_batch(df: DataFrame, name: str) -> DataFrame:
     return df.localCheckpoint()
 
 
+def _check_cap(name: str, cap: int | None) -> None:
+    """A pair needs two rows in one bucket (or two documents sharing one
+    token), so a cap below 2 would drop every pair -- and only after a
+    checkpoint job had run. Accept None (uncapped) or a value >= 2."""
+    if cap is not None and cap < 2:
+        raise ValueError(f"{name}={cap} must be None or >= 2")
+
+
 def _bucket_pairs(
     banded: DataFrame,
     keys: list[str],
@@ -218,6 +226,7 @@ def _bucket_pairs(
     4. ``where`` (a Column over the ``a.``/``b.`` sides) filters BEFORE
        the distinct, so only surviving pairs pay the dedup exchange;
        ``extra`` columns are selected after id_a, id_b."""
+    _check_cap("max_bucket", max_bucket)
     if max_bucket is not None:
         from pyspark.sql import Window
 
@@ -533,6 +542,7 @@ def token_jaccard_pairs(
     exact join (only sane on small, known corpora). For corpus-scale
     near-dup detection prefer minhash_near_duplicates(), which only ever
     computes exact Jaccard within LSH candidate buckets."""
+    _check_cap("max_df", max_df)
     toks = _distinct_doc_tokens(df, text_col, id_col)
     if max_df is not None:
         # the audit twin IS the cap computation -- one definition

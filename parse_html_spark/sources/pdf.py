@@ -64,6 +64,7 @@ import re
 import struct
 import zlib
 
+from ..functions.codecs import _png_defilter
 from ..session import _batch_map, _on_error_columns
 from .readers import SPAN_DOC_SCHEMA, _bounded_inflate
 
@@ -338,39 +339,20 @@ def _parse_object(data: bytes, pos: int, depth: int = 0):
 
 def _png_unpredict(data: bytes, columns: int, colors: int, bpc: int) -> bytes:
     """PNG predictors 10-15 (per-row filter byte, types 0-4), the form
-    xref streams and flate DecodeParms use."""
+    xref streams and flate DecodeParms use. A trailing partial row is
+    dropped."""
     bpp = max(1, (colors * bpc + 7) // 8)
     rowlen = (columns * colors * bpc + 7) // 8
+    if rowlen < 1:  # negative /Columns, /Colors or /BitsPerComponent
+        return b""
     stride = rowlen + 1
-    out = bytearray()
-    prev = bytearray(rowlen)
-    for r in range(0, len(data) - stride + 1, stride):
-        ft = data[r]
-        row = bytearray(data[r + 1 : r + 1 + rowlen])
-        if ft == 1:  # Sub
-            for i in range(bpp, rowlen):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(rowlen):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(rowlen):
-                left = row[i - bpp] if i >= bpp else 0
-                row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(rowlen):
-                a = row[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                cc = prev[i - bpp] if i >= bpp else 0
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                row[i] = (row[i] + pr) & 0xFF
-        elif ft != 0:
-            raise PdfError(f"unknown PNG predictor filter type {ft}")
-        out += row
-        prev = row
-    return bytes(out)
+    rows = len(data) // stride
+    # checked here, in the census's own words; the shared defilter then
+    # sees only valid filter types
+    bad = data[: rows * stride : stride].translate(None, bytes(range(5)))
+    if bad:
+        raise PdfError(f"unknown PNG predictor filter type {bad[0]}")
+    return _png_defilter(data, rows, rowlen, bpp).tobytes()
 
 
 _IMAGE_FILTERS = frozenset(

@@ -300,6 +300,10 @@ def streaming_near_dup_candidates(
     from .session import ensure_py_files
 
     band = _band_hashes(num_hashes, bands)
+    if max_bucket_sigs < 1:
+        # ids[-0:] is the whole list: 0 would never evict, and a negative
+        # value would evict from the wrong end
+        raise ValueError(f"max_bucket_sigs={max_bucket_sigs} must be >= 1")
     ensure_py_files(spark)
     sdf = spark.readStream.schema(SPAN_INPUT_SCHEMA).parquet(input_dir)
     docs = sdf.select("doc_id", _span_text("").alias("text"))

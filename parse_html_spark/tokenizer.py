@@ -152,29 +152,17 @@ class DocIndex:
     """Columnar node index for one document."""
 
     __slots__ = (
-        "html", "n", "tag",
-        "tstart", "tend", "_attrs", "_children", "_tag_ids",
+        "html", "n", "tag", "_attrs", "_children", "_tag_ids",
         "start_l", "end_l", "cstart_l", "cend_l", "parent_l",
         "_depth_l", "tstart_l", "tend_l", "a_ids", "media_ids", "boiler_l",
-        "_start_a", "_end_a", "_cstart_a", "_cend_a", "_parent_a",
-        "_depth_a",
+        "_cstart_a", "_cend_a",
     )
 
-    # numpy twins the extraction hot path never touches are built lazily
-    # (round-7 profiling): selector/DOM/node-table paths pay the one-time
-    # conversion on first use, extraction skips it entirely
-
-    @property
-    def start(self) -> "np.ndarray":
-        if self._start_a is None:
-            self._start_a = np.asarray(self.start_l, dtype=np.int64)
-        return self._start_a
-
-    @property
-    def end(self) -> "np.ndarray":
-        if self._end_a is None:
-            self._end_a = np.asarray(self.end_l, dtype=np.int64)
-        return self._end_a
+    # every node array is a plain list: scalar paths (container descent,
+    # per-node loops, bisect) index ints without numpy boxing. Only
+    # cstart/cend have lazy numpy views, for the boilerplate vector pass
+    # (node_masses, pruned_ranges) and perfbench; TextMass builds its own
+    # text-region vectors from tstart_l/tend_l
 
     @property
     def cstart(self) -> "np.ndarray":
@@ -187,18 +175,6 @@ class DocIndex:
         if self._cend_a is None:
             self._cend_a = np.asarray(self.cend_l, dtype=np.int64)
         return self._cend_a
-
-    @property
-    def parent(self) -> "np.ndarray":
-        if self._parent_a is None:
-            self._parent_a = np.asarray(self.parent_l, dtype=np.int64)
-        return self._parent_a
-
-    @property
-    def depth(self) -> "np.ndarray":
-        if self._depth_a is None:
-            self._depth_a = np.asarray(self.depth_l, dtype=np.int64)
-        return self._depth_a
 
     @property
     def depth_l(self) -> list[int]:
@@ -306,15 +282,10 @@ class DocIndex:
         for idx, c_s, c_e in closures:
             ends[idx] = c_e
             cends[idx] = c_s
-        # list twins stay alongside the numpy forms: scalar hot paths
-        # (container descent, per-node loops) index plain ints without
-        # numpy boxing; vectorized paths use the arrays (end/parent/
-        # depth twins are lazy properties -- extraction never reads them)
         self.start_l = starts
         self.end_l = ends
         self.cstart_l = st_ends
         self.cend_l = cends
-        self._start_a = None
         self._cstart_a = None
         self._cend_a = None
         self._attrs: list[dict | None] = [None] * n
@@ -337,16 +308,11 @@ class DocIndex:
                 stack.append(i)
         self.parent_l = parent_l
         self._depth_l = None
-        self._end_a = None
-        self._parent_a = None
-        self._depth_a = None
         self._children: list | None = None
         self._tag_ids: dict | None = None
 
         self.tstart_l = tstart
         self.tend_l = tend
-        self.tstart = np.asarray(tstart, dtype=np.int64)
-        self.tend = np.asarray(tend, dtype=np.int64)
 
     # -- accessors ---------------------------------------------------------
 
@@ -431,12 +397,6 @@ class DocIndex:
     def node_text(self, i: int) -> str:
         """text() of a node = strip_tags of its outer HTML."""
         return self.text_between(self.cstart_l[i], self.cend_l[i])
-
-    def nodes_in_range(self, lo: int, hi: int) -> np.ndarray:
-        """Node ids whose start-tag '<' lies in [lo, hi), in doc order."""
-        a = int(np.searchsorted(self.start, lo, side="left"))
-        b = int(np.searchsorted(self.start, hi, side="left"))
-        return np.arange(a, b, dtype=np.int64)
 
 
 _TRIM_RE = re.compile(r"\s\s+")

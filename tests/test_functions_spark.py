@@ -1053,6 +1053,71 @@ def test_minhash_bands_outside_hash_count_raise(spark, tmp_path, bands):
     assert len(spark.streams.active) == active
 
 
+@pytest.mark.parametrize("cap", [-1, 0])
+def test_stream_max_bucket_sigs_below_one_raises(spark, tmp_path, cap):
+    """``ids[-0:]`` is the whole list, so max_bucket_sigs=0 never
+    evicted and a negative cap evicted from the wrong end: the state
+    bound was silently off. The driver now raises before the query
+    starts."""
+    from parse_html_spark.streaming import streaming_near_dup_candidates
+
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match=rf"max_bucket_sigs={cap}\b"):
+        streaming_near_dup_candidates(
+            spark,
+            str(tmp_path / "in"),
+            str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+            max_bucket_sigs=cap,
+        )
+    assert len(spark.streams.active) == active
+
+
+@pytest.mark.parametrize("cap", [0, 1])
+@pytest.mark.parametrize(
+    "op", ["minhash_lsh_pairs", "simhash_near_pairs", "lsh_candidate_pairs",
+           "token_jaccard_pairs"],
+)
+def test_pair_caps_below_two_raise_before_any_job(spark, op, cap):
+    """A pair needs two rows in one bucket (two documents sharing one
+    token), so a max_bucket / max_df of 0 or 1 dropped every pair --
+    after a checkpoint job had already run. Each operator now raises a
+    ValueError naming the cap, and runs no Spark job first."""
+    from parse_html_spark.functions.dedup import (
+        minhash_lsh_pairs,
+        simhash_near_pairs,
+        token_jaccard_pairs,
+    )
+    from parse_html_spark.functions.similarity import lsh_candidate_pairs
+
+    texts = spark.createDataFrame(
+        [(i, f"shared words document {i}") for i in range(4)],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [1.0, 0.0, 0.0, float(i)]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    calls = {
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(texts, max_bucket=cap),
+        "simhash_near_pairs": lambda: simhash_near_pairs(texts, max_bucket=cap),
+        "lsh_candidate_pairs": lambda: lsh_candidate_pairs(
+            vecs, dim=4, max_bucket=cap
+        ),
+        "token_jaccard_pairs": lambda: token_jaccard_pairs(texts, max_df=cap),
+    }
+    name = "max_df" if op == "token_jaccard_pairs" else "max_bucket"
+    sc = spark.sparkContext
+    group = f"cap-check-{op}-{cap}"
+    sc.setJobGroup(group, "a cap below 2 must raise before any job")
+    try:
+        with pytest.raises(ValueError, match=rf"{name}={cap} must be None or >= 2"):
+            calls[op]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_mixed_dimension_embeddings_fail_with_named_length():
     """ADVICE r4: an embedding of the wrong length must raise a
     ValueError naming the offending length, not an opaque np.stack

@@ -18,6 +18,7 @@ from parse_html_spark.boilerplate import (
     find_main_container,
     main_content_spans,
     node_masses,
+    pruned_ranges,
 )
 from parse_html_spark.conditions import (
     OPERATORS,
@@ -58,10 +59,10 @@ def test_tokenizer_never_raises_on_soup(s):
     assert d.n >= 0
     # index invariants hold even for garbage
     for i in range(d.n):
-        assert 0 <= d.start[i] < d.cstart[i] <= d.end[i] <= len(s)
+        assert 0 <= d.start_l[i] < d.cstart_l[i] <= d.end_l[i] <= len(s)
     # text regions in-bounds and ordered
     last = 0
-    for a, b in zip(d.tstart, d.tend):
+    for a, b in zip(d.tstart_l, d.tend_l):
         assert last <= a < b <= len(s)
         last = b
 
@@ -132,7 +133,9 @@ def _container_by_scan(doc, tm, m_all):
     lo, hi = 0, len(doc.html)
     if doc.n == 0:
         return lo, hi
-    m_cur, cur = tm.nonanchor(lo, hi), -1
+    m_cur = int(tm.text_len_many([lo], [hi])[0])
+    m_cur -= int(tm.anchor_len_many([lo], [hi])[0])
+    cur = -1
     while m_cur > 0:
         sub_hi = (
             doc.n
@@ -163,8 +166,16 @@ def test_container_sibling_walk_matches_scan(html):
     tm = TextMass(doc)
     tl, al = node_masses(doc, tm)
     m_all = (tl - al).tolist()
-    assert find_main_container(doc, tm, m_all) == _container_by_scan(
-        doc, tm, m_all
+    lo, hi = find_main_container(doc, tm, m_all)
+    assert (lo, hi) == _container_by_scan(doc, tm, m_all)
+    # the descent's whole-document mass is the two prefix-sum totals
+    assert tm.cum[-1] - tm.acum[-1] == (
+        tm.text_len_many([0], [len(html)])[0]
+        - tm.anchor_len_many([0], [len(html)])[0]
+    )
+    # pruning without precomputed masses computes the same ones
+    assert pruned_ranges(doc, tm, lo, hi) == pruned_ranges(
+        doc, tm, lo, hi, tl, al
     )
 
 

@@ -13,6 +13,7 @@ from parse_html_spark.sources.pdf import (
     PdfError,
     _Doc,
     _parse_object,
+    _png_unpredict,
     _parse_tounicode,
     encode_pdf,
     layout_doc,
@@ -260,6 +261,77 @@ def test_sloppy_19_byte_xref_entries():
     assert status == "ok", status
     assert spans_to_text(spans) == _expected(TEXT)
     assert shift > 0
+
+
+def _png_unpredict_per_byte(data, columns, colors, bpc):
+    """The per-byte predictor loop that _png_unpredict replaced by the
+    defilter it shares with the PNG decoder, kept as the reference."""
+    bpp = max(1, (colors * bpc + 7) // 8)
+    rowlen = (columns * colors * bpc + 7) // 8
+    stride = rowlen + 1
+    out = bytearray()
+    prev = bytearray(rowlen)
+    for r in range(0, len(data) - stride + 1, stride):
+        ft = data[r]
+        row = bytearray(data[r + 1 : r + 1 + rowlen])
+        if ft == 1:  # Sub
+            for i in range(bpp, rowlen):
+                row[i] = (row[i] + row[i - bpp]) & 0xFF
+        elif ft == 2:  # Up
+            for i in range(rowlen):
+                row[i] = (row[i] + prev[i]) & 0xFF
+        elif ft == 3:  # Average
+            for i in range(rowlen):
+                left = row[i - bpp] if i >= bpp else 0
+                row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
+        elif ft == 4:  # Paeth
+            for i in range(rowlen):
+                a = row[i - bpp] if i >= bpp else 0
+                b = prev[i]
+                cc = prev[i - bpp] if i >= bpp else 0
+                p = a + b - cc
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
+                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
+                row[i] = (row[i] + pr) & 0xFF
+        elif ft != 0:
+            raise PdfError(f"unknown PNG predictor filter type {ft}")
+        out += row
+        prev = row
+    return bytes(out)
+
+
+# (Colors, BitsPerComponent): bpp 1..8, sub-byte samples, and rows
+# that are not a whole number of bpp-byte pixels (3 x 4 bits, odd
+# Columns: 2-byte pixels in a 5-byte row)
+@pytest.mark.parametrize(
+    "colors,bpc",
+    [(1, 1), (1, 2), (1, 4), (1, 8), (2, 8), (3, 8), (4, 8), (5, 8),
+     (3, 16), (7, 8), (4, 16), (3, 4), (3, 2), (5, 4)],
+)
+def test_png_unpredict_matches_per_byte_loop(colors, bpc):
+    rng = random.Random(colors * 100 + bpc)
+    for _ in range(60):
+        columns = rng.randrange(1, 14)
+        rowlen = (columns * colors * bpc + 7) // 8
+        data = bytearray()
+        for _ in range(rng.randrange(0, 7)):
+            data.append(rng.randrange(5))
+            data += rng.randbytes(rowlen)
+        data += rng.randbytes(rng.randrange(rowlen + 1))  # partial row
+        data = bytes(data)
+        assert _png_unpredict(data, columns, colors, bpc) == (
+            _png_unpredict_per_byte(data, columns, colors, bpc)
+        )
+
+
+def test_png_unpredict_bad_filter_keeps_census_text():
+    good, bad = b"\x02" + bytes(4), b"\x07" + bytes(4)
+    data = good + bad + b"\x09" + bytes(4)
+    for fn in (_png_unpredict, _png_unpredict_per_byte):
+        with pytest.raises(
+            PdfError, match=r"^unknown PNG predictor filter type 7$"
+        ):
+            fn(data, 4, 1, 8)
 
 
 def test_macroman_encoding():

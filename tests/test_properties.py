@@ -49,7 +49,7 @@ def test_tree_structure_matches_generation(tree):
     html, nodes = tree
     d = DocIndex(html)
     assert d.tag == [t for t, _ in nodes]
-    assert [int(p) for p in d.parent] == [p for _, p in nodes]
+    assert d.parent_l == [p for _, p in nodes]
 
 
 @settings(max_examples=120, deadline=None)
@@ -60,20 +60,20 @@ def test_byte_coverage_roundtrip(tree):
     html, _ = tree
     d = DocIndex(html)
     covered = bytearray(len(html))
-    for s, e in zip(d.tstart, d.tend):
-        for i in range(int(s), int(e)):
+    for s, e in zip(d.tstart_l, d.tend_l):
+        for i in range(s, e):
             covered[i] += 1
     text = "".join(
-        html[int(s):int(e)] for s, e in zip(d.tstart, d.tend)
+        html[s:e] for s, e in zip(d.tstart_l, d.tend_l)
     )
     assert max(covered, default=0) <= 1  # regions never overlap
     assert text == d.text_between(0, len(html))
     # offsets strictly increasing, intervals nested properly
     for i in range(d.n):
-        p = int(d.parent[i])
+        p = d.parent_l[i]
         if p >= 0:
-            assert int(d.start[p]) < int(d.start[i])
-            assert int(d.end[i]) <= int(d.end[p])
+            assert d.start_l[p] < d.start_l[i]
+            assert d.end_l[i] <= d.end_l[p]
 
 
 def _descendants(nodes, i):
@@ -150,7 +150,7 @@ def test_ref_compat_direct_child_is_superset(tree, outer, inner):
             continue
         for ch in d.children_of(x):
             for j in range(d.n):
-                if d.tag[j] == inner and d.start[ch] <= d.start[j] < d.end[ch]:
+                if d.tag[j] == inner and d.start_l[ch] <= d.start_l[j] < d.end_l[ch]:
                     want.add(j)
     assert compat == want
 
@@ -158,22 +158,18 @@ def test_ref_compat_direct_child_is_superset(tree, outer, inner):
 @settings(max_examples=120, deadline=None)
 @given(html_tree())
 def test_docindex_twin_consistency(tree):
-    """Round 6: the tokenizer keeps list + numpy TWINS of every node
-    array plus pre-classified anchor/media/boilerplate ids -- the
-    scalar hot paths read the lists, the vectorized paths the arrays,
-    so any drift between them is silent wrong answers. Pin: twins are
-    element-equal and the classifications match recomputing from tags."""
+    """The tokenizer keeps every node array as a list, with lazy numpy
+    views of cstart/cend only, plus pre-classified anchor/media/
+    boilerplate ids -- the scalar paths read the lists, the boilerplate
+    vector pass the views, so any drift between them is silent wrong
+    answers. Pin: views are element-equal and the classifications match
+    recomputing from tags."""
     from parse_html_spark.tokenizer import BOILER_TAGS, MEDIA_TAGS
 
     html, _ = tree
     d = DocIndex(html)
-    assert d.start.tolist() == d.start_l
-    assert d.end.tolist() == d.end_l
     assert d.cstart.tolist() == d.cstart_l
     assert d.cend.tolist() == d.cend_l
-    assert d.parent.tolist() == d.parent_l
-    assert d.tstart.tolist() == d.tstart_l
-    assert d.tend.tolist() == d.tend_l
     assert d.a_ids == [i for i, t in enumerate(d.tag) if t == "a"]
     assert d.media_ids == [
         i for i, t in enumerate(d.tag) if t in MEDIA_TAGS
@@ -187,7 +183,7 @@ def test_docindex_twin_consistency(tree):
 
 
 def test_docindex_twin_consistency_on_soup():
-    """Same twin/classification pins over adversarial soup (junk
+    """Same view/classification pins over adversarial soup (junk
     closers, orphan tags, anchors/media/boiler tags, stray '<')."""
     import random
 
@@ -218,13 +214,8 @@ def test_docindex_twin_consistency_on_soup():
                     ["<!-- c -->", "<3", "< b", "<div", "</div >", "\t\n"]
                 ))
         d = DocIndex("".join(parts))
-        assert d.start.tolist() == d.start_l
-        assert d.end.tolist() == d.end_l
         assert d.cstart.tolist() == d.cstart_l
         assert d.cend.tolist() == d.cend_l
-        assert d.parent.tolist() == d.parent_l
-        assert d.tstart.tolist() == d.tstart_l
-        assert d.tend.tolist() == d.tend_l
         assert d.a_ids == [i for i, t in enumerate(d.tag) if t == "a"]
         assert d.media_ids == [
             i for i, t in enumerate(d.tag) if t in MEDIA_TAGS

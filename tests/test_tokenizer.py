@@ -65,7 +65,7 @@ def test_node_tree():
     html = '<div id="a"><p>one</p><p>two <b>bold</b></p></div>'
     d = DocIndex(html)
     assert d.tag == ["div", "p", "p", "b"]
-    assert list(d.parent) == [-1, 0, 0, 2]
+    assert d.parent_l == [-1, 0, 0, 2]
     assert d.outer(1) == "<p>one</p>"
     assert d.contents(2) == "two <b>bold</b>"
     assert d.node_text(2) == "two bold"
@@ -124,13 +124,6 @@ def test_text_regions_roundtrip():
     assert d.text_between(0, len(html)) == "pre x mid y post"
 
 
-def test_nodes_in_range():
-    html = "<a>1</a><b>2</b><c>3</c>"
-    d = DocIndex(html)
-    assert list(d.nodes_in_range(0, len(html))) == [0, 1, 2]
-    assert list(d.nodes_in_range(int(d.start[1]), int(d.end[1]))) == [1]
-
-
 def test_trim_html():
     assert trim_html("a  b\n\tc") == "a b c"
     assert trim_html("   ") == ""
@@ -141,7 +134,7 @@ def test_trim_html():
 
 def test_depth():
     d = DocIndex("<a><b><c></c></b></a>")
-    assert list(d.depth) == [0, 1, 2]
+    assert d.depth_l == [0, 1, 2]
 
 
 def test_junk_close_tag_does_not_close():

@@ -33,7 +33,7 @@ def capture(html: str, media) -> dict:
         "cstart": list(d.cstart_l),
         "cend": list(d.cend_l),
         "parent": list(d.parent_l),
-        "depth": [int(x) for x in d.depth],
+        "depth": list(d.depth_l),
         "tstart": list(d.tstart_l),
         "tend": list(d.tend_l),
         "a_ids": list(d.a_ids),
