@@ -5,7 +5,13 @@ Public heuristic lineage: Kohlschuetter et al., "Boilerplate Detection
 using Shallow Text Features" (WSDM 2010) -- link density + text mass;
 re-expressed as vectorized interval arithmetic over the tokenizer's text
 regions (prefix sums + batched searchsorted, O(nodes log regions) per
-document with NO per-node Python in the scoring loop). Container
+document with NO per-node Python in the scoring loop). Node masses need
+no clipping: a text region is a gap between markup tokens, and every
+bound the scorer or the emit asks about -- a node's contents span, a
+pruned subtree's outer span, the container -- is a token boundary, so
+each region lies wholly inside or wholly outside it. A mass is then a
+difference of two prefix sums (``TextMass``), and the emit takes or
+drops whole regions. Container
 descent (rule 2) walks each container's children by sibling jumps --
 ``bisect_left(start_l, end_l[child])`` to the first node past a child,
 then a forward step over nodes whose parent is not the container, which
@@ -40,7 +46,7 @@ from operator import itemgetter
 
 import numpy as np
 
-from .tokenizer import BOILER_TAGS, MEDIA_TAGS, DocIndex, trim_html
+from .tokenizer import _TRIM_RE, BOILER_TAGS, MEDIA_TAGS, DocIndex
 
 DESCEND_FRACTION = 0.7
 LINK_DENSITY_MAX = 0.65
@@ -50,43 +56,33 @@ _EMPTY = np.zeros(0, dtype=np.int64)
 
 
 def _prefix_sum(lengths):
-    """[0, l0, l0+l1, ...]: the prefix sums _mass_many indexes."""
+    """[0, l0, l0+l1, ...]: the prefix sums the masses index."""
     cum = np.zeros(len(lengths) + 1, dtype=np.int64)
     lengths.cumsum(out=cum[1:])  # method form: no dispatch wrapper
     return cum
 
 
-def _mass_many(starts, ends, cum, lo, hi):
-    """Vectorized: total covered length of [lo_i, hi_i) against the
-    sorted disjoint regions (starts, ends) with prefix sums cum."""
-    lo = np.asarray(lo, dtype=np.int64)
-    hi = np.asarray(hi, dtype=np.int64)
-    if len(starts) == 0:
-        return np.zeros(len(lo), dtype=np.int64)
-    # ndarray method form skips the np.searchsorted dispatch wrapper
-    a = ends.searchsorted(lo, side="right")
-    b = starts.searchsorted(hi, side="left")
-    valid = b > a
-    a_c = np.minimum(a, len(starts) - 1)
-    b_c = np.maximum(b - 1, 0)
-    total = cum[b] - cum[a]
-    left = np.maximum(0, lo - starts[a_c])
-    right = np.maximum(0, ends[b_c] - hi)
-    out = np.where(valid, total - left - right, 0)
-    return np.maximum(out, 0)
-
-
 class TextMass:
-    """Batched prefix-sum index over text regions + top-level anchors."""
+    """Prefix sums over the text regions: all text (``cum``) and the text
+    inside top-level anchors (``acum``), indexed by region number.
+
+    Every bound the scorer asks about is a token boundary -- a node's
+    contents span, a container (one of those, or the whole document) --
+    and a text region is a gap between tokens, so no region straddles a
+    bound. The mass of ``[lo, hi)`` is therefore a prefix difference over
+    the regions that START in it, with no clipping of the end regions:
+    ``cum[ts.searchsorted(hi)] - cum[ts.searchsorted(lo)]``. The same
+    holds for a top-level anchor's contents, so each region is wholly
+    anchor text or not, and ``acum`` is the prefix sum of the flagged
+    region lengths."""
 
     def __init__(self, doc: DocIndex):
         self.doc = doc
         # the only place text regions become numpy: DocIndex keeps them
         # as lists, and the selector paths never pay for these vectors
-        ts_l, te_l = doc.tstart_l, doc.tend_l
-        self.ts = ts = np.asarray(ts_l, dtype=np.int64)
-        self.te = te = np.asarray(te_l, dtype=np.int64)
-        self.cum = _prefix_sum(te - ts)
+        self.ts = ts = np.asarray(doc.tstart_l, dtype=np.int64)
+        lengths = np.asarray(doc.tend_l, dtype=np.int64) - ts
+        self.cum = _prefix_sum(lengths)
 
         # top-level <a> nodes: in doc order, an <a> is top-level iff it
         # starts at/after the end of the previous top-level <a> (nested
@@ -94,52 +90,39 @@ class TextMass:
         # from the tokenizer pass
         start_l = doc.start_l
         end_l = doc.end_l
+        cstart_l = doc.cstart_l
+        cend_l = doc.cend_l
         top: list[int] = []
+        bounds: list[int] = []
         cur_end = -1
         for i in doc.a_ids:
             if start_l[i] >= cur_end:
                 top.append(i)
+                bounds.append(cstart_l[i])
+                bounds.append(cend_l[i])
                 cur_end = end_l[i]
         self.top_anchors = top
         if top:
             self.anchor_starts = np.asarray(
                 [start_l[i] for i in top], dtype=np.int64
             )
-            # anchor text regions = text regions clipped to anchor
-            # contents (anchors per doc are few: scalar bisect over the
-            # lists beats numpy dispatch here)
-            ats_l: list[int] = []
-            ate_l: list[int] = []
-            cstart_l = doc.cstart_l
-            cend_l = doc.cend_l
-            for i in top:
-                alo = cstart_l[i]
-                ahi = cend_l[i]
-                a_k = bisect.bisect_right(te_l, alo)
-                b_k = bisect.bisect_left(ts_l, ahi)
-                for k in range(a_k, b_k):
-                    s_c = ts_l[k]
-                    e_c = te_l[k]
-                    if s_c < alo:
-                        s_c = alo
-                    if e_c > ahi:
-                        e_c = ahi
-                    if e_c > s_c:
-                        ats_l.append(s_c)
-                        ate_l.append(e_c)
-            self.ats = np.asarray(ats_l, dtype=np.int64)
-            self.ate = np.asarray(ate_l, dtype=np.int64)
+            # region k is anchor text iff an odd number of the sorted
+            # (contents start, contents end) region indices are <= k
+            # (top-level anchors are disjoint, so the bounds alternate)
+            n_reg = len(ts)
+            edges = ts.searchsorted(bounds)
+            inside = np.bincount(edges, minlength=n_reg + 1).cumsum()[:n_reg] & 1
+            self.acum = _prefix_sum(lengths * inside)
         else:
             self.anchor_starts = _EMPTY
-            self.ats = _EMPTY
-            self.ate = _EMPTY
-        self.acum = _prefix_sum(self.ate - self.ats)
+            self.acum = np.zeros(len(ts) + 1, dtype=np.int64)
 
-    def text_len_many(self, lo, hi):
-        return _mass_many(self.ts, self.te, self.cum, lo, hi)
-
-    def anchor_len_many(self, lo, hi):
-        return _mass_many(self.ats, self.ate, self.acum, lo, hi)
+    def masses(self, lo, hi):
+        """(text_len, anchor_len) of token-bounded ranges [lo_i, hi_i)."""
+        ts = self.ts
+        a = ts.searchsorted(lo)
+        b = ts.searchsorted(hi)
+        return self.cum[b] - self.cum[a], self.acum[b] - self.acum[a]
 
     def anchors_in_many(self, lo, hi):
         a_s = self.anchor_starts
@@ -149,15 +132,13 @@ class TextMass:
 
 
 def node_masses(doc: DocIndex, tm: TextMass):
-    """Per-node (text_len, anchor_len) over contents spans, computed in
-    TWO vectorized passes for the whole document (round-8 profiling: the
-    container descent + prune pass together issued ~60 scalar bisect
-    masses per doc; one batched pass serves both consumers)."""
+    """Per-node (text_len, anchor_len) over contents spans: two prefix
+    differences for the whole document (round-8 profiling: the container
+    descent + prune pass together issued ~60 scalar bisect masses per
+    doc; one batched pass serves both consumers)."""
     if doc.n == 0:
         return _EMPTY, _EMPTY
-    cs = doc.cstart
-    ce = doc.cend
-    return tm.text_len_many(cs, ce), tm.anchor_len_many(cs, ce)
+    return tm.masses(doc.cstart, doc.cend)
 
 
 def find_main_container(
@@ -263,104 +244,134 @@ def pruned_ranges(
     return out
 
 
-def main_content_spans(
+def main_content_columns(
     doc: DocIndex,
     media_positions: list[tuple[int, str]] | None = None,
-) -> list[tuple[str, str, str | None]]:
-    """Ordered output spans (kind, text, media_ref) for one document."""
+) -> tuple[list[bool], list[str], list[str | None]]:
+    """Ordered output spans of one document (rule 4) as the three compact
+    columns ``(is_media, texts, media_refs)``.
+
+    The text pieces are the container's text regions minus those inside
+    pruned subtrees -- container and pruned bounds are token boundaries,
+    so each region is wholly in or out -- split at the input-media
+    positions strictly inside a kept region, then trimmed and filtered.
+    Media (unpruned img/embed nodes in the container, then input media,
+    each in position order) merge in by position: a media span precedes a
+    text piece that starts at or after it, and at one position node media
+    precede input media."""
     tm = TextMass(doc)
     tl_all, al_all = node_masses(doc, tm)
     m_all = (tl_all - al_all).tolist()
     lo, hi = find_main_container(doc, tm, m_all)
     pruned = pruned_ranges(doc, tm, lo, hi, tl_all, al_all)
+    ts_l, te_l = doc.tstart_l, doc.tend_l
+    bisect_left = bisect.bisect_left
+
+    # kept regions: [a, b) less the region runs of the pruned subtrees
+    # (a pruned subtree may outlive the container: the runs cap at b)
+    a = bisect_left(ts_l, lo)
+    b = bisect_left(ts_l, hi, a)
+    if pruned:
+        starts: list[int] = []
+        ends: list[int] = []
+        for ps, pe in pruned:
+            k = bisect_left(ts_l, ps, a, b)
+            starts += ts_l[a:k]
+            ends += te_l[a:k]
+            a = bisect_left(ts_l, pe, k, b)
+        starts += ts_l[a:b]
+        ends += te_l[a:b]
+    else:
+        starts = ts_l[a:b]
+        ends = te_l[a:b]
+
     plo = [p[0] for p in pruned]
 
     def in_pruned(pos: int) -> bool:
         k = bisect.bisect_right(plo, pos) - 1
         return k >= 0 and pos < pruned[k][1]
 
-    events: list[tuple[int, int, str, str, str | None]] = []
-    # input media spans split text regions: the interleaved sequence must
-    # keep text-before / media / text-after as separate output spans.
-    # Breaks (pruned ranges + zero-width media cuts) are merged ONCE per
-    # document instead of sorted(pruned + cuts) per text region (round-7
-    # profiling): out-of-region breaks are no-ops under the same skip
-    # rules the per-region sort obeyed (a cut at pos==s advances nothing,
-    # ps >= e terminates the sorted scan), so one monotone pointer over
-    # the merged list reproduces the per-region behavior exactly.
-    ts_l, te_l = doc.tstart_l, doc.tend_l
-    a = bisect.bisect_right(te_l, lo)
-    b = bisect.bisect_left(ts_l, hi)
-    if media_positions:
-        breaks = sorted(pruned + [(p, p) for p, _ in media_positions])
-    else:
-        breaks = pruned  # already sorted, disjoint
-    nb = len(breaks)
-    gi = 0  # breaks before gi have pe <= every later region start: dead
-    html = doc.html
-    for k in range(a, b):
-        s = ts_l[k]
-        if s < lo:
-            s = lo
-        e = te_l[k]
-        if e > hi:
-            e = hi
-        if e <= s:
-            continue
-        pos = s
-        while gi < nb and breaks[gi][1] <= s:
-            gi += 1
-        for bi in range(gi, nb):
-            ps, pe = breaks[bi]
-            if ps >= e:
-                break  # sorted by ps: no later break can intersect
-            if pe < pos:
-                continue
-            if ps > pos:
-                # inlined trim_html fast path: a large share of pieces
-                # are single chars (no 2+ whitespace run possible), so
-                # skip the call and regex entirely for len < 2
-                t = html[pos:ps]
-                if len(t) < 2:
-                    if t and not t.isspace():
-                        events.append((pos, 1, "text", t, None))
-                else:
-                    t = trim_html(t)
-                    if t:
-                        events.append((pos, 1, "text", t, None))
-            if pe > pos:
-                pos = pe
-        if pos < e:
-            t = html[pos:e]
-            if len(t) < 2:
-                if t and not t.isspace():
-                    events.append((pos, 1, "text", t, None))
-            else:
-                t = trim_html(t)
-                if t:
-                    events.append((pos, 1, "text", t, None))
-    # media nodes (img/embed) inside the container, unpruned; priority 0:
-    # an input media span at a text boundary precedes the following text.
+    media: list[tuple[int, str]] = []
     # img/embed ids come pre-classified from the tokenizer pass (sorted
     # in doc order), so only actual media nodes are visited
     if doc.media_ids:
         start_l = doc.start_l
-        a0 = bisect.bisect_left(start_l, lo)
-        b0 = bisect.bisect_left(start_l, hi)
-        m_lo = bisect.bisect_left(doc.media_ids, a0)
-        m_hi = bisect.bisect_left(doc.media_ids, b0)
+        a0 = bisect_left(start_l, lo)
+        b0 = bisect_left(start_l, hi)
+        m_lo = bisect_left(doc.media_ids, a0)
+        m_hi = bisect_left(doc.media_ids, b0)
         for j in doc.media_ids[m_lo:m_hi]:
             s_j = start_l[j]
             if not in_pruned(s_j):
                 attrs = doc.attrs(j)
-                ref = attrs.get("src") or attrs.get("data-src") or ""
-                events.append((s_j, 0, "media", "", ref))
+                media.append((s_j, attrs.get("src") or attrs.get("data-src") or ""))
     if media_positions:
-        for pos, ref in media_positions:
+        # a cut strictly inside a kept region splits it: it ends one
+        # piece and starts the next (pieces are disjoint and sorted, so
+        # the merged start and end lists pair up again)
+        cuts = set()
+        for pos, _ref in media_positions:
+            k = bisect.bisect_right(starts, pos) - 1
+            if k >= 0 and pos < ends[k] and pos > starts[k]:
+                cuts.add(pos)
+        if cuts:
+            starts = sorted(starts + list(cuts))
+            ends = sorted(ends + list(cuts))
+        inputs = [
+            (pos, ref)
+            for pos, ref in media_positions
             # inclusive upper bound: media exactly at the container's
             # content end still belongs to the document tail
-            if lo <= pos <= hi and not in_pruned(pos):
-                events.append((pos, 0, "media", "", ref))
-    # C-level key; same (pos, priority) ordering, same stability
-    events.sort(key=itemgetter(0, 1))
-    return [(kind, text, ref) for _, _, kind, text, ref in events]
+            if lo <= pos <= hi and not in_pruned(pos)
+        ]
+        if inputs:
+            # stable: at one position node media (listed first) precede
+            # input media, and input media keep their given order
+            media = sorted(media + inputs, key=itemgetter(0))
+
+    # trim_html, inlined: a piece with a non-space character survives
+    # the whitespace collapse, so the test runs on the raw piece and the
+    # regex runs only on pieces that are kept and can hold a 2+ run
+    html = doc.html
+    sub = _TRIM_RE.sub
+    texts: list[str] = []
+    tpos: list[int] = []
+    for s, e in zip(starts, ends):
+        t = html[s:e]
+        if not t.isspace():
+            texts.append(sub(" ", t) if e - s > 1 else t)
+            tpos.append(s)
+    if not media:
+        n = len(texts)
+        return [False] * n, texts, [None] * n
+    # each media span goes before the first text piece at/after it
+    is_media: list[bool] = []
+    out: list[str] = []
+    refs: list[str | None] = []
+    j = 0
+    for pos, ref in media:
+        k = bisect_left(tpos, pos, j)
+        out += texts[j:k]
+        out.append("")
+        is_media += [False] * (k - j)
+        is_media.append(True)
+        refs += [None] * (k - j)
+        refs.append(ref)
+        j = k
+    n = len(texts)
+    out += texts[j:]
+    is_media += [False] * (n - j)
+    refs += [None] * (n - j)
+    return is_media, out, refs
+
+
+def main_content_spans(
+    doc: DocIndex,
+    media_positions: list[tuple[int, str]] | None = None,
+) -> list[tuple[str, str, str | None]]:
+    """Ordered output spans (kind, text, media_ref) for one document: the
+    row view of main_content_columns."""
+    is_media, texts, refs = main_content_columns(doc, media_positions)
+    return [
+        ("media" if m else "text", t, r) for m, t, r in zip(is_media, texts, refs)
+    ]

@@ -37,33 +37,90 @@ def _keep(text: str) -> bool:
     return text != "" and text != "0"  # PHP empty() drops '' and '0'
 
 
-def extract_node(doc: DocIndex, i: int, prune_tag: str | None = None):
-    """{t,a,c} tree of node i; children with tag == prune_tag are removed
-    with their gaps merged (str_replace semantics)."""
-    if doc.is_bare(i):
-        return doc.outer(i)
+def _walk(doc: DocIndex, root: int, prune_tag: str | None, val_only: bool):
+    """The one extract() walk, iterative, so nesting depth never meets
+    the recursion limit.
+
+    Builds the {t,a,c} tree of node ``root``, or with ``val_only`` its
+    extractValueOnly collapse directly: each node's children collapse as
+    the walk leaves it, and no attribute is parsed. Children with tag ==
+    prune_tag are removed with their gaps merged (str_replace
+    semantics).
+
+    The walk visits root's descendants in node order, which is
+    pre-order, with the open nodes on a stack: a node whose parent is
+    the current node is its next child; any other node ends the current
+    node, except one below a pruned child, which is skipped. Root's
+    descendants are the contiguous ids after it, so the walk stops at the
+    first node outside them and needs no children index."""
+    if doc.is_bare(root):
+        return doc.outer(root)
     html = doc.html
+    tag = doc.tag
+    parent_l = doc.parent_l
+    start_l, end_l = doc.start_l, doc.end_l
+    cstart_l, cend_l = doc.cstart_l, doc.cend_l
+    n = doc.n
+    # the current node, the start of its open gap and its child values;
+    # the gap buffer is flushed before each descent, so it is empty
+    # whenever the walk returns to a parent
+    node, pos, c = root, cstart_l[root], []
+    stack: list[tuple[int, int, list]] = []
+    pruned: set[int] = set()
     buf = ""
-    c: list = []
-    # list twins, not numpy element access: scalar indexing on the lazy
-    # arrays boxes per access and forces the conversion (round-8 pass)
-    pos = doc.cstart_l[i]
-    for ch in doc.children_of(i):
-        buf += html[pos:doc.start_l[ch]]
-        if prune_tag is not None and doc.tag[ch] == prune_tag:
-            pos = doc.end_l[ch]
+    j = root + 1
+    while True:
+        p = parent_l[j] if j < n else -1
+        if p == node:
+            buf += html[pos:start_l[j]]
+            pos = end_l[j]
+            if prune_tag is not None and tag[j] == prune_tag:
+                pruned.add(j)
+            else:
+                t = trim_html(buf)
+                buf = ""
+                if _keep(t):
+                    c.append(t)
+                if pos == cstart_l[j]:  # bare child: its start tag
+                    c.append(html[start_l[j]:pos])
+                else:
+                    stack.append((node, pos, c))
+                    node, pos, c = j, cstart_l[j], []
+            j += 1
             continue
-        t = trim_html(buf)
+        if p in pruned:
+            pruned.add(j)
+            j += 1
+            continue
+        # j is outside the current node: the node is complete
+        t = trim_html(buf + html[pos:cend_l[node]])
         buf = ""
         if _keep(t):
             c.append(t)
-        c.append(extract_node(doc, ch, prune_tag))
-        pos = doc.end_l[ch]
-    buf += html[pos:doc.cend_l[i]]
-    t = trim_html(buf)
-    if _keep(t):
-        c.append(t)
-    return {"t": doc.tag[i], "a": dict(doc.attrs(i)), "c": c}
+        if not val_only:
+            value = {"t": tag[node], "a": dict(doc.attrs(node)), "c": c}
+        elif not c:
+            value = ""
+        elif len(c) == 1:
+            value = c[0]
+        else:
+            value = c
+        if not stack:
+            return value
+        node, pos, c = stack.pop()
+        c.append(value)
+
+
+def extract_node(doc: DocIndex, i: int, prune_tag: str | None = None):
+    """{t,a,c} tree of node i; children with tag == prune_tag are removed
+    with their gaps merged (str_replace semantics)."""
+    return _walk(doc, i, prune_tag, False)
+
+
+def _extracts(doc: DocIndex) -> bool:
+    """The reference's extract($element) condition on a whole document:
+    it starts with a start tag that has a matching end tag [:52-56]."""
+    return bool(doc.n) and doc.start_l[0] == 0 and not doc.is_bare(0)
 
 
 def extract_html(html: str):
@@ -71,9 +128,7 @@ def extract_html(html: str):
     start with a start tag and have a matching end tag, else it is
     returned unchanged [:52-56]."""
     doc = DocIndex(html)
-    if doc.n and doc.start_l[0] == 0 and not doc.is_bare(0):
-        return extract_node(doc, 0)
-    return html
+    return extract_node(doc, 0) if _extracts(doc) else html
 
 
 def value_only(tree) -> object:
@@ -111,8 +166,11 @@ def _selection_elements(sel: PH) -> list[tuple[DocIndex, int | None]]:
 
 
 def _extract_one(doc: DocIndex, node: int | None, val_only: bool):
-    tree = extract_html(doc.html) if node is None else extract_node(doc, node)
-    return value_only(tree) if val_only else tree
+    if node is None:
+        if not _extracts(doc):
+            return doc.html
+        node = 0
+    return _walk(doc, node, None, val_only)
 
 
 def extract_element(sel: PH, val_only: bool = False):
@@ -147,16 +205,10 @@ def extract_table_list(sel: PH, val_only: bool = False) -> list:
         else:
             lo, hi = d.start_l[node], d.end_l[node]
         tables.update(dict.fromkeys(_match_in_range(d, table, lo, hi)))
-    trees = [extract_node(sel.doc, t, prune_tag="table") for t in tables]
-    return [value_only(t) for t in trees] if val_only else trees
+    return [_walk(sel.doc, t, "table", val_only) for t in tables]
 
 
 # -- forms ---------------------------------------------------------------
-
-def _next_int_key(d: dict) -> int:
-    ints = [k for k in d if isinstance(k, int)]
-    return max(ints) + 1 if ints else 0
-
 
 def insert_nested(storage: dict, name: str, value) -> None:
     """PHP-style nested names: a[b][0][], '' segments auto-index
@@ -181,28 +233,41 @@ def insert_nested(storage: dict, name: str, value) -> None:
     parent[last] = value
 
 
-def merge_recursive(a: dict, b: dict) -> dict:
-    """PHP array_merge_recursive: string keys recurse / scalars pair up
-    into lists; integer keys append with renumbering."""
-    out = dict(a)
+def merge_recursive(out: dict, b: dict, next_keys: dict) -> None:
+    """PHP array_merge_recursive(out, b), written into ``out``: string
+    keys recurse / scalars pair up into lists; integer keys append with
+    renumbering. ``next_keys`` maps id(d) -> the next integer key of a
+    dict d inside ``out``, so an append costs O(1) after one scan of d:
+    merging n controls is linear, not quadratic. Dicts of ``b`` become
+    part of ``out`` and are merged into later, so ``b`` is used once."""
     for k, v in b.items():
         if isinstance(k, int):
-            out[_next_int_key(out)] = v
+            _append(out, v, next_keys)
         elif k not in out:
             out[k] = v
         else:
             old = out[k]
-            if isinstance(old, dict) and isinstance(v, dict):
-                out[k] = merge_recursive(old, v)
-            elif isinstance(old, dict):
-                nd = dict(old)
-                nd[_next_int_key(nd)] = v
-                out[k] = nd
+            if isinstance(old, dict):
+                if isinstance(v, dict):
+                    merge_recursive(old, v, next_keys)
+                else:
+                    _append(old, v, next_keys)
             elif isinstance(v, dict):
-                out[k] = merge_recursive({0: old}, v)
+                nd = {0: old}
+                merge_recursive(nd, v, next_keys)
+                out[k] = nd
             else:
                 out[k] = {0: old, 1: v}
-    return out
+
+
+def _append(d: dict, v, next_keys: dict) -> None:
+    """d[] = v: the key after the largest integer key, else 0. d stays
+    alive inside the merged storage, so its id is never reused."""
+    k = next_keys.get(id(d))
+    if k is None:
+        k = max((j for j in d if isinstance(j, int)), default=-1) + 1
+    d[k] = v
+    next_keys[id(d)] = k + 1
 
 
 def to_plain(value):
@@ -229,6 +294,7 @@ def extract_form(sel: PH, selector: str | None = None) -> dict:
     controls = sel.find(selector)
     doc = controls.doc
     storage: dict = {}
+    next_keys: dict[int, int] = {}
     if doc is None:
         return storage
     for n in controls.nodes:  # already in position order (ksort pin)
@@ -251,7 +317,7 @@ def extract_form(sel: PH, selector: str | None = None) -> dict:
             value = attrs.get("value")
         piece: dict = {}
         insert_nested(piece, name, value)
-        storage = merge_recursive(storage, piece)
+        merge_recursive(storage, piece, next_keys)
     return storage
 
 

@@ -24,7 +24,7 @@ from operator import itemgetter
 import numpy as np
 from pyspark.sql import functions as F
 
-from .boilerplate import main_content_spans
+from .boilerplate import main_content_columns
 from .dom import PH
 from .extract import extract_form, extract_table_list, prepare_post_form, to_plain
 from .matcher import find_nodes
@@ -110,12 +110,8 @@ COMPACT_SPAN_SCHEMA = (
 
 
 def _compact_doc(doc, media):
-    spans = main_content_spans(doc, media)
-    return {
-        "is_media": [[k == "media" for k, _t, _r in spans]],
-        "texts": [[t for _k, t, _r in spans]],
-        "media_refs": [[r for _k, _t, r in spans]],
-    }
+    is_media, texts, media_refs = main_content_columns(doc, media)
+    return {"is_media": [is_media], "texts": [texts], "media_refs": [media_refs]}
 
 
 def extract_spans_compact(df):

@@ -24,6 +24,18 @@ Semantics pinned to the reference (SURVEY.md section 2.11):
 - orphan close tags are markup (not text regions, not nodes); they still
   surface verbatim inside extract() gap text, as in the reference;
 - 16 void tags never take contents [:1419-1426].
+
+The loop reads one token per turn, with one exception: a leaf element
+``<name ...>text</name>`` (text without ``<``, the closer exactly
+``</name>`` in the same case) is ONE token of the loop pattern
+(``_LOOP_RE``), so it records its node, text region and closure without
+a stack push or pop -- the tag-by-tag loop gives the same arrays, as a
+leaf's closer always pops the leaf itself. A void name stays a bare node
+with an orphan closer (``<br>x</br>``). The trap is backtracking: every
+quantifier of the grammar is possessive (``*+``), because with a greedy
+name ``<bx>t</b>`` would retry the name as ``b`` and match a leaf that
+does not exist. ``TOKEN_RE`` stays the plain markup-token grammar that
+counts tokens.
 """
 
 from __future__ import annotations
@@ -69,17 +81,30 @@ TAG_FLAGS: dict[str, int] = {
     for t in (KNOWN_TAGS | VOID_TAGS | BOILER_TAGS | {"a", *MEDIA_TAGS})
 }
 
-# Alternatives are mutually exclusive on their first character (letter /
-# '/' / '!?'), so ordering is free: the open-tag branch goes first (most
-# frequent on real pages) and only the two tag names are captured --
-# fewer group registers for the C engine to track per token.
-# lastindex: 1 = open tag, 2 = close tag, None = <!...> / <?...> special.
-TOKEN_RE = re.compile(
-    r"<(?:"
-    r"([a-zA-Z][a-zA-Z0-9]*)[^>]*"
-    r"|/([a-zA-Z][a-zA-Z0-9]*)[^>]*"
-    r"|[!?][^>]*"
-    r")>"
+# The markup-token grammar. Its alternatives are mutually exclusive on
+# their first character (letter / '/' / '!?'), so ordering is free: the
+# open-tag branch goes first (most frequent on real pages) and only the
+# two tag names are captured -- fewer group registers for the C engine
+# to track per token. Every quantifier is possessive: a name or an
+# attribute run never gives characters back (see _LOOP_RE for why that
+# matters). lastindex: 1 = open tag, 2 = close tag, None = <!...> / <?...>.
+_OPEN = r"([a-zA-Z][a-zA-Z0-9]*+)[^>]*+"
+_CLOSE = r"/([a-zA-Z][a-zA-Z0-9]*+)[^>]*+"
+_SPECIAL = r"[!?][^>]*+"
+TOKEN_RE = re.compile(rf"<(?:{_OPEN}|{_CLOSE}|{_SPECIAL})>")
+
+# The DocIndex loop's pattern: TOKEN_RE's alternatives behind one more,
+# the leaf element ``<name ...>text</name>`` -- text without '<', closed
+# by the exact, same-case ``</name>`` -- matched as ONE token, so a leaf
+# costs one loop turn and no stack push/pop. The possessive name is what
+# makes it exact: with a backtracking name, ``<bx>t</b>`` would retry
+# the name as ``b`` (``x`` becoming an attribute) and match a leaf the
+# tag-by-tag loop never builds. An open tag that is not a leaf fails the
+# leaf branch at its first '<' and falls through to TOKEN_RE's branches.
+# lastindex: 2 = leaf (group 1 name, group 2 text), 3 = open tag,
+# 4 = close tag, None = special.
+_LOOP_RE = re.compile(
+    rf"<(?:{_OPEN}>([^<]*+)</\1|{_OPEN}|{_CLOSE}|{_SPECIAL})>"
 )
 
 _ATTR_FORBIDDEN = re.compile(r"[\"'>/=\s]")
@@ -202,19 +227,19 @@ class DocIndex:
         # via a token_spans tuple list + second pass; anchor / media /
         # boilerplate node classification done here (set lookups per
         # open tag) so the scorer never rebuilds them per document.
-        # Round 7: ends/cends writes are deferred -- the token loop only
-        # records (idx, close_start, close_end) per matched closer and
-        # the final arrays are built from one st_ends copy + the closure
-        # list, keeping the per-token body to the minimum op count.
+        # A leaf token appends its final outer/contents ends at once; an
+        # open tag appends its start-tag end to both, and a matching
+        # closer overwrites them in place.
         tstart: list[int] = []
         tend: list[int] = []
         a_ids: list[int] = []
         media_ids: list[int] = []
         boiler_l: list[bool] = []
-        closures: list[tuple[int, int, int]] = []
+        ends: list[int] = []
+        cends: list[int] = []
 
-        # hot loop: local bindings + positional groups (group 1=open-tag
-        # name, 2=close-tag name); ~200 tokens/doc on the bench mix
+        # hot loop: local bindings + positional groups (see _LOOP_RE);
+        # ~200 tokens/doc on the bench mix
         tags_append = tags.append
         starts_append = starts.append
         st_ends_append = st_ends.append
@@ -223,23 +248,34 @@ class DocIndex:
         a_append = a_ids.append
         media_append = media_ids.append
         boiler_append = boiler_l.append
-        closures_append = closures.append
+        ends_append = ends.append
+        cends_append = cends.append
         get_stack = open_stacks.get
         flags_get = TAG_FLAGS.get
         pos = 0
-        for m in TOKEN_RE.finditer(html):
+        for m in _LOOP_RE.finditer(html):
             s_tok, e_tok = m.span()
             if s_tok > pos:
                 tstart_append(pos)
                 tend_append(s_tok)
             pos = e_tok
-            last = m.lastindex  # 1=open, 2=close, None=special
-            if last == 1:
-                lname = m[1].lower()
+            last = m.lastindex  # 2=leaf, 3=open, 4=close, None=special
+            if last == 2 or last == 3:
+                if last == 2:
+                    # leaf: text region and closure in this one turn;
+                    # the closer is exact by construction of _LOOP_RE
+                    lname = m[1].lower()
+                    st_end, c_s = m.span(2)
+                    if c_s > st_end:
+                        tstart_append(st_end)
+                        tend_append(c_s)
+                else:
+                    lname = m[3].lower()
+                    st_end = e_tok
                 idx = len(tags)
                 tags_append(lname)
                 starts_append(s_tok)
-                st_ends_append(e_tok)
+                st_ends_append(st_end)
                 fl = flags_get(lname, 0)
                 boiler_append(fl & 1)
                 if fl & 12:
@@ -247,24 +283,38 @@ class DocIndex:
                         a_append(idx)
                     else:
                         media_append(idx)
-                if not fl & 2:
-                    stack = get_stack(lname)
-                    if stack is None:
-                        open_stacks[lname] = [idx]
-                    else:
-                        stack.append(idx)
-            elif last == 2:
+                if last == 3:
+                    # a bare start tag until a closer pops it
+                    ends_append(e_tok)
+                    cends_append(e_tok)
+                    if not fl & 2:
+                        stack = get_stack(lname)
+                        if stack is None:
+                            open_stacks[lname] = [idx]
+                        else:
+                            stack.append(idx)
+                elif fl & 2:
+                    # a void leaf (<br>x</br>) stays a bare node and its
+                    # closer an orphan, as the tag-by-tag loop leaves them
+                    ends_append(st_end)
+                    cends_append(st_end)
+                else:
+                    ends_append(e_tok)
+                    cends_append(c_s)
+            elif last == 4:
                 # Only an EXACT '</name>' closes: the reference's
                 # constructElement searches the literal closer with
                 # stripos [:1571-1580], so '</div >' / '</div x>' close
                 # nothing (the element stays a bare start tag) -- but
                 # they are still markup tokens (strip_tags removes them
                 # from text). Exact form <=> token length == len(name)+3.
-                cname = m[2]
+                cname = m[4]
                 if e_tok - s_tok == len(cname) + 3:
                     stack = get_stack(cname.lower())
                     if stack:
-                        closures_append((stack.pop(), s_tok, e_tok))
+                        idx = stack.pop()
+                        ends[idx] = e_tok
+                        cends[idx] = s_tok
                 # orphan/junk close tag: markup only
         if pos < len(html):
             tstart_append(pos)
@@ -273,15 +323,9 @@ class DocIndex:
         n = len(tags)
         self.n = n
         self.tag = tags
-        # element outer end / contents end: == st_end (bare start tag)
-        # until a matching closer was recorded. A closer always starts
-        # at/after its open tag's end (tokens are disjoint and
-        # increasing), so cend >= cstart by construction.
-        ends = st_ends.copy()
-        cends = st_ends.copy()
-        for idx, c_s, c_e in closures:
-            ends[idx] = c_e
-            cends[idx] = c_s
+        # element outer end / contents end: == st_end for a bare start
+        # tag. A closer always starts at/after its open tag's end (tokens
+        # are disjoint and increasing), so cend >= cstart by construction.
         self.start_l = starts
         self.end_l = ends
         self.cstart_l = st_ends
@@ -293,19 +337,25 @@ class DocIndex:
         self.media_ids = media_ids
         self.boiler_l = boiler_l
 
-        # parent pointers via interval stack (nodes are in start order);
-        # plain-int lists, converted once (per-element numpy writes were
-        # a measured hot spot)
-        parent_l = [-1] * n
-        stack: list[int] = []
-        for i in range(n):
-            s_i = starts[i]
-            while stack and ends[stack[-1]] <= s_i:
+        # parent pointers via interval stack (nodes are in start order),
+        # with the open ends kept beside the ids and a sentinel that no
+        # node start reaches. Only a node that the NEXT node starts
+        # inside can own children, so leaves and bare tags are never
+        # pushed just to be popped.
+        parent_l: list[int] = []
+        parent_append = parent_l.append
+        stack = [-1]
+        stack_end = [len(html)]
+        nexts = starts[1:]
+        nexts.append(len(html))
+        for i, s_i, e_i, s_next in zip(range(n), starts, ends, nexts):
+            while stack_end[-1] <= s_i:
                 stack.pop()
-            if stack:
-                parent_l[i] = stack[-1]
-            if ends[i] > st_ends[i]:  # only containers can own children
+                stack_end.pop()
+            parent_append(stack[-1])
+            if s_next < e_i:
                 stack.append(i)
+                stack_end.append(e_i)
         self.parent_l = parent_l
         self._depth_l = None
         self._children: list | None = None

@@ -1,5 +1,13 @@
 """Structural-extractor goldens transcribed verbatim from
-/root/reference/src/ParseHTMLAdvanced.php docblocks."""
+/root/reference/src/ParseHTMLAdvanced.php docblocks, plus the bounds
+that keep one hostile page from failing a task: form merging linear in
+its controls, value-only tables at any cell depth."""
+
+import json
+import time
+
+import hypothesis.strategies as st
+from hypothesis import given, settings
 
 from parse_html_spark.dom import PH
 from parse_html_spark.extract import (
@@ -7,9 +15,13 @@ from parse_html_spark.extract import (
     extract_form,
     extract_html,
     extract_table,
+    extract_table_list,
+    insert_nested,
     prepare_post_form,
     to_plain,
 )
+from parse_html_spark.pipeline import _page_doc
+from parse_html_spark.tokenizer import DocIndex
 
 
 def test_extract_docblock_iwan_fals():
@@ -233,3 +245,100 @@ def test_select_without_valued_options_is_null():
 
     doc = '<select name="s"><option>x</option><option>y</option></select>'
     assert to_plain(extract_form(PH(doc))) == {"s": None}
+
+
+# -- form merging: linear, and byte-identical to the copying merge ----------
+
+def _next_int_key(d: dict) -> int:
+    ints = [k for k in d if isinstance(k, int)]
+    return max(ints) + 1 if ints else 0
+
+
+def _merge_by_copy(a: dict, b: dict) -> dict:
+    """array_merge_recursive as first written: a fresh dict per merge and
+    a key scan per append (quadratic in the number of controls)."""
+    out = dict(a)
+    for k, v in b.items():
+        if isinstance(k, int):
+            out[_next_int_key(out)] = v
+        elif k not in out:
+            out[k] = v
+        else:
+            old = out[k]
+            if isinstance(old, dict) and isinstance(v, dict):
+                out[k] = _merge_by_copy(old, v)
+            elif isinstance(old, dict):
+                nd = dict(old)
+                nd[_next_int_key(nd)] = v
+                out[k] = nd
+            elif isinstance(v, dict):
+                out[k] = _merge_by_copy({0: old}, v)
+            else:
+                out[k] = {0: old, 1: v}
+    return out
+
+
+FORM_NAMES = ["a", "a[]", "a[b]", "a[b][]", "a[0]", "a[2]", "a[][c]", "0", "5", "b[x][y]", "a[b][0]"]
+# control kind -> (html after the name, the value extract_form reads)
+FORM_CONTROLS = {
+    "v": (' value="v">', "v"),
+    "empty": (' value="">', ""),
+    "bare": (">", None),
+    "select": ('><option value="o">o</option><option value="p"></select>', {0: "o", 1: "p"}),
+    "select_none": ("><option>o</option></select>", None),
+}
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(st.sampled_from(FORM_NAMES), st.sampled_from(sorted(FORM_CONTROLS))), max_size=12))
+def test_extract_form_equals_copying_merge(controls):
+    html = ""
+    want: dict = {}
+    for name, kind in controls:
+        tail, value = FORM_CONTROLS[kind]
+        tag = "select" if kind.startswith("select") else "input"
+        html += f'<{tag} name="{name}"{tail}'
+        piece: dict = {}
+        insert_nested(piece, name, dict(value) if isinstance(value, dict) else value)
+        want = _merge_by_copy(want, piece)
+
+    def dump(v):
+        return json.dumps(to_plain(v), ensure_ascii=False)
+
+    assert dump(extract_form(PH(html))) == dump(want)
+
+
+def test_extract_form_linear_in_controls():
+    """10x the same-name controls costs ~10x the time (the copying merge
+    was quadratic: 3.9x per doubling). Best of 5 walls per size, the
+    sizes alternating so both sample the same host state."""
+    sizes = (1_000, 10_000)
+    pages = {n: "<form>" + '<input name="a[]" value="v">' * n + "</form>" for n in sizes}
+    best = dict.fromkeys(sizes, float("inf"))
+    for _ in range(5):
+        for n in sizes:
+            ph = PH(pages[n])
+            t0 = time.perf_counter()
+            form = extract_form(ph)
+            best[n] = min(best[n], time.perf_counter() - t0)
+            assert len(form["a"]) == n
+    assert best[10_000] / best[1_000] <= 15
+
+
+# -- value-only tables: iterative, so cell depth is unbounded ---------------
+
+def _deep_cell_table(depth: int) -> str:
+    return (
+        "<html><body><table><tr><td>"
+        + "<div>" * depth + "x" + "</div>" * depth
+        + "</td><td>y</td></tr></table></body></html>"
+    )
+
+
+def test_value_only_table_10k_deep_cell_matches_shallow_twin():
+    deep, twin = _deep_cell_table(10_000), _deep_cell_table(1)
+    got = extract_table_list(PH(deep).find("table"), val_only=True)
+    assert got == extract_table_list(PH(twin).find("table"), val_only=True)
+    assert got == [["x", "y"]]
+    page = _page_doc(DocIndex(deep), [])
+    assert page["tables_json"] == _page_doc(DocIndex(twin), [])["tables_json"]

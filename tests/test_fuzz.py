@@ -4,10 +4,20 @@ tokenizes to a consistent index, attrs parse to a dict. Tag soup also
 pins the container descent's sibling walk to its linear-scan
 definition, the scan-first selector matcher and the static scan API to
 full node scans, and adversarial nesting depth never makes the
-boilerplate strip raise."""
+boilerplate strip raise.
+
+Parity against the code each fast path replaced, kept here as the
+oracle: the leaf-token DocIndex loop against the tag-by-tag token loop,
+the prefix-difference masses against clipped region masses, the
+columnar emit against the event-sorting emit, and the iterative
+extract walk (tree and value-only modes) against the recursive
+extract_node + value_only."""
 
 import bisect
 import re
+from operator import itemgetter
+
+import numpy as np
 
 import hypothesis.strategies as st
 from hypothesis import example, given, settings
@@ -41,8 +51,21 @@ from parse_html_spark.matcher import (
     eval_chain,
     find_nodes,
 )
+from parse_html_spark.extract import (
+    _keep,
+    extract_node,
+    extract_table_list,
+    value_only,
+)
 from parse_html_spark.selector import Atom, Compound, compile_selector
-from parse_html_spark.tokenizer import KNOWN_TAGS, DocIndex, parse_attrs
+from parse_html_spark.tokenizer import (
+    KNOWN_TAGS,
+    TAG_FLAGS,
+    TOKEN_RE,
+    DocIndex,
+    parse_attrs,
+    trim_html,
+)
 
 
 @settings(max_examples=300, deadline=None)
@@ -133,8 +156,8 @@ def _container_by_scan(doc, tm, m_all):
     lo, hi = 0, len(doc.html)
     if doc.n == 0:
         return lo, hi
-    m_cur = int(tm.text_len_many([lo], [hi])[0])
-    m_cur -= int(tm.anchor_len_many([lo], [hi])[0])
+    tl, al = tm.masses([lo], [hi])
+    m_cur = int(tl[0] - al[0])
     cur = -1
     while m_cur > 0:
         sub_hi = (
@@ -169,10 +192,8 @@ def test_container_sibling_walk_matches_scan(html):
     lo, hi = find_main_container(doc, tm, m_all)
     assert (lo, hi) == _container_by_scan(doc, tm, m_all)
     # the descent's whole-document mass is the two prefix-sum totals
-    assert tm.cum[-1] - tm.acum[-1] == (
-        tm.text_len_many([0], [len(html)])[0]
-        - tm.anchor_len_many([0], [len(html)])[0]
-    )
+    whole_tl, whole_al = tm.masses([0], [len(html)])
+    assert tm.cum[-1] - tm.acum[-1] == whole_tl[0] - whole_al[0]
     # pruning without precomputed masses computes the same ones
     assert pruned_ranges(doc, tm, lo, hi) == pruned_ranges(
         doc, tm, lo, hi, tl, al
@@ -456,3 +477,301 @@ def test_main_content_spans_never_raises_on_depth(shape, depth, cuts):
     media = [(c % (len(html) + 1), f"m{k}") for k, c in enumerate(cuts)]
     spans = main_content_spans(DocIndex(html), media)
     assert all(kind in ("text", "media") for kind, _t, _r in spans)
+
+
+# -- leaf-token DocIndex vs the tag-by-tag token loop ------------------------
+
+def _index_by_token_loop(html):
+    """DocIndex's arrays as the loop over TOKEN_RE built them, one markup
+    token per turn: open tags push per-name stacks, exact closers pop;
+    parents from an interval stack that every container enters."""
+    tags, starts, st_ends, tstart, tend = [], [], [], [], []
+    a_ids, media_ids, boiler, closures = [], [], [], []
+    stacks: dict = {}
+    pos = 0
+    for m in TOKEN_RE.finditer(html):
+        s_tok, e_tok = m.span()
+        if s_tok > pos:
+            tstart.append(pos)
+            tend.append(s_tok)
+        pos = e_tok
+        if m.lastindex == 1:
+            lname = m[1].lower()
+            idx = len(tags)
+            tags.append(lname)
+            starts.append(s_tok)
+            st_ends.append(e_tok)
+            fl = TAG_FLAGS.get(lname, 0)
+            boiler.append(bool(fl & 1))
+            if fl & 4:
+                a_ids.append(idx)
+            elif fl & 8:
+                media_ids.append(idx)
+            if not fl & 2:
+                stacks.setdefault(lname, []).append(idx)
+        elif m.lastindex == 2:
+            cname = m[2]
+            if e_tok - s_tok == len(cname) + 3:
+                stack = stacks.get(cname.lower())
+                if stack:
+                    closures.append((stack.pop(), s_tok, e_tok))
+    if pos < len(html):
+        tstart.append(pos)
+        tend.append(len(html))
+    ends, cends = st_ends.copy(), st_ends.copy()
+    for idx, c_s, c_e in closures:
+        ends[idx] = c_e
+        cends[idx] = c_s
+    parent = [-1] * len(tags)
+    open_nodes: list = []
+    for i, s_i in enumerate(starts):
+        while open_nodes and ends[open_nodes[-1]] <= s_i:
+            open_nodes.pop()
+        if open_nodes:
+            parent[i] = open_nodes[-1]
+        if ends[i] > st_ends[i]:
+            open_nodes.append(i)
+    return {
+        "tag": tags, "start": starts, "end": ends, "cstart": st_ends,
+        "cend": cends, "parent": parent, "tstart": tstart, "tend": tend,
+        "a_ids": a_ids, "media_ids": media_ids, "boiler": boiler,
+    }
+
+
+LEAF_NAMES = ["b", "B", "bx", "br", "BR", "a", "img", "div", "p", "nav", "Div", "x1"]
+
+
+@st.composite
+def leaf_soup(draw):
+    """Leaf elements with exact, other-case, other-name and inexact
+    closers, among open tags, closers, void names, specials, stray '<'
+    and text: every way a leaf token can be almost right."""
+    name = st.sampled_from(LEAF_NAMES)
+    text = st.sampled_from(["", "t", " x y ", "a>b", "0", "\n  "])
+    attrs = st.sampled_from(["", " id=1", " class='a b'", "/", " x"])
+    piece = st.one_of(
+        st.tuples(name, attrs, text, name).map(
+            lambda a: f"<{a[0]}{a[1]}>{a[2]}</{a[3]}>"
+        ),
+        st.tuples(name, attrs, text).map(lambda a: f"<{a[0]}{a[1]}>{a[2]}</{a[0]}>"),
+        st.tuples(name, text).map(lambda a: f"<{a[0]}>{a[1]}</{a[0]} >"),
+        st.tuples(name, attrs).map(lambda a: f"<{a[0]}{a[1]}>"),
+        name.map(lambda n: f"</{n}>"),
+        st.sampled_from(["<!-- c -->", "<?pi?>", "<", "< b", "<3", "</>", "</ b>"]),
+        text,
+    )
+    return "".join(draw(st.lists(piece, max_size=30)))
+
+
+@settings(max_examples=600, deadline=None)
+@given(leaf_soup())
+# a possessive name: <bx> is never retried as a leaf named b
+@example("<bx>t</b>")
+# the leaf closer is same-case; <B>..</b> closes through the stack
+@example("<B>x</b>")
+# a void leaf stays a bare node plus an orphan closer
+@example("<br>x</br>")
+# a leaf inside an unclosed element of the same name
+@example("<b><b>x</b>")
+@example("<b>y<b>x</b>z</b>")
+def test_doc_index_equals_token_loop(html):
+    doc = DocIndex(html)
+    want = _index_by_token_loop(html)
+    got = {
+        "tag": doc.tag, "start": doc.start_l, "end": doc.end_l,
+        "cstart": doc.cstart_l, "cend": doc.cend_l, "parent": doc.parent_l,
+        "tstart": doc.tstart_l,
+        "tend": doc.tend_l, "a_ids": doc.a_ids, "media_ids": doc.media_ids,
+        "boiler": [bool(b) for b in doc.boiler_l],
+    }
+    assert got == want
+
+
+# -- prefix-difference masses and columnar emit vs clipped / sorted ---------
+
+PAGE_TAGS = ["div", "p", "b", "a", "nav", "section", "span", "script"]
+PAGE_TEXT = ["x", " ", "  \n ", "body text of some length ", "z" * 30, "a  b"]
+
+
+@st.composite
+def page_soup(draw):
+    """Tag soup with what the scorer reads: anchors (link-dense runs),
+    boilerplate tags, img/embed media, crossing and unclosed elements."""
+    t = st.sampled_from(PAGE_TAGS)
+    text = st.sampled_from(PAGE_TEXT)
+    piece = st.one_of(
+        t.map(lambda n: f"<{n}>"),
+        t.map(lambda n: f"</{n}>"),
+        st.tuples(t, text).map(lambda a: f"<{a[0]}>{a[1]}</{a[0]}>"),
+        text.map(lambda x: f"<a href='/'>{x}</a>"),
+        st.tuples(t, t, text, text).map(
+            lambda a: f"<{a[0]}>{a[2]}<{a[1]}>{a[3]}</{a[0]}>{a[2]}</{a[1]}>"
+        ),
+        st.sampled_from([
+            "<img src='m'>", "<img data-src='d'>", "<embed>", "<br>",
+            "<!-- c -->",
+        ]),
+        text,
+    )
+    return "".join(draw(st.lists(piece, max_size=40)))
+
+
+def _clipped_mass(starts, ends, lo, hi):
+    """Covered length of [lo_i, hi_i) against sorted disjoint regions,
+    clipping the end regions."""
+    cum = np.concatenate(([0], np.cumsum(ends - starts)))
+    lo = np.asarray(lo, dtype=np.int64)
+    hi = np.asarray(hi, dtype=np.int64)
+    if len(starts) == 0:
+        return np.zeros(len(lo), dtype=np.int64)
+    a = ends.searchsorted(lo, side="right")
+    b = starts.searchsorted(hi, side="left")
+    a_c = np.minimum(a, len(starts) - 1)
+    b_c = np.maximum(b - 1, 0)
+    total = cum[b] - cum[a]
+    left = np.maximum(0, lo - starts[a_c])
+    right = np.maximum(0, ends[b_c] - hi)
+    return np.maximum(np.where(b > a, total - left - right, 0), 0)
+
+
+def _masses_by_clipping(doc, tm):
+    """(text_len, anchor_len) per node by clipping the text regions, and
+    the anchor regions cut to each top-level anchor's contents."""
+    ts = np.asarray(doc.tstart_l, dtype=np.int64)
+    te = np.asarray(doc.tend_l, dtype=np.int64)
+    ats, ate = [], []
+    for i in tm.top_anchors:
+        alo, ahi = doc.cstart_l[i], doc.cend_l[i]
+        for s, e in zip(doc.tstart_l, doc.tend_l):
+            s, e = max(s, alo), min(e, ahi)
+            if e > s:
+                ats.append(s)
+                ate.append(e)
+    ats = np.asarray(ats, dtype=np.int64)
+    ate = np.asarray(ate, dtype=np.int64)
+    cs, ce = doc.cstart, doc.cend
+    return _clipped_mass(ts, te, cs, ce), _clipped_mass(ats, ate, cs, ce)
+
+
+def _spans_by_events(doc, lo, hi, pruned, media_positions):
+    """Rule 4 as an event list: text pieces (regions clipped to the
+    container, cut at pruned ranges and media positions) and media, one
+    stable sort by (position, media first)."""
+    plo = [p[0] for p in pruned]
+
+    def in_pruned(pos):
+        k = bisect.bisect_right(plo, pos) - 1
+        return k >= 0 and pos < pruned[k][1]
+
+    breaks = sorted(pruned + [(p, p) for p, _ in media_positions])
+    events = []
+    for s, e in zip(doc.tstart_l, doc.tend_l):
+        s, e = max(s, lo), min(e, hi)
+        if e <= s:
+            continue
+        pos = s
+        for ps, pe in breaks:
+            if ps >= e:
+                break
+            if pe < pos:
+                continue
+            if ps > pos:
+                t = trim_html(doc.html[pos:ps])
+                if t:
+                    events.append((pos, 1, "text", t, None))
+            pos = max(pos, pe)
+        if pos < e:
+            t = trim_html(doc.html[pos:e])
+            if t:
+                events.append((pos, 1, "text", t, None))
+    for j in doc.media_ids:
+        s_j = doc.start_l[j]
+        if lo <= s_j < hi and not in_pruned(s_j):
+            a = doc.attrs(j)
+            events.append((s_j, 0, "media", "", a.get("src") or a.get("data-src") or ""))
+    for pos, ref in media_positions:
+        if lo <= pos <= hi and not in_pruned(pos):
+            events.append((pos, 0, "media", "", ref))
+    events.sort(key=itemgetter(0, 1))
+    return [(kind, text, ref) for _, _, kind, text, ref in events]
+
+
+@settings(max_examples=600, deadline=None)
+@given(page_soup(), st.lists(st.integers(0, 10**6), max_size=4), st.lists(st.integers(0, 10**6), max_size=4))
+# cuts at a region's start, inside it, at its end, twice, and out of order
+@example("<div><p>ab cd</p><img src='m'></div>", [3, 4, 4, 5, 0], [])
+@example("<nav><a href='/'>x</a><a href='/'>y</a></nav>tail", [], [0, 1, 1, 2])
+def test_masses_and_emit_equal_clipped_event_forms(html, cuts, edge_picks):
+    doc = DocIndex(html)
+    tm = TextMass(doc)
+    tl, al = node_masses(doc, tm)
+    want_tl, want_al = _masses_by_clipping(doc, tm)
+    assert tl.tolist() == want_tl.tolist()
+    assert al.tolist() == want_al.tolist()
+    lo, hi = find_main_container(doc, tm)
+    pruned = pruned_ranges(doc, tm, lo, hi)
+    edges = sorted(doc.tstart_l + doc.tend_l) or [0]
+    media = [(c % (len(html) + 1), f"c{k}") for k, c in enumerate(cuts)]
+    media += [(edges[p % len(edges)], f"e{k}") for k, p in enumerate(edge_picks)]
+    media += media[:1]  # a duplicate cut
+    for m in (media, []):
+        assert main_content_spans(doc, m) == _spans_by_events(doc, lo, hi, pruned, m)
+
+
+# -- iterative extract walk vs the recursive extract_node + value_only ------
+
+def _extract_node_by_recursion(doc, i, prune_tag=None):
+    if doc.is_bare(i):
+        return doc.outer(i)
+    buf, c = "", []
+    pos = doc.cstart_l[i]
+    for ch in doc.children_of(i):
+        buf += doc.html[pos:doc.start_l[ch]]
+        pos = doc.end_l[ch]
+        if prune_tag is not None and doc.tag[ch] == prune_tag:
+            continue
+        t = trim_html(buf)
+        buf = ""
+        if _keep(t):
+            c.append(t)
+        c.append(_extract_node_by_recursion(doc, ch, prune_tag))
+    t = trim_html(buf + doc.html[pos:doc.cend_l[i]])
+    if _keep(t):
+        c.append(t)
+    return {"t": doc.tag[i], "a": dict(doc.attrs(i)), "c": c}
+
+
+@st.composite
+def table_soup(draw):
+    """Tables nested in cells, single-child chains, bare and unclosed
+    cells, '0' text (dropped, as PHP empty()) and comments."""
+    t = st.sampled_from(["table", "tr", "td", "div", "span", "TD"])
+    text = st.sampled_from(["x", "0", " ", "a  b", "<!-- c -->"])
+    piece = st.one_of(
+        t.map(lambda n: f"<{n} class=c>"),
+        t.map(lambda n: f"</{n}>"),
+        st.tuples(t, text).map(lambda a: f"<{a[0]}>{a[1]}</{a[0]}>"),
+        st.sampled_from(["<br>", "<img src='i'>", "<table><tr><td>n</td></tr></table>"]),
+        text,
+    )
+    return "".join(draw(st.lists(piece, max_size=40)))
+
+
+@settings(max_examples=400, deadline=None)
+@given(table_soup())
+@example("<table><tr><td>a<table><tr><td>b</td></tr></table>c</td></tr></table>")
+@example("<table><tr><td><div><span>x</span></div></td><td></td></tr></table>")
+# <i> outlives <td>: the <p> after </td> is a descendant of the cell
+@example("<table><tr><td>a<i>b</td>c<p>d</p>e</i></tr></table>")
+def test_extract_walk_equals_recursion(html):
+    ph = PH(html)
+    doc = ph.doc
+    tables = ph.find("table")
+    want = [_extract_node_by_recursion(doc, t, "table") for t in tables.nodes]
+    assert extract_table_list(tables) == want
+    assert extract_table_list(tables, val_only=True) == [value_only(t) for t in want]
+    assert [value_only(extract_node(doc, t, prune_tag="table")) for t in tables.nodes] == [
+        value_only(t) for t in want
+    ]
+    for i in range(doc.n):
+        assert extract_node(doc, i) == _extract_node_by_recursion(doc, i)

@@ -14,10 +14,15 @@ pages with the article nested 64..4096 divs deep, built by
 of the fixture mix, so depth-bound layer deltas reproduce
 single-threaded.
 
+``--page`` times ``pipeline._page_doc`` on a fresh ``DocIndex``: the
+whole per-document work of ``extract_page``, up to the output columns.
+Every mode first checks that both engines give the same output on the
+first 200 documents.
+
 ``--select`` times the ``selector_fields`` per-doc work instead: a fresh
 ``DocIndex`` plus ``find_nodes`` and the text values for each of
 ``perfbench/replay.SELECTORS``, as ``select_spans_multi(mode='text')``
-does. It first checks that both engines give the same rows. Each
+does. Each
 ``--select=SEL`` times the selector SEL instead (repeatable), e.g.
 ``--select=.a`` for a one-character needle that fills the text.
 """
@@ -66,22 +71,7 @@ def load_engine(root: str, name: str, page: bool = False, select=()):
         return tok.DocIndex, select_fn
     if not page:
         return tok.DocIndex, boil.main_content_spans
-    import json
-
-    dom = importlib.import_module(name + ".dom")
-    ext = importlib.import_module(name + ".extract")
-
-    def page_fn(h, m):
-        doc = tok.DocIndex(h)
-        boil.main_content_spans(doc, m)
-        ph = dom.PH(h, doc=doc)
-        ph.find("title").text()
-        tables = ext.extract_table_list(ph.find("table"), val_only=True)
-        form = ext.to_plain(ext.extract_form(ph))
-        json.dumps(tables, ensure_ascii=False)
-        json.dumps(form, ensure_ascii=False)
-
-    return tok.DocIndex, page_fn
+    return tok.DocIndex, importlib.import_module(name + ".pipeline")._page_doc
 
 
 def main() -> None:
@@ -102,25 +92,15 @@ def main() -> None:
     else:
         pairs = [assemble(gen_doc(i)["spans"]) for i in range(n)]
 
-    if page:
+    def run(di, mcs) -> float:
+        t0 = time.time()
+        for h, m in pairs:
+            mcs(di(h), m)
+        return time.time() - t0
 
-        def run(di, mcs) -> float:
-            t0 = time.time()
-            for h, m in pairs:
-                mcs(h, m)
-            return time.time() - t0
-
-    else:
-
-        def run(di, mcs) -> float:
-            t0 = time.time()
-            for h, m in pairs:
-                mcs(di(h), m)
-            return time.time() - t0
-
-        # parity spot check: identical spans from both engines
-        for h, m in pairs[:200]:
-            assert mcs_a(di_a(h), m) == mcs_b(di_b(h), m)
+    # parity spot check: identical output from both engines
+    for h, m in pairs[:200]:
+        assert mcs_a(di_a(h), m) == mcs_b(di_b(h), m)
 
     run(di_a, mcs_a)
     run(di_b, mcs_b)  # warm both
