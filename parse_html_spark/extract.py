@@ -37,7 +37,13 @@ def _keep(text: str) -> bool:
     return text != "" and text != "0"  # PHP empty() drops '' and '0'
 
 
-def _walk(doc: DocIndex, root: int, prune_tag: str | None, val_only: bool):
+def _walk(
+    doc: DocIndex,
+    root: int,
+    prune_tag: str | None,
+    val_only: bool,
+    ends: dict[int, int] | None = None,
+):
     """The one extract() walk, iterative, so nesting depth never meets
     the recursion limit.
 
@@ -52,7 +58,12 @@ def _walk(doc: DocIndex, root: int, prune_tag: str | None, val_only: bool):
     the current node is its next child; any other node ends the current
     node, except one below a pruned child, which is skipped. Root's
     descendants are the contiguous ids after it, so the walk stops at the
-    first node outside them and needs no children index."""
+    first node outside them and needs no children index.
+
+    ``ends`` maps a node walked before to its subtree end (the first id
+    after its descendants); the walk records root's there, and a pruned
+    child found in it is passed over in one step instead of node by
+    node."""
     if doc.is_bare(root):
         return doc.outer(root)
     html = doc.html
@@ -75,6 +86,10 @@ def _walk(doc: DocIndex, root: int, prune_tag: str | None, val_only: bool):
             buf += html[pos:start_l[j]]
             pos = end_l[j]
             if prune_tag is not None and tag[j] == prune_tag:
+                k = ends.get(j) if ends is not None else None
+                if k is not None:
+                    j = k
+                    continue
                 pruned.add(j)
             else:
                 t = trim_html(buf)
@@ -106,6 +121,8 @@ def _walk(doc: DocIndex, root: int, prune_tag: str | None, val_only: bool):
         else:
             value = c
         if not stack:
+            if ends is not None:
+                ends[root] = j
             return value
         node, pos, c = stack.pop()
         c.append(value)
@@ -205,7 +222,15 @@ def extract_table_list(sel: PH, val_only: bool = False) -> list:
         else:
             lo, hi = d.start_l[node], d.end_l[node]
         tables.update(dict.fromkeys(_match_in_range(d, table, lo, hi)))
-    return [_walk(sel.doc, t, "table", val_only) for t in tables]
+    # nested tables are walked before the tables that hold them, so each
+    # walk passes over a pruned nested table in one step: every node is
+    # visited once over all tables, however deep they nest
+    ends: dict[int, int] = {}
+    values = {
+        t: _walk(sel.doc, t, "table", val_only, ends)
+        for t in sorted(tables, reverse=True)
+    }
+    return [values[t] for t in tables]
 
 
 # -- forms ---------------------------------------------------------------
@@ -233,13 +258,13 @@ def insert_nested(storage: dict, name: str, value) -> None:
     parent[last] = value
 
 
-def merge_recursive(out: dict, b: dict, next_keys: dict) -> None:
+def _merge_into(out: dict, b: dict, next_keys: dict) -> None:
     """PHP array_merge_recursive(out, b), written into ``out``: string
     keys recurse / scalars pair up into lists; integer keys append with
-    renumbering. ``next_keys`` maps id(d) -> the next integer key of a
-    dict d inside ``out``, so an append costs O(1) after one scan of d:
-    merging n controls is linear, not quadratic. Dicts of ``b`` become
-    part of ``out`` and are merged into later, so ``b`` is used once."""
+    renumbering. Dicts of ``b`` become part of ``out`` and are merged
+    into later, so ``b`` is used once. ``next_keys`` is private to one
+    extract_form call (see _append): merging n controls is linear, not
+    quadratic."""
     for k, v in b.items():
         if isinstance(k, int):
             _append(out, v, next_keys)
@@ -249,25 +274,30 @@ def merge_recursive(out: dict, b: dict, next_keys: dict) -> None:
             old = out[k]
             if isinstance(old, dict):
                 if isinstance(v, dict):
-                    merge_recursive(old, v, next_keys)
+                    _merge_into(old, v, next_keys)
                 else:
                     _append(old, v, next_keys)
             elif isinstance(v, dict):
                 nd = {0: old}
-                merge_recursive(nd, v, next_keys)
+                _merge_into(nd, v, next_keys)
                 out[k] = nd
             else:
                 out[k] = {0: old, 1: v}
 
 
 def _append(d: dict, v, next_keys: dict) -> None:
-    """d[] = v: the key after the largest integer key, else 0. d stays
-    alive inside the merged storage, so its id is never reused."""
-    k = next_keys.get(id(d))
-    if k is None:
+    """d[] = v: the key after the largest integer key, else 0, in O(1)
+    after one scan of d. ``next_keys`` maps id(d) -> (d, next key); it
+    holds d itself, so no id is reused while the map lives, and once d
+    is in it only _append gives d an integer key, so the count stays
+    true."""
+    entry = next_keys.get(id(d))
+    if entry is None:
         k = max((j for j in d if isinstance(j, int)), default=-1) + 1
+    else:
+        k = entry[1]
     d[k] = v
-    next_keys[id(d)] = k + 1
+    next_keys[id(d)] = (d, k + 1)
 
 
 def to_plain(value):
@@ -294,7 +324,7 @@ def extract_form(sel: PH, selector: str | None = None) -> dict:
     controls = sel.find(selector)
     doc = controls.doc
     storage: dict = {}
-    next_keys: dict[int, int] = {}
+    next_keys: dict[int, tuple[dict, int]] = {}
     if doc is None:
         return storage
     for n in controls.nodes:  # already in position order (ksort pin)
@@ -317,7 +347,7 @@ def extract_form(sel: PH, selector: str | None = None) -> dict:
             value = attrs.get("value")
         piece: dict = {}
         insert_nested(piece, name, value)
-        merge_recursive(storage, piece, next_keys)
+        _merge_into(storage, piece, next_keys)
     return storage
 
 

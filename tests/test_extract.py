@@ -1,8 +1,10 @@
 """Structural-extractor goldens transcribed verbatim from
 /root/reference/src/ParseHTMLAdvanced.php docblocks, plus the bounds
 that keep one hostile page from failing a task: form merging linear in
-its controls, value-only tables at any cell depth."""
+its controls, value-only tables at any cell depth, nested tables linear
+in their depth."""
 
+import gc
 import json
 import time
 
@@ -342,3 +344,38 @@ def test_value_only_table_10k_deep_cell_matches_shallow_twin():
     assert got == [["x", "y"]]
     page = _page_doc(DocIndex(deep), [])
     assert page["tables_json"] == _page_doc(DocIndex(twin), [])["tables_json"]
+
+
+# -- nested tables: every table is walked, each node visited once ------------
+
+def _nested_tables(depth: int) -> str:
+    return "<table><tr><td>" * depth + "x" + "</td></tr></table>" * depth
+
+
+def test_nested_tables_linear_in_depth():
+    """10x the nesting costs ~10x the time: a table's walk passes over a
+    pruned nested table in one step, not node by node (which made the
+    walks of d nested tables O(d * nodes)). Best of 5 walls per size and
+    mode, the sizes alternating so both sample the same host state. The
+    cyclic collector is paused while timing: its passes over the tree
+    mode's live dicts grow with the heap, not with the walk."""
+    sizes = (1_000, 10_000)
+    pages = {n: _nested_tables(n) for n in sizes}
+    for val_only in (True, False):
+        best = dict.fromkeys(sizes, float("inf"))
+        for _ in range(5):
+            for n in sizes:
+                sel = PH(pages[n])
+                assert sel.doc is not None  # tokenize outside the timer
+                gc.collect()
+                gc.disable()
+                try:
+                    t0 = time.perf_counter()
+                    got = extract_table_list(sel, val_only=val_only)
+                    best[n] = min(best[n], time.perf_counter() - t0)
+                finally:
+                    gc.enable()
+                assert len(got) == n
+                if val_only:
+                    assert got == [""] * (n - 1) + ["x"]
+        assert best[10_000] / best[1_000] <= 15, (val_only, best)

@@ -156,8 +156,8 @@ def _container_by_scan(doc, tm, m_all):
     lo, hi = 0, len(doc.html)
     if doc.n == 0:
         return lo, hi
-    tl, al = tm.masses([lo], [hi])
-    m_cur = int(tl[0] - al[0])
+    tl, al = _whole_doc_clipped(doc, tm)
+    m_cur = int(tl - al)
     cur = -1
     while m_cur > 0:
         sub_hi = (
@@ -192,8 +192,9 @@ def test_container_sibling_walk_matches_scan(html):
     lo, hi = find_main_container(doc, tm, m_all)
     assert (lo, hi) == _container_by_scan(doc, tm, m_all)
     # the descent's whole-document mass is the two prefix-sum totals
-    whole_tl, whole_al = tm.masses([0], [len(html)])
-    assert tm.cum[-1] - tm.acum[-1] == whole_tl[0] - whole_al[0]
+    whole_tl, whole_al = _whole_doc_clipped(doc, tm)
+    assert tm.cum[-1] == whole_tl
+    assert tm.acum[-1] == whole_al
     # pruning without precomputed masses computes the same ones
     assert pruned_ranges(doc, tm, lo, hi) == pruned_ranges(
         doc, tm, lo, hi, tl, al
@@ -634,9 +635,9 @@ def _clipped_mass(starts, ends, lo, hi):
     return np.maximum(np.where(b > a, total - left - right, 0), 0)
 
 
-def _masses_by_clipping(doc, tm):
-    """(text_len, anchor_len) per node by clipping the text regions, and
-    the anchor regions cut to each top-level anchor's contents."""
+def _clip_regions(doc, tm):
+    """The text regions, and the anchor regions: text regions cut to
+    each top-level anchor's contents."""
     ts = np.asarray(doc.tstart_l, dtype=np.int64)
     te = np.asarray(doc.tend_l, dtype=np.int64)
     ats, ate = [], []
@@ -649,8 +650,22 @@ def _masses_by_clipping(doc, tm):
                 ate.append(e)
     ats = np.asarray(ats, dtype=np.int64)
     ate = np.asarray(ate, dtype=np.int64)
+    return ts, te, ats, ate
+
+
+def _masses_by_clipping(doc, tm):
+    """(text_len, anchor_len) per node by clipping the text regions and
+    the anchor regions to its contents."""
+    ts, te, ats, ate = _clip_regions(doc, tm)
     cs, ce = doc.cstart, doc.cend
     return _clipped_mass(ts, te, cs, ce), _clipped_mass(ats, ate, cs, ce)
+
+
+def _whole_doc_clipped(doc, tm):
+    """(text_len, anchor_len) of [0, len(html)) by clipping."""
+    ts, te, ats, ate = _clip_regions(doc, tm)
+    lo, hi = [0], [len(doc.html)]
+    return int(_clipped_mass(ts, te, lo, hi)[0]), int(_clipped_mass(ats, ate, lo, hi)[0])
 
 
 def _spans_by_events(doc, lo, hi, pruned, media_positions):
@@ -763,12 +778,18 @@ def table_soup(draw):
 @example("<table><tr><td><div><span>x</span></div></td><td></td></tr></table>")
 # <i> outlives <td>: the <p> after </td> is a descendant of the cell
 @example("<table><tr><td>a<i>b</td>c<p>d</p>e</i></tr></table>")
+# the second table is a crossing descendant of the first, outside its
+# span: a selection of the first alone prunes a table it never walked
+@example("<table><tr><td><i>a</td></tr></table><table><tr><td>b</td></tr></table></i>")
 def test_extract_walk_equals_recursion(html):
     ph = PH(html)
     doc = ph.doc
     tables = ph.find("table")
     want = [_extract_node_by_recursion(doc, t, "table") for t in tables.nodes]
     assert extract_table_list(tables) == want
+    assert extract_table_list(ph) == want
+    for k in range(len(want)):
+        assert extract_table_list(tables.eq(k))[0] == want[k]
     assert extract_table_list(tables, val_only=True) == [value_only(t) for t in want]
     assert [value_only(extract_node(doc, t, prune_tag="table")) for t in tables.nodes] == [
         value_only(t) for t in want
