@@ -66,6 +66,8 @@ def _walk(
     node."""
     if doc.is_bare(root):
         return doc.outer(root)
+    if ends is None:
+        ends = {}
     html = doc.html
     tag = doc.tag
     parent_l = doc.parent_l
@@ -86,7 +88,7 @@ def _walk(
             buf += html[pos:start_l[j]]
             pos = end_l[j]
             if prune_tag is not None and tag[j] == prune_tag:
-                k = ends.get(j) if ends is not None else None
+                k = ends.get(j)
                 if k is not None:
                     j = k
                     continue
@@ -121,8 +123,7 @@ def _walk(
         else:
             value = c
         if not stack:
-            if ends is not None:
-                ends[root] = j
+            ends[root] = j
             return value
         node, pos, c = stack.pop()
         c.append(value)
