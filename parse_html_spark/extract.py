@@ -223,15 +223,15 @@ def extract_table_list(sel: PH, val_only: bool = False) -> list:
         else:
             lo, hi = d.start_l[node], d.end_l[node]
         tables.update(dict.fromkeys(_match_in_range(d, table, lo, hi)))
-    # nested tables are walked before the tables that hold them, so each
-    # walk passes over a pruned nested table in one step: every node is
-    # visited once over all tables, however deep they nest
+    # walked last to first, so when the tables come in node order (as
+    # find gives them) nested tables are walked before the tables that
+    # hold them, and each walk passes over a pruned nested table in one
+    # step: every node is visited once over all tables, however deep
+    # they nest. Any other order only loses the jump.
     ends: dict[int, int] = {}
-    values = {
-        t: _walk(sel.doc, t, "table", val_only, ends)
-        for t in sorted(tables, reverse=True)
-    }
-    return [values[t] for t in tables]
+    values = [_walk(sel.doc, t, "table", val_only, ends) for t in reversed(tables)]
+    values.reverse()
+    return values
 
 
 # -- forms ---------------------------------------------------------------
