@@ -223,6 +223,8 @@ def extract_table_list(sel: PH, val_only: bool = False) -> list:
         else:
             lo, hi = d.start_l[node], d.end_l[node]
         tables.update(dict.fromkeys(_match_in_range(d, table, lo, hi)))
+    if not tables:  # most pages
+        return []
     # walked last to first, so when the tables come in node order (as
     # find gives them) nested tables are walked before the tables that
     # hold them, and each walk passes over a pruned nested table in one
