@@ -12,11 +12,9 @@ pruned subtree's outer span, the container -- is a token boundary, so
 each region lies wholly inside or wholly outside it. A mass is then a
 difference of two prefix sums (``TextMass``), and the emit takes or
 drops whole regions. Container
-descent (rule 2) walks each container's children by sibling jumps --
-``bisect_left(start_l, end_l[child])`` to the first node past a child,
-then a forward step over nodes whose parent is not the container, which
-a crossing interval like ``<b><i></b>..</i>`` leaves there -- so it is
-linear in nesting depth, not quadratic. The exact rules below are the
+descent (rule 2) walks each container's children by subtree jumps
+(``DocIndex.subtree_end_l``), so it is linear in nesting depth, not
+quadratic. The exact rules below are the
 PINNED SPEC: the pure-Python oracle in tests uses the same definitions,
 and the Spark pipeline must reproduce them byte-for-byte.
 
@@ -147,24 +145,11 @@ def find_main_container(
     """Byte range of the main-content container (rule 2).
 
     ``m_all`` is the optional precomputed per-node non-anchor mass (from
-    node_masses). Children of the current container are enumerated by a
-    sibling walk over the start-ordered node arrays, so the whole descent
-    visits each node at most once (linear in nesting depth, not
-    quadratic):
-
-    - first child: the first node after the container whose parent is
-      the container (node 0 for the document roots);
-    - next sibling: the first node starting at/after the child's end
-      (``bisect_left(start_l, end_l[child], child + 1)``), then a forward
-      step past nodes whose parent is not the container.
-
-    The forward step covers crossing intervals: closers match per tag
-    name, so in ``<b><i></b></i><p>`` the ``<i>`` outlives ``<b>`` and
-    the ``<p>`` after ``</b>`` is a child of ``<i>``, not a sibling of
-    ``<b>``. Such nodes sit in the gaps between the container's children,
-    outside the subtree descended into next, so each is stepped over at
-    most once. The walk stops at the container's subtree bound (``n`` for
-    the roots)."""
+    node_masses). Children of the current container are enumerated by
+    subtree jumps (``DocIndex.children_of``'s walk, inlined: a call and
+    a list per level cost ~15% on deep nesting), so the whole descent
+    visits each node at most once: linear in nesting depth, not
+    quadratic."""
     lo, hi = 0, len(doc.html)
     n = doc.n
     if n == 0:
@@ -176,31 +161,23 @@ def find_main_container(
         m_all = (tl - al).tolist()
     cstart, cend = doc.cstart_l, doc.cend_l
     parent_l = doc.parent_l
-    start_l, end_l = doc.start_l, doc.end_l
-    bisect_left = bisect.bisect_left
+    subtree_end_l = doc.subtree_end_l
     cur_node = -1
-    k, bound = 0, n
     while m_cur > 0:
         best = -1
         best_m = -1
-        while k < bound:
-            if parent_l[k] != cur_node:
-                k += 1  # inside a crossing interval: not a child
-                continue
+        k = cur_node + 1
+        while k < n and parent_l[k] == cur_node:
             mk = m_all[k]
             if mk > best_m:  # ties: first (earliest start) wins
                 best_m = mk
                 best = k
-            k = bisect_left(start_l, end_l[k], k + 1, bound)
+            k = subtree_end_l[k]
         if best < 0 or best_m < DESCEND_FRACTION * m_cur:
             break
         cur_node = best
         lo, hi = cstart[best], cend[best]
         m_cur = best_m
-        # subtree of best = contiguous node ids [best + 1, bound); not
-        # capped by the old bound: a crossing child can outlive its parent
-        k = best + 1
-        bound = bisect_left(start_l, end_l[best], k)
     return lo, hi
 
 

@@ -158,14 +158,22 @@ class PH:
     # reference-fidelity suite, jQuery semantics).
 
     def _siblings(self, offset: int, selector: str | None) -> "PH":
+        # the next sibling starts where n's subtree ends; the previous
+        # one's subtree ends at n, so it is the ancestor of n - 1 (or
+        # n - 1 itself) whose parent is n's parent
         d = self._doc
         out = []
         for n in self._element_nodes():
             p = d.parent_l[n]
-            sibs = d.children_of(p) if p >= 0 else d.roots()
-            k = sibs.index(n)
-            if 0 <= k + offset < len(sibs):
-                out.append(sibs[k + offset])
+            if offset > 0:
+                k = d.subtree_end_l[n]
+                if k < d.n and d.parent_l[k] == p:
+                    out.append(k)
+            elif n - 1 > p:
+                k = n - 1
+                while d.parent_l[k] != p:
+                    k = d.parent_l[k]
+                out.append(k)
         return self._filtered(out, selector)
 
     def prev(self, selector: str | None = None) -> "PH":

@@ -37,13 +37,7 @@ def _keep(text: str) -> bool:
     return text != "" and text != "0"  # PHP empty() drops '' and '0'
 
 
-def _walk(
-    doc: DocIndex,
-    root: int,
-    prune_tag: str | None,
-    val_only: bool,
-    ends: dict[int, int] | None = None,
-):
+def _walk(doc: DocIndex, root: int, prune_tag: str | None, val_only: bool):
     """The one extract() walk, iterative, so nesting depth never meets
     the recursion limit.
 
@@ -56,57 +50,41 @@ def _walk(
     The walk visits root's descendants in node order, which is
     pre-order, with the open nodes on a stack: a node whose parent is
     the current node is its next child; any other node ends the current
-    node, except one below a pruned child, which is skipped. Root's
-    descendants are the contiguous ids after it, so the walk stops at the
-    first node outside them and needs no children index.
-
-    ``ends`` maps a node walked before to its subtree end (the first id
-    after its descendants); the walk records root's there, and a pruned
-    child found in it is passed over in one step instead of node by
-    node."""
+    node. Root's descendants are the contiguous ids up to
+    ``subtree_end_l[root]``, so the walk needs no children index, and a
+    pruned child is passed over in one jump to its own subtree end."""
     if doc.is_bare(root):
         return doc.outer(root)
-    if ends is None:
-        ends = {}
     html = doc.html
     tag = doc.tag
     parent_l = doc.parent_l
+    subtree_end_l = doc.subtree_end_l
     start_l, end_l = doc.start_l, doc.end_l
     cstart_l, cend_l = doc.cstart_l, doc.cend_l
-    n = doc.n
+    stop = subtree_end_l[root]
     # the current node, the start of its open gap and its child values;
     # the gap buffer is flushed before each descent, so it is empty
     # whenever the walk returns to a parent
     node, pos, c = root, cstart_l[root], []
     stack: list[tuple[int, int, list]] = []
-    pruned: set[int] = set()
     buf = ""
     j = root + 1
     while True:
-        p = parent_l[j] if j < n else -1
-        if p == node:
+        if j < stop and parent_l[j] == node:
             buf += html[pos:start_l[j]]
             pos = end_l[j]
             if prune_tag is not None and tag[j] == prune_tag:
-                k = ends.get(j)
-                if k is not None:
-                    j = k
-                    continue
-                pruned.add(j)
+                j = subtree_end_l[j]
+                continue
+            t = trim_html(buf)
+            buf = ""
+            if _keep(t):
+                c.append(t)
+            if pos == cstart_l[j]:  # bare child: its start tag
+                c.append(html[start_l[j]:pos])
             else:
-                t = trim_html(buf)
-                buf = ""
-                if _keep(t):
-                    c.append(t)
-                if pos == cstart_l[j]:  # bare child: its start tag
-                    c.append(html[start_l[j]:pos])
-                else:
-                    stack.append((node, pos, c))
-                    node, pos, c = j, cstart_l[j], []
-            j += 1
-            continue
-        if p in pruned:
-            pruned.add(j)
+                stack.append((node, pos, c))
+                node, pos, c = j, cstart_l[j], []
             j += 1
             continue
         # j is outside the current node: the node is complete
@@ -123,7 +101,6 @@ def _walk(
         else:
             value = c
         if not stack:
-            ends[root] = j
             return value
         node, pos, c = stack.pop()
         c.append(value)
@@ -223,17 +200,7 @@ def extract_table_list(sel: PH, val_only: bool = False) -> list:
         else:
             lo, hi = d.start_l[node], d.end_l[node]
         tables.update(dict.fromkeys(_match_in_range(d, table, lo, hi)))
-    if not tables:  # most pages
-        return []
-    # walked last to first, so when the tables come in node order (as
-    # find gives them) nested tables are walked before the tables that
-    # hold them, and each walk passes over a pruned nested table in one
-    # step: every node is visited once over all tables, however deep
-    # they nest. Any other order only loses the jump.
-    ends: dict[int, int] = {}
-    values = [_walk(sel.doc, t, "table", val_only, ends) for t in reversed(tables)]
-    values.reverse()
-    return values
+    return [_walk(sel.doc, t, "table", val_only) for t in tables]
 
 
 # -- forms ---------------------------------------------------------------

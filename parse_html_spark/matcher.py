@@ -302,17 +302,10 @@ def _match_in_range(doc: DocIndex, cp: _Compiled, lo: int, hi: int) -> list[int]
 
 def _direct_children(doc: DocIndex, cp: _Compiled, nodes: list[int]) -> list[int]:
     """Direct children of ``nodes`` that match ``cp``, grouped by parent
-    in ``nodes`` order, then by id. A tagged compound draws its
-    candidates from the tag index, an untagged one from every node."""
-    slot = {nd: k for k, nd in enumerate(nodes)}
-    buckets: list[list[int]] = [[] for _ in nodes]
-    parent_l = doc.parent_l
-    ids = doc.tag_ids().get(cp.tag, ()) if cp.tag is not None else range(doc.n)
-    for ch in ids:
-        k = slot.get(parent_l[ch])
-        if k is not None and _matches(doc, cp, ch):
-            buckets[k].append(ch)
-    return [ch for bucket in buckets for ch in bucket]
+    in ``nodes`` order, then by id."""
+    return [
+        ch for nd in nodes for ch in doc.children_of(nd) if _matches(doc, cp, ch)
+    ]
 
 
 def eval_chain(

@@ -3,7 +3,7 @@
 One forward pass over the raw string builds, per document:
 
 - node arrays (tag, start/end outer span, cstart/cend contents span,
-  parent, depth) -- the "ELEMENTS" of the reference
+  parent, subtree end, depth) -- the "ELEMENTS" of the reference
   (/root/reference/src/ParseHTML.php:28-44) as columnar arrays instead of
   position->string maps;
 - plain-text regions (everything outside tag/comment/decl markup), which
@@ -174,11 +174,20 @@ def parse_attrs(attr_str: str, validate: bool = False) -> dict[str, str | None]:
 
 
 class DocIndex:
-    """Columnar node index for one document."""
+    """Columnar node index for one document.
+
+    Node ids are in start order, which is pre-order: each node's
+    subtree is the contiguous run of ids ``[i, subtree_end_l[i])``.
+    ``subtree_end_l`` comes from the parent pass's interval stack, not
+    from a bisect of ``end_l[i]`` into the node starts: closers match per
+    tag name, so intervals can cross, and in ``<b><i></b><p>x</p></i>``
+    the ``<p>`` starts after ``</b>`` yet is a descendant of ``<b>``
+    through ``<i>``. Children, siblings and subtree walks all step by
+    this one array."""
 
     __slots__ = (
-        "html", "n", "tag", "_attrs", "_children", "_tag_ids",
-        "start_l", "end_l", "cstart_l", "cend_l", "parent_l",
+        "html", "n", "tag", "_attrs", "_tag_ids",
+        "start_l", "end_l", "cstart_l", "cend_l", "parent_l", "subtree_end_l",
         "_depth_l", "tstart_l", "tend_l", "a_ids", "media_ids", "boiler_l",
         "_cstart_a", "_cend_a",
     )
@@ -341,24 +350,29 @@ class DocIndex:
         # with the open ends kept beside the ids and a sentinel that no
         # node start reaches. Only a node that the NEXT node starts
         # inside can own children, so leaves and bare tags are never
-        # pushed just to be popped.
+        # pushed just to be popped: their subtree ends at i + 1. A node
+        # popped at id i has its subtree end there; one still open after
+        # the last node ends at n.
         parent_l: list[int] = []
         parent_append = parent_l.append
+        subtree_end = list(range(1, n + 1))
         stack = [-1]
         stack_end = [len(html)]
         nexts = starts[1:]
         nexts.append(len(html))
         for i, s_i, e_i, s_next in zip(range(n), starts, ends, nexts):
             while stack_end[-1] <= s_i:
-                stack.pop()
+                subtree_end[stack.pop()] = i
                 stack_end.pop()
             parent_append(stack[-1])
             if s_next < e_i:
                 stack.append(i)
                 stack_end.append(e_i)
+        for k in stack[1:]:
+            subtree_end[k] = n
         self.parent_l = parent_l
+        self.subtree_end_l = subtree_end
         self._depth_l = None
-        self._children: list | None = None
         self._tag_ids: dict | None = None
 
         self.tstart_l = tstart
@@ -411,16 +425,19 @@ class DocIndex:
         return self._tag_ids
 
     def children_of(self, i: int) -> list[int]:
-        if self._children is None:
-            ch: list[list[int]] = [[] for _ in range(self.n)]
-            for j, p in enumerate(self.parent_l):
-                if p >= 0:
-                    ch[p].append(j)
-            self._children = ch
-        return self._children[i]
-
-    def roots(self) -> list[int]:
-        return [i for i, p in enumerate(self.parent_l) if p < 0]
+        """Child ids of node i in order; the roots for i = -1. Children
+        follow each other by subtree jumps: the first is i + 1, the next
+        starts where the previous one's subtree ends, and the first id
+        whose parent is not i lies past i's subtree."""
+        parent_l = self.parent_l
+        subtree_end_l = self.subtree_end_l
+        n = self.n
+        out: list[int] = []
+        k = i + 1
+        while k < n and parent_l[k] == i:
+            out.append(k)
+            k = subtree_end_l[k]
+        return out
 
     def text_between(self, lo: int, hi: int) -> str:
         """Concatenated plain text within [lo, hi) -- strip_tags semantics."""

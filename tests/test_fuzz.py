@@ -2,7 +2,8 @@
 selectors compile to None (chainable empty), arbitrary byte soup
 tokenizes to a consistent index, attrs parse to a dict. Tag soup also
 pins the container descent's sibling walk to its linear-scan
-definition, the scan-first selector matcher and the static scan API to
+definition, the subtree ends and children to the parent chain, the
+scan-first selector matcher and the static scan API to
 full node scans, and adversarial nesting depth never makes the
 boilerplate strip raise.
 
@@ -199,6 +200,39 @@ def test_container_sibling_walk_matches_scan(html):
     assert pruned_ranges(doc, tm, lo, hi) == pruned_ranges(
         doc, tm, lo, hi, tl, al
     )
+
+
+# -- subtree ends and children vs the parent chain -------------------------
+
+def _children_index(doc):
+    """Children lists by one pass over the parent pointers: entry i for
+    node i, the roots last (at index -1)."""
+    kids = [[] for _ in range(doc.n + 1)]
+    for j, p in enumerate(doc.parent_l):
+        kids[p].append(j)
+    return kids
+
+
+@settings(max_examples=400, deadline=None)
+@given(tag_soup())
+# <p> starts after </b> but is a descendant of <b> through <i>
+@example("<b><i></b><p>x</p></i>")
+@example("<table><tr><td><i>a</td></tr></table><table><tr><td>b</td></tr></table></i>")
+def test_subtree_ends_and_children_match_parent_chain(html):
+    doc = DocIndex(html)
+    n, parent_l = doc.n, doc.parent_l
+
+    def within(j, i):  # j is i or a descendant of i
+        while j > i:
+            j = parent_l[j]
+        return j == i
+
+    for i in range(n):
+        end = doc.subtree_end_l[i]
+        assert [within(j, i) for j in range(n)] == [i <= j < end for j in range(n)]
+    kids = _children_index(doc)
+    for i in range(-1, n):
+        assert doc.children_of(i) == kids[i]
 
 
 # -- scan-first selector matching vs a full node scan -----------------------
@@ -735,12 +769,13 @@ def test_masses_and_emit_equal_clipped_event_forms(html, cuts, edge_picks):
 
 # -- iterative extract walk vs the recursive extract_node + value_only ------
 
-def _extract_node_by_recursion(doc, i, prune_tag=None):
+def _extract_node_by_recursion(doc, kids, i, prune_tag=None):
+    """extract_node by recursion over ``kids``, a _children_index."""
     if doc.is_bare(i):
         return doc.outer(i)
     buf, c = "", []
     pos = doc.cstart_l[i]
-    for ch in doc.children_of(i):
+    for ch in kids[i]:
         buf += doc.html[pos:doc.start_l[ch]]
         pos = doc.end_l[ch]
         if prune_tag is not None and doc.tag[ch] == prune_tag:
@@ -749,7 +784,7 @@ def _extract_node_by_recursion(doc, i, prune_tag=None):
         buf = ""
         if _keep(t):
             c.append(t)
-        c.append(_extract_node_by_recursion(doc, ch, prune_tag))
+        c.append(_extract_node_by_recursion(doc, kids, ch, prune_tag))
     t = trim_html(buf + doc.html[pos:doc.cend_l[i]])
     if _keep(t):
         c.append(t)
@@ -785,7 +820,8 @@ def test_extract_walk_equals_recursion(html):
     ph = PH(html)
     doc = ph.doc
     tables = ph.find("table")
-    want = [_extract_node_by_recursion(doc, t, "table") for t in tables.nodes]
+    kids = _children_index(doc)
+    want = [_extract_node_by_recursion(doc, kids, t, "table") for t in tables.nodes]
     assert extract_table_list(tables) == want
     assert extract_table_list(ph) == want
     for k in range(len(want)):
@@ -795,4 +831,4 @@ def test_extract_walk_equals_recursion(html):
         value_only(t) for t in want
     ]
     for i in range(doc.n):
-        assert extract_node(doc, i) == _extract_node_by_recursion(doc, i)
+        assert extract_node(doc, i) == _extract_node_by_recursion(doc, kids, i)

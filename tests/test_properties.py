@@ -144,11 +144,15 @@ def test_ref_compat_direct_child_is_superset(tree, outer, inner):
     assert css <= compat
     # independent oracle: Y anywhere inside (or equal to) a direct child
     d = DocIndex(html)
+    kids = [[] for _ in range(d.n)]
+    for j, p in enumerate(d.parent_l):
+        if p >= 0:
+            kids[p].append(j)
     want = set()
     for x in range(d.n):
         if d.tag[x] != outer:
             continue
-        for ch in d.children_of(x):
+        for ch in kids[x]:
             for j in range(d.n):
                 if d.tag[j] == inner and d.start_l[ch] <= d.start_l[j] < d.end_l[ch]:
                     want.add(j)
