@@ -16,7 +16,10 @@ descent (rule 2) walks each container's children by subtree jumps
 (``DocIndex.subtree_end_l``), so it is linear in nesting depth, not
 quadratic. The exact rules below are the
 PINNED SPEC: the pure-Python oracle in tests uses the same definitions,
-and the Spark pipeline must reproduce them byte-for-byte.
+and the Spark pipeline must reproduce them byte-for-byte. The tag sets
+the rules read (top-level anchors, rule-3 boilerplate tags, rule-4 media)
+are defined here and derived per document from ``DocIndex.tag_ids()``;
+the tokenizer classifies no tag for them.
 
 Pinned algorithm (deterministic):
 
@@ -44,11 +47,15 @@ from operator import itemgetter
 
 import numpy as np
 
-from .tokenizer import _TRIM_RE, BOILER_TAGS, MEDIA_TAGS, DocIndex
+from .tokenizer import _TRIM_RE, DocIndex
 
 DESCEND_FRACTION = 0.7
 LINK_DENSITY_MAX = 0.65
 MIN_ANCHORS = 2
+BOILER_TAGS = frozenset(
+    "nav footer aside header script style form iframe noscript".split()
+)
+MEDIA_TAGS = ("img", "embed")
 
 _EMPTY = np.zeros(0, dtype=np.int64)
 
@@ -84,8 +91,7 @@ class TextMass:
 
         # top-level <a> nodes: in doc order, an <a> is top-level iff it
         # starts at/after the end of the previous top-level <a> (nested
-        # anchors are contained intervals); anchor ids come straight
-        # from the tokenizer pass
+        # anchors are contained intervals)
         start_l = doc.start_l
         end_l = doc.end_l
         cstart_l = doc.cstart_l
@@ -93,13 +99,12 @@ class TextMass:
         top: list[int] = []
         bounds: list[int] = []
         cur_end = -1
-        for i in doc.a_ids:
+        for i in doc.tag_ids().get("a", ()):
             if start_l[i] >= cur_end:
                 top.append(i)
                 bounds.append(cstart_l[i])
                 bounds.append(cend_l[i])
                 cur_end = end_l[i]
-        self.top_anchors = top
         if top:
             self.anchor_starts = np.asarray(
                 [start_l[i] for i in top], dtype=np.int64
@@ -200,19 +205,24 @@ def pruned_ranges(
         return []
     if tl is None:
         tl, al = node_masses(doc, tm)
-    # boilerplate-tag mask comes pre-classified from the tokenizer pass;
-    # only the candidate subrange is lifted to numpy
-    boiler = np.asarray(doc.boiler_l[a0:b0], dtype=bool)
     tl = tl[a0:b0]
     al = al[a0:b0]
     na = tm.anchors_in_many(doc.cstart[a0:b0], doc.cend[a0:b0])
     dense = (na >= MIN_ANCHORS) & (tl > 0) & (al > LINK_DENSITY_MAX * tl)
-    cand = np.flatnonzero(boiler | dense)
+    # candidates: the link-dense nodes plus each boilerplate tag's ids in
+    # [a0, b0), sliced from the tag index (a per-node probe of doc.tag
+    # measured slower on deep nesting). A node listed twice is skipped
+    # the second time, as nested in itself.
+    cand = (np.flatnonzero(dense) + a0).tolist()
+    ti = doc.tag_ids()
+    for t in BOILER_TAGS & ti.keys():
+        ids = ti[t]
+        cand += ids[bisect.bisect_left(ids, a0):bisect.bisect_left(ids, b0)]
+    cand.sort()
     start_l, end_l = doc.start_l, doc.end_l
     out: list[tuple[int, int]] = []
     last_end = -1
-    for k in cand:
-        j = a0 + int(k)
+    for j in cand:
         s, e = start_l[j], end_l[j]
         if s < last_end:
             continue  # nested inside an already-pruned subtree
@@ -269,15 +279,17 @@ def main_content_columns(
         return k >= 0 and pos < pruned[k][1]
 
     media: list[tuple[int, str]] = []
-    # img/embed ids come pre-classified from the tokenizer pass (sorted
-    # in doc order), so only actual media nodes are visited
-    if doc.media_ids:
+    # img/embed ids from the tag index, merged into doc order, so only
+    # actual media nodes are visited
+    ti = doc.tag_ids()
+    media_ids = sorted(j for t in MEDIA_TAGS if t in ti for j in ti[t])
+    if media_ids:
         start_l = doc.start_l
         a0 = bisect_left(start_l, lo)
         b0 = bisect_left(start_l, hi)
-        m_lo = bisect_left(doc.media_ids, a0)
-        m_hi = bisect_left(doc.media_ids, b0)
-        for j in doc.media_ids[m_lo:m_hi]:
+        m_lo = bisect_left(media_ids, a0)
+        m_hi = bisect_left(media_ids, b0)
+        for j in media_ids[m_lo:m_hi]:
             s_j = start_l[j]
             if not in_pruned(s_j):
                 attrs = doc.attrs(j)

@@ -17,6 +17,31 @@ SPAN_INPUT_SCHEMA = (
 )
 
 
+def _parquet_sink(df, output_dir: str, checkpoint_dir: str, available_now=True):
+    """Start ``df`` as an append-mode parquet file stream checkpointed at
+    ``checkpoint_dir``; with ``available_now`` the query drains the files
+    present at start, then stops."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _timeout_conf(state_ttl_ms: int | None):
+    """The applyInPandasWithState timeout: processing time when a state
+    TTL is set, none otherwise."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    if state_ttl_ms is None:
+        return GroupStateTimeout.NoTimeout
+    return GroupStateTimeout.ProcessingTimeTimeout
+
+
 def extract_spans_stream(
     spark,
     input_dir: str,
@@ -32,16 +57,9 @@ def extract_spans_stream(
     from .pipeline import extract_spans
 
     sdf = spark.readStream.schema(SPAN_INPUT_SCHEMA).parquet(input_dir)
-    out = extract_spans(sdf)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _parquet_sink(
+        extract_spans(sdf), output_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _make_first_seen(state_ttl_ms):
@@ -136,33 +154,20 @@ def _start_first_seen_stream(
     keyed_df, key_out: str, output_dir: str, checkpoint_dir: str,
     state_ttl_ms: int | None,
 ):
-    """Shared stateful-dedup scaffolding (review r7: one source of
-    truth for the state wiring + sink options): ``keyed_df`` must carry
-    (doc_id, fp); the emitted key column is renamed to ``key_out``."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    """Shared stateful-dedup scaffolding (one source of truth for the
+    state wiring): ``keyed_df`` must carry (doc_id, fp); the emitted key
+    column is renamed to ``key_out``."""
     first_seen = _make_first_seen(state_ttl_ms)
     out = keyed_df.groupBy("fp").applyInPandasWithState(
         first_seen,
         outputStructType="fp string, doc_id string",
         stateStructType="seen boolean",
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=_timeout_conf(state_ttl_ms),
     )
     if key_out != "fp":
         out = out.withColumnRenamed("fp", key_out)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(out, output_dir, checkpoint_dir)
 
 
 def streaming_url_dedup_first_seen(
@@ -235,14 +240,7 @@ def streaming_event_rollup(
             "sum_value",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(agg, output_dir, checkpoint_dir)
 
 
 def for_each_batch_extract(spark, input_dir: str, handle_batch, checkpoint_dir: str):
@@ -294,7 +292,6 @@ def streaming_near_dup_candidates(
     so evicting the oldest costs little recall) and optional TTL
     eviction like streaming_dedup_first_seen."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from .functions.dedup import _band_hashes, minhash_signatures
     from .session import ensure_py_files
@@ -362,17 +359,6 @@ def streaming_near_dup_candidates(
         outputStructType="doc_id string, dup_of string, est_jaccard double",
         stateStructType="ids array<string>, flat_sigs array<long>",
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=_timeout_conf(state_ttl_ms),
     )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(out, output_dir, checkpoint_dir)

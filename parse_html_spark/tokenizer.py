@@ -11,6 +11,10 @@ One forward pass over the raw string builds, per document:
 - lazily parsed attribute maps per start tag, replicating the reference's
   extractAttributes state machine [:1317-1408].
 
+The pass classifies no tag beyond the void check. Consumers that need a
+tag set (the boilerplate scorer's anchors, media and boilerplate tags,
+the matcher's tag scans) read the lazy ``DocIndex.tag_ids()`` index.
+
 Semantics pinned to the reference (SURVEY.md section 2.11):
 
 - a tag starts only at ``<`` + ASCII letter (or ``</`` + letter); anything
@@ -50,13 +54,6 @@ VOID_TAGS = frozenset(
     "source track wbr".split()
 )
 
-# owned here (not boilerplate.py) so the tokenizer can pre-classify
-# nodes in its single pass; boilerplate imports these
-BOILER_TAGS = frozenset(
-    "nav footer aside header script style form iframe noscript".split()
-)
-MEDIA_TAGS = ("img", "embed")
-
 KNOWN_TAGS = frozenset(
     """a abbr address area article aside audio b base bdi bdo blockquote body
     br button canvas caption cite code col colgroup command datalist dd del
@@ -68,18 +65,6 @@ KNOWN_TAGS = frozenset(
     summary sup table tbody td textarea tfoot th thead time title tr track u
     ul var video wbr""".split()
 )
-
-# one dict probe per open tag replaces four set/equality probes in the
-# token loop (round-7 profiling). Bit 0 is boiler so `fl & 1` doubles as
-# the stored boiler_l value (0/1 == False/True for every consumer).
-_TF_BOILER, _TF_VOID, _TF_A, _TF_MEDIA = 1, 2, 4, 8
-TAG_FLAGS: dict[str, int] = {
-    t: (_TF_BOILER if t in BOILER_TAGS else 0)
-    | (_TF_VOID if t in VOID_TAGS else 0)
-    | (_TF_A if t == "a" else 0)
-    | (_TF_MEDIA if t in MEDIA_TAGS else 0)
-    for t in (KNOWN_TAGS | VOID_TAGS | BOILER_TAGS | {"a", *MEDIA_TAGS})
-}
 
 # The markup-token grammar. Its alternatives are mutually exclusive on
 # their first character (letter / '/' / '!?'), so ordering is free: the
@@ -188,8 +173,7 @@ class DocIndex:
     __slots__ = (
         "html", "n", "tag", "_attrs", "_tag_ids",
         "start_l", "end_l", "cstart_l", "cend_l", "parent_l", "subtree_end_l",
-        "_depth_l", "tstart_l", "tend_l", "a_ids", "media_ids", "boiler_l",
-        "_cstart_a", "_cend_a",
+        "_depth_l", "tstart_l", "tend_l", "_cstart_a", "_cend_a",
     )
 
     # every node array is a plain list: scalar paths (container descent,
@@ -231,19 +215,16 @@ class DocIndex:
         starts: list[int] = []
         st_ends: list[int] = []  # end of start tag
         open_stacks: dict[str, list[int]] = {}
-        # single-pass side products (round 6 profiling): plain-text
-        # regions (gaps between markup tokens) built inline instead of
-        # via a token_spans tuple list + second pass; anchor / media /
-        # boilerplate node classification done here (set lookups per
-        # open tag) so the scorer never rebuilds them per document.
+        # plain-text regions (gaps between markup tokens) are built
+        # inline, not by a second pass. The void check is the loop's only
+        # tag classification: the scorer derives its anchor, media and
+        # boilerplate-tag sets from tag_ids(), so the selector paths,
+        # which never score, do not pay for them.
         # A leaf token appends its final outer/contents ends at once; an
         # open tag appends its start-tag end to both, and a matching
         # closer overwrites them in place.
         tstart: list[int] = []
         tend: list[int] = []
-        a_ids: list[int] = []
-        media_ids: list[int] = []
-        boiler_l: list[bool] = []
         ends: list[int] = []
         cends: list[int] = []
 
@@ -254,13 +235,9 @@ class DocIndex:
         st_ends_append = st_ends.append
         tstart_append = tstart.append
         tend_append = tend.append
-        a_append = a_ids.append
-        media_append = media_ids.append
-        boiler_append = boiler_l.append
         ends_append = ends.append
         cends_append = cends.append
         get_stack = open_stacks.get
-        flags_get = TAG_FLAGS.get
         pos = 0
         for m in _LOOP_RE.finditer(html):
             s_tok, e_tok = m.span()
@@ -285,24 +262,18 @@ class DocIndex:
                 tags_append(lname)
                 starts_append(s_tok)
                 st_ends_append(st_end)
-                fl = flags_get(lname, 0)
-                boiler_append(fl & 1)
-                if fl & 12:
-                    if fl & 4:
-                        a_append(idx)
-                    else:
-                        media_append(idx)
+                void = lname in VOID_TAGS
                 if last == 3:
                     # a bare start tag until a closer pops it
                     ends_append(e_tok)
                     cends_append(e_tok)
-                    if not fl & 2:
+                    if not void:
                         stack = get_stack(lname)
                         if stack is None:
                             open_stacks[lname] = [idx]
                         else:
                             stack.append(idx)
-                elif fl & 2:
+                elif void:
                     # a void leaf (<br>x</br>) stays a bare node and its
                     # closer an orphan, as the tag-by-tag loop leaves them
                     ends_append(st_end)
@@ -342,9 +313,6 @@ class DocIndex:
         self._cstart_a = None
         self._cend_a = None
         self._attrs: list[dict | None] = [None] * n
-        self.a_ids = a_ids
-        self.media_ids = media_ids
-        self.boiler_l = boiler_l
 
         # parent pointers via interval stack (nodes are in start order),
         # with the open ends kept beside the ids and a sentinel that no
@@ -460,10 +428,6 @@ class DocIndex:
             if e_k > s_k:
                 parts.append(self.html[s_k:e_k])
         return "".join(parts)
-
-    def node_text(self, i: int) -> str:
-        """text() of a node = strip_tags of its outer HTML."""
-        return self.text_between(self.cstart_l[i], self.cend_l[i])
 
 
 _TRIM_RE = re.compile(r"\s\s+")

@@ -25,6 +25,8 @@ from hypothesis import example, given, settings
 
 from parse_html_spark.boilerplate import (
     DESCEND_FRACTION,
+    LINK_DENSITY_MAX,
+    MIN_ANCHORS,
     TextMass,
     find_main_container,
     main_content_spans,
@@ -61,8 +63,8 @@ from parse_html_spark.extract import (
 from parse_html_spark.selector import Atom, Compound, compile_selector
 from parse_html_spark.tokenizer import (
     KNOWN_TAGS,
-    TAG_FLAGS,
     TOKEN_RE,
+    VOID_TAGS,
     DocIndex,
     parse_attrs,
     trim_html,
@@ -151,13 +153,13 @@ def tag_soup(draw):
     return "".join(draw(st.lists(piece, max_size=40)))
 
 
-def _container_by_scan(doc, tm, m_all):
+def _container_by_scan(doc, m_all):
     """Rule 2 as first written: at every level, scan the container's
     whole subtree slice of the parent array for its children."""
     lo, hi = 0, len(doc.html)
     if doc.n == 0:
         return lo, hi
-    tl, al = _whole_doc_clipped(doc, tm)
+    tl, al = _whole_doc_clipped(doc)
     m_cur = int(tl - al)
     cur = -1
     while m_cur > 0:
@@ -191,9 +193,9 @@ def test_container_sibling_walk_matches_scan(html):
     tl, al = node_masses(doc, tm)
     m_all = (tl - al).tolist()
     lo, hi = find_main_container(doc, tm, m_all)
-    assert (lo, hi) == _container_by_scan(doc, tm, m_all)
+    assert (lo, hi) == _container_by_scan(doc, m_all)
     # the descent's whole-document mass is the two prefix-sum totals
-    whole_tl, whole_al = _whole_doc_clipped(doc, tm)
+    whole_tl, whole_al = _whole_doc_clipped(doc)
     assert tm.cum[-1] == whole_tl
     assert tm.acum[-1] == whole_al
     # pruning without precomputed masses computes the same ones
@@ -520,8 +522,7 @@ def _index_by_token_loop(html):
     """DocIndex's arrays as the loop over TOKEN_RE built them, one markup
     token per turn: open tags push per-name stacks, exact closers pop;
     parents from an interval stack that every container enters."""
-    tags, starts, st_ends, tstart, tend = [], [], [], [], []
-    a_ids, media_ids, boiler, closures = [], [], [], []
+    tags, starts, st_ends, tstart, tend, closures = [], [], [], [], [], []
     stacks: dict = {}
     pos = 0
     for m in TOKEN_RE.finditer(html):
@@ -536,13 +537,7 @@ def _index_by_token_loop(html):
             tags.append(lname)
             starts.append(s_tok)
             st_ends.append(e_tok)
-            fl = TAG_FLAGS.get(lname, 0)
-            boiler.append(bool(fl & 1))
-            if fl & 4:
-                a_ids.append(idx)
-            elif fl & 8:
-                media_ids.append(idx)
-            if not fl & 2:
+            if lname not in VOID_TAGS:
                 stacks.setdefault(lname, []).append(idx)
         elif m.lastindex == 2:
             cname = m[2]
@@ -569,7 +564,6 @@ def _index_by_token_loop(html):
     return {
         "tag": tags, "start": starts, "end": ends, "cstart": st_ends,
         "cend": cends, "parent": parent, "tstart": tstart, "tend": tend,
-        "a_ids": a_ids, "media_ids": media_ids, "boiler": boiler,
     }
 
 
@@ -615,23 +609,24 @@ def test_doc_index_equals_token_loop(html):
     got = {
         "tag": doc.tag, "start": doc.start_l, "end": doc.end_l,
         "cstart": doc.cstart_l, "cend": doc.cend_l, "parent": doc.parent_l,
-        "tstart": doc.tstart_l,
-        "tend": doc.tend_l, "a_ids": doc.a_ids, "media_ids": doc.media_ids,
-        "boiler": [bool(b) for b in doc.boiler_l],
+        "tstart": doc.tstart_l, "tend": doc.tend_l,
     }
     assert got == want
 
 
 # -- prefix-difference masses and columnar emit vs clipped / sorted ---------
 
-PAGE_TAGS = ["div", "p", "b", "a", "nav", "section", "span", "script"]
+PAGE_TAGS = ["div", "p", "b", "a", "A", "nav", "NAV", "section", "span", "script"]
 PAGE_TEXT = ["x", " ", "  \n ", "body text of some length ", "z" * 30, "a  b"]
 
 
 @st.composite
 def page_soup(draw):
     """Tag soup with what the scorer reads: anchors (link-dense runs),
-    boilerplate tags, img/embed media, crossing and unclosed elements."""
+    boilerplate tags, img/embed media, crossing and unclosed elements.
+    Upper-case names and a void media leaf (``<img>x</img>``, a bare
+    node plus an orphan closer) pin the case folding and the void rule
+    of the tag sets the scorer derives."""
     t = st.sampled_from(PAGE_TAGS)
     text = st.sampled_from(PAGE_TEXT)
     piece = st.one_of(
@@ -639,12 +634,13 @@ def page_soup(draw):
         t.map(lambda n: f"</{n}>"),
         st.tuples(t, text).map(lambda a: f"<{a[0]}>{a[1]}</{a[0]}>"),
         text.map(lambda x: f"<a href='/'>{x}</a>"),
+        text.map(lambda x: f"<A HREF='/'>{x}</A>"),
         st.tuples(t, t, text, text).map(
             lambda a: f"<{a[0]}>{a[2]}<{a[1]}>{a[3]}</{a[0]}>{a[2]}</{a[1]}>"
         ),
         st.sampled_from([
             "<img src='m'>", "<img data-src='d'>", "<embed>", "<br>",
-            "<!-- c -->",
+            "<IMG SRC='u'>", "<img src='m'>x</img>", "<!-- c -->",
         ]),
         text,
     )
@@ -669,13 +665,25 @@ def _clipped_mass(starts, ends, lo, hi):
     return np.maximum(np.where(b > a, total - left - right, 0), 0)
 
 
-def _clip_regions(doc, tm):
+def _top_anchors(doc):
+    """Anchors that no earlier anchor's outer span contains."""
+    anchors = [i for i, t in enumerate(doc.tag) if t == "a"]
+    return [
+        i for i in anchors
+        if not any(
+            doc.start_l[j] <= doc.start_l[i] < doc.end_l[j]
+            for j in anchors if j < i
+        )
+    ]
+
+
+def _clip_regions(doc):
     """The text regions, and the anchor regions: text regions cut to
     each top-level anchor's contents."""
     ts = np.asarray(doc.tstart_l, dtype=np.int64)
     te = np.asarray(doc.tend_l, dtype=np.int64)
     ats, ate = [], []
-    for i in tm.top_anchors:
+    for i in _top_anchors(doc):
         alo, ahi = doc.cstart_l[i], doc.cend_l[i]
         for s, e in zip(doc.tstart_l, doc.tend_l):
             s, e = max(s, alo), min(e, ahi)
@@ -687,19 +695,41 @@ def _clip_regions(doc, tm):
     return ts, te, ats, ate
 
 
-def _masses_by_clipping(doc, tm):
+def _masses_by_clipping(doc):
     """(text_len, anchor_len) per node by clipping the text regions and
     the anchor regions to its contents."""
-    ts, te, ats, ate = _clip_regions(doc, tm)
+    ts, te, ats, ate = _clip_regions(doc)
     cs, ce = doc.cstart, doc.cend
     return _clipped_mass(ts, te, cs, ce), _clipped_mass(ats, ate, cs, ce)
 
 
-def _whole_doc_clipped(doc, tm):
+def _whole_doc_clipped(doc):
     """(text_len, anchor_len) of [0, len(html)) by clipping."""
-    ts, te, ats, ate = _clip_regions(doc, tm)
+    ts, te, ats, ate = _clip_regions(doc)
     lo, hi = [0], [len(doc.html)]
     return int(_clipped_mass(ts, te, lo, hi)[0]), int(_clipped_mass(ats, ate, lo, hi)[0])
+
+
+RULE3_TAGS = {
+    "nav", "footer", "aside", "header", "script", "style", "form", "iframe",
+    "noscript",
+}
+
+
+def _pruned_by_scan(doc, lo, hi, tl, al):
+    """Rule 3 node by node: outer spans of the outermost nodes starting
+    in [lo, hi) that have a boilerplate tag or are link-dense."""
+    anchor_starts = [doc.start_l[i] for i in _top_anchors(doc)]
+    out = []
+    for j in range(doc.n):
+        s, e = doc.start_l[j], doc.end_l[j]
+        if not lo <= s < hi or (out and s < out[-1][1]):
+            continue
+        na = sum(doc.cstart_l[j] <= a < doc.cend_l[j] for a in anchor_starts)
+        dense = na >= MIN_ANCHORS and tl[j] > 0 and al[j] > LINK_DENSITY_MAX * tl[j]
+        if doc.tag[j] in RULE3_TAGS or dense:
+            out.append((s, e))
+    return out
 
 
 def _spans_by_events(doc, lo, hi, pruned, media_positions):
@@ -733,9 +763,9 @@ def _spans_by_events(doc, lo, hi, pruned, media_positions):
             t = trim_html(doc.html[pos:e])
             if t:
                 events.append((pos, 1, "text", t, None))
-    for j in doc.media_ids:
+    for j, t in enumerate(doc.tag):
         s_j = doc.start_l[j]
-        if lo <= s_j < hi and not in_pruned(s_j):
+        if t in ("img", "embed") and lo <= s_j < hi and not in_pruned(s_j):
             a = doc.attrs(j)
             events.append((s_j, 0, "media", "", a.get("src") or a.get("data-src") or ""))
     for pos, ref in media_positions:
@@ -754,11 +784,12 @@ def test_masses_and_emit_equal_clipped_event_forms(html, cuts, edge_picks):
     doc = DocIndex(html)
     tm = TextMass(doc)
     tl, al = node_masses(doc, tm)
-    want_tl, want_al = _masses_by_clipping(doc, tm)
+    want_tl, want_al = _masses_by_clipping(doc)
     assert tl.tolist() == want_tl.tolist()
     assert al.tolist() == want_al.tolist()
     lo, hi = find_main_container(doc, tm)
     pruned = pruned_ranges(doc, tm, lo, hi)
+    assert pruned == _pruned_by_scan(doc, lo, hi, want_tl, want_al)
     edges = sorted(doc.tstart_l + doc.tend_l) or [0]
     media = [(c % (len(html) + 1), f"c{k}") for k, c in enumerate(cuts)]
     media += [(edges[p % len(edges)], f"e{k}") for k, p in enumerate(edge_picks)]

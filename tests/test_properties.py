@@ -163,22 +163,14 @@ def test_ref_compat_direct_child_is_superset(tree, outer, inner):
 @given(html_tree())
 def test_docindex_twin_consistency(tree):
     """The tokenizer keeps every node array as a list, with lazy numpy
-    views of cstart/cend only, plus pre-classified anchor/media/
-    boilerplate ids -- the scalar paths read the lists, the boilerplate
-    vector pass the views, so any drift between them is silent wrong
-    answers. Pin: views are element-equal and the classifications match
-    recomputing from tags."""
-    from parse_html_spark.tokenizer import BOILER_TAGS, MEDIA_TAGS
-
+    views of cstart/cend only -- the scalar paths read the lists, the
+    boilerplate vector pass the views, so any drift between them is
+    silent wrong answers. Pin: views are element-equal, and the text
+    regions are disjoint and ordered."""
     html, _ = tree
     d = DocIndex(html)
     assert d.cstart.tolist() == d.cstart_l
     assert d.cend.tolist() == d.cend_l
-    assert d.a_ids == [i for i, t in enumerate(d.tag) if t == "a"]
-    assert d.media_ids == [
-        i for i, t in enumerate(d.tag) if t in MEDIA_TAGS
-    ]
-    assert d.boiler_l == [t in BOILER_TAGS for t in d.tag]
     # text regions are disjoint, ordered, and non-empty
     for k in range(len(d.tstart_l)):
         assert d.tstart_l[k] < d.tend_l[k]
@@ -187,11 +179,9 @@ def test_docindex_twin_consistency(tree):
 
 
 def test_docindex_twin_consistency_on_soup():
-    """Same view/classification pins over adversarial soup (junk
-    closers, orphan tags, anchors/media/boiler tags, stray '<')."""
+    """Same view pins over adversarial soup (junk closers, orphan tags,
+    anchors/media/boiler tags, stray '<')."""
     import random
-
-    from parse_html_spark.tokenizer import BOILER_TAGS, MEDIA_TAGS
 
     rng = random.Random(77)
     tags = ["div", "p", "a", "span", "nav", "footer", "img", "form",
@@ -220,8 +210,3 @@ def test_docindex_twin_consistency_on_soup():
         d = DocIndex("".join(parts))
         assert d.cstart.tolist() == d.cstart_l
         assert d.cend.tolist() == d.cend_l
-        assert d.a_ids == [i for i, t in enumerate(d.tag) if t == "a"]
-        assert d.media_ids == [
-            i for i, t in enumerate(d.tag) if t in MEDIA_TAGS
-        ]
-        assert d.boiler_l == [t in BOILER_TAGS for t in d.tag]

@@ -68,8 +68,8 @@ def test_node_tree():
     assert d.parent_l == [-1, 0, 0, 2]
     assert d.outer(1) == "<p>one</p>"
     assert d.contents(2) == "two <b>bold</b>"
-    assert d.node_text(2) == "two bold"
-    assert d.node_text(0) == "onetwo bold"
+    assert d.text_between(d.cstart_l[2], d.cend_l[2]) == "two bold"
+    assert d.text_between(d.cstart_l[0], d.cend_l[0]) == "onetwo bold"
 
 
 def test_void_and_unclosed():
@@ -82,7 +82,7 @@ def test_void_and_unclosed():
     span = tags.index("span")
     # unclosed non-void element stays a bare start tag: empty contents
     assert d.is_bare(span)
-    assert d.node_text(span) == ""
+    assert d.text_between(d.cstart_l[span], d.cend_l[span]) == ""
     assert d.outer(span) == "<span>"
 
 
@@ -90,14 +90,14 @@ def test_comments_and_stray_lt():
     html = "<div>a <!-- note --> b <3 c</div>"
     d = DocIndex(html)
     # comment is markup (strip_tags drops it); '<3' is literal text
-    assert d.node_text(0) == "a  b <3 c"
+    assert d.text_between(d.cstart_l[0], d.cend_l[0]) == "a  b <3 c"
 
 
 def test_orphan_close_tag_excluded_from_text():
     html = "<div>a </b> c</div>"
     d = DocIndex(html)
     assert d.tag == ["div"]
-    assert d.node_text(0) == "a  c"
+    assert d.text_between(d.cstart_l[0], d.cend_l[0]) == "a  c"
 
 
 def test_nested_same_tag():
@@ -105,7 +105,7 @@ def test_nested_same_tag():
     d = DocIndex(html)
     assert d.outer(0) == html
     assert d.outer(1) == "<div>B</div>"
-    assert d.node_text(0) == "ABC"
+    assert d.text_between(d.cstart_l[0], d.cend_l[0]) == "ABC"
 
 
 def test_first_gt_terminates_start_tag():

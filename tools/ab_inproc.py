@@ -8,6 +8,10 @@ host's multi-minute clock windows).
 
     python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs] [--page|--select[=SEL]...] [--deep]
 
+By default a pass times a fresh ``DocIndex`` plus
+``boilerplate.main_content_columns``, the engine work of
+``pipeline._compact_doc``, on the fixture mix.
+
 ``--deep`` times the benchmark's ``deep_nesting`` corpus (seed 1: normal
 pages with the article nested 64..4096 divs deep, built by
 ``perfbench/corpus.deep_doc``; ndocs defaults to its 128 docs) instead
@@ -70,7 +74,7 @@ def load_engine(root: str, name: str, page: bool = False, select=()):
 
         return tok.DocIndex, select_fn
     if not page:
-        return tok.DocIndex, boil.main_content_spans
+        return tok.DocIndex, boil.main_content_columns
     return tok.DocIndex, importlib.import_module(name + ".pipeline")._page_doc
 
 

@@ -4,8 +4,8 @@
     python tools/tok_parity.py check [n]      # byte-parity vs snapshot + wall
 
 Parity covers EVERY DocIndex internal consumers touch: tag, start/end/
-cstart/cend/parent/depth, text regions, attr maps (forced), a_ids,
-media_ids, boiler flags (truthiness), plus main_content_spans output.
+cstart/cend/parent/depth, text regions, attr maps (forced), plus
+main_content_spans output.
 """
 
 from __future__ import annotations
@@ -36,9 +36,6 @@ def capture(html: str, media) -> dict:
         "depth": list(d.depth_l),
         "tstart": list(d.tstart_l),
         "tend": list(d.tend_l),
-        "a_ids": list(d.a_ids),
-        "media_ids": list(d.media_ids),
-        "boiler": [bool(b) for b in d.boiler_l],
         "attrs": [d.attrs(i) for i in range(d.n)],
         "attrs_v": [d.attrs(i, validate=True) for i in range(d.n)],
         "spans": main_content_spans(d, media),
