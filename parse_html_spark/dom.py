@@ -41,6 +41,13 @@ def _cached_plan(selector: str, ref_compat: bool):
     return compile_selector(selector, ref_compat=ref_compat)
 
 
+def _starts_closed(d: DocIndex) -> bool:
+    """The raw starts with a start tag that has a matching end tag: the
+    reference's extract($element) condition [ParseHTMLAdvanced.php:52-56],
+    and what makes a fresh object's getElements() its outermost element."""
+    return bool(d.n) and d.start_l[0] == 0 and not d.is_bare(0)
+
+
 class PH:
     """jQuery-style selection over one HTML document."""
 
@@ -249,10 +256,7 @@ class PH:
         document's outermost element when the raw starts with one."""
         if self._nodes is not None:
             return list(self._nodes)
-        d = self._doc
-        if d.n and d.start_l[0] == 0 and not d.is_bare(0):
-            return [0]
-        return []
+        return [0] if _starts_closed(self._doc) else []
 
     # -- terminals ---------------------------------------------------------
 

@@ -28,7 +28,9 @@ index. Pinned semantics:
 
 from __future__ import annotations
 
-from .dom import PH
+import re
+
+from .dom import PH, _starts_closed
 from .matcher import _compile, _match_in_range
 from .tokenizer import DocIndex, trim_html
 
@@ -92,14 +94,10 @@ def _walk(doc: DocIndex, root: int, prune_tag: str | None, val_only: bool):
         buf = ""
         if _keep(t):
             c.append(t)
-        if not val_only:
-            value = {"t": tag[node], "a": dict(doc.attrs(node)), "c": c}
-        elif not c:
-            value = ""
-        elif len(c) == 1:
-            value = c[0]
+        if val_only:
+            value = _collapse(c)
         else:
-            value = c
+            value = {"t": tag[node], "a": dict(doc.attrs(node)), "c": c}
         if not stack:
             return value
         node, pos, c = stack.pop()
@@ -112,42 +110,43 @@ def extract_node(doc: DocIndex, i: int, prune_tag: str | None = None):
     return _walk(doc, i, prune_tag, False)
 
 
-def _extracts(doc: DocIndex) -> bool:
-    """The reference's extract($element) condition on a whole document:
-    it starts with a start tag that has a matching end tag [:52-56]."""
-    return bool(doc.n) and doc.start_l[0] == 0 and not doc.is_bare(0)
-
-
 def extract_html(html: str):
     """Reference static extract($element) on a raw string: the string must
     start with a start tag and have a matching end tag, else it is
     returned unchanged [:52-56]."""
     doc = DocIndex(html)
-    return extract_node(doc, 0) if _extracts(doc) else html
+    return extract_node(doc, 0) if _starts_closed(doc) else html
+
+
+def _collapse(c: list):
+    """extractValueOnly's one rule for a node's collapsed children: none
+    -> '', one -> that child, more -> the list [:664-684]."""
+    if not c:
+        return ""
+    return c[0] if len(c) == 1 else c
 
 
 def value_only(tree) -> object:
-    """extractValueOnly collapse [:109-120, :664-684]."""
-    storage: list = []
-    _value_only(tree, storage)
-    return storage[0] if storage else None
-
-
-def _value_only(node, storage: list) -> None:
-    if isinstance(node, str):
-        storage.append(node)
-        return
-    children = node["c"]
-    if not children:
-        storage.append("")
-        return
-    if len(children) == 1:
-        _value_only(children[0], storage)
-        return
-    sub: list = []
-    for ch in children:
-        _value_only(ch, sub)
-    storage.append(sub)
+    """extractValueOnly collapse of an extract() tree [:109-120,
+    :664-684], by an explicit stack of (children left, collapsed
+    children), so depth never meets the recursion limit."""
+    if isinstance(tree, str):
+        return tree
+    stack = [(iter(tree["c"]), [])]
+    while True:
+        kids, c = stack[-1]
+        for ch in kids:
+            if isinstance(ch, str):
+                c.append(ch)
+            else:
+                stack.append((iter(ch["c"]), []))
+                break
+        else:
+            stack.pop()
+            value = _collapse(c)
+            if not stack:
+                return value
+            stack[-1][1].append(value)
 
 
 def _selection_elements(sel: PH) -> list[tuple[DocIndex, int | None]]:
@@ -162,7 +161,7 @@ def _selection_elements(sel: PH) -> list[tuple[DocIndex, int | None]]:
 
 def _extract_one(doc: DocIndex, node: int | None, val_only: bool):
     if node is None:
-        if not _extracts(doc):
+        if not _starts_closed(doc):
             return doc.html
         node = 0
     return _walk(doc, node, None, val_only)
@@ -205,54 +204,46 @@ def extract_table_list(sel: PH, val_only: bool = False) -> list:
 
 # -- forms ---------------------------------------------------------------
 
-def insert_nested(storage: dict, name: str, value) -> None:
-    """PHP-style nested names: a[b][0][], '' segments auto-index
-    [:690-713] (Drupal drupal_parse_info_format derivation)."""
-    import re as _re
-
-    keys = _re.split(r"\]?\[", name.rstrip("]"))
-    last = keys.pop()
-    parent = storage
-    for key in keys:
-        if key == "":
-            key = len(parent)  # PHP count($parent) auto-index [:699-701]
-        elif key.isdigit():
-            key = int(key)  # PHP numeric-string key cast
-        if key not in parent or not isinstance(parent[key], dict):
-            parent[key] = {}
-        parent = parent[key]
-    if last == "":
-        last = len(parent)
-    elif last.isdigit():
-        last = int(last)
-    parent[last] = value
+_NAME_SPLIT = re.compile(r"\]?\[")
 
 
-def _merge_into(out: dict, b: dict, next_keys: dict) -> None:
-    """PHP array_merge_recursive(out, b), written into ``out``: string
-    keys recurse / scalars pair up into lists; integer keys append with
-    renumbering. Dicts of ``b`` become part of ``out`` and are merged
-    into later, so ``b`` is used once. ``next_keys`` is private to one
-    extract_form call (see _append): merging n controls is linear, not
-    quadratic."""
-    for k, v in b.items():
-        if isinstance(k, int):
-            _append(out, v, next_keys)
-        elif k not in out:
-            out[k] = v
-        else:
-            old = out[k]
-            if isinstance(old, dict):
-                if isinstance(v, dict):
-                    _merge_into(old, v, next_keys)
-                else:
-                    _append(old, v, next_keys)
-            elif isinstance(v, dict):
-                nd = {0: old}
-                _merge_into(nd, v, next_keys)
-                out[k] = nd
+def _name_key(k: str):
+    """A bracket segment as a key: '' auto-indexes as 0 [:699-701] and an
+    ASCII digit string is cast like a PHP numeric string; any other
+    segment ('²', '٣') stays a string key."""
+    if k == "":
+        return 0
+    return int(k) if k.isascii() and k.isdigit() else k
+
+
+def _merge_control(storage: dict, name: str, value, next_keys: dict) -> None:
+    """array_merge_recursive(storage, the one-path array that the PHP-style
+    name a[b][0][] makes of value) [:690-713], written in place by one
+    walk down storage along the name's keys. An integer key appends the
+    rest of the path; a new string key takes it as one fresh chain, its
+    keys as written; an existing string key is descended into, a scalar
+    there becoming {0: scalar} first. At the last key a scalar pairs or
+    appends, and a select's option dict appends each of its values.
+    ``next_keys`` is private to one extract_form call (see _append):
+    merging n controls is linear, not quadratic."""
+    keys = [_name_key(k) for k in _NAME_SPLIT.split(name.rstrip("]"))]
+    d = storage
+    for i, k in enumerate(keys):
+        if isinstance(k, int) or k not in d:
+            rest = value
+            for r in reversed(keys[i + 1:]):
+                rest = {r: rest}
+            if isinstance(k, int):
+                _append(d, rest, next_keys)
             else:
-                out[k] = {0: old, 1: v}
+                d[k] = rest
+            return
+        old = d[k]
+        if not isinstance(old, dict):
+            old = d[k] = {0: old}
+        d = old
+    for v in value.values() if isinstance(value, dict) else (value,):
+        _append(d, v, next_keys)
 
 
 def _append(d: dict, v, next_keys: dict) -> None:
@@ -295,29 +286,23 @@ def extract_form(sel: PH, selector: str | None = None) -> dict:
     doc = controls.doc
     storage: dict = {}
     next_keys: dict[int, tuple[dict, int]] = {}
-    if doc is None:
-        return storage
     for n in controls.nodes:  # already in position order (ksort pin)
         attrs = doc.attrs(n)
-        if "name" not in attrs or attrs["name"] is None:
+        name = attrs.get("name")
+        if name is None:
             continue
-        name = attrs["name"]
         tag = doc.tag[n]
         if tag == "select":
             options = map(doc.attrs, _match_in_range(
                 doc, _compile("option", ()), doc.start_l[n], doc.end_l[n]
             ))
             values = [o["value"] for o in options if "value" in o]
-            value: object = (
-                {i: v for i, v in enumerate(values)} if values else None
-            )
+            value: object = dict(enumerate(values)) if values else None
         elif tag == "textarea":
             value = doc.contents(n)
         else:
             value = attrs.get("value")
-        piece: dict = {}
-        insert_nested(piece, name, value)
-        _merge_into(storage, piece, next_keys)
+        _merge_control(storage, name, value, next_keys)
     return storage
 
 

@@ -40,11 +40,13 @@ _OFFSET_KEY = itemgetter("offset")
 
 def assemble(spans) -> tuple[str, list[tuple[int, str]]]:
     """Concatenate text spans in offset order; media spans become
-    (assembled_char_position, media_ref) slots."""
+    (assembled_char_position, media_ref) slots. ``spans`` is read as it
+    arrives: a list of dicts, or pandas' array of dicts or ``Row``s (both
+    index by field name); None means no spans."""
     parts: list[str] = []
     media: list[tuple[int, str]] = []
     pos = 0
-    for s in sorted(spans, key=_OFFSET_KEY):
+    for s in sorted(() if spans is None else spans, key=_OFFSET_KEY):
         if s["kind"] == "text":
             txt = s["text"] or ""
             parts.append(txt)
@@ -52,13 +54,6 @@ def assemble(spans) -> tuple[str, list[tuple[int, str]]]:
         else:
             media.append((pos, s["media_ref"] or ""))
     return "".join(parts), media
-
-
-def _spans_of_row(row_spans) -> list[dict]:
-    # pandas delivers array<struct> as a numpy array of dicts (Arrow path)
-    if row_spans is None:
-        return []
-    return [s if isinstance(s, dict) else s.asDict() for s in row_spans]
 
 
 def _doc_map(df, per_doc, schema: str):
@@ -71,7 +66,7 @@ def _doc_map(df, per_doc, schema: str):
     kernel adds doc_id and owns the batch loop and the output build."""
 
     def row(_doc_id, row_spans):
-        html, media = assemble(_spans_of_row(row_spans))
+        html, media = assemble(row_spans)
         return per_doc(DocIndex(html), media)
 
     return _batch_map(df, row, schema, ("doc_id", "spans"), key="doc_id")

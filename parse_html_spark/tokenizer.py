@@ -352,14 +352,13 @@ class DocIndex:
         # attr source span is fully derivable: it runs from the end of
         # the (pure-ASCII) tag name to just before the start tag's '>',
         # so no per-node span tuple is stored in the tokenize loop
-        if validate:
-            a = self.start_l[i] + 1 + len(self.tag[i])
-            return parse_attrs(self.html[a:self.cstart_l[i] - 1], validate=True)
         cached = self._attrs[i]
         if cached is None:
             a = self.start_l[i] + 1 + len(self.tag[i])
             cached = parse_attrs(self.html[a:self.cstart_l[i] - 1])
             self._attrs[i] = cached
+        if validate:  # parse_attrs(..., validate=True), as a fresh dict
+            return {k: v for k, v in cached.items() if not _ATTR_FORBIDDEN.search(k)}
         return cached
 
     def outer(self, i: int) -> str:

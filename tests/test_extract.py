@@ -1,11 +1,13 @@
 """Structural-extractor goldens transcribed verbatim from
 /root/reference/src/ParseHTMLAdvanced.php docblocks, plus the bounds
 that keep one hostile page from failing a task: form merging linear in
-its controls, value-only tables at any cell depth, nested tables linear
-in their depth."""
+its controls and at any name depth, value-only tables at any cell
+depth, value-only collapse at any tree depth, nested tables linear in
+their depth."""
 
 import gc
 import json
+import re
 import time
 
 import hypothesis.strategies as st
@@ -17,10 +19,11 @@ from parse_html_spark.extract import (
     extract_form,
     extract_html,
     extract_table,
+    extract_node,
     extract_table_list,
-    insert_nested,
     prepare_post_form,
     to_plain,
+    value_only,
 )
 from parse_html_spark.pipeline import _page_doc
 from parse_html_spark.tokenizer import DocIndex
@@ -280,7 +283,32 @@ def _merge_by_copy(a: dict, b: dict) -> dict:
     return out
 
 
-FORM_NAMES = ["a", "a[]", "a[b]", "a[b][]", "a[0]", "a[2]", "a[][c]", "0", "5", "b[x][y]", "a[b][0]"]
+def _insert_nested(storage: dict, name: str, value) -> None:
+    """The one-path array of a PHP-style name a[b][0][] as first written
+    [ParseHTMLAdvanced.php:690-713]: '' segments auto-index, ASCII digit
+    segments become integer keys."""
+    keys = re.split(r"\]?\[", name.rstrip("]"))
+    last = keys.pop()
+    parent = storage
+    for key in keys:
+        if key == "":
+            key = len(parent)
+        elif key.isascii() and key.isdigit():
+            key = int(key)
+        if key not in parent or not isinstance(parent[key], dict):
+            parent[key] = {}
+        parent = parent[key]
+    if last == "":
+        last = len(parent)
+    elif last.isascii() and last.isdigit():
+        last = int(last)
+    parent[last] = value
+
+
+FORM_NAMES = [
+    "a", "a[]", "a[b]", "a[b][]", "a[0]", "a[2]", "a[][c]", "0", "5", "b[x][y]", "a[b][0]",
+    "a[b]]", "a[]]", "a[07]", "²", "a[b][c]",
+]
 # control kind -> (html after the name, the value extract_form reads)
 FORM_CONTROLS = {
     "v": (' value="v">', "v"),
@@ -301,13 +329,49 @@ def test_extract_form_equals_copying_merge(controls):
         tag = "select" if kind.startswith("select") else "input"
         html += f'<{tag} name="{name}"{tail}'
         piece: dict = {}
-        insert_nested(piece, name, dict(value) if isinstance(value, dict) else value)
+        _insert_nested(piece, name, dict(value) if isinstance(value, dict) else value)
         want = _merge_by_copy(want, piece)
 
     def dump(v):
         return json.dumps(to_plain(v), ensure_ascii=False)
 
     assert dump(extract_form(PH(html))) == dump(want)
+
+
+def test_non_ascii_digit_names_are_string_keys():
+    """PHP casts only ASCII digit strings to integer keys: '²' passes
+    str.isdigit but not int(), and '٣' would become key 3."""
+    html = '<input name="a[²]" value="x"><input name="²" value="y"><input name="a[٣]" value="z">'
+    assert extract_form(PH(html)) == {"a": {"²": "x", "٣": "z"}, "²": "y"}
+    page = _page_doc(DocIndex("<html><body><form>" + html + "</form></body></html>"), [])
+    assert json.loads(page["form_json"][0]) == {"a": {"²": "x", "٣": "z"}, "²": "y"}
+
+
+def _chain_depth(value, key) -> tuple[int, object]:
+    """How many times ``key`` nests in ``value``, and what it ends at:
+    walked, because == and json.dumps of a deep chain recurse."""
+    depth = 0
+    while isinstance(value, dict) and list(value) == [key]:
+        value, depth = value[key], depth + 1
+    return depth, value
+
+
+def test_extract_form_merges_10k_segment_names():
+    name = "a" + "[b]" * 10_000
+    html = f'<input name="{name}" value="v"><input name="{name}" value="w">'
+    depth, leaf = _chain_depth(extract_form(PH(html)), "a")
+    assert depth == 1
+    assert _chain_depth(leaf, "b") == (10_000, {0: "v", 1: "w"})
+
+
+def test_value_only_collapses_10k_deep_mixed_content():
+    depth = 10_000
+    doc = DocIndex("<div>t" * depth + "</div>" * depth)
+    got = value_only(extract_node(doc, 0))
+    for _ in range(depth - 1):
+        assert isinstance(got, list) and len(got) == 2 and got[0] == "t"
+        got = got[1]
+    assert got == "t"
 
 
 def test_extract_form_linear_in_controls():

@@ -11,8 +11,8 @@ Parity against the code each fast path replaced, kept here as the
 oracle: the leaf-token DocIndex loop against the tag-by-tag token loop,
 the prefix-difference masses against clipped region masses, the
 columnar emit against the event-sorting emit, and the iterative
-extract walk (tree and value-only modes) against the recursive
-extract_node + value_only."""
+extract walk (tree and value-only modes) and value_only against a
+recursive extract_node and a recursive value-only collapse."""
 
 import bisect
 import re
@@ -798,7 +798,7 @@ def test_masses_and_emit_equal_clipped_event_forms(html, cuts, edge_picks):
         assert main_content_spans(doc, m) == _spans_by_events(doc, lo, hi, pruned, m)
 
 
-# -- iterative extract walk vs the recursive extract_node + value_only ------
+# -- iterative extract walk and value_only vs their recursive forms ---------
 
 def _extract_node_by_recursion(doc, kids, i, prune_tag=None):
     """extract_node by recursion over ``kids``, a _children_index."""
@@ -820,6 +820,18 @@ def _extract_node_by_recursion(doc, kids, i, prune_tag=None):
     if _keep(t):
         c.append(t)
     return {"t": doc.tag[i], "a": dict(doc.attrs(i)), "c": c}
+
+
+def _value_only_by_recursion(tree):
+    """extractValueOnly by recursion [ParseHTMLAdvanced.php:664-684]: a
+    string stays, no children -> '', one child -> its collapse, more ->
+    the list of their collapses."""
+    if isinstance(tree, str):
+        return tree
+    c = [_value_only_by_recursion(ch) for ch in tree["c"]]
+    if not c:
+        return ""
+    return c[0] if len(c) == 1 else c
 
 
 @st.composite
@@ -857,9 +869,8 @@ def test_extract_walk_equals_recursion(html):
     assert extract_table_list(ph) == want
     for k in range(len(want)):
         assert extract_table_list(tables.eq(k))[0] == want[k]
-    assert extract_table_list(tables, val_only=True) == [value_only(t) for t in want]
-    assert [value_only(extract_node(doc, t, prune_tag="table")) for t in tables.nodes] == [
-        value_only(t) for t in want
-    ]
+    want_v = [_value_only_by_recursion(t) for t in want]
+    assert extract_table_list(tables, val_only=True) == want_v
+    assert [value_only(extract_node(doc, t, prune_tag="table")) for t in tables.nodes] == want_v
     for i in range(doc.n):
         assert extract_node(doc, i) == _extract_node_by_recursion(doc, kids, i)

@@ -1,10 +1,15 @@
 """In-process interleaved A/B engine timing.
 
 Loads the engine (tokenizer + boilerplate) from two checkouts under
-isolated module names, then alternates timing passes A,B,B,A,... inside
-ONE process so both sides sample the same host-throttle state at ~1 s
-granularity (subprocess-level interleaving was still dominated by the
-host's multi-minute clock windows).
+isolated module names and times both inside ONE process. Each round
+walks the docs in chunks of about 1/40 of them (50 of the default
+2,000, 3 of the 128 deep docs) and times A and B on every chunk, the
+first side alternating chunk by chunk; a round's A and B are the sums of
+its chunk times. So both sides sample the same host-throttle state a few
+milliseconds apart: whole ~1 s passes, alternated, still read per-round
+A/B from 0.78 to 1.35 on unchanged code on a host that throttles its
+clocks, and subprocess-level interleaving was dominated by the host's
+multi-minute clock windows.
 
     python tools/ab_inproc.py <dir_A> <dir_B> [rounds] [ndocs] [--page|--select[=SEL]...] [--deep]
 
@@ -96,27 +101,29 @@ def main() -> None:
     else:
         pairs = [assemble(gen_doc(i)["spans"]) for i in range(n)]
 
-    def run(di, mcs) -> float:
-        t0 = time.time()
-        for h, m in pairs:
+    def run(di, mcs, chunk) -> float:
+        t0 = time.perf_counter()
+        for h, m in chunk:
             mcs(di(h), m)
-        return time.time() - t0
+        return time.perf_counter() - t0
 
     # parity spot check: identical output from both engines
     for h, m in pairs[:200]:
         assert mcs_a(di_a(h), m) == mcs_b(di_b(h), m)
 
-    run(di_a, mcs_a)
-    run(di_b, mcs_b)  # warm both
+    run(di_a, mcs_a, pairs)
+    run(di_b, mcs_b, pairs)  # warm both
+    step = max(1, round(n / 40))
+    chunks = [pairs[k:k + step] for k in range(0, n, step)]
     ratios = []
     for r in range(rounds):
-        order = ["ab", "ba"][r % 2]
-        res = {}
-        for side in order:
-            if side == "a":
-                res["a"] = run(di_a, mcs_a)
-            else:
-                res["b"] = run(di_b, mcs_b)
+        res = {"a": 0.0, "b": 0.0}
+        for k, chunk in enumerate(chunks):
+            for side in ("ab", "ba")[(r + k) % 2]:
+                if side == "a":
+                    res["a"] += run(di_a, mcs_a, chunk)
+                else:
+                    res["b"] += run(di_b, mcs_b, chunk)
         ratios.append(res["a"] / res["b"])
         print(
             f"round {r} A={res['a']:.3f}s B={res['b']:.3f}s "
