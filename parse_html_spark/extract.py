@@ -263,15 +263,29 @@ def _append(d: dict, v, next_keys: dict) -> None:
 
 def to_plain(value):
     """Canonicalize PHP-ish arrays: dicts whose keys are 0..n-1 ints
-    become Python lists (for JSON golden comparison)."""
-    if isinstance(value, dict):
-        conv = {k: to_plain(v) for k, v in value.items()}
-        if conv and all(isinstance(k, int) for k in conv):
-            keys = sorted(conv)
-            if keys == list(range(len(keys))):
-                return [conv[k] for k in keys]
-        return conv
-    return value
+    become Python lists (for JSON golden comparison); a list is kept as
+    it is, never descended into. An explicit stack of (items left,
+    converted dict, key in the parent), so depth never meets the
+    recursion limit."""
+    if not isinstance(value, dict):
+        return value
+    stack = [(iter(value.items()), {}, None)]
+    while True:
+        items, conv, key = stack[-1]
+        for k, v in items:
+            if isinstance(v, dict):
+                stack.append((iter(v.items()), {}, k))
+                break
+            conv[k] = v
+        else:
+            stack.pop()
+            if conv and all(isinstance(k, int) for k in conv):
+                keys = sorted(conv)
+                if keys == list(range(len(keys))):
+                    conv = [conv[k] for k in keys]
+            if not stack:
+                return conv
+            stack[-1][1][key] = conv
 
 
 FORM_SELECTOR = "input, textarea, select, button"

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import time
+from json.encoder import encode_basestring as _encode_str
 from operator import itemgetter
 
 import numpy as np
@@ -72,8 +73,47 @@ def _doc_map(df, per_doc, schema: str):
     return _batch_map(df, row, schema, ("doc_id", "spans"), key="doc_id")
 
 
+_END = object()
+
+
 def _json(value) -> str:
-    return json.dumps(to_plain(value), ensure_ascii=False)
+    """json.dumps(to_plain(value), ensure_ascii=False), written by one
+    loop over an explicit stack of (items left, closer) per open array
+    or object, so depth never meets the recursion limit. Strings and
+    keys go through json's own encode_basestring; other scalars, {} and
+    [] through json.dumps itself, so every byte matches."""
+    out = []
+    stack = []
+    v = to_plain(value)
+    while True:
+        if isinstance(v, str):
+            out.append(_encode_str(v))
+        elif v is None:
+            out.append("null")
+        elif isinstance(v, dict) and v:
+            out.append("{")
+            stack.append((iter(v.items()), "}"))
+        elif isinstance(v, (list, tuple)) and v:
+            out.append("[")
+            stack.append((iter(v), "]"))
+        else:
+            out.append(json.dumps(v))
+        while stack:
+            items, closer = stack[-1]
+            v = next(items, _END)
+            if v is _END:
+                out.append(closer)
+                stack.pop()
+                continue
+            if out[-1] not in ("{", "["):  # not the first item
+                out.append(", ")
+            if closer == "}":
+                k, v = v
+                out.append(_encode_str(k if isinstance(k, str) else json.dumps(k)))
+                out.append(": ")
+            break
+        else:
+            return "".join(out)
 
 
 def extract_spans(df):
@@ -353,7 +393,7 @@ def _page_doc(doc, media):
     out = _compact_doc(doc, media)
     ph = PH(doc.html, doc=doc)
     title = ph.find("title").text()
-    tables = extract_table_list(ph.find("table"), val_only=True)
+    tables = extract_table_list(ph, val_only=True)
     out["tables_json"] = [_json(tables)]
     out["form_json"] = [_json(extract_form(ph))]
     out["title"] = [title]

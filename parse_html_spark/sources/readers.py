@@ -24,6 +24,7 @@ comes from the number of archives, which at crawl scale is millions.
 from __future__ import annotations
 
 import codecs
+import re
 import zlib
 
 SPAN_DOC_SCHEMA = (
@@ -53,6 +54,7 @@ def read_span_docs_jsonl(spark, path: str):
 # an executor, mirroring the PNG/JPEG/GIF pixel ceilings. 64 MiB is far
 # above any real page (Common Crawl truncates records at ~1 MB).
 _MAX_HTTP_DECODED = 1 << 26
+_CAP_ERR = f"decompressed size exceeds cap ({_MAX_HTTP_DECODED} bytes)"
 
 # per-record BUFFERING ceiling in the WARC splitter: a record whose
 # declared Content-Length exceeds this keeps only the first
@@ -85,7 +87,9 @@ def _bounded_inflate(
 def _gunzip_members(
     data: bytes, max_out: int | None = None
 ) -> tuple[bytes | None, str | None]:
-    """Decompress concatenated gzip members (stdlib only).
+    """Decompress concatenated gzip members: the collector of
+    _iter_gz_chunks, so a whole buffer and a streamed archive are
+    inflated, and their errors worded, by one loop.
 
     Returns (bytes decompressed so far, error string or None). A
     truncated final member, a corrupt stream mid-member, or trailing
@@ -97,34 +101,12 @@ def _gunzip_members(
     (None, error) -- a decompression bomb must census as undecodable,
     never balloon executor memory (ADVICE r6)."""
     out = bytearray()
-    pos = 0
-    while pos < len(data):
-        if data[pos : pos + 2] != b"\x1f\x8b":
-            return bytes(out), f"trailing garbage at byte {pos}"
-        d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
-        try:
-            if max_out is None:
-                out.extend(d.decompress(data[pos:]))
-                out.extend(d.flush())
-            else:
-                member, over = _bounded_inflate(
-                    d, data[pos:], max_out - len(out)
-                )
-                if over:
-                    return None, (
-                        f"decompressed size exceeds cap ({max_out} bytes)"
-                    )
-                out.extend(member)
-        except zlib.error as exc:
-            return bytes(out), f"corrupt gzip member at byte {pos}: {exc}"
-        if not d.eof:
-            # ran out of input mid-member: decompress() returned what
-            # it could without raising
-            return bytes(out), f"truncated gzip member at byte {pos}"
-        tail = d.unused_data
-        if not tail:
-            break
-        pos = len(data) - len(tail)
+    for piece, err in _iter_gz_chunks(data):
+        if piece is None:
+            return bytes(out), err
+        out += piece
+        if max_out is not None and len(out) > max_out:
+            return None, f"decompressed size exceeds cap ({max_out} bytes)"
     return bytes(out), None
 
 
@@ -133,8 +115,7 @@ def _iter_gz_chunks(
 ):
     """Stream-decompress a concatenated-gzip archive into bounded
     chunks: yields (decompressed piece, None) repeatedly, then on a
-    stream problem one final (None, error) -- error strings identical
-    to _gunzip_members so the census buckets never move. Peak memory is
+    stream problem one final (None, error). Peak memory is
     O(out_chunk + in_chunk) regardless of archive size: the old
     whole-archive bytearray was the one remaining 100x-scale killer
     (VERDICT r6 #1 -- a ~1 GB .warc.gz decompresses to ~4-5 GB, and 32
@@ -180,6 +161,21 @@ def _iter_gz_chunks(
         if not d.eof:
             yield None, f"truncated gzip member at byte {member_off}"
             return
+
+
+def _header_map(block: bytes) -> dict[str, str]:
+    """The 'Name: value' lines of a WARC or HTTP header block after its
+    first (version or status) line -> {lowercased name: value}, latin-1
+    and stripped; a line without ':' is skipped, a repeated name keeps
+    its last value."""
+    out = {}
+    for line in block.split(b"\r\n")[1:]:
+        k, sep, v = line.partition(b":")
+        if sep:
+            out[k.decode("latin-1").strip().lower()] = (
+                v.decode("latin-1").strip()
+            )
+    return out
 
 
 def _iter_warc_stream(chunks, status: dict | None = None):
@@ -274,13 +270,7 @@ def _iter_warc_stream(chunks, status: dict | None = None):
                 return
             search_from = max(len(buf) - 3, 0)
             pull()
-        headers: dict[str, str] = {}
-        for line in bytes(buf[:hdr_end]).split(b"\r\n")[1:]:
-            if b":" in line:
-                k, v = line.split(b":", 1)
-                headers[k.decode("latin-1").strip().lower()] = (
-                    v.decode("latin-1").strip()
-                )
+        headers = _header_map(bytes(buf[:hdr_end]))
         try:
             length = int(headers.get("content-length", "0"))
         except ValueError:
@@ -390,33 +380,22 @@ def _decompress_http(
         # ONLY when the zlib parse errors: a raw reparse of a genuinely
         # zlib-framed truncated stream can coincidentally 'complete'
         # into garbage (review r6 pass 2), so a successful-but-
-        # truncated zlib parse is never overridden
-        d = zlib.decompressobj(wbits=zlib.MAX_WBITS)
-        try:
-            out, over = _bounded_inflate(d, payload, _MAX_HTTP_DECODED)
+        # truncated zlib parse is never overridden. When both framings
+        # error, the zlib error is the one reported
+        zerr = None
+        for wbits in (zlib.MAX_WBITS, -zlib.MAX_WBITS):
+            d = zlib.decompressobj(wbits=wbits)
+            try:
+                out, over = _bounded_inflate(d, payload, _MAX_HTTP_DECODED)
+            except zlib.error as exc:
+                zerr = zerr or str(exc)
+                continue
             if over:
-                return None, (
-                    f"{layer} deflate: decompressed size exceeds cap "
-                    f"({_MAX_HTTP_DECODED} bytes)"
-                )
-            if d.eof:
-                return bytes(out), None
-            return bytes(out), f"{layer} deflate: truncated stream"
-        except zlib.error as exc:
-            zerr = str(exc)
-        d = zlib.decompressobj(wbits=-zlib.MAX_WBITS)
-        try:
-            out, over = _bounded_inflate(d, payload, _MAX_HTTP_DECODED)
-        except zlib.error:
-            return None, f"{layer} deflate: {zerr}"
-        if over:
-            return None, (
-                f"{layer} deflate: decompressed size exceeds cap "
-                f"({_MAX_HTTP_DECODED} bytes)"
+                return None, f"{layer} deflate: {_CAP_ERR}"
+            return bytes(out), (
+                None if d.eof else f"{layer} deflate: truncated stream"
             )
-        if d.eof:
-            return bytes(out), None
-        return bytes(out), f"{layer} deflate: truncated stream"
+        return None, f"{layer} deflate: {zerr}"
     if decoders and enc in decoders:
         try:
             out = decoders[enc](payload)
@@ -428,10 +407,7 @@ def _decompress_http(
                 f"{type(out).__name__}, not bytes"
             )
         if len(out) > _MAX_HTTP_DECODED:
-            return None, (
-                f"{layer} {enc}: decompressed size exceeds cap "
-                f"({_MAX_HTTP_DECODED} bytes)"
-            )
+            return None, f"{layer} {enc}: {_CAP_ERR}"
         return bytes(out), None
     return None, f"unsupported {layer} {enc!r}"
 
@@ -497,6 +473,20 @@ def _decode_charset(payload: bytes, label: str | None):
     text = payload.decode("utf-8", errors="replace")
     replaced = text.count("�") - payload.count(b"\xef\xbf\xbd")
     return text, "utf-8", f"undeclared_nonutf8:{max(replaced, 1)}"
+
+
+def _charset_status(err: str) -> str | None:
+    """Census status of a _decode_charset annotation, or None for any
+    other error (an HTTP decode failure). The decode succeeded either
+    way (utf-8 fallback for an unknown label, statistical sniff or
+    replace decode for undeclared bytes), so it is an annotation in
+    both on_error modes, never a failure: the mojibake-risk tail stays
+    census-visible (VERDICT r6 #2)."""
+    if err.startswith("unknown charset"):
+        return f"unknown_charset:{err}"
+    if err.startswith(("undeclared_nonutf8", "sniffed_charset")):
+        return err
+    return None
 
 
 def _lookup_text_codec(label: str) -> str | None:
@@ -625,8 +615,6 @@ def _sniff_legacy_charset(payload: bytes) -> str | None:
     koi8-r for marker-less samples) can misattribute within the same
     script family; the output is always annotated sniffed_charset:<n>,
     never silent, so the census keeps the call auditable."""
-    import re
-
     m = re.search(rb"[\x80-\xff]", payload)
     if m is None:
         return None
@@ -667,7 +655,9 @@ def _sniff_legacy_charset(payload: bytes) -> str | None:
 
 
 _WS = b"\t\n\x0c\r "
-_XMLDECL_RE = None
+_XMLDECL_RE = re.compile(
+    rb"<\?xml[^>]{0,256}?encoding\s*=\s*[\"']([a-zA-Z0-9._-]+)", re.IGNORECASE
+)
 
 
 def _prescan_get_attr(head: bytes, i: int):
@@ -733,15 +723,6 @@ def _sniff_html_charset(payload: bytes) -> str | None:
     often omit the header charset while the page declares it in
     markup -- without this, every such non-UTF-8 page decodes as
     mojibake. Returns the label (validated downstream) or None."""
-    global _XMLDECL_RE
-    if _XMLDECL_RE is None:
-        import re
-
-        _XMLDECL_RE = re.compile(
-            rb"<\?xml[^>]{0,256}?"
-            rb"encoding\s*=\s*[\"']([a-zA-Z0-9._-]+)",
-            re.IGNORECASE,
-        )
     head = payload[:1024]
     n = len(head)
     # XML declaration: allowed after a BOM, whitespace, and leading
@@ -868,17 +849,10 @@ def _norm_charset(label: str | None) -> str:
     return _lookup_text_codec(label) or "utf-8"
 
 
-_CHARSET_RE = None
+_CHARSET_RE = re.compile(r"""charset\s*=\s*["']?\s*([^"';\s]+)""", re.I)
 
 
 def _charset_from_content_type(ctype: str) -> str | None:
-    global _CHARSET_RE
-    if _CHARSET_RE is None:
-        import re
-
-        _CHARSET_RE = re.compile(
-            r"""charset\s*=\s*["']?\s*([^"';\s]+)""", re.IGNORECASE
-        )
     m = _CHARSET_RE.search(ctype)
     return m.group(1) if m else None
 
@@ -926,65 +900,47 @@ def _decode_http_response(body: bytes, decoders: dict | None = None):
     if body[:5] in (b"HTTP/", b"http/"):
         sep = body.find(b"\r\n\r\n")
         if sep >= 0:
-            hdrs: dict[str, str] = {}
-            for line in body[:sep].split(b"\r\n")[1:]:
-                if b":" in line:
-                    k, v = line.split(b":", 1)
-                    hdrs[k.decode("latin-1").strip().lower()] = (
-                        v.decode("latin-1").strip()
-                    )
+            hdrs = _header_map(body[:sep])
             payload = body[sep + 4 :]
             ctype = hdrs.get("content-type", "").lower()
             charset_label = _charset_from_content_type(ctype)
-            te = [
-                t.split(";")[0].strip().lower()
-                for t in hdrs.get("transfer-encoding", "").split(",")
-                if t.strip()
-            ]
-            # undo transfer codings in reverse application order
-            # ('Transfer-Encoding: gzip, chunked' is RFC-legal --
-            # dechunk, then gunzip, review r6). 'chunked' is handled
-            # wherever it appears (wild-web 'chunked, identity' must
-            # keep decoding as it always did -- review r6 pass 2); an
-            # unrecognized coding means the payload bytes are NOT
-            # text -- flag, don't emit
-            for tok in reversed(te):
-                if payload is None:
-                    break
-                if tok == "chunked":
-                    payload, terr = _dechunk(payload)
-                    err = err or terr
-                else:
-                    # gzip/deflate, an external-decoder coding, or
-                    # unsupported -- _decompress_http decides uniformly
-                    payload, terr = _decompress_http(
-                        payload,
-                        tok,
-                        layer="transfer-encoding",
-                        decoders=decoders,
-                    )
-                    err = err or terr
             ce = hdrs.get("content-encoding", "identity")
             content_encoding = ce.strip().lower() or "identity"
-            # comma-separated coding lists ('gzip, identity') are
-            # RFC-legal and appear in the wild: split and apply in
-            # reverse application order, mirroring the transfer-coding
-            # loop (ADVICE r6 -- the whole string used to hit the
-            # unsupported branch and drop a decodable body). The census
-            # column keeps the raw normalized list string.
-            for tok in reversed(
-                [t.strip() for t in content_encoding.split(",") if t.strip()]
-            ):
+            # undo the codings in reverse application order: the
+            # transfer codings ('Transfer-Encoding: gzip, chunked' is
+            # RFC-legal -- dechunk, then gunzip, review r6), then the
+            # content codings, whose comma-separated lists ('gzip,
+            # identity') are RFC-legal and appear in the wild (ADVICE
+            # r6 -- the whole string used to hit the unsupported branch
+            # and drop a decodable body; the census column keeps the raw
+            # normalized list string). A transfer 'chunked' is undone
+            # wherever it appears (wild-web 'chunked, identity' must keep
+            # decoding as it always did -- review r6 pass 2); any other
+            # coding goes to _decompress_http, and an unrecognized one
+            # means the payload bytes are NOT text -- flag, don't emit.
+            # Later codings run even after a truncated dechunk: the
+            # partial bytes decompress partially, whereas skipping would
+            # charset-decode raw COMPRESSED bytes into mojibake 'text'
+            # (review r6)
+            codings = [
+                ("transfer-encoding", t.split(";")[0].strip().lower())
+                for t in reversed(hdrs.get("transfer-encoding", "").split(","))
+                if t.strip()
+            ] + [
+                ("content-encoding", t.strip())
+                for t in reversed(content_encoding.split(","))
+                if t.strip()
+            ]
+            for layer, tok in codings:
                 if payload is None:
                     break
-                # run even after a truncated dechunk: the partial bytes
-                # decompress partially (gzip/deflate degrade), whereas
-                # skipping here would charset-decode raw COMPRESSED
-                # bytes into mojibake 'text' (review r6)
-                payload, cerr2 = _decompress_http(
-                    payload, tok, decoders=decoders
-                )
-                err = err or cerr2
+                if tok == "chunked" and layer == "transfer-encoding":
+                    payload, cerr = _dechunk(payload)
+                else:
+                    payload, cerr = _decompress_http(
+                        payload, tok, layer, decoders
+                    )
+                err = err or cerr
     if payload is None:
         return None, _norm_charset(charset_label), content_encoding, err
     if charset_label is None or _lookup_text_codec(charset_label) is None:
@@ -1149,31 +1105,9 @@ def read_span_docs_warc(
             hstat = None
             if rtype == "response":
                 hstat = _http_status(body)
-                text, charset, cenc, herr = _decode_http_response(
+                text, charset, cenc, err = _decode_http_response(
                     body, decoders
                 )
-                if herr is not None and status == "ok":
-                    # record-level truncation (above) outranks:
-                    # a cut record usually also breaks its HTTP
-                    # decode, and the cut is the root cause
-                    if herr.startswith("unknown charset"):
-                        # decode SUCCEEDED via the utf-8
-                        # fallback; annotate, don't fail --
-                        # raise mode stays tolerant here too
-                        status = f"unknown_charset:{herr}"
-                    elif herr.startswith(
-                        ("undeclared_nonutf8", "sniffed_charset")
-                    ):
-                        # also a successful decode (replace
-                        # fallback / statistical detection) --
-                        # annotation in both modes (VERDICT
-                        # r6 #2: make the mojibake-risk tail
-                        # census-visible, don't fail it)
-                        status = herr
-                    elif not flag:
-                        raise ValueError(f"{fpath}#{off}: {herr}")
-                    else:
-                        status = f"http_decode_error:{herr}"
             else:
                 # 'resource' records carry raw documents (often
                 # HTML) -> meta prescan applies; every other
@@ -1186,17 +1120,17 @@ def read_span_docs_warc(
                     if rtype == "resource"
                     else None
                 )
-                text, charset, cerr = _decode_charset(body, label)
+                text, charset, err = _decode_charset(body, label)
                 cenc = "identity"
-                if cerr is not None and status == "ok":
-                    status = (
-                        cerr
-                        if cerr.startswith(
-                            ("undeclared_nonutf8",
-                             "sniffed_charset")
-                        )
-                        else f"unknown_charset:{cerr}"
-                    )
+            if err is not None and status == "ok":
+                # record-level truncation (above) outranks: a cut
+                # record usually also breaks its HTTP decode, and
+                # the cut is the root cause
+                status = _charset_status(err)
+                if status is None:
+                    if not flag:
+                        raise ValueError(f"{fpath}#{off}: {err}")
+                    status = f"http_decode_error:{err}"
             yield doc_row(f"{uri}#{off}", text, status, charset, cenc, hstat)
         arch_err = split_status.get("archive_error")
         if arch_err is not None and not flag:

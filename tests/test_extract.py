@@ -3,7 +3,7 @@
 that keep one hostile page from failing a task: form merging linear in
 its controls and at any name depth, value-only tables at any cell
 depth, value-only collapse at any tree depth, nested tables linear in
-their depth."""
+their depth, and page JSON at any depth, byte-identical to json.dumps."""
 
 import gc
 import json
@@ -25,7 +25,7 @@ from parse_html_spark.extract import (
     to_plain,
     value_only,
 )
-from parse_html_spark.pipeline import _page_doc
+from parse_html_spark.pipeline import _json, _page_doc
 from parse_html_spark.tokenizer import DocIndex
 
 
@@ -443,3 +443,80 @@ def test_nested_tables_linear_in_depth():
                 if val_only:
                     assert got == [""] * (n - 1) + ["x"]
         assert best[10_000] / best[1_000] <= 15, (val_only, best)
+
+
+# -- page JSON: one loop, byte-identical to json.dumps(to_plain(v)) ---------
+
+def _to_plain_by_recursion(value):
+    """to_plain as first written: recursion into dicts only."""
+    if isinstance(value, dict):
+        conv = {k: _to_plain_by_recursion(v) for k, v in value.items()}
+        if conv and all(isinstance(k, int) for k in conv):
+            keys = sorted(conv)
+            if keys == list(range(len(keys))):
+                return [conv[k] for k in keys]
+        return conv
+    return value
+
+
+def _assert_json_matches(v):
+    want = json.dumps(to_plain(v), ensure_ascii=False)
+    assert want == json.dumps(_to_plain_by_recursion(v), ensure_ascii=False)
+    assert _json(v) == want
+
+
+_JSON_TEXT = st.one_of(
+    st.text(max_size=6),
+    st.sampled_from(["", "é", "日本", "x\x00", "\x01\x1f\x7f", "\u2028", '"\\', "\ud800"]),
+)
+# int keys drawn out of order and with gaps: {1: .., 0: ..}, {5: .., 6: ..}
+_JSON_KEYS = st.one_of(st.integers(0, 6), _JSON_TEXT)
+_JSON_VALUES = st.recursive(
+    st.one_of(st.none(), _JSON_TEXT),
+    lambda inner: st.one_of(
+        st.dictionaries(_JSON_KEYS, inner, max_size=5),
+        st.lists(inner, max_size=4),
+    ),
+    max_leaves=40,
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(_JSON_VALUES)
+def test_json_equals_json_dumps_on_value_trees(v):
+    _assert_json_matches(v)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(st.sampled_from(FORM_NAMES), st.sampled_from(sorted(FORM_CONTROLS))), max_size=12))
+def test_json_equals_json_dumps_on_forms(controls):
+    html = ""
+    for name, kind in controls:
+        tag = "select" if kind.startswith("select") else "input"
+        html += f'<{tag} name="{name}"{FORM_CONTROLS[kind][0]}'
+    _assert_json_matches(extract_form(PH(html)))
+    _assert_json_matches(prepare_post_form(PH(html), "a"))
+
+
+def test_json_equals_json_dumps_on_fixed_values():
+    ph = PH(NESTED_TABLES + FORM)
+    for v in (
+        [{0: "a"}], {1: "x", 0: "y"}, {5: "a", 6: None}, {}, [], {0: {}, 1: []},
+        "x\x00", None, {"k": [1, [2.5, {}], {0: True}]}, {0: {0: {0: {0: {1: "a", 0: "b"}}}}},
+        extract_table_list(ph), extract_table_list(ph, val_only=True),
+        extract_node(ph.doc, 0), extract_form(ph),
+    ):
+        _assert_json_matches(v)
+
+
+def test_page_json_at_10k_depth():
+    """A 10,000-deep <div>t cell and a 10,000-segment form name reach
+    JSON through the page path at the default recursion limit; the
+    expected strings are built flat, since json.loads of them recurses."""
+    depth = 10_000
+    cell = "<div>t" * depth + "</div>" * depth
+    page = _page_doc(DocIndex(f"<html><body><table><tr><td>{cell}</td></tr></table></body></html>"), [])
+    assert page["tables_json"] == ["[" + '["t", ' * (depth - 1) + '"t"' + "]" * (depth - 1) + "]"]
+    name = "a" + "[b]" * depth
+    form = extract_form(PH(f'<input name="{name}" value="v">'))
+    assert _json(form) == '{"a": ' + '{"b": ' * depth + '"v"' + "}" * (depth + 1)

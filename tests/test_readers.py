@@ -1083,6 +1083,30 @@ def test_http_decompression_bomb_capped():
     assert text is None and "exceeds cap" in herr
 
 
+def test_gzip_cap_spans_members():
+    """The cap bounds the whole body, not each member: two gzip members
+    that are each under _MAX_HTTP_DECODED but cross it together census
+    as over-cap, not as the first member's bytes."""
+    import gzip as _gzip
+
+    from parse_html_spark.sources.readers import (
+        _MAX_HTTP_DECODED,
+        _decompress_http,
+    )
+
+    m1 = _gzip.compress(b"\x00" * (_MAX_HTTP_DECODED - 10))
+    m2 = _gzip.compress(b"\x00" * 20)
+    out, err = _decompress_http(m1, "gzip")
+    assert err is None and len(out) == _MAX_HTTP_DECODED - 10
+    del out
+    out, err = _decompress_http(m1 + m2, "gzip")
+    assert out is None
+    assert err == (
+        f"content-encoding gzip: decompressed size exceeds cap "
+        f"({_MAX_HTTP_DECODED} bytes)"
+    )
+
+
 def test_content_encoding_comma_list():
     """ADVICE r6 (low): 'gzip, identity' / 'identity, gzip' are
     RFC-legal coding lists -- split and applied in reverse, mirroring
@@ -1322,9 +1346,10 @@ def test_sniffed_charset_detection(spark, tmp_path):
 
 
 def test_gz_chunk_stream_matches_batch_gunzip():
-    """The streaming inflater and _gunzip_members must agree on bytes
-    AND error strings for every corruption mode (census buckets move
-    otherwise)."""
+    """Chunk-size invariance: _gunzip_members collects _iter_gz_chunks at
+    its default chunk sizes, and the same archive streamed in 333-byte
+    output and 17-byte input chunks must give the same bytes AND error
+    string for every corruption mode (census buckets move otherwise)."""
     import gzip as _gzip
 
     from parse_html_spark.sources.readers import (

@@ -5,7 +5,9 @@
 
 Parity covers EVERY DocIndex internal consumers touch: tag, start/end/
 cstart/cend/parent/depth, text regions, attr maps (forced), plus
-main_content_spans output.
+main_content_spans output and the page JSON of ``pipeline._page_doc``
+(``tables_json``, ``form_json``, ``title``), so the table scan and the
+tree -> JSON writer of extract_page are pinned byte for byte too.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from parse_html_spark.boilerplate import main_content_spans  # noqa: E402
 from parse_html_spark.fixtures import gen_doc  # noqa: E402
-from parse_html_spark.pipeline import assemble  # noqa: E402
+from parse_html_spark.pipeline import _page_doc, assemble  # noqa: E402
 from parse_html_spark.tokenizer import DocIndex  # noqa: E402
 
 SNAP = "/tmp/tok_parity_snapshot.pkl"
@@ -26,6 +28,7 @@ SNAP = "/tmp/tok_parity_snapshot.pkl"
 
 def capture(html: str, media) -> dict:
     d = DocIndex(html)
+    page = _page_doc(DocIndex(html), media)
     return {
         "tag": list(d.tag),
         "start": list(d.start_l),
@@ -39,6 +42,7 @@ def capture(html: str, media) -> dict:
         "attrs": [d.attrs(i) for i in range(d.n)],
         "attrs_v": [d.attrs(i, validate=True) for i in range(d.n)],
         "spans": main_content_spans(d, media),
+        "page": {k: page[k] for k in ("tables_json", "form_json", "title")},
     }
 
 
