@@ -8,6 +8,7 @@ cluster the same settings apply per executor via spark-submit --py-files.
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -45,19 +46,57 @@ def _invalidate_zip(self) -> None:
     zipimport._zip_directory_cache.pop(self.archive, None)
 
 
+class _FreezeAtTaskStart:
+    """A meta path finder that finds nothing and freezes the heap when
+    import caches are invalidated. pyspark's worker calls
+    ``importlib.invalidate_caches()`` at the start of every task, after
+    the daemon's collection of the last task and before it reads the
+    new task's function: that call reaches every finder's
+    ``invalidate_caches``, so this one freezes at each task start."""
+
+    @staticmethod
+    def find_spec(fullname, path=None, target=None):
+        return None
+
+    @staticmethod
+    def invalidate_caches() -> None:
+        gc.freeze()
+
+
 def _worker_setup() -> None:
     """Per-task setup of every Python function that runs on a worker.
+    Two jobs, both for a reused worker process:
 
-    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
-    of every task. Before CPython 3.12 that makes every cached
-    ``zipimporter`` (one per imported sub-package of ``pyspark.zip``,
-    the shipped package zip, the jars on the path) re-read its whole
-    archive at once: 0.17-0.28 s of each task, far more than most tasks'
-    row work. This backports 3.12's lazy invalidation into the
-    (reused) worker process, so only an archive a later import actually
-    consults is read again. Idempotent; a no-op on 3.12 and later. The
-    first task of a fresh worker still pays, since its invalidation ran
-    before this call."""
+    - Freeze the heap at every task start. pyspark's daemon runs a full
+      ``gc.collect()`` after every task of a reused worker; a worker
+      holding pyspark, pandas, pyarrow, numpy and this package tracks
+      ~74,000 objects, so each collection walked them all (~43 ms).
+      ``gc.freeze()`` moves everything alive to the permanent
+      generation, which no collection walks: the post-task collection
+      then sees only what the task made. The first call freezes and
+      installs ``_FreezeAtTaskStart``, which freezes again at the start
+      of every later task, before pyspark reads the task's function,
+      so what the serializer imports lazily (pandas, pyarrow) is frozen
+      from the next task on. Later calls freeze nothing: a
+      ``pandas_udf`` function runs after pyspark built the task's Arrow
+      converters, whose recursive closures are cycles; frozen alive,
+      they would never be collected once garbage. Only the first task
+      of a worker keeps those.
+    - Before CPython 3.12, make zip invalidation lazy. pyspark's worker
+      calls ``importlib.invalidate_caches()`` at the start of every
+      task, and every cached ``zipimporter`` (one per imported
+      sub-package of ``pyspark.zip``, the shipped package zip, the jars
+      on the path) re-read its whole archive at once: 0.17-0.28 s of
+      each task, far more than most tasks' row work. This backports
+      3.12's lazy invalidation into the process, so only an archive a
+      later import actually consults is read again. The first task of a
+      fresh worker still pays, since its invalidation ran before this
+      call.
+
+    Idempotent: a later call installs nothing."""
+    if _FreezeAtTaskStart not in sys.meta_path:
+        sys.meta_path.append(_FreezeAtTaskStart)
+        gc.freeze()
     cls = zipimport.zipimporter
     if _LAZY_ZIP_INVALIDATION or cls.invalidate_caches is _invalidate_zip:
         return
@@ -197,9 +236,11 @@ def _batch_fn(row, inputs, key=None, size=None):
             rows = weight = 0
             for i, out in enumerate(map(row, *(pdf[c] for c in inputs))):
                 for part in (out,) if isinstance(out, dict) else out:
+                    n = 0  # a part with no columns has no rows
                     for name, block in part.items():
                         blocks.setdefault(name, []).append(block)
-                    counts.append(len(block))
+                        n = len(block)
+                    counts.append(n)
                     owners.append(i)
                     rows += counts[-1]
                     if size is not None:
@@ -223,7 +264,10 @@ def _batch_map(df, row, schema: str, inputs, key=None, size=None):
     -- or an iterable of such dicts (a generator lets one input row,
     e.g. a WARC archive, span several frames). The kernel owns the rest:
     - the package ships to executors (``ensure_py_files``), and each
-      task starts with ``_worker_setup()``;
+      task starts with ``_worker_setup()``, which has the worker's
+      heap frozen at every task start (so the daemon's post-task
+      collection walks only what the task made) and, before CPython
+      3.12, makes zip invalidation lazy;
     - only ``inputs`` cross the Arrow bridge: mapInPandas cannot tell
       Catalyst which columns it reads, so a wide table would otherwise
       serialize every column into Python;

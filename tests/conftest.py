@@ -1,3 +1,4 @@
+import gc
 import os
 import sys
 
@@ -13,3 +14,19 @@ def spark():
     spark = get_spark(cpus=4, app="parse_html_spark_tests")
     yield spark
     spark.stop()
+
+
+@pytest.fixture(autouse=True)
+def _thaw_heap():
+    """Some tests run ``session._worker_setup()`` in this process,
+    directly or through a worker function. It freezes the heap and
+    installs a hook that freezes again at every
+    ``importlib.invalidate_caches()``. Undo both after each test, so
+    later tests (the gc-paused linear-time gates among them) collect
+    over the same heap as without those tests."""
+    yield
+    from parse_html_spark.session import _FreezeAtTaskStart
+
+    if _FreezeAtTaskStart in sys.meta_path:
+        sys.meta_path.remove(_FreezeAtTaskStart)
+    gc.unfreeze()

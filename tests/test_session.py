@@ -2,6 +2,7 @@
 worker setup every Python entry point runs."""
 
 import ast
+import gc
 import importlib
 import os
 import pathlib
@@ -9,6 +10,7 @@ import shutil
 import sys
 import tempfile
 import uuid
+import weakref
 import zipfile
 import zipimport
 
@@ -101,6 +103,38 @@ def test_batch_kernel_output_bound():
     assert _bounded(0, 1, 5, True) == []
 
 
+@pytest.mark.parametrize(
+    "outs",
+    [
+        # the batch's first part has no columns
+        {0: {}, 1: {"v": [1, 1]}, 2: [{"v": [2]}]},
+        # a part with no columns follows parts with rows
+        {0: {"v": [0, 0]}, 1: {}, 2: [{"v": [2]}, {}]},
+    ],
+    ids=["first", "later"],
+)
+def test_batch_kernel_counts_an_empty_part_as_no_rows(outs):
+    """A row output ``{}`` adds no rows and no key, wherever it falls."""
+    import pandas as pd
+
+    from parse_html_spark.session import _batch_fn
+
+    batch = pd.DataFrame({"key": ["k0", "k1", "k2"], "n": range(3)})
+    run = _batch_fn(lambda _key, n: outs[n], ("key", "n"), key="key")
+    frames = list(run(iter([batch])))
+    assert len(frames) == 1
+    want = [
+        (v, f"k{n}")
+        for n, out in outs.items()
+        for part in ((out,) if isinstance(out, dict) else out)
+        for v in part.get("v", ())
+    ]
+    assert list(zip(frames[0]["v"], frames[0]["key"])) == want
+    # only empty parts: no rows, no frame
+    empty = _batch_fn(lambda _key, n: {}, ("key", "n"), key="key")
+    assert list(empty(iter([batch]))) == []
+
+
 def _write_zip(path, modules: dict) -> None:
     with zipfile.ZipFile(path, "w") as zf:
         for name, source in modules.items():
@@ -147,12 +181,13 @@ def test_worker_setup_invalidates_zips_lazily(tmp_path, monkeypatch):
 
 def test_worker_setup_is_idempotent_and_version_gated(monkeypatch):
     """A second install changes nothing; where the interpreter already
-    invalidates lazily (3.12+), the installer touches nothing."""
+    invalidates lazily (3.12+), the installer touches no zipimporter."""
     _worker_setup()
     cls = zipimport.zipimporter
     installed = dict(vars(cls))
     _worker_setup()
     assert dict(vars(cls)) == installed
+    assert sys.meta_path.count(session._FreezeAtTaskStart) == 1
     backported = cls.invalidate_caches is session._invalidate_zip
     assert backported != session._LAZY_ZIP_INVALIDATION
 
@@ -162,6 +197,49 @@ def test_worker_setup_is_idempotent_and_version_gated(monkeypatch):
     monkeypatch.setattr(session, "_LAZY_ZIP_INVALIDATION", True)
     _worker_setup()
     assert dict(vars(stand_in)) == untouched
+
+
+def test_worker_setup_freezes_at_each_task_start():
+    """The first call freezes the heap and installs the task-start hook:
+    each ``importlib.invalidate_caches()`` (pyspark's worker calls it at
+    every task start) freezes what was made since. A later call inside a
+    task freezes nothing, so a cycle alive then (pyspark's per-task
+    Arrow converters in a ``pandas_udf``) is still collected once it is
+    garbage, as is a cycle made after a freeze."""
+
+    class Node:
+        pass
+
+    _worker_setup()
+    frozen = gc.get_freeze_count()
+    assert frozen > 0
+    held = [[] for _ in range(100)]
+    importlib.invalidate_caches()
+    assert gc.get_freeze_count() >= frozen + len(held)
+
+    for setup_again in (True, False):
+        a, b = Node(), Node()
+        a.peer, b.peer = b, a
+        dead = weakref.ref(a)
+        if setup_again:
+            _worker_setup()
+        del a, b
+        gc.collect()
+        assert dead() is None
+
+
+def test_batch_map_task_runs_frozen(spark):
+    """A ``_batch_map`` row function runs on a frozen worker heap: the
+    kernel freezes it at the start of that same task, on any CPython."""
+    from parse_html_spark.session import _batch_map
+
+    def row(_i):
+        return {"frozen": [gc.get_freeze_count()]}
+
+    df = spark.range(4).selectExpr("cast(id as string) as i")
+    got = _batch_map(df, row, "frozen long", ("i",)).collect()
+    assert len(got) == 4
+    assert all(r["frozen"] > 0 for r in got)
 
 
 @pytest.mark.skipif(
@@ -328,7 +406,8 @@ def test_every_worker_entry_point_installs_first():
     """Every Python function the package passes to a worker API calls
     ``_worker_setup()`` as its first statement (``_batch_map`` stages
     through ``_batch_fn``'s ``run``), so a new stage cannot silently
-    pay the per-task zip re-read."""
+    pay the per-task zip re-read, nor a daemon collection over the
+    whole unfrozen worker heap after each task."""
     pkg = pathlib.Path(parse_html_spark.__file__).parent
     found, missing = [], []
     for path in sorted(pkg.rglob("*.py")):
