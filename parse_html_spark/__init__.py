@@ -1,6 +1,6 @@
 """parse_html_spark: a PySpark-native HTML query + main-content extraction
 engine with the operator surface of ijortengab/parse-html, re-expressed
-Spark-first (DataFrame / Arrow-vectorized mapInPandas).
+Spark-first (DataFrame / Arrow-vectorized mapInArrow).
 
 Layers:
 

@@ -1,7 +1,7 @@
 """Per-document jQuery-style API mirroring the reference's ParseHTML class.
 
 This is the single-document engine that the Spark layer vectorizes over
-Arrow batches (one DocIndex per document inside mapInPandas). It exists so
+Arrow batches (one DocIndex per document inside mapInArrow). It exists so
 the reference's chainable API surface -- find / children / eq / html /
 text / attr (/root/reference/src/ParseHTML.php:192-352) -- is available
 verbatim, and so tests can pin semantics without Spark.
@@ -32,7 +32,7 @@ from .tokenizer import DocIndex, parse_attrs
 
 @lru_cache(maxsize=512)
 def _cached_plan(selector: str, ref_compat: bool):
-    """Per-process selector-plan memo: a mapInPandas stage re-runs the
+    """Per-process selector-plan memo: a mapInArrow stage re-runs the
     same handful of selectors for every document, and compiling was a
     measured per-doc cost (round-8 profiling: 3 compiles/doc in the
     extract_page job, ~25 us each). Plans are read-only in the matcher

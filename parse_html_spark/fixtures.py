@@ -23,8 +23,6 @@ WORDS = (
     "report analysis system design model result test case number item"
 ).split()
 
-LANGS = ["en", "de", "fr", "es"]
-
 MU, SIGMA = 7.2, 1.1
 MIN_CHARS, MAX_CHARS = 200, 2_000_000
 MEGA_EVERY = 500  # every 500th doc is a mega-doc (0.2% tail)
@@ -178,11 +176,6 @@ def gen_doc(doc_i: int, seed: int = 42) -> dict:
     )
     n_chars = sum(len(s["text"]) for s in spans if s["kind"] == "text")
     return {"doc_id": f"doc-{doc_i:08d}", "spans": spans, "n_chars": n_chars}
-
-
-def gen_docs(n: int, seed: int = 42, start: int = 0):
-    for i in range(start, start + n):
-        yield gen_doc(i, seed)
 
 
 def _arrow_schema():

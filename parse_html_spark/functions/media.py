@@ -30,11 +30,6 @@ from ..session import _batch_map, _on_error_columns
 # surface, not silently flag
 _DECODE_ERRORS = (NotImplementedError, ValueError)
 
-MEDIA_META_SCHEMA = (
-    "media_ref string, media_type string, width int, height int, "
-    "duration_ms int"
-)
-
 FEATURE_SCHEMA = (
     "media_ref string, media_type string, n_bytes long, checksum long, "
     "feature array<float>"
@@ -43,7 +38,7 @@ FEATURE_SCHEMA = (
 
 def attach_payload(df, ref_col: str = "media_ref"):
     """Deterministic fake payload bytes for a media_ref (stand-in for an
-    object-store fetch; at scale this is a mapInPandas ranged GET)."""
+    object-store fetch; at scale this is a mapInArrow ranged GET)."""
     from pyspark.sql import functions as F
 
     return df.withColumn(
@@ -84,12 +79,8 @@ def _payload_size(part) -> int:
     return sum(len(p) for p in part["payload"])
 
 
-def _payload_bytes(payload) -> bytes:
-    return bytes(payload) if payload is not None else b""
-
-
 def resize_images(df, width: int, height: int, fake: bool = True):
-    """mapInPandas resize over (media_ref, payload).
+    """mapInArrow resize over (media_ref, payload).
 
     fake=False does REAL work for PNG/PPM/JPEG/GIF payloads:
     decode, exact nearest-neighbor resample, re-encode as PNG.
@@ -104,7 +95,7 @@ def resize_images(df, width: int, height: int, fake: bool = True):
     def row(_ref, payload):
         from . import codecs
 
-        data = _payload_bytes(payload)
+        data = payload or b""
         if fake:
             crc = zlib.crc32(data) & 0xFFFFFFFF
             out = f"resized:{width}x{height}:{crc:08x}".encode("ascii")
@@ -121,7 +112,7 @@ def resize_images(df, width: int, height: int, fake: bool = True):
 
 def sample_frames(df, every_ms: int = 1000, duration_ms: int = 5000, fake: bool = True):
     """Frame sampling for video payloads: one output row per sampled
-    frame (fan-out inside mapInPandas), at 0, every_ms, ... below
+    frame (fan-out inside mapInArrow), at 0, every_ms, ... below
     duration_ms. every_ms must be > 0 and duration_ms >= 0 (ValueError
     on the driver otherwise). The frame schedule and row explosion are
     real; video container decode genuinely requires ffmpeg, so
@@ -138,7 +129,7 @@ def sample_frames(df, every_ms: int = 1000, duration_ms: int = 5000, fake: bool 
             raise NotImplementedError(
                 "video decode requires ffmpeg; not available here"
             )
-        crc = zlib.crc32(_payload_bytes(payload)) & 0xFFFFFFFF
+        crc = zlib.crc32(payload or b"") & 0xFFFFFFFF
         return {
             "frame_idx": range(len(stamps)),
             "ts_ms": stamps,
@@ -157,7 +148,7 @@ def sample_frames(df, every_ms: int = 1000, duration_ms: int = 5000, fake: bool 
 def extract_media_features(
     df, fake: bool = True, dim: int = 8, on_error: str = "raise"
 ):
-    """mapInPandas over (media_ref, payload:binary) -> FEATURE_SCHEMA.
+    """mapInArrow over (media_ref, payload:binary) -> FEATURE_SCHEMA.
 
     fake=False computes REAL features for stdlib-decodable payloads:
     per-channel mean/std + luminance histogram for PNG/PPM/JPEG
@@ -184,7 +175,7 @@ def extract_media_features(
     def row(ref, payload):
         from . import codecs
 
-        data = _payload_bytes(payload)
+        data = payload or b""
         crc = zlib.crc32(data) & 0xFFFFFFFF
         status = "ok"
         if fake:

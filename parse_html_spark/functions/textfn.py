@@ -32,10 +32,6 @@ def token_count(col) -> Column:
     return F.size(tokens(col)).alias("token_count")
 
 
-def char_count(col) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col) -> Column:
     """Punctuation chars / total chars (0 for empty)."""
     total = F.length(col)
@@ -48,13 +44,6 @@ def stopword_ratio(col) -> Column:
     n = F.size(toks)
     stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
     return F.when(n == 0, F.lit(0.0)).otherwise(stop / n)
-
-
-def avg_token_len(col) -> Column:
-    toks = tokens(col)
-    n = F.size(toks)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(n == 0, F.lit(0.0)).otherwise(total / n)
 
 
 def quality_score(col) -> Column:

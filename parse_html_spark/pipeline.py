@@ -8,8 +8,8 @@ The per-doc HTML byte stream is the offset-ordered concatenation of
 kind='text' span texts; media spans occupy their offset slots and surface
 as kind='media' output spans.
 
-All pipelines are stateless mapInPandas stages (Arrow-vectorized, no
-per-row Python at the JVM boundary) followed by native DataFrame ops, so
+All pipelines are stateless mapInArrow stages (Arrow batches in and
+out, no pandas) followed by native DataFrame ops, so
 Catalyst handles pushdown/pruning and the same code runs under
 readStream ... foreachBatch unchanged. Every per-document pipeline is
 one ``_doc_map`` over a small per-doc function.
@@ -41,9 +41,9 @@ _OFFSET_KEY = itemgetter("offset")
 
 def assemble(spans) -> tuple[str, list[tuple[int, str]]]:
     """Concatenate text spans in offset order; media spans become
-    (assembled_char_position, media_ref) slots. ``spans`` is read as it
-    arrives: a list of dicts, or pandas' array of dicts or ``Row``s (both
-    index by field name); None means no spans."""
+    (assembled_char_position, media_ref) slots. ``spans`` is a list of
+    dicts, as the batch kernel hands an ``array<struct>`` value over;
+    None means no spans."""
     parts: list[str] = []
     media: list[tuple[int, str]] = []
     pos = 0
@@ -417,7 +417,7 @@ MEGA_DOC_CHARS = 500_000
 
 def fan_out_small(df):
     """Round-robin fan-out for a SMALL input feeding an expensive
-    per-row stage (engine mapInPandas, signature UDFs, interpreted
+    per-row stage (engine mapInArrow, signature UDFs, interpreted
     array exprs).
 
     Scan split sizing is byte-based (maxPartitionBytes floored by

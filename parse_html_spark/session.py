@@ -76,7 +76,7 @@ def _worker_setup() -> None:
       then sees only what the task made. The first call freezes and
       installs ``_FreezeAtTaskStart``, which freezes again at the start
       of every later task, before pyspark reads the task's function,
-      so what the serializer imports lazily (pandas, pyarrow) is frozen
+      so what pyspark imports lazily (pyarrow, pandas) is frozen
       from the next task on. Later calls freeze nothing: a
       ``pandas_udf`` function runs after pyspark built the task's Arrow
       converters, whose recursive closures are cycles; frozen alive,
@@ -180,7 +180,7 @@ def _package_zip(pkg_dir: str) -> str:
 def ensure_py_files(spark) -> None:
     """Ship the parse_html_spark package to executors (the --py-files
     story): zips the package once per session and addPyFile's it, so
-    mapInPandas closures can import it on any worker regardless of the
+    worker closures can import it on any worker regardless of the
     driver's PYTHONPATH."""
     key = id(spark.sparkContext)
     if key in _SHIPPED:
@@ -199,17 +199,17 @@ def _on_error_columns(on_error: str, columns: str) -> str:
     return f", {columns}" if on_error == "flag" else ""
 
 
-# Output bound of every batch map: a frame is flushed downstream once it
+# Output bound of every batch map: a batch is flushed downstream once it
 # holds this many rows or this much measured payload, so a task's
 # resident output is O(bound + one input row's output), never O(batch)
 # -- a fat WARC archive or a batch of image-heavy PDFs must not build one
-# giant pandas frame. mapInPandas accepts any number of frames per batch.
+# giant record batch. mapInArrow accepts any number of batches per input.
 _FLUSH_ROWS = 4096
 _FLUSH_SIZE = 1 << 25
 
 
-def _frame(blocks, counts, owners, keys, key):
-    import pandas as pd
+def _frame(blocks, counts, owners, keys, key, schema):
+    import pyarrow as pa
 
     cols = {
         name: np.concatenate(bl)
@@ -218,23 +218,24 @@ def _frame(blocks, counts, owners, keys, key):
         for name, bl in blocks.items()
     }
     if key is not None:
-        cols[key] = np.repeat(keys[owners], counts)
-    return pd.DataFrame(cols)
+        cols[key] = keys.take(np.repeat(owners, counts))
+    return pa.RecordBatch.from_pydict(cols, schema=schema)
 
 
-def _batch_fn(row, inputs, key=None, size=None):
-    """The batch function of ``_batch_map`` (see there), separate so it
-    runs on plain pandas batches without Spark."""
+def _batch_fn(row, inputs, schema, key=None, size=None):
+    """The batch function of ``_batch_map`` (see there) with the output
+    ``pa.Schema``, separate so it runs on record batches without Spark."""
 
     def run(batches):
         _worker_setup()
-        for pdf in batches:
-            keys = pdf[key].to_numpy() if key is not None else None
+        for rb in batches:
+            keys = rb.column(key) if key is not None else None
             blocks: dict[str, list] = {}
             counts: list[int] = []
             owners: list[int] = []
             rows = weight = 0
-            for i, out in enumerate(map(row, *(pdf[c] for c in inputs))):
+            values = [rb.column(c).to_pylist() for c in inputs]
+            for i, out in enumerate(map(row, *values)):
                 for part in (out,) if isinstance(out, dict) else out:
                     n = 0  # a part with no columns has no rows
                     for name, block in part.items():
@@ -246,11 +247,11 @@ def _batch_fn(row, inputs, key=None, size=None):
                     if size is not None:
                         weight += size(part)
                     if rows >= _FLUSH_ROWS or weight >= _FLUSH_SIZE:
-                        yield _frame(blocks, counts, owners, keys, key)
+                        yield _frame(blocks, counts, owners, keys, key, schema)
                         blocks, counts, owners = {}, [], []
                         rows = weight = 0
             if rows:
-                yield _frame(blocks, counts, owners, keys, key)
+                yield _frame(blocks, counts, owners, keys, key, schema)
 
     return run
 
@@ -258,29 +259,34 @@ def _batch_fn(row, inputs, key=None, size=None):
 def _batch_map(df, row, schema: str, inputs, key=None, size=None):
     """The one Python map stage: ``df`` rows -> ``schema`` rows.
 
-    ``row(*values)`` gets one input row's ``inputs`` values and returns
-    its output as column blocks ``{column: block}`` -- a list, range or
-    1-D ndarray per column, all of one length, one entry per output row
-    -- or an iterable of such dicts (a generator lets one input row,
-    e.g. a WARC archive, span several frames). The kernel owns the rest:
+    ``row(*values)`` gets one input row's ``inputs`` values (bytes, a
+    list of dicts, None, ...) and returns its output as column blocks
+    ``{column: block}`` -- a list, range or 1-D ndarray per column, all
+    of one length, one entry per output row -- or an iterable of such
+    dicts (a generator lets one input row, e.g. a WARC archive, span
+    several batches). The kernel owns the rest:
     - the package ships to executors (``ensure_py_files``), and each
       task starts with ``_worker_setup()``, which has the worker's
       heap frozen at every task start (so the daemon's post-task
       collection walks only what the task made) and, before CPython
       3.12, makes zip invalidation lazy;
-    - only ``inputs`` cross the Arrow bridge: mapInPandas cannot tell
+    - only ``inputs`` cross the Arrow bridge: mapInArrow cannot tell
       Catalyst which columns it reads, so a wide table would otherwise
       serialize every column into Python;
     - ``key`` (one of ``inputs``) is repeated per output row;
-    - each column's blocks are concatenated ONCE per frame, so outputs
+    - each column's blocks are concatenated ONCE per batch, so outputs
       cross the bridge as parallel columns, never per-row records (row
       tuples transposed per batch measured 1.1-1.6x slower);
-    - a frame is flushed at ``_FLUSH_ROWS`` rows or ``_FLUSH_SIZE`` of
+    - a batch is flushed at ``_FLUSH_ROWS`` rows or ``_FLUSH_SIZE`` of
       ``size(part)``, summed over the dicts ``row`` returned;
-    - no output rows, no frame (Arrow cannot type an empty object
-      column as a nested type).
-    Columns are matched to ``schema`` by name."""
+    - no output rows, no batch.
+    Columns are matched to ``schema`` by name and cast to its exact
+    Arrow types: pyspark checks only that a batch is a RecordBatch."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
     ensure_py_files(df.sparkSession)
     if list(df.columns) != list(inputs):
         df = df.select(*inputs)
-    return df.mapInPandas(_batch_fn(row, inputs, key, size), schema=schema)
+    pa_schema = to_arrow_schema(StructType.fromDDL(schema))
+    return df.mapInArrow(_batch_fn(row, inputs, pa_schema, key, size), schema)

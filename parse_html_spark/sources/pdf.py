@@ -22,7 +22,7 @@ Three public surfaces, mirroring the WARC layer's shape:
   ``pdf_error:*`` status the census can query, exactly like the WARC
   reader's contract.
 - ``read_span_docs_pdf(spark, path)``: DataFrame source over
-  ``binaryFile`` + mapInPandas, one task per PDF (PDFs are inherently
+  ``binaryFile`` + mapInArrow, one task per PDF (PDFs are inherently
   one-document files; parallelism comes from file count, which at
   corpus scale is millions).
 
@@ -1509,7 +1509,7 @@ def read_pdf_media(spark, path: str, on_error: str = "flag"):
     _on_error_columns(on_error, "")
 
     def row(_doc_id, content):
-        media, status, _n = extract_pdf_media(bytes(content), on_error=on_error)
+        media, status, _n = extract_pdf_media(content, on_error=on_error)
         if not media and status != "ok":
             media = [_NO_MEDIA]
         out = {c: [it[c] for it in media] for c in _NO_MEDIA}
@@ -1907,9 +1907,7 @@ def read_span_docs_pdf(spark, path: str, on_error: str = "flag"):
     suffix = _on_error_columns(on_error, "status string, n_pages int")
 
     def row(_doc_id, content):
-        spans, status, n_pages = parse_pdf_spans(
-            bytes(content), on_error=on_error
-        )
+        spans, status, n_pages = parse_pdf_spans(content, on_error=on_error)
         out = {
             "spans": [[
                 {"kind": k, "text": t, "media_ref": r, "offset": off}

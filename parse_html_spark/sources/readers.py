@@ -9,7 +9,7 @@ input_hint). Real web-scale corpora additionally arrive as:
   column type).
 - WARC (ISO 28500): the standard web-crawl archive format
   (Common-Crawl-style). Parsed here with a pure-Python record splitter
-  over ``binaryFile`` rows inside mapInPandas -- each 'response' record
+  over ``binaryFile`` rows inside mapInArrow -- each 'response' record
   becomes a single-text-span document whose doc_id is the WARC-Target-URI
   (+ record offset for uniqueness). Gzip members (the usual .warc.gz
   member-per-record layout) are handled by stdlib zlib multi-member
@@ -1022,7 +1022,7 @@ def read_span_docs_warc(
     over-cap output degrades to the same census buckets as built-in
     codings. Without the hook, br bodies census as
     'http_decode_error:unsupported content-encoding' exactly as
-    before. The dict is closure-captured into the mapInPandas UDF, so
+    before. The dict is closure-captured into the mapInArrow function, so
     it must be picklable (a module-level function, not a lambda
     defined in __main__, for real cluster deployments).
 
@@ -1063,8 +1063,7 @@ def read_span_docs_warc(
             out["http_status"] = [http_status]
         return out
 
-    def archive(fpath, content):
-        data = bytes(content)
+    def archive(fpath, data):
         split_status: dict = {}
         if fpath.endswith(".gz") or data[:2] == b"\x1f\x8b":
             # stream gzip members through the incremental splitter:

@@ -2,7 +2,7 @@
 
 The reference is a synchronous per-document library with no streaming
 surface (SURVEY.md 2.10); the natural Spark lift is trivial because the
-extraction stage is a STATELESS mapInPandas: the same extract_spans()
+extraction stage is a STATELESS mapInArrow: the same extract_spans()
 plan runs under readStream unchanged. Checkpointing gives exactly-once
 file-sink semantics; late data needs no watermark (no event-time aggs).
 """

@@ -44,6 +44,14 @@ def test_find_by_id_first_match_only():
     assert r.attr("id") == "main"
     doc2 = '<i id="x">1</i><em id="x">2</em>'
     assert PH(doc2).find("#x").text() == "1"  # strict, first match, break
+    # first match per scope of the step before, nested scopes included:
+    # the outer div's first #x is <i>, the inner div's is <b>
+    doc3 = '<div><i id="x">a</i><div><b id="x">b</b></div></div>'
+    r3 = PH(doc3).find("div #x")
+    assert [r3.eq(i).html() for i in range(len(r3))] == [
+        '<i id="x">a</i>',
+        '<b id="x">b</b>',
+    ]
 
 
 def test_find_by_class_word():

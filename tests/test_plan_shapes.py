@@ -90,7 +90,7 @@ KERNEL_PIPELINES = {
 
 @pytest.mark.parametrize("pipeline", list(KERNEL_PIPELINES))
 def test_arrow_bridge_prunes_columns(spark, corpus, pipeline):
-    """mapInPandas stages select only (doc_id, spans): the ingest
+    """mapInArrow stages select only (doc_id, spans): the ingest
     n_chars column must not cross the Python boundary, and the pruning
     must reach the parquet scan's ReadSchema."""
     from parse_html_spark import pipeline as P
@@ -120,8 +120,8 @@ def test_media_bridge_prunes_columns(spark, operator):
         spark.createDataFrame([("media://img-1",)], "media_ref string")
     ).withColumn("big", F.repeat(F.lit("x"), 1000))
     plan = _plan(MEDIA_OPERATORS[operator](M, wide))
-    (line,) = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
-    inputs = re.search(r"MapInPandas \w+\(([^)]*)\)", line).group(1)
+    (line,) = [ln for ln in plan.splitlines() if "MapInArrow" in ln]
+    inputs = re.search(r"MapInArrow \w+\(([^)]*)\)", line).group(1)
     assert re.sub(r"#\d+", "", inputs).split(", ") == ["media_ref", "payload"]
 
 
@@ -153,12 +153,12 @@ def test_exploded_rows_generated_jvm_side(spark, corpus):
     from parse_html_spark.pipeline import extract_spans
 
     plan = _plan(extract_spans(corpus))
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "Generate" in plan and "posexplode" in plan
 
 
 def test_pdf_read_single_python_stage(spark, tmp_path):
-    """The PDF source plan is scan -> ONE MapInPandas; an n_chars
+    """The PDF source plan is scan -> ONE MapInArrow; an n_chars
     rollup stays map-side partial with a single-row exchange, and no
     record-row shuffle ever appears (PLANS.md 'PDF source read')."""
     from parse_html_spark.sources.pdf import encode_pdf, layout_doc
@@ -170,10 +170,10 @@ def test_pdf_read_single_python_stage(spark, tmp_path):
         )
     df = read_span_docs_pdf(spark, str(tmp_path))
     plan = _plan(df)
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "Exchange" not in plan  # bare read shuffles nothing
     agg = df.agg(F.sum("n_chars"))
     aplan = _plan(agg)
-    assert aplan.count("MapInPandas") == 1
+    assert aplan.count("MapInArrow") == 1
     assert "partial_sum" in aplan
     assert aplan.count("Exchange") == 1 and "SinglePartition" in aplan

@@ -44,11 +44,10 @@ def test_package_zip_name_follows_file_bytes(tmp_path, monkeypatch):
 
 
 def _bounded(rows_per_input: int, weight: int, n_inputs: int, parts: bool):
-    """Run the kernel's batch function over one fake pandas batch. Each
-    input row has ``rows_per_input`` output rows of measured size
-    ``weight`` each, as one dict or (``parts``) a generator of one-row
-    dicts."""
-    import pandas as pd
+    """Run the kernel's batch function over one Arrow batch. Each input
+    row has ``rows_per_input`` output rows of measured size ``weight``
+    each, as one dict or (``parts``) a generator of one-row dicts."""
+    import pyarrow as pa
 
     from parse_html_spark.session import _batch_fn
 
@@ -61,20 +60,25 @@ def _bounded(rows_per_input: int, weight: int, n_inputs: int, parts: bool):
             for j in range(rows_per_input)
         )
 
-    batch = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {"key": [f"k{i}" for i in range(n_inputs)], "n": range(n_inputs)}
     )
+    schema = pa.schema(
+        [("key", pa.string()), ("i", pa.int64()), ("j", pa.int32()),
+         ("weight", pa.int64())]
+    )
     run = _batch_fn(
-        row, ("key", "n"), key="key", size=lambda part: sum(part["weight"])
+        row, ("key", "n"), schema, key="key",
+        size=lambda part: sum(part["weight"]),
     )
     return list(run(iter([batch])))
 
 
 def test_batch_kernel_output_bound():
-    """Frames are flushed at the row bound and at the size bound, each
-    within the bound plus one input row's output; the frames together
-    are exactly the unbounded output; no output rows yields no frame."""
-    import pandas as pd
+    """Batches are flushed at the row bound and at the size bound, each
+    within the bound plus one input row's output; the batches together
+    are exactly the unbounded output; no output rows yields no batch."""
+    import pyarrow as pa
 
     from parse_html_spark.session import _FLUSH_ROWS, _FLUSH_SIZE
 
@@ -86,18 +90,17 @@ def test_batch_kernel_output_bound():
         frames = _bounded(rows_per_input, weight, n_inputs, parts)
         assert len(frames) == n_frames
         for fr in frames:
-            assert len(fr) < _FLUSH_ROWS + rows_per_input
-            assert fr["weight"].sum() < _FLUSH_SIZE + rows_per_input * weight
-        got = pd.concat(frames, ignore_index=True)
-        want = pd.DataFrame(
-            [
-                (f"k{i}", i, j, weight)
-                for i in range(n_inputs)
-                for j in range(rows_per_input)
-            ],
-            columns=["key", "i", "j", "weight"],
-        )
-        pd.testing.assert_frame_equal(got[want.columns], want)
+            assert fr.num_rows < _FLUSH_ROWS + rows_per_input
+            assert sum(fr["weight"].to_pylist()) < (
+                _FLUSH_SIZE + rows_per_input * weight
+            )
+        got = pa.Table.from_batches(frames)
+        assert got.to_pydict() == {
+            "key": [f"k{i}" for i in range(n_inputs) for _ in range(rows_per_input)],
+            "i": [i for i in range(n_inputs) for _ in range(rows_per_input)],
+            "j": [j for _ in range(n_inputs) for j in range(rows_per_input)],
+            "weight": [weight] * (n_inputs * rows_per_input),
+        }
 
     assert _bounded(0, 1, 5, False) == []
     assert _bounded(0, 1, 5, True) == []
@@ -115,12 +118,13 @@ def test_batch_kernel_output_bound():
 )
 def test_batch_kernel_counts_an_empty_part_as_no_rows(outs):
     """A row output ``{}`` adds no rows and no key, wherever it falls."""
-    import pandas as pd
+    import pyarrow as pa
 
     from parse_html_spark.session import _batch_fn
 
-    batch = pd.DataFrame({"key": ["k0", "k1", "k2"], "n": range(3)})
-    run = _batch_fn(lambda _key, n: outs[n], ("key", "n"), key="key")
+    batch = pa.RecordBatch.from_pydict({"key": ["k0", "k1", "k2"], "n": range(3)})
+    schema = pa.schema([("v", pa.int64()), ("key", pa.string())])
+    run = _batch_fn(lambda _key, n: outs[n], ("key", "n"), schema, key="key")
     frames = list(run(iter([batch])))
     assert len(frames) == 1
     want = [
@@ -129,10 +133,54 @@ def test_batch_kernel_counts_an_empty_part_as_no_rows(outs):
         for part in ((out,) if isinstance(out, dict) else out)
         for v in part.get("v", ())
     ]
-    assert list(zip(frames[0]["v"], frames[0]["key"])) == want
-    # only empty parts: no rows, no frame
-    empty = _batch_fn(lambda _key, n: {}, ("key", "n"), key="key")
+    got = frames[0].to_pydict()
+    assert list(zip(got["v"], got["key"])) == want
+    # only empty parts: no rows, no batch
+    empty = _batch_fn(lambda _key, n: {}, ("key", "n"), schema, key="key")
     assert list(empty(iter([batch]))) == []
+
+
+def test_batch_kernel_emits_the_exact_arrow_schema():
+    """Each output batch carries the Arrow types of its schema, in schema
+    order, whatever the blocks were: an int64 ndarray block becomes an
+    ``int`` field, a range a ``long`` one, and ``array<string>`` lists
+    that are all empty still type. Input values arrive as Python
+    objects: a binary as bytes, null as None."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parse_html_spark.session import _batch_fn
+
+    schema = pa.schema(
+        [("doc_id", pa.string()), ("parent", pa.int32()), ("n", pa.int64()),
+         ("texts", pa.list_(pa.string())), ("payload", pa.binary())]
+    )
+    seen = []
+
+    def row(doc_id, payload):
+        seen.append(payload)
+        return {
+            "payload": [payload],
+            "texts": [[]],
+            "n": range(1),
+            "parent": np.asarray([-1], dtype=np.int64),
+        }
+
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": ["d0", "d1"], "payload": pa.array([b"\x00x", None])}
+    )
+    (out,) = _batch_fn(row, ("doc_id", "payload"), schema, key="doc_id")(
+        iter([batch])
+    )
+    assert seen == [b"\x00x", None]
+    assert out.schema == schema
+    assert out.to_pydict() == {
+        "doc_id": ["d0", "d1"],
+        "parent": [-1, -1],
+        "n": [0, 0],
+        "texts": [[], []],
+        "payload": [b"\x00x", None],
+    }
 
 
 def _write_zip(path, modules: dict) -> None:
@@ -419,7 +467,7 @@ def test_every_worker_entry_point_installs_first():
     assert missing == []
     # the known entry points are all seen: the guard is not vacuous
     assert {
-        "session.py:_batch_fn(row, inputs, key, size)",
+        "session.py:_batch_fn(row, inputs, pa_schema, key, size)",
         "functions/dedup.py:_sig",
         "functions/dedup.py:_batch",
         "functions/similarity.py:f",

@@ -6,6 +6,7 @@ from parse_html_spark.fixtures import write_corpus_parquet
 from parse_html_spark.pipeline import extract_spans
 from parse_html_spark.streaming import (
     extract_spans_stream,
+    for_each_batch_extract,
     streaming_dedup_first_seen,
 )
 
@@ -86,6 +87,44 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
     )
     assert got2.count() == batch1.count() + batch2.count()
     assert got2.select("doc_id").distinct().count() == 15
+
+
+def test_for_each_batch_extract_matches_batch(spark, tmp_path):
+    """foreachBatch hands each micro-batch's extract_spans rows to the
+    handler: across the batches they are the batch pipeline's rows, and
+    a restart on the same checkpoint hands over only the new file."""
+    import time
+
+    in_dir = str(tmp_path / "fin")
+    ckpt = str(tmp_path / "fck")
+    os.makedirs(in_dir)
+    write_corpus_parquet(os.path.join(in_dir, "part1.parquet"), 10)
+    seen = []
+
+    def handle(batch_df, epoch_id):
+        seen.extend(tuple(r) for r in batch_df.collect())
+
+    def drain_and_stop(q, expect_rows, timeout=120):
+        deadline = time.time() + timeout
+        while len(seen) < expect_rows and time.time() < deadline:
+            if q.awaitTermination(1):
+                break
+        q.stop()
+        q.awaitTermination(60)
+
+    def batch_rows(name):
+        df = spark.read.parquet(os.path.join(in_dir, name))
+        return sorted(tuple(r) for r in extract_spans(df).collect())
+
+    want1 = batch_rows("part1.parquet")
+    drain_and_stop(for_each_batch_extract(spark, in_dir, handle, ckpt), len(want1))
+    assert sorted(seen) == want1
+
+    write_corpus_parquet(os.path.join(in_dir, "part2.parquet"), 5, start=100)
+    want2 = batch_rows("part2.parquet")
+    seen.clear()
+    drain_and_stop(for_each_batch_extract(spark, in_dir, handle, ckpt), len(want2))
+    assert sorted(seen) == want2
 
 
 def test_stateful_dedup_state_ttl_evicts(spark, tmp_path):

@@ -74,7 +74,7 @@ def main() -> None:
             "hence the plan-level union; the bytes do not duplicate).\n"
             "Row-level proof: small-branch rows + mega-branch rows == corpus\n"
             "rows, checked below. Plus: a tiny round-robin exchange for\n"
-            "megas only, ONE Python stage (MapInPandas), no shuffle of\n"
+            "megas only, ONE Python stage (MapInArrow), no shuffle of\n"
             "document text, ReadSchema pruned to doc_id+spans at the Arrow\n"
             "bridge.",
             extract_spans_compact(prepare_partitions(corpus, 16)),
@@ -112,7 +112,7 @@ def main() -> None:
             minhash_near_duplicates(docs.filter(F.col("doc_id") < 40)),
         ),
         (
-            "PDF source read (binaryFile -> one MapInPandas, round 7)",
+            "PDF source read (binaryFile -> one MapInArrow, round 7)",
             "Wanted: the whole parse is ONE Python stage fed directly by\n"
             "the file scan; an n_chars rollup aggregates map-side partial\n"
             "with a single-row exchange -- record rows never shuffle. PDFs\n"
